@@ -25,8 +25,10 @@ import os
 import statistics
 import sys
 
+# per-call counts flagged when they rise (`calls` counts the window's
+# calls, so it follows speed and has no better side)
 COUNTS = ("jobs", "stages", "tasks", "files", "bytes", "shuffle_bytes", "output_bytes",
-          "exchanges", "runs", "calls")
+          "exchanges")
 
 
 def load(d):
@@ -54,7 +56,8 @@ def direction(name, unit, spec):
     leaf = name.rsplit(".", 1)[-1]
     if unit in ("1/s", "ratio") or leaf in ("useful_ratio", "route_local"):
         return 1
-    if unit in ("s", "ms", "MB") or leaf.endswith(("_s", "_ms")) or leaf in COUNTS:
+    if unit in ("s", "ms", "MB") or leaf.endswith(("_s", "_ms", "_bytes")) or leaf in COUNTS \
+            or leaf == "runs":
         return -1
     return 0
 
@@ -118,7 +121,7 @@ def main(parent_dir, change_dir, spec_path):
                 verdict = "gain"
             elif n in bounds and d and -move * d > bounds[n]:
                 verdict = "worse"
-            if tr and n.rsplit(".", 1)[-1] in COUNTS[:-2] and qb[1] > qa[1]:
+            if tr and n.rsplit(".", 1)[-1] in COUNTS and qb[1] > qa[1]:
                 verdict = (verdict + " ROSE").strip()
             fmt = lambda q: f"{q[0]:.4g}/{q[1]:.4g}/{q[2]:.4g}"  # noqa: E731
             print(f"{n:<58} {fmt(qa):>30} {fmt(qb):>30} {move:>+8.1%} "

@@ -125,7 +125,7 @@ def batch_recompute(rng, z, out):
     # each cycle re-delivers one slice the master already holds
     redeliver = [int(rng.integers(0, s + 1)) for s in cycle_slices]
     plan = corpus_dedup(rng, z, out)
-    plan.update(cycle_slices=cycle_slices, redeliver=redeliver)
+    plan.update(cycle_slices=cycle_slices, redeliver=redeliver, min_cycles=2)
     return plan
 
 
@@ -178,9 +178,15 @@ def speed_serve(rng, z, out):
             reads.append(dict(kind=kind, probe=int(rng.integers(0, z["s_vecs"]))))
     with open(f"{out}/reads.json", "w") as f:
         json.dump(reads, f)
+    # the read rate is about 60 % of the readers' capacity under fold
+    # load: on a 4-vCPU VM a read takes about 1.2 s of service (lookup
+    # 0.6 s, bm25TopK 1.3 s, searchIvfPq 1.75 s), so 3 threads serve about
+    # 2.5 reads/s; at 1.5/s a read waits for a free thread only rarely, and
+    # latency from the due time measures the read path, not queueing
+    # (every run reports reader_util, reader_capacity and read_wait_*)
     return dict(batches=z["batches"], batch_docs=batch_docs, batch_last_hour=last_hour,
                 initial_last_hour=(EPOCH_2024 // 3600) + z["s_hours"] - 1,
-                read_rate=1.5, reader_threads=3, warmup_folds=1, setup_reps=3)
+                read_rate=1.5, reader_threads=3, min_folds=3, setup_reps=3)
 
 
 def corpus_dedup(rng, z, out, threshold=0.7):

@@ -2,7 +2,7 @@
 """Lambda benchmark: one command, three workloads, correctness-checked.
 
     python3 lambdabench/run.py --workload batch_recompute --seed 1 \
-        --seconds 10 --trace 0 [--size sf0.1|sf0.001] [--keep]
+        --seconds 10 --trace 0 [--size sf0.1|sf0.001]
 
 Run from the repository root. The first run builds the engine and the
 benchmark's Scala program with sbt (offline, into its own target dir);
@@ -231,7 +231,6 @@ def main():
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--size", choices=sorted(gen.SIZES), default="sf0.1")
-    ap.add_argument("--keep", action="store_true", help="keep the work dir")
     a = ap.parse_args()
 
     started = time.time()
@@ -298,8 +297,7 @@ def main():
     else:
         metrics = {m["name"]: {"value": res["metrics"][m["name"]]["value"], "unit": m["unit"]}
                    for m in spec["end_to_end"]}
-    if not a.keep:
-        shutil.rmtree(work, ignore_errors=True)
+    shutil.rmtree(work, ignore_errors=True)
     print(json.dumps(dict(correct=correct, attempted=res["attempted"], failed=res["failed"],
                           metrics=metrics)))
     sys.exit(0 if correct else 1)

@@ -5,7 +5,7 @@ import scala.collection.mutable
 import graft.functions.{TimeFunctions, UrlFunctions}
 import graft.model.{Fact, FactKind, FactStore}
 import graft.operators.{GraphOps, Sessionize}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** `batch_recompute`: the batch layer alone. Each cycle ingests a new
@@ -65,8 +65,11 @@ object BatchRecompute {
     val passS = mutable.ArrayBuffer.empty[Double]
     var factsScanned = 0L
     var done = 0
+    // cycles until the deadline, and at least `min_cycles`, so that every
+    // run's p50 rests on the same number of samples
     val deadline = System.nanoTime() + (ctx.seconds * 1e9).toLong
-    while (System.nanoTime() < deadline && done < cycles.size) {
+    val minCycles = plan.int("min_cycles")
+    while ((System.nanoTime() < deadline || done < minCycles) && done < cycles.size) {
       val c = cycles(done)
       val req = s"cycle-$done"
       ctx.trace.span("cycle", req) {
@@ -84,6 +87,8 @@ object BatchRecompute {
         recomputeS += v + p
         r.attempted += 2
       }
+      // the CC edge count of this cycle's master, outside the cycle's span
+      if (ctx.trace.enabled) Layer.ccEdges(ctx, equivEdges(spark, master), calls = 1)
       factsScanned += masterFacts(spark, master)
       done += 1
     }
@@ -122,6 +127,12 @@ object BatchRecompute {
       FactStore.ingest(facts, master)
     }
 
+  /** The person graph: one edge per equiv fact in the master. */
+  private def equivEdges(spark: SparkSession, master: String): DataFrame =
+    FactStore.scanKind(spark, master, FactKind.Equiv)
+      .select(GraphOps.personKey(col("equiv.id1")).as("src"),
+        GraphOps.personKey(col("equiv.id2")).as("dst"))
+
   /** Facts in the master right now, from parquet footers (no Spark job). */
   private def masterFacts(spark: SparkSession, master: String): Long =
     Seq(FactKind.PageView, FactKind.Equiv).map { k =>
@@ -152,12 +163,8 @@ object BatchRecompute {
             col("pageView.nonce").as("event_id"))
           .write.mode("overwrite").parquet(uniquePath)
       }
-      val edges = FactStore.scanKind(spark, master, FactKind.Equiv)
-        .select(GraphOps.personKey(col("equiv.id1")).as("src"),
-          GraphOps.personKey(col("equiv.id2")).as("dst"))
-      if (ctx.trace.enabled) Layer.ccEdges(ctx, edges)
       val labels = Layer.call(ctx, "operators.GraphOps.cc", None) {
-        GraphOps.connectedComponents(edges)
+        GraphOps.connectedComponents(equivEdges(spark, master))
       }
       Layer.call(ctx, "operators.BatchViews.recompute", None) {
         val pv = spark.read.parquet(uniquePath)

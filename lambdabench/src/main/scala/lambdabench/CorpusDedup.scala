@@ -51,26 +51,39 @@ final class Corpus(ctx: Ctx, plan: Plan) {
       "warmup")
   }
 
-  /** After the window: recall, the traced ratios, facts and the recall
+  /** After the window: recall, the traced counts, facts and the recall
     * check. Returns the planted-near-duplicate recall.
     */
   def finish(): Double = {
     val recall = CorpusDedup.plantedRecall(ctx, out)
-    if (ctx.trace.enabled) {
-      val c = Layer.counters
-      def get(k: String) = c.getOrElse(k, 0.0)
-      Layer.set("operators.TextOps.filters", "rows_out_frac",
-        get("operators.TextOps.filters.rows_out") / (math.max(passes, 1) * nDocs))
-      Layer.set("operators.NearDedup.minhash", "useful_ratio",
-        get("operators.NearDedup.minhash.verified_pairs") /
-          math.max(1.0, get("operators.NearDedup.minhash.candidates")))
-    }
+    if (ctx.trace.enabled) countLayers()
     ctx.report.fact("threshold", threshold.toString)
     ctx.report.fact("out", Json.str(out))
     ctx.report.check("corpus.planted_recall_floor", recall >= plan.double("recall_floor"),
       f"recall $recall%.4f, floor ${plan.double("recall_floor")}")
     cached.unpersist(blocking = true)
     recall
+  }
+
+  /** Traced runs: the filters' share of rows kept, the MinHash band
+    * candidates before the exact verify, the verified pairs and the CC
+    * edges of one pass. Every pass sees the same corpus, so they are
+    * counted once, after the window and outside every measured span, and
+    * stand for each pass.
+    */
+  private def countLayers(): Unit = ctx.trace.untracked {
+    val filtered = CorpusDedup.filters(cached)
+    val rowsOut = filtered.count()
+    val exact = CorpusDedup.exactDedup(filtered)
+    val candidates = CorpusDedup.candidates(exact)
+    val pairs = ctx.spark.read.parquet(out + "/pairs")
+    val verified = pairs.count().toDouble
+    Seq(filtered, exact).foreach(_.unpersist())
+    Layer.set("operators.TextOps.filters", "rows_out_frac", rowsOut.toDouble / nDocs)
+    Layer.set("operators.NearDedup.minhash", "candidates", candidates)
+    Layer.set("operators.NearDedup.minhash", "verified_pairs", verified)
+    Layer.set("operators.NearDedup.minhash", "useful_ratio", verified / math.max(1.0, candidates))
+    Layer.ccEdges(ctx, pairs.select(col("i").as("src"), col("j").as("dst")), calls = passes)
   }
 }
 
@@ -121,34 +134,14 @@ object CorpusDedup {
     */
   private[lambdabench] def pass(ctx: Ctx, docs: DataFrame, threshold: Double, out: String,
       req: String): Double = {
-    val spark = ctx.spark
     ctx.trace.span("pass", req) {
-      val filtered = Layer.call(ctx, "operators.TextOps.filters", None) {
-        docs
-          .where(col("n_chars") >= 100 && size(TextFunctions.tokens(col("text"))) >= 20 &&
-            TextOps.predLang(col("text")) === "en")
-          .select("doc_id", "text")
-          .localCheckpoint()
-      }
-      val traced = ctx.trace.enabled && Layer.measured(ctx.trace.currentRequest)
-      if (traced) Layer.add("operators.TextOps.filters", "rows_out", filtered.count().toDouble)
-      val exact = Layer.call(ctx, "operators.TextOps.exactDedup", None) {
-        filtered
-          .withColumn("rn", row_number().over(
-            Window.partitionBy(md5(col("text"))).orderBy(col("doc_id"))))
-          .where(col("rn") === 1).drop("rn")
-          .localCheckpoint()
-      }
-      if (traced) candidates(ctx, exact)
+      val filtered = Layer.call(ctx, "operators.TextOps.filters", None)(filters(docs))
+      val exact = Layer.call(ctx, "operators.TextOps.exactDedup", None)(exactDedup(filtered))
       val (pairs, mhS) = Stats.timed(Layer.call(ctx, "operators.NearDedup.minhash", None) {
         val p = NearDedup.minhashNearDups(exact, threshold)
         p.write.mode("overwrite").parquet(out + "/pairs")
         p
       })
-      if (traced)
-        Layer.add("operators.NearDedup.minhash", "verified_pairs",
-          spark.read.parquet(out + "/pairs").count().toDouble)
-      if (traced) Layer.ccEdges(ctx, pairs.select(col("i").as("src"), col("j").as("dst")))
       val kept = Layer.call(ctx, "operators.GraphOps.cc", None) {
         Engine.dropNearDuplicates(exact, pairs.select("i", "j"))
       }
@@ -161,18 +154,32 @@ object CorpusDedup {
     }
   }
 
-  /** Traced runs: candidate pairs the MinHash bands produce before the
-    * exact verify (recomputed here, outside the layer's span), and the
-    * CC edge count of the dup pairs.
+  /** The quality and language filters. */
+  private[lambdabench] def filters(docs: DataFrame): DataFrame =
+    docs
+      .where(col("n_chars") >= 100 && size(TextFunctions.tokens(col("text"))) >= 20 &&
+        TextOps.predLang(col("text")) === "en")
+      .select("doc_id", "text")
+      .localCheckpoint()
+
+  /** Exact dedup by content hash, keeping the lowest doc id. */
+  private[lambdabench] def exactDedup(filtered: DataFrame): DataFrame =
+    filtered
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(md5(col("text"))).orderBy(col("doc_id"))))
+      .where(col("rn") === 1).drop("rn")
+      .localCheckpoint()
+
+  /** Candidate pairs the MinHash bands produce before the exact verify,
+    * recomputed outside the layer's span.
     */
-  private def candidates(ctx: Ctx, exact: DataFrame): Unit = {
+  private[lambdabench] def candidates(exact: DataFrame): Double = {
     val sigs = exact
       .select(col("doc_id"),
         NearDedup.minhashSignatureArray(TextFunctions.shingleHashes(col("text"), 3)).as("sig"))
       .where(col("sig").isNotNull)
       .select(col("doc_id") +: (0 until NearDedup.NumHashes).map(i => col("sig")(i).as(s"mh$i")): _*)
-    Layer.add("operators.NearDedup.minhash", "candidates",
-      NearDedup.minhashCandidates(sigs, 10000).count().toDouble)
+    NearDedup.minhashCandidates(sigs, 10000).count().toDouble
   }
 
   /** Share of planted near duplicates (generated above the threshold,

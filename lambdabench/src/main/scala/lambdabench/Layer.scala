@@ -49,9 +49,10 @@ object Layer {
   /** Count the deduplicated bidirectional edges `GraphOps.connectedComponents`
     * will see, and which side of `graft.cc.localMaxEdges` that puts the
     * call on (1 = driver-local union-find, 0 = distributed loop; string
-    * node ids always take the loop).
+    * node ids always take the loop). The counting jobs run untracked; the
+    * result is added once for each of `calls` CC calls over these edges.
     */
-  def ccEdges(ctx: Ctx, edges: DataFrame): Unit = if (measured(ctx.trace.currentRequest)) {
+  def ccEdges(ctx: Ctx, edges: DataFrame, calls: Int): Unit = ctx.trace.untracked {
     val n = edges
       .select(explode(array(struct(col("src").as("s"), col("dst").as("d")),
         struct(col("dst").as("s"), col("src").as("d")))).as("e"))
@@ -60,8 +61,8 @@ object Layer {
     // the local route also needs long-typed node ids
     val longIds = Seq("src", "dst").forall(c =>
       edges.schema(c).dataType == org.apache.spark.sql.types.LongType)
-    add("operators.GraphOps.cc", "edges", n.toDouble)
-    add("operators.GraphOps.cc", "route_local", if (n <= localMax && longIds) 1.0 else 0.0)
+    add("operators.GraphOps.cc", "edges", n.toDouble * calls)
+    add("operators.GraphOps.cc", "route_local", if (n <= localMax && longIds) calls else 0.0)
   }
 }
 

@@ -87,7 +87,10 @@ object Main {
     report.mark("checks")
     val disk1 = graft.Canary.diskSnapshot()
     report.metric("retained_heap_mb", Heap.retainedMb(), "MB")
-    if (traceOn && error.isEmpty) Rollup.write(ctx, wallS)
+    // the span of one unit of each workload's main loop
+    val primary = Map("batch_recompute" -> "cycle", "speed_serve" -> "fold",
+      "corpus_dedup" -> "pass")
+    if (traceOn && error.isEmpty) Rollup.write(ctx, wallS, primary(workload))
     // host covariates: not metrics, but they let a slow run be blamed on
     // the host band rather than the code
     val (cpuS, fsS, spillS, stateS) =

@@ -8,23 +8,27 @@ import scala.collection.mutable
   * and the per-layer rollup (`rollup.json`, flat `<module>.<call>.<metric>`
   * names).
   *
-  * Per layer call (span name), over the measured window only (set-up and
-  * warm-up requests excluded):
-  *  - `calls`, `busy_s` (summed span time), `self_s` (span time minus the
-  *    part its child spans cover), `p50_ms` (median call);
+  * Every value is per call or per request, so it does not grow with the
+  * number of calls that fit into the window. Per layer call (span name),
+  * over the measured window only (set-up and warm-up requests excluded):
+  *  - `calls` (the one count over the window), and per call: `busy_s`
+  *    (span time), `self_s` (span time minus the part its child spans
+  *    cover), `p50_ms` (median call);
   *  - per-call means of the Spark work its subtree submitted: `jobs`,
-  *    `stages`, `tasks`, `shuffle_bytes`, `output_bytes`, and of the
-  *    benchmark-side `files` / `bytes` the call's store gained;
-  *  - summed `executor_run_s`, `executor_cpu_s`, `gc_s`, `task_wait_s`, and
-  *    `driver_only_s` (span time with no job of its subtree running).
-  * `spark.*` is the same over every measured span; counters a workload set
-  * directly (`Layer.set`/`Layer.add`) are copied as they are.
+  *    `stages`, `tasks`, `shuffle_bytes`, `output_bytes`,
+  *    `executor_run_s`, `executor_cpu_s`, `gc_s`, `task_wait_s` and
+  *    `driver_only_s` (span time with no job of its subtree running), and
+  *    of the benchmark-side `files` / `bytes` the call's store gained.
+  * `spark.*` is the same per primary request (a workload's cycle, fold or
+  * pass, whose span name the caller gives). Counters a workload set
+  * directly (`Layer.set`/`Layer.add`) are copied, those in [[PerCall]]
+  * divided by their layer's calls.
   */
 object Rollup {
   /** Benchmark-side counters reported as per-call means, not totals. */
-  private val PerCall = Set("files", "bytes", "exchanges", "edges", "route_local")
+  private val PerCall = Set("files", "bytes", "exchanges", "edges", "route_local", "runs")
 
-  def write(ctx: Ctx, wallS: Double): Unit = {
+  def write(ctx: Ctx, wallS: Double, primary: String): Unit = {
     val t = ctx.trace
     t.drain()
     val spans = t.allSpans
@@ -52,62 +56,50 @@ object Rollup {
       val hi = t.wallMs(s.end)
       math.max(0L, hi - lo - Trace.covered(jobs, lo, hi)) / 1e3
     }.sum
-    def work(prefix: String, ss: Seq[Span], perCall: Int): Unit = {
+    def work(prefix: String, ss: Seq[Span]): Unit = {
       val c = t.sum(ss.flatMap(s => subtree(s.id)).toSet)
-      val n = math.max(perCall, 1).toDouble
+      val n = math.max(ss.size, 1).toDouble
       out(s"$prefix.jobs") = c.jobs / n
       out(s"$prefix.stages") = c.stages / n
       out(s"$prefix.tasks") = c.tasks / n
       out(s"$prefix.shuffle_bytes") = (c.shuffleReadBytes + c.shuffleWriteBytes) / n
+      out(s"$prefix.shuffle_read_bytes") = c.shuffleReadBytes / n
+      out(s"$prefix.shuffle_write_bytes") = c.shuffleWriteBytes / n
+      out(s"$prefix.spill_bytes") = c.spillBytes / n
       out(s"$prefix.output_bytes") = c.outputBytes / n
-      out(s"$prefix.executor_run_s") = c.executorRunMs / 1e3
-      out(s"$prefix.executor_cpu_s") = c.executorCpuNs / 1e9
-      out(s"$prefix.gc_s") = c.gcMs / 1e3
-      out(s"$prefix.task_wait_s") = c.taskWaitMs / 1e3
-      out(s"$prefix.driver_only_s") = driverOnlyS(ss)
+      out(s"$prefix.executor_run_s") = c.executorRunMs / 1e3 / n
+      out(s"$prefix.executor_cpu_s") = c.executorCpuNs / 1e9 / n
+      out(s"$prefix.gc_s") = c.gcMs / 1e3 / n
+      out(s"$prefix.task_wait_s") = c.taskWaitMs / 1e3 / n
+      out(s"$prefix.driver_only_s") = driverOnlyS(ss) / n
     }
     measured.groupBy(_.name).toSeq.sortBy(_._1).foreach { case (name, ss) =>
       out(s"$name.calls") = ss.size
-      out(s"$name.busy_s") = ss.map(durS).sum
-      out(s"$name.self_s") = ss.map(selfS).sum
+      out(s"$name.busy_s") = ss.map(durS).sum / ss.size
+      out(s"$name.self_s") = ss.map(selfS).sum / ss.size
       out(s"$name.p50_ms") = Stats.median(ss.map(durS)) * 1000
-      work(name, ss, ss.size)
+      work(name, ss)
     }
     Layer.counters.toSeq.sortBy(_._1).foreach { case (k, v) =>
-      // per-call counters are means like the job counts
       val calls = out.get(k.substring(0, k.lastIndexOf('.')) + ".calls")
       val perCall = PerCall.contains(k.substring(k.lastIndexOf('.') + 1))
       out(k) = if (perCall) v / calls.getOrElse(1.0) else v
     }
 
-    // bytes a compaction rewrote, per maintain call that actually ran
+    // bytes a compaction rewrote per maintain call that actually ran
+    // (`runs` is the share of maintain calls that ran)
     out.keys.filter(_.endsWith(".maintain.calls")).toSeq.foreach { k =>
       val name = k.stripSuffix(".calls")
       val runs = out.getOrElse(s"$name.runs", 0.0)
-      out(s"$name.bytes_rewritten") =
-        if (runs > 0) out(s"$name.output_bytes") * out(k) / runs else 0.0
+      out(s"$name.runs") = runs
+      out(s"$name.bytes_rewritten") = if (runs > 0) out(s"$name.output_bytes") / runs else 0.0
     }
 
-    // whole-run Spark totals over the measured window
-    val roots = measured.filter(_.parent == 0L)
-    val c = t.sum(measured.map(_.id).toSet)
-    out("spark.jobs") = c.jobs
-    out("spark.stages") = c.stages
-    out("spark.tasks") = c.tasks
-    out("spark.executor_run_s") = c.executorRunMs / 1e3
-    out("spark.executor_cpu_s") = c.executorCpuNs / 1e9
-    out("spark.gc_s") = c.gcMs / 1e3
-    out("spark.shuffle_read_bytes") = c.shuffleReadBytes
-    out("spark.shuffle_write_bytes") = c.shuffleWriteBytes
-    out("spark.spill_bytes") = c.spillBytes
-    out("spark.task_wait_s") = c.taskWaitMs / 1e3
-    if (roots.nonEmpty) {
-      val lo = t.wallMs(roots.map(_.start).min)
-      val hi = t.wallMs(roots.map(_.end).max)
-      val jobs = t.jobWindows(Some(measured.map(_.id).toSet))
-      out("spark.window_s") = (hi - lo) / 1e3
-      out("spark.driver_only_s") = (hi - lo - Trace.covered(jobs, lo, hi)) / 1e3
-    }
+    // Spark work per primary request (cycle, fold or pass)
+    val requests = measured.filter(s => s.parent == 0L && s.name == primary)
+    require(requests.nonEmpty, s"no measured $primary request")
+    work("spark", requests)
+    out("spark.requests") = requests.size
     out("spark.unattributed_jobs") = t.counters(0L).jobs
     out("run.wall_s") = wallS
 

@@ -125,36 +125,39 @@ object SpeedServe {
       folded.set(i + 1L)
     })._2
 
-    // the batch layer's handoff: rebuild from every document so far into
-    // a fresh version while the old one serves, then flip
-    def rebuild(upTo: Int): Double = Stats.timed(ctx.trace.span("rebuild", "rebuild") {
-      val paths = s"$in/initial/docs.parquet" +: (0 to upTo).map(i => s"$in/stream/$i/docs.parquet")
-      val docs = spark.read.schema(docSchema).parquet(paths: _*)
+    // the batch layer's handoff: rebuild from the documents so far into a
+    // fresh version while the old one serves, then flip
+    def rebuild(): Double = Stats.timed(ctx.trace.span("rebuild", "rebuild") {
+      val docs = spark.read.schema(docSchema).parquet(s"$in/initial/docs.parquet")
       val v = Layer.call(ctx, "model.ServingPointer.stage", None) {
-        ServingPointer.stage(spark, st.lex)(
-          LexIndex.build(spark, docs, _, batchId = upTo))
+        ServingPointer.stage(spark, st.lex)(LexIndex.build(spark, docs, _))
       }
       Layer.call(ctx, "model.ServingPointer.flip", None)(ServingPointer.flip(spark, st.lex, v))
       ServingPointer.dropSuperseded(spark, st.lex)
     })._2
 
-    // warm-up: folds and one read of each kind, untimed
-    val warmFolds = plan.int("warmup_folds")
+    // warm-up: one read of each kind, side by side as in the window,
+    // untimed (the set-ups have already run the fold's code paths: a
+    // first fold takes no longer than later ones)
     r.mark("setup")
-    (0 until warmFolds).foreach(i => fold(i, s"warmup-fold-$i"))
-    reads.take(3).foreach(rd => Reads.exec(ctx, st, embAll, rd, latestHour.get, "warmup-read"))
-    val rebuildS = rebuild(warmFolds - 1)
+    val pool = Executors.newFixedThreadPool(plan.int("reader_threads"))
+    reads.take(3).map(rd => pool.submit(new Runnable {
+      def run(): Unit = Reads.exec(ctx, st, embAll, rd, latestHour.get, "warmup-read")
+    })).foreach(_.get())
+    val rebuildS = rebuild()
 
     r.mark("warmup")
-    // measured window
+    // measured window: folds until the deadline, and at least `min_folds`
+    // so that every run's fold p50 rests on the same number of samples
     val deadline = System.nanoTime() + (ctx.seconds * 1e9).toLong
+    val minFolds = plan.int("min_folds")
     val foldS = mutable.ArrayBuffer.empty[Double]
     var foldedDocs = 0L
     val foldErr = new AtomicReference[Throwable](null)
     val docsPerBatch = plan.ints("batch_docs")
     val folder = new Thread(() => {
-      var i = warmFolds
-      try while (System.nanoTime() < deadline && i < nBatches) {
+      var i = 0
+      try while ((System.nanoTime() < deadline || i < minFolds) && i < nBatches) {
         foldS += fold(i, s"fold-$i")
         foldedDocs += docsPerBatch(i)
         i += 1
@@ -162,12 +165,12 @@ object SpeedServe {
     }, "lambdabench-fold")
 
     val rate = plan.double("read_rate")
-    val pool = Executors.newFixedThreadPool(plan.int("reader_threads"))
     val lat = new ConcurrentLinkedQueue[(String, Double)]()
     val waits = new ConcurrentLinkedQueue[Double]()
+    // (start, end) of each read's service, System.nanoTime
+    val service = new ConcurrentLinkedQueue[(Long, Long)]()
     val lateness = mutable.ArrayBuffer.empty[Double]
     val readFailures = new AtomicLong(0)
-    val retries = new AtomicLong(0)
     val periodNs = (1e9 / rate).toLong
     val start = System.nanoTime()
     folder.start()
@@ -186,9 +189,10 @@ object SpeedServe {
           val began = System.nanoTime()
           waits.add((began - due) / 1e6)
           try {
-            val tries = Reads.withRetry(Reads.exec(ctx, st, embAll, rd, latestHour.get, req))
-            retries.addAndGet(tries - 1L)
-            lat.add(rd.kind -> (System.nanoTime() - due) / 1e6)
+            Reads.exec(ctx, st, embAll, rd, latestHour.get, req)
+            val end = System.nanoTime()
+            service.add((began, end))
+            lat.add(rd.kind -> (end - due) / 1e6)
           } catch {
             case e: Throwable =>
               readFailures.incrementAndGet()
@@ -207,6 +211,12 @@ object SpeedServe {
     require(foldS.nonEmpty, "no fold finished in the window")
 
     val latMs = lat.asScala.toSeq.map(_._2)
+    // the reader's load: service seconds over the threads' time from the
+    // first due read to the last read's end, and the capacity that implies
+    val serviceS = service.asScala.toSeq.map { case (a, b) => (b - a) / 1e9 }
+    val readerS = (service.asScala.map(_._2).max - start) / 1e9
+    val threads = plan.int("reader_threads")
+    val waitMs = waits.asScala.toSeq
     def kindP50(k: String) = {
       val xs = lat.asScala.toSeq.collect { case (`k`, v) => v }
       if (xs.isEmpty) Double.NaN else Stats.median(xs)
@@ -226,7 +236,11 @@ object SpeedServe {
       "read_p90_ms" -> (Stats.quantile(latMs, 0.9), "ms"),
       "folds" -> (foldS.size.toDouble, "count"),
       "reads" -> (latMs.size.toDouble, "count"),
-      "read_retries" -> (retries.get.toDouble, "count"),
+      "read_service_mean_ms" -> (serviceS.sum / serviceS.size * 1000, "ms"),
+      "reader_capacity" -> (threads * serviceS.size / serviceS.sum, "1/s"),
+      "reader_util" -> (serviceS.sum / (threads * readerS), "ratio"),
+      "read_wait_p50_ms" -> (Stats.median(waitMs), "ms"),
+      "read_wait_max_ms" -> (waitMs.max, "ms"),
       "read_lookup_p50_ms" -> (kindP50("lookup"), "ms"),
       "read_bm25_p50_ms" -> (kindP50("bm25"), "ms"),
       "read_ann_p50_ms" -> (kindP50("ann"), "ms"),
@@ -235,8 +249,7 @@ object SpeedServe {
       "generator_late_p50_ms" -> (Stats.median(lateness.toSeq), "ms"),
       "generator_late_max_ms" -> (lateness.max, "ms")))
     if (ctx.trace.enabled) {
-      Layer.set("reader.read", "wait_ms", Stats.median(waits.asScala.toSeq))
-      Layer.set("reader.read", "retries", retries.get.toDouble)
+      Layer.set("reader.read", "wait_ms", Stats.median(waitMs))
       Layer.set("reader", "generator_late_ms", Stats.median(lateness.toSeq))
       Layer.set("operators.LexIndex", "levels_end",
         DirStat.levels(ServingPointer.resolve(spark, st.lex).get + "/postings"))
@@ -343,21 +356,6 @@ object Reads {
         Option(n.get("probe")).map(_.asLong()).getOrElse(-1L))
     }.toIndexedSeq
   }
-
-  /** True when `e`'s cause chain holds a file that vanished mid-read (a
-    * read that straddled a store's compaction swap).
-    */
-  private def vanished(e: Throwable): Boolean =
-    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(20).exists {
-      case _: java.io.FileNotFoundException => true
-      case a: org.apache.spark.sql.AnalysisException => a.getCondition == "PATH_NOT_FOUND"
-      case x => Option(x.getMessage).exists(_.contains("FileNotFoundException"))
-    }
-
-  /** Run `body`, retrying once on a vanished file; returns the attempts made. */
-  def withRetry(body: => Unit): Int =
-    try { body; 1 }
-    catch { case e: Throwable if vanished(e) => body; 2 }
 
   def exec(ctx: Ctx, st: SpeedServe.Stores, embAll: DataFrame, rd: Read,
       latestHour: Long, req: String): Unit = {

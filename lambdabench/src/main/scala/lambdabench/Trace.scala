@@ -122,6 +122,18 @@ final class Trace(val enabled: Boolean, sc: SparkContext) {
       }
     }
 
+  /** Run the benchmark's own instrumentation jobs (counting rows, pairs,
+    * edges) under a span id no rollup counts, so the layer and `spark.*`
+    * figures cover only the engine's calls.
+    */
+  def untracked[T](body: => T): T =
+    if (!enabled) body
+    else {
+      val saved = sc.getLocalProperty(Trace.Prop)
+      sc.setLocalProperty(Trace.Prop, Trace.UntrackedSpan.toString)
+      try body finally sc.setLocalProperty(Trace.Prop, saved)
+    }
+
   /** The request the calling thread is inside ("" outside any span). */
   def currentRequest: String = current.get()._2
 
@@ -169,6 +181,8 @@ object Trace {
   val Prop = "lambdabench.span"
   /** Span id carried by the drain marker job, which no rollup counts. */
   val MarkerSpan = -1L
+  /** Span id of the benchmark's instrumentation jobs, which no rollup counts. */
+  val UntrackedSpan = -2L
 
   /** Total length of the union of `intervals`, clipped to [lo, hi]. */
   def covered(intervals: Seq[(Long, Long)], lo: Long, hi: Long): Long = {
