@@ -236,6 +236,7 @@ def main():
     started = time.time()
     spec = json.load(open(SPEC))
     cp = classpath()
+    build_s = time.time() - started
     work = os.path.join(build_dir(), "work", f"{a.workload}-{a.seed}-{os.getpid()}")
     shutil.rmtree(work, ignore_errors=True)
     inp = os.path.join(work, "input")
@@ -243,9 +244,12 @@ def main():
     gen.generate(a.workload, a.seed, a.size, inp)
     gen_s = time.time() - t0
     steal0 = cpu_steal()
+    t0 = time.time()
     rc = run_jvm(cp, ["--workload", a.workload, "--input", inp, "--work", work,
                       "--seconds", str(a.seconds), "--trace", str(a.trace)], work)
     steal1 = cpu_steal()
+    jvm_s = time.time() - t0
+    t0 = time.time()
     res_path = os.path.join(work, "result.json")
     if rc != 0 or not os.path.exists(res_path):
         sys.stderr.write(open(os.path.join(work, "jvm.log")).read()[-6000:])
@@ -260,15 +264,18 @@ def main():
     except Exception as e:  # noqa: BLE001 - a crashed check is a failed check
         checks["python_checks"] = dict(ok=False, detail=repr(e))
     correct = res["error"] is None and all(c["ok"] for c in checks.values())
+    check_s = time.time() - t0
 
     rec = dict(workload=a.workload, seed=a.seed, size=a.size, seconds=a.seconds,
-               trace=a.trace, time=time.time(), gen_s=gen_s, e2e=res["metrics"],
+               trace=a.trace, time=time.time(), build_s=build_s, gen_s=gen_s, jvm_s=jvm_s,
+               check_s=check_s, e2e=res["metrics"],
                table=res["facts"].get("table", {}), checks=checks,
                host=dict(res["facts"].get("host") or {},
                          cpu_steal_jiffies=None if steal0 is None else steal1 - steal0),
                attempted=res["attempted"],
                failed=res["failed"], correct=correct,
-               phases=res["facts"].get("phases"), wall_s=time.time() - started)
+               phases=res["facts"].get("phases"), samples=res["facts"].get("samples"),
+               wall_s=time.time() - started)
     if a.trace:
         rec["rollup"] = json.load(open(os.path.join(work, "rollup.json")))
         rec["tracing_overhead"] = tracing_overhead(rec)

@@ -39,14 +39,12 @@ object BatchRecompute {
     // set-up: a fresh master holding the initial slices and the corpus
     // loaded into the cache, several times
     val setups = (1 to setupReps).map { i =>
-      val master = ctx.dir(s"master$i")
-      Stats.timed(ctx.trace.span("setup", s"setup-$i") {
+      ctx.cpu.measure(s"setup-$i")(ctx.trace.span("setup", s"setup-$i") {
         ingest(ctx, FactStore.eventsAsFacts(spark, initial)
-          .unionAll(FactStore.equivFactsFromEvents(spark, initial)), master)
+          .unionAll(FactStore.equivFactsFromEvents(spark, initial)), master = ctx.dir(s"master$i"))
         corpus.load()
       })._2
     }
-    r.metric("setup_s", Stats.median(setups), "s")
     val master = ctx.work + s"/master$setupReps"
     val views = ctx.dir("views")
     r.mark("setup")
@@ -60,13 +58,13 @@ object BatchRecompute {
     r.mark("warmup")
 
     val ingestS = mutable.ArrayBuffer.empty[Double]
-    val recomputeS = mutable.ArrayBuffer.empty[Double]
     val viewsS = mutable.ArrayBuffer.empty[Double]
     val passS = mutable.ArrayBuffer.empty[Double]
-    var factsScanned = 0L
+    val facts = mutable.ArrayBuffer.empty[Long]
     var done = 0
-    // cycles until the deadline, and at least `min_cycles`, so that every
-    // run's p50 rests on the same number of samples
+    // cycles until the deadline, and at least `min_cycles`; the metrics
+    // cover the first `min_cycles`, so every run's figures rest on the
+    // same cycles over the same master sizes
     val deadline = System.nanoTime() + (ctx.seconds * 1e9).toLong
     val minCycles = plan.int("min_cycles")
     while ((System.nanoTime() < deadline || done < minCycles) && done < cycles.size) {
@@ -74,42 +72,58 @@ object BatchRecompute {
       val req = s"cycle-$done"
       ctx.trace.span("cycle", req) {
         // one ingest sample per cycle: the new slice plus the re-delivery
-        ingestS += Stats.timed {
+        ingestS += ctx.cpu.measure(s"ingest-$done") {
           ingest(ctx, FactStore.eventsAsFacts(spark, slice(c.slice))
             .unionAll(FactStore.equivFactsFromEvents(spark, slice(c.slice))), master)
           ingest(ctx, FactStore.eventsAsFacts(spark, slice(c.redeliver)), master)
         }._2
         r.attempted += 2
-        val (_, v) = Stats.timed(recompute(ctx, master, views, req))
-        val (_, p) = Stats.timed(corpus.pass(req))
-        viewsS += v
-        passS += p
-        recomputeS += v + p
+        viewsS += ctx.cpu.measure(s"views-$done")(recompute(ctx, master, views, req))._2
+        passS += Stats.timed(corpus.pass(req))._2
         r.attempted += 2
       }
       // the CC edge count of this cycle's master, outside the cycle's span
       if (ctx.trace.enabled) Layer.ccEdges(ctx, equivEdges(spark, master), calls = 1)
-      factsScanned += masterFacts(spark, master)
+      facts += masterFacts(spark, master)
       done += 1
     }
     r.mark("window")
-    require(done > 0, "no cycle finished")
-    val p50 = Stats.median(recomputeS.toSeq)
-    r.metric("op_p50_s", p50, "s")
-    r.metric("step_p50_ms", Stats.median(ingestS.toSeq) * 1000, "ms")
+    require(done >= minCycles, s"only $done of $minCycles cycles finished")
+    ctx.cpu.drain()
+    val m = minCycles
+    def cpu(op: String) = (0 until m).map(i => ctx.cpu.cpuS(s"$op-$i"))
+    val (ingestCpu, viewsCpu) = (cpu("ingest"), cpu("views"))
+    val passCpu = (0 until m).map(i => CorpusDedup.passCpuS(ctx, s"cycle-$i"))
+    val recomputeCpu = viewsCpu.zip(passCpu).map { case (a, b) => a + b }
+    val setupCpu = (1 to setupReps).map(i => ctx.cpu.cpuS(s"setup-$i"))
+    r.metric("setup_s", Stats.median(setupCpu), "s")
+    r.metric("op_cpu_s", Stats.median(recomputeCpu), "s")
+    r.metric("step_cpu_ms", Stats.median(ingestCpu) * 1000, "ms")
+    val recomputeS = viewsS.take(m).zip(passS.take(m)).map { case (a, b) => a + b }
     // records the recompute read: master facts plus corpus documents
-    val docs = corpus.nDocs * done
-    r.metric("items_per_s", (factsScanned + docs) / recomputeS.sum, "1/s")
+    val factsScanned = facts.take(m).sum
+    val docs = corpus.nDocs * m
     val recall = corpus.finish()
     r.fact("table", Json.obj(
-      "ingest_p50_s" -> (Stats.median(ingestS.toSeq), "s"),
-      "recompute_p50_s" -> (p50, "s"),
-      "views_p50_s" -> (Stats.median(viewsS.toSeq), "s"),
-      "batch_facts_per_s" -> (factsScanned / viewsS.sum, "1/s"),
-      "dedup_pass_p50_s" -> (Stats.median(passS.toSeq), "s"),
-      "dedup_docs_per_s" -> (docs / passS.sum, "1/s"),
+      "ingest_p50_s" -> (Stats.median(ingestS.take(m).toSeq), "s"),
+      "recompute_p50_s" -> (Stats.median(recomputeS.toSeq), "s"),
+      "views_p50_s" -> (Stats.median(viewsS.take(m).toSeq), "s"),
+      "batch_facts_per_s" -> (factsScanned / viewsS.take(m).sum, "1/s"),
+      "dedup_pass_p50_s" -> (Stats.median(passS.take(m).toSeq), "s"),
+      "dedup_docs_per_s" -> (docs / passS.take(m).sum, "1/s"),
       "dedup_planted_recall" -> (recall, "ratio"),
+      "recompute_items_per_s" -> ((factsScanned + docs) / recomputeS.sum, "1/s"),
+      "ingest_cpu_p50_s" -> (Stats.median(ingestCpu), "s"),
+      "views_cpu_p50_s" -> (Stats.median(viewsCpu), "s"),
+      "dedup_pass_cpu_p50_s" -> (Stats.median(passCpu), "s"),
+      "setup_wall_p50_s" -> (Stats.median(setups), "s"),
+      "cycles_measured" -> (m.toDouble, "count"),
       "cycles" -> (done.toDouble, "count")))
+    // every measured sample, in cycle order (CPU, then wall seconds)
+    r.fact("samples", s"""{"ingest_cpu_s":${Json.arr(ingestCpu)},""" +
+      s""""views_cpu_s":${Json.arr(viewsCpu)},"pass_cpu_s":${Json.arr(passCpu)},""" +
+      s""""setup_cpu_s":${Json.arr(setupCpu)},"ingest_s":${Json.arr(ingestS.toSeq)},""" +
+      s""""views_s":${Json.arr(viewsS.toSeq)},"pass_s":${Json.arr(passS.toSeq)}}""")
     // the Python side evaluates the oracles over exactly the slices ingested
     r.fact("ingested_slices", cycles.take(done).map(_.slice).mkString("[", ",", "]"))
     r.fact("oracles", Json.obj(

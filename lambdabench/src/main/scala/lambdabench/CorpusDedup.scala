@@ -94,10 +94,10 @@ object CorpusDedup {
     val plan = Plan.read(ctx.input + "/plan.json")
     val corpus = new Corpus(ctx, plan)
     // set-up: load the corpus into the session's cache, several times
-    val setups = (1 to plan.int("setup_reps")).map { i =>
-      Stats.timed(ctx.trace.span("setup", s"setup-$i")(corpus.load()))._2
+    val setupReps = plan.int("setup_reps")
+    (1 to setupReps).foreach { i =>
+      ctx.cpu.measure(s"setup-$i")(ctx.trace.span("setup", s"setup-$i")(corpus.load()))
     }
-    r.metric("setup_s", Stats.median(setups), "s")
     val nDocs = corpus.nDocs
     r.mark("setup")
     corpus.warmup()
@@ -115,14 +115,17 @@ object CorpusDedup {
       n += 1
     }
     r.mark("window")
-    val p50 = Stats.median(passS.toSeq)
-    r.metric("op_p50_s", p50, "s")
-    r.metric("step_p50_ms", Stats.median(minhashS.toSeq) * 1000, "ms")
-    r.metric("items_per_s", nDocs * passS.size / passS.sum, "1/s")
+    ctx.cpu.drain()
+    val passCpu = (0 until n).map(i => CorpusDedup.passCpuS(ctx, s"pass-$i"))
+    val minhashCpu = (0 until n).map(i => ctx.cpu.cpuS(s"pass-$i.minhash"))
+    r.metric("setup_s", Stats.median((1 to setupReps).map(i => ctx.cpu.cpuS(s"setup-$i"))), "s")
+    r.metric("op_cpu_s", Stats.median(passCpu), "s")
+    r.metric("step_cpu_ms", Stats.median(minhashCpu) * 1000, "ms")
     val recall = corpus.finish()
     r.fact("table", Json.obj(
       "dedup_docs_per_s" -> (nDocs * passS.size / passS.sum, "1/s"),
-      "dedup_pass_p50_s" -> (p50, "s"),
+      "dedup_pass_p50_s" -> (Stats.median(passS.toSeq), "s"),
+      "dedup_pass_cpu_p50_s" -> (Stats.median(passCpu), "s"),
       "minhash_p50_s" -> (Stats.median(minhashS.toSeq), "s"),
       "dedup_planted_recall" -> (recall, "ratio"),
       "passes" -> (passS.size.toDouble, "count"),
@@ -130,29 +133,41 @@ object CorpusDedup {
   }
 
   /** One pass; writes the near-dup pairs and the surviving docs' token
-    * counts under `out`, returns the near-dedup stage's seconds.
+    * counts under `out`, returns the near-dedup stage's seconds. The
+    * pass's three steps are CPU-metered as `<req>.prep` (filters, exact
+    * dedup), `<req>.minhash` and `<req>.rest` (CC drop, token counts).
     */
   private[lambdabench] def pass(ctx: Ctx, docs: DataFrame, threshold: Double, out: String,
       req: String): Double = {
     ctx.trace.span("pass", req) {
-      val filtered = Layer.call(ctx, "operators.TextOps.filters", None)(filters(docs))
-      val exact = Layer.call(ctx, "operators.TextOps.exactDedup", None)(exactDedup(filtered))
-      val (pairs, mhS) = Stats.timed(Layer.call(ctx, "operators.NearDedup.minhash", None) {
-        val p = NearDedup.minhashNearDups(exact, threshold)
-        p.write.mode("overwrite").parquet(out + "/pairs")
-        p
-      })
-      val kept = Layer.call(ctx, "operators.GraphOps.cc", None) {
-        Engine.dropNearDuplicates(exact, pairs.select("i", "j"))
+      val (filtered, exact) = ctx.cpu.measure(s"$req.prep") {
+        val filtered = Layer.call(ctx, "operators.TextOps.filters", None)(filters(docs))
+        (filtered, Layer.call(ctx, "operators.TextOps.exactDedup", None)(exactDedup(filtered)))
+      }._1
+      val (pairs, mhS) = ctx.cpu.measure(s"$req.minhash") {
+        Layer.call(ctx, "operators.NearDedup.minhash", None) {
+          val p = NearDedup.minhashNearDups(exact, threshold)
+          p.write.mode("overwrite").parquet(out + "/pairs")
+          p
+        }
       }
-      Layer.call(ctx, "operators.TextOps.tokenCounts", None) {
-        kept.select(col("doc_id"), size(TextFunctions.tokens(col("text"))).as("n_tokens"))
-          .write.mode("overwrite").parquet(out + "/survivors")
+      ctx.cpu.measure(s"$req.rest") {
+        val kept = Layer.call(ctx, "operators.GraphOps.cc", None) {
+          Engine.dropNearDuplicates(exact, pairs.select("i", "j"))
+        }
+        Layer.call(ctx, "operators.TextOps.tokenCounts", None) {
+          kept.select(col("doc_id"), size(TextFunctions.tokens(col("text"))).as("n_tokens"))
+            .write.mode("overwrite").parquet(out + "/survivors")
+        }
       }
       Seq(filtered, exact, pairs).foreach(_.unpersist())
       mhS
     }
   }
+
+  /** CPU seconds of pass `req` (after [[CpuMeter.drain]]). */
+  private[lambdabench] def passCpuS(ctx: Ctx, req: String): Double =
+    Seq("prep", "minhash", "rest").map(p => ctx.cpu.cpuS(s"$req.$p")).sum
 
   /** The quality and language filters. */
   private[lambdabench] def filters(docs: DataFrame): DataFrame =

@@ -36,10 +36,11 @@ final class Report(startNanos: Long) {
   }
 }
 
-/** Everything a workload needs: the session, the tracer, the generated
-  * inputs under `input`, a scratch area under `work`, and the time budget.
+/** Everything a workload needs: the session, the tracer, the CPU meter,
+  * the generated inputs under `input`, a scratch area under `work`, and
+  * the time budget.
   */
-final case class Ctx(spark: SparkSession, trace: Trace, input: String,
+final case class Ctx(spark: SparkSession, trace: Trace, cpu: CpuMeter, input: String,
     work: String, seconds: Double, report: Report) {
   def dir(name: String): String = {
     val d = new File(work, name)
@@ -68,11 +69,18 @@ object Main {
       // the engine's documented setting for sessions serving small IVF-PQ
       // indexes (see graft.Engine)
       .config("spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly", "false")
+      // the status store keeps only the latest jobs, stages and queries, so
+      // the retained heap does not grow with the number of calls a run made
+      .config("spark.ui.retainedJobs", "50")
+      .config("spark.ui.retainedStages", "50")
+      .config("spark.ui.retainedTasks", "1000")
+      .config("spark.sql.ui.retainedExecutions", "20")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val report = new Report(jvmT0)
     val trace = new Trace(traceOn, spark.sparkContext)
-    val ctx = Ctx(spark, trace, opts("input"), work, opts("seconds").toDouble, report)
+    val ctx = Ctx(spark, trace, new CpuMeter(spark.sparkContext), opts("input"), work,
+      opts("seconds").toDouble, report)
     val disk0 = graft.Canary.diskSnapshot()
     val t0 = System.nanoTime()
     report.mark("session")
@@ -141,6 +149,7 @@ object Json {
   }
   def num(v: Double): String =
     if (v.isNaN || v.isInfinite) "null" else v.toString
+  def arr(vs: Seq[Double]): String = vs.map(num).mkString("[", ",", "]")
 
   /** A JSON object; (value, unit) pairs render as {"value":…,"unit":…}. */
   def obj(fields: (String, Any)*): String = fields.map {

@@ -30,7 +30,7 @@ object Rollup {
 
   def write(ctx: Ctx, wallS: Double, primary: String): Unit = {
     val t = ctx.trace
-    t.drain()
+    ctx.cpu.drain()
     val spans = t.allSpans
     val t0 = spans.headOption.map(_.start).getOrElse(0L)
     val kids = spans.groupBy(_.parent)

@@ -61,7 +61,7 @@ object SpeedServe {
     // fresh dirs, several times
     val setups = (1 to plan.int("setup_reps")).map { i =>
       val st = new Stores(ctx.dir(s"stores$i"))
-      Stats.timed(ctx.trace.span("setup", s"setup-$i") {
+      ctx.cpu.measure(s"setup-$i")(ctx.trace.span("setup", s"setup-$i") {
         val counts = pageviewCounts(spark, s"$in/initial")
         Layer.call(ctx, "streaming.UpsertStore.fold", None) {
           UpsertStore.fold(spark, st.upsert, counts, Keys, seq = 0L)
@@ -77,7 +77,6 @@ object SpeedServe {
         }
       })._2
     }
-    r.metric("setup_s", Stats.median(setups), "s")
     val st = new Stores(ctx.work + s"/stores${setups.size}")
 
     // the speed layer's running pageview totals per (url, hour)
@@ -89,7 +88,7 @@ object SpeedServe {
     val folded = new AtomicLong(0) // batches committed so far
     val reads = Reads.load(ctx)
 
-    def fold(i: Int, req: String): Double = Stats.timed(ctx.trace.span("fold", req) {
+    def fold(i: Int, req: String): Double = ctx.cpu.measure(req)(ctx.trace.span("fold", req) {
       val bdir = s"$in/stream/$i"
       // this batch's counts added to the running totals of its keys
       val merged = ctx.trace.span("speed.upsert.merge") {
@@ -147,25 +146,26 @@ object SpeedServe {
     val rebuildS = rebuild()
 
     r.mark("warmup")
-    // measured window: folds until the deadline, and at least `min_folds`
-    // so that every run's fold p50 rests on the same number of samples
+    // measured window: folds until the deadline, and at least `min_folds`;
+    // the fold metrics cover the first `min_folds`, so every run's figures
+    // rest on the same folds over the same store states
     val deadline = System.nanoTime() + (ctx.seconds * 1e9).toLong
     val minFolds = plan.int("min_folds")
     val foldS = mutable.ArrayBuffer.empty[Double]
-    var foldedDocs = 0L
     val foldErr = new AtomicReference[Throwable](null)
     val docsPerBatch = plan.ints("batch_docs")
     val folder = new Thread(() => {
       var i = 0
       try while ((System.nanoTime() < deadline || i < minFolds) && i < nBatches) {
         foldS += fold(i, s"fold-$i")
-        foldedDocs += docsPerBatch(i)
         i += 1
       } catch { case e: Throwable => foldErr.set(e); e.printStackTrace() }
     }, "lambdabench-fold")
 
     val rate = plan.double("read_rate")
     val lat = new ConcurrentLinkedQueue[(String, Double)]()
+    // (kind, operation id) of every read that succeeded
+    val done = new ConcurrentLinkedQueue[(String, String)]()
     val waits = new ConcurrentLinkedQueue[Double]()
     // (start, end) of each read's service, System.nanoTime
     val service = new ConcurrentLinkedQueue[(Long, Long)]()
@@ -189,10 +189,11 @@ object SpeedServe {
           val began = System.nanoTime()
           waits.add((began - due) / 1e6)
           try {
-            Reads.exec(ctx, st, embAll, rd, latestHour.get, req)
+            ctx.cpu.measure(req)(Reads.exec(ctx, st, embAll, rd, latestHour.get, req))
             val end = System.nanoTime()
             service.add((began, end))
             lat.add(rd.kind -> (end - due) / 1e6)
+            done.add(rd.kind -> req)
           } catch {
             case e: Throwable =>
               readFailures.incrementAndGet()
@@ -208,8 +209,27 @@ object SpeedServe {
     r.mark("window")
     r.attempted += n + foldS.size * 4L
     r.failed += readFailures.get + (if (foldErr.get != null) 4 else 0)
-    require(foldS.nonEmpty, "no fold finished in the window")
+    require(foldS.size >= minFolds, s"only ${foldS.size} of $minFolds folds finished")
+    ctx.cpu.drain()
+    val setupCpu = setups.indices.map(i => ctx.cpu.cpuS(s"setup-${i + 1}"))
+    val foldCpu = (0 until minFolds).map(i => ctx.cpu.cpuS(s"fold-$i"))
+    def kindCpu(k: String) = done.asScala.toSeq.collect { case (`k`, op) => ctx.cpu.cpuS(op) }
+    def kindCpuMs(k: String) = {
+      val xs = kindCpu(k)
+      if (xs.isEmpty) Double.NaN else Stats.median(xs) * 1000
+    }
+    val readCpu = Seq("lookup", "bm25", "ann").map(kindCpuMs).filterNot(_.isNaN)
+    r.metric("setup_s", Stats.median(setupCpu), "s")
+    r.metric("op_cpu_s", Stats.median(foldCpu), "s")
+    // each read kind's CPU p50, averaged over the kinds: the median of the
+    // mixed sample would jump between kinds that differ 3x in cost
+    r.metric("step_cpu_ms", readCpu.sum / readCpu.size, "ms")
 
+    // every measured sample (CPU, then wall seconds; reads by kind)
+    r.fact("samples", s"""{"fold_cpu_s":${Json.arr(foldCpu)},""" +
+      s""""setup_cpu_s":${Json.arr(setupCpu)},"fold_s":${Json.arr(foldS.toSeq)},""" +
+      Seq("lookup", "bm25", "ann").map(k => s""""${k}_cpu_s":${Json.arr(kindCpu(k))}""")
+        .mkString(",") + "}")
     val latMs = lat.asScala.toSeq.map(_._2)
     // the reader's load: service seconds over the threads' time from the
     // first due read to the last read's end, and the capacity that implies
@@ -221,17 +241,12 @@ object SpeedServe {
       val xs = lat.asScala.toSeq.collect { case (`k`, v) => v }
       if (xs.isEmpty) Double.NaN else Stats.median(xs)
     }
-    val foldP50 = Stats.median(foldS.toSeq)
-    r.metric("op_p50_s", foldP50, "s")
-    // each read kind's p50, averaged over the kinds: the median of the
-    // mixed sample would jump between kinds that differ 3x in cost
+    val folds = foldS.take(minFolds).toSeq
     val kinds = Seq("lookup", "bm25", "ann").map(kindP50).filterNot(_.isNaN)
-    r.metric("step_p50_ms", kinds.sum / kinds.size, "ms")
-    r.metric("items_per_s", foldedDocs / foldS.sum, "1/s")
     r.fact("table", Json.obj(
-      "fold_p50_s" -> (foldP50, "s"),
-      "fold_p75_s" -> (Stats.quantile(foldS.toSeq, 0.75), "s"),
-      "folded_docs_per_s" -> (foldedDocs / foldS.sum, "1/s"),
+      "fold_p50_s" -> (Stats.median(folds), "s"),
+      "fold_p75_s" -> (Stats.quantile(folds, 0.75), "s"),
+      "folded_docs_per_s" -> (docsPerBatch.take(minFolds).sum / folds.sum, "1/s"),
       "read_p50_ms" -> (Stats.median(latMs), "ms"),
       "read_p90_ms" -> (Stats.quantile(latMs, 0.9), "ms"),
       "folds" -> (foldS.size.toDouble, "count"),
@@ -244,6 +259,13 @@ object SpeedServe {
       "read_lookup_p50_ms" -> (kindP50("lookup"), "ms"),
       "read_bm25_p50_ms" -> (kindP50("bm25"), "ms"),
       "read_ann_p50_ms" -> (kindP50("ann"), "ms"),
+      "read_kinds_p50_ms" -> (kinds.sum / kinds.size, "ms"),
+      "fold_cpu_p50_s" -> (Stats.median(foldCpu), "s"),
+      "read_lookup_cpu_p50_ms" -> (kindCpuMs("lookup"), "ms"),
+      "read_bm25_cpu_p50_ms" -> (kindCpuMs("bm25"), "ms"),
+      "read_ann_cpu_p50_ms" -> (kindCpuMs("ann"), "ms"),
+      "setup_wall_p50_s" -> (Stats.median(setups), "s"),
+      "folds_measured" -> (minFolds.toDouble, "count"),
       "rebuild_s" -> (rebuildS, "s"),
       "read_rate" -> (rate, "1/s"),
       "generator_late_p50_ms" -> (Stats.median(lateness.toSeq), "ms"),

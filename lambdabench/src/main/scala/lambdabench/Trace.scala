@@ -54,8 +54,6 @@ final class Trace(val enabled: Boolean, sc: SparkContext) {
   /** (span, start ms, end ms) of every finished job, wall clock. */
   private val jobIntervals = mutable.ArrayBuffer.empty[(Long, Long, Long)]
 
-  @volatile private var markerSeen = false
-
   /** Wall-clock ms of a System.nanoTime reading (job events carry wall ms). */
   private val offsetMs = System.currentTimeMillis() - System.nanoTime() / 1000000L
   def wallMs(nanos: Long): Long = offsetMs + nanos / 1000000L
@@ -73,8 +71,7 @@ final class Trace(val enabled: Boolean, sc: SparkContext) {
     }
     override def onJobEnd(e: SparkListenerJobEnd): Unit = lock.synchronized {
       val sp = jobSpan.getOrElse(e.jobId, 0L)
-      if (sp == Trace.MarkerSpan) markerSeen = true
-      else jobIntervals += ((sp, jobStart.getOrElse(e.jobId, e.time), e.time))
+      jobIntervals += ((sp, jobStart.getOrElse(e.jobId, e.time), e.time))
     }
     override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = lock.synchronized {
       val id = e.stageInfo.stageId
@@ -137,19 +134,6 @@ final class Trace(val enabled: Boolean, sc: SparkContext) {
   /** The request the calling thread is inside ("" outside any span). */
   def currentRequest: String = current.get()._2
 
-  /** Wait until the listener bus has delivered every event posted so far. */
-  def drain(): Unit = if (enabled) {
-    // the listener bus is asynchronous and delivers in order: once a
-    // marker job's end event arrives, every earlier event has too
-    markerSeen = false
-    sc.setLocalProperty(Trace.Prop, Trace.MarkerSpan.toString)
-    try sc.parallelize(Seq(1), 1).count()
-    finally sc.setLocalProperty(Trace.Prop, null)
-    val deadline = System.currentTimeMillis() + 30000
-    while (!markerSeen && System.currentTimeMillis() < deadline) Thread.sleep(10)
-    require(markerSeen, "listener bus did not drain within 30 s")
-  }
-
   def allSpans: Seq[Span] = spans.asScala.toSeq.sortBy(_.start)
 
   def counters(span: Long): Counters = lock.synchronized(bySpan.getOrElse(span, new Counters))
@@ -179,8 +163,6 @@ final class Trace(val enabled: Boolean, sc: SparkContext) {
 
 object Trace {
   val Prop = "lambdabench.span"
-  /** Span id carried by the drain marker job, which no rollup counts. */
-  val MarkerSpan = -1L
   /** Span id of the benchmark's instrumentation jobs, which no rollup counts. */
   val UntrackedSpan = -2L
 
