@@ -5,29 +5,101 @@ import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.types._
 
-/** Driver-side `head()` for the stores' ONE-ROW metadata tables (stats,
-  * meta, pointer, bucket sidecars) — the [[RowEst]] footer pattern
-  * extended from row COUNTS to row VALUES.
+/** Driver-side reads AND writes of the stores' ONE-ROW metadata tables
+  * (stats, meta, pointer, bucket sidecars) — the [[RowEst]] footer
+  * pattern extended from row COUNTS to row VALUES.
   *
   * Every store mutation and every indexed read starts by resolving a
-  * one-row parquet table that the protocol wrote with `repartition(1)`.
-  * Reading it through `spark.read.parquet(dir).head()` costs a full
-  * Spark action — parse/plan/codegen plus a scheduled job — per read,
-  * ~60-150 ms of pure fixed overhead on a file that holds ONE row of
-  * flat primitives; a serving-store query pays it 5-15 times. At any
-  * scale this metadata is driver-sized by construction (a deployment
-  * with a catalog would serve the same row from table properties), so
-  * reading it with the parquet-hadoop reader on the driver is the
-  * correct cost shape, not a local-mode trick.
+  * one-row parquet table, and every mutation ends by committing one.
+  * Doing either through Spark costs a full action — parse/plan/codegen
+  * plus scheduled jobs (a `repartition(1)` write is an AQE shuffle stage
+  * and a write job) — ~60-150 ms of pure fixed overhead on a file that
+  * holds ONE row of flat primitives; a serving-store query pays the read
+  * 5-15 times, a speed-layer fold pays a write per store. At any scale
+  * this metadata is driver-sized by construction (a deployment with a
+  * catalog would serve the same row from table properties), so reading
+  * and writing it with parquet-hadoop on the driver is the correct cost
+  * shape, not a local-mode trick.
   *
-  * Supports exactly the shapes the stores write: flat OPTIONAL/REQUIRED
-  * primitives (plain int64, int32, double, float, boolean, UTF-8
-  * binary). Anything else — or any read error other than a missing row —
-  * falls back to the Spark read, so correctness never depends on this
-  * fast path. Mirrors `head()`: returns the first row encountered;
-  * throws (via the Spark fallback) when the table is empty.
+  * Supports exactly the shapes the stores use: flat OPTIONAL primitives
+  * (plain int64, int32, double, float, boolean, UTF-8 binary), nulls
+  * included. On the read side anything else — or any read error other
+  * than a missing row — falls back to the Spark read, so correctness
+  * never depends on this fast path; [[head]] mirrors `head()`: the first
+  * row encountered, throwing (via the Spark fallback) when the table is
+  * empty. [[write]] refuses other types loudly, and commits the way the
+  * Hadoop committer does (data file complete before `_SUCCESS`), so
+  * [[StoreSwap]] classifies a crashed write exactly as a crashed job.
   */
 object OneRowParquet {
+
+  /** Write the one-row table `schema` / `values` (one value per field,
+    * `null` for a missing one) to `dir`, replacing whatever is there —
+    * the driver-side equivalent of
+    * `Seq(row).toDF.repartition(1).write.mode(Overwrite).parquet(dir)`,
+    * with zero Spark jobs. Spark reads the result back with the same
+    * names, types and values.
+    *
+    * Commit order: the data file is written under a `_`-prefixed
+    * staging name (hidden from every reader and from [[StoreSwap]]'s
+    * data-present check), renamed into place, then `_SUCCESS` is
+    * dropped. A crash while the file is being written leaves a dir with
+    * no visible data and no marker — torn, so [[StoreSwap.commit]]
+    * discards it and [[StoreSwap.committedPath]] never resolves it; a
+    * crash after the rename leaves a complete file.
+    */
+  def write(spark: SparkSession, dir: String, schema: StructType,
+      values: Any*): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    require(values.size == schema.size,
+      s"${values.size} values for the ${schema.size} fields of $schema")
+    val parquetType = new MessageType("spark_schema",
+      schema.fields.toSeq.map { f =>
+        val prim = f.dataType match {
+          case LongType => PrimitiveTypeName.INT64
+          case IntegerType => PrimitiveTypeName.INT32
+          case DoubleType => PrimitiveTypeName.DOUBLE
+          case FloatType => PrimitiveTypeName.FLOAT
+          case BooleanType => PrimitiveTypeName.BOOLEAN
+          case StringType => PrimitiveTypeName.BINARY
+          case t => throw new IllegalArgumentException(
+            s"one-row tables hold flat primitives; ${f.name} is $t")
+        }
+        val b = Types.optional(prim)
+        (if (f.dataType == StringType) b.as(LogicalTypeAnnotation.stringType()) else b)
+          .named(f.name): org.apache.parquet.schema.Type
+      }: _*)
+    val row = new SimpleGroupFactory(parquetType).newGroup()
+    for (i <- schema.indices) (schema(i).dataType, values(i)) match {
+      case (_, null) => () // OPTIONAL field left unset = null
+      case (LongType, x: Long) => row.add(i, x)
+      case (IntegerType, x: Int) => row.add(i, x)
+      case (DoubleType, x: Double) => row.add(i, x)
+      case (FloatType, x: Float) => row.add(i, x)
+      case (BooleanType, x: Boolean) => row.add(i, x)
+      case (StringType, x: String) => row.add(i, x)
+      case (t, x) => throw new IllegalArgumentException(
+        s"${schema(i).name}: $t cannot hold ${x.getClass.getName} $x")
+    }
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(dir)
+    val fs = p.getFileSystem(conf)
+    fs.delete(p, true)
+    fs.mkdirs(p)
+    val name = s"part-00000-${java.util.UUID.randomUUID()}.parquet"
+    val staged = new Path(p, "_" + name)
+    val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(staged, conf))
+      .withType(parquetType)
+      .withConf(conf)
+      .build()
+    try writer.write(row) finally writer.close()
+    require(fs.rename(staged, new Path(p, name)), s"rename $staged -> $name failed")
+    fs.create(new Path(p, "_SUCCESS"), true).close()
+  }
 
   def head(spark: SparkSession, dir: String): Row =
     headOption(spark, dir).getOrElse(

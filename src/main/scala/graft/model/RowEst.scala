@@ -65,9 +65,12 @@ object RowEst {
     * metadata I/O, zero jobs, fully synchronous (no listener bus; the
     * store mutations read back the count of the level they just wrote
     * through this instead of an [[org.apache.spark.sql.Observation]],
-    * whose `get` waits on the async bus). A missing directory counts as
-    * 0 — a zero-row batch writes no part files at all. None only on a
-    * footer-read failure; callers then fall back to a counting job.
+    * whose `get` waits on the async bus). An existing directory without
+    * part files counts as 0 (a committed zero-row write). None when the
+    * directory is missing or a footer read fails: a missing level is
+    * what a zero-row partitioned write leaves, but also what a caller
+    * that derived the wrong path sees, so it is no evidence of a count
+    * — callers fall back to a counting job.
     */
   def dirRowsExact(spark: org.apache.spark.sql.SparkSession,
       dir: String): Option[Long] =
@@ -75,7 +78,7 @@ object RowEst {
       val conf = spark.sparkContext.hadoopConfiguration
       val p = new org.apache.hadoop.fs.Path(dir)
       val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) Some(0L)
+      if (!fs.exists(p)) None
       else Some(fs.listStatus(p).iterator
         .filter(st => st.isFile && st.getLen > 0 &&
           !st.getPath.getName.startsWith("_") &&

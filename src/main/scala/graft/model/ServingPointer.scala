@@ -1,7 +1,7 @@
 package graft.model
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Versioned serving-pointer indirection for rebuild-while-serving —
   * the shard-version swap of the reference's serving layer
@@ -148,22 +148,23 @@ object ServingPointer {
   }
 
   /** Atomically flip the pointer to `version` (a dir [[stage]] built).
-    * One-row sidecar written to the pointer's tmp path, then the
-    * [[StoreSwap.commit]] two-rename — THE commit point: readers
+    * One-row sidecar written on the driver
+    * ([[OneRowParquet.write]], no Spark job) to the pointer's tmp path,
+    * then the [[StoreSwap.commit]] two-rename — THE commit point: readers
     * resolve the old version until this lands, the new one after, and
     * never anything in between. Re-running after a mid-flip crash
     * converges (the tmp overwrite + commit are idempotent).
     */
   def flip(spark: SparkSession, root: String, version: Long): Unit = {
-    import spark.implicits._
     require(fs(spark).exists(new Path(versionDir(root, version))),
       s"cannot flip $root to absent version dir v$version")
-    Seq(version).toDF("version")
-      .repartition(1)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(StoreSwap.tmpPath(pointerDir(root)))
+    OneRowParquet.write(spark, StoreSwap.tmpPath(pointerDir(root)),
+      PointerSchema, version)
     StoreSwap.commit(spark, pointerDir(root))
   }
+
+  private val PointerSchema =
+    new org.apache.spark.sql.types.StructType().add("version", "long")
 
   /** Delete superseded version dirs, keeping the newest `grace` of them
     * as the live-reader ledger: a reader that resolved BEFORE the last

@@ -3,7 +3,9 @@ package graft.operators
 import graft.functions.TextFunctions._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Persistent inverted (posting-list) index for lexical BM25 serving —
   * the lexical sibling of [[VectorIndex]], and the "posting-list index at
@@ -52,8 +54,8 @@ import org.apache.spark.sql.functions._
   *     touching the store ([[recover]]).
   *
   * Reads resolve stats through [[graft.model.StoreSwap.committedPath]]
-  * (a first-build stats job that crashed mid-write leaves a
-  * _temporary-only dir, which must read as NOT BUILT — r14) and
+  * (a first-build stats write that crashed mid-file leaves a dir with
+  * only the hidden staging file, which must read as NOT BUILT — r14) and
   * postings through [[graft.model.StoreSwap.readablePath]], applying
   * the `seq <= max_seq` gate — correct against any crash state WITHOUT
   * taking the writer's recovery lock; the single-WRITER contract (one
@@ -67,9 +69,11 @@ import org.apache.spark.sql.functions._
   * shares text_bm25_topk's oracle SQL verbatim and the driver proves
   * index ≡ direct scan.
   *
-  * At 100 TB the build is one map-combinable (doc, term) aggregate plus
-  * one partitioned write; an append is batch-sized (one file per touched
-  * bucket); a query touches query-term-sized data only — posting lists
+  * At 100 TB the build is one `doc_id` shuffle of the token stream
+  * (term counts and doc lengths together) plus one bucket-partitioned
+  * write, and the corpus constants are summed from the written postings;
+  * an append is the same at batch size (one file per touched bucket); a
+  * query touches query-term-sized data only — posting lists
   * for 3 terms, never the corpus. Repeated appends accumulate one
   * `seq=` directory per batch per touched bucket; [[maintain]] is the
   * files-per-bucket compaction trigger (the UpsertStore/LabelStore
@@ -165,7 +169,6 @@ object LexIndex {
     catch {
       case e: org.apache.spark.sql.AnalysisException
           if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") =>
-        import org.apache.spark.sql.types._
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           StructType(Seq(
@@ -174,31 +177,67 @@ object LexIndex {
             StructField("bucket", IntegerType), StructField("seq", IntegerType))))
     }
 
-  /** Tokenize `docs` once and run `f` over the cached (doc_id, t, tf)
-    * relation plus the materialized per-doc lengths. Without the cache,
-    * a build/append tokenizes the batch THREE times — once for the dl
-    * branch, once for the postings join's tf side, once for the stats
-    * job (measured ~2.7× on the append's wall clock at sf0.1); with it
-    * the corpus is read and tokenized exactly once per mutation. The
-    * cache is serialized + disk-spillable (batch-sized, must survive
-    * memory pressure) and dl is checkpointed (doc-count-sized) so the
-    * stats aggregate is free.
+  /** The batch's postings (doc_id, t, tf, dl), tokenizing `docs` once.
+    * ONE `doc_id` shuffle serves both the (doc_id, t) count and the
+    * per-doc length: hash-partitioning on doc_id satisfies the
+    * (doc_id, t) aggregate's distribution and the doc-length window's
+    * alike, so neither adds an exchange, and dl rides onto every posting
+    * without a join or a cache.
     */
-  private def withPostingRows[A](docs: DataFrame)
-      (f: (DataFrame, DataFrame) => A): A = {
-    val tf = docs.select(col("doc_id"), explode(tokens(col("text"))).as("t"))
+  private def postingRows(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), explode(tokens(col("text"))).as("t"))
       .where(col("t") =!= "")
+      .repartition(col("doc_id"))
       .groupBy("doc_id", "t").agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    try {
-      // dl stays a plan over the cached tf (no checkpoint job): both
-      // consumers — the postings join and the stats aggregate — recompute
-      // it as one small aggregate over the cache, cheaper than a
-      // dedicated materialization job per mutation
-      val dl = tf.groupBy("doc_id").agg(sum("tf").cast("double").as("dl"))
-      f(tf.join(dl, "doc_id"), dl)
-    } finally tf.unpersist()
+      .withColumn("dl", sum("tf").over(Window.partitionBy("doc_id")).cast("double"))
+
+  /** Write `docs`' postings as level `seq` (partitioned by bucket under
+    * the modulus `nBuckets`, one file per touched bucket) and return the
+    * level's (docs, sum of doc lengths), read back from the level just
+    * written — one small aggregate over the batch's postings, no second
+    * pass over the text. A doc's postings carry tf summing to its dl, so
+    * Σ tf is the level's Σ dl and Σ tf/dl counts its docs (each doc adds
+    * 1 up to rounding error far below ½ for any batch, hence the round).
+    */
+  private def writeLevel(spark: SparkSession, docs: DataFrame, dir: String,
+      nBuckets: Int, seq: Int, mode: SaveMode): (Long, Double) = {
+    postingRows(docs)
+      .withColumn("bucket", pmod(xxhash64(col("t")), lit(nBuckets.toLong)))
+      .withColumn("seq", lit(seq))
+      // co-locate each bucket's rows before the partitioned write: one
+      // file per touched bucket per level. Without it every shuffle
+      // partition opens a writer in EVERY bucket dir (partitions ×
+      // buckets part files — measured 4-8× the build wall at sf0.1, §6
+      // small-files both ways: slow to commit, slow for every later
+      // read/recover listing), and the serving file count grows far
+      // faster than the maintenance policy assumes.
+      .repartition(col("bucket"))
+      .write.mode(mode)
+      .partitionBy("bucket", "seq")
+      .parquet(postingsDir(dir))
+    // the schema is given, so the read infers none (inference is a job)
+    val totals = spark.read.schema("tf long, dl double, seq int")
+      .parquet(postingsDir(dir))
+      .where(col("seq") === lit(seq))
+      .agg(round(sum(col("tf") / col("dl"))).cast("long"), sum("tf"))
+      .head()
+    // zero-row level: no postings, both sums NULL
+    (if (totals.isNullAt(0)) 0L else totals.getLong(0),
+      if (totals.isNullAt(1)) 0.0 else totals.getLong(1).toDouble)
   }
+
+  private val StatsSchema = new StructType()
+    .add("n_docs", LongType).add("sum_dl", DoubleType).add("avgdl", DoubleType)
+    .add("n_buckets", IntegerType).add("max_seq", LongType).add("last_batch", LongType)
+
+  /** The one-row stats table, written on the driver
+    * ([[graft.model.OneRowParquet.write]], no Spark job). avgdl is 0
+    * for an index without documents (an empty bootstrap batch).
+    */
+  private def writeStats(spark: SparkSession, target: String, nDocs: Long,
+      sumDl: Double, nBuckets: Int, maxSeq: Long, lastBatch: Long): Unit =
+    graft.model.OneRowParquet.write(spark, target, StatsSchema,
+      nDocs, sumDl, if (nDocs == 0) 0.0 else sumDl / nDocs, nBuckets, maxSeq, lastBatch)
 
   /** Build the index from `docs` (doc_id, text, …) into a dir that has
     * never COMMITTED a build. `batchId` (optional) records a durable
@@ -233,7 +272,7 @@ object LexIndex {
     graft.model.StoreSwap.commit(spark, statsDir(dir))
     graft.model.StoreSwap.commit(spark, postingsDir(dir))
     // COMMITTED probe, not bare existence: a crash during the first
-    // build's stats job leaves stats/ existing with only _temporary
+    // build's stats write leaves stats/ existing with only hidden
     // staging inside — that torn dir must be cleared and rebuilt, never
     // refused (a bare exists() would brick the retry)
     if (graft.model.StoreSwap.committedPath(spark, statsDir(dir)).isDefined)
@@ -242,39 +281,17 @@ object LexIndex {
         "append/consolidate (both crash-safe); rebuild-in-place has no " +
         "atomic commit point")
     fs(spark).delete(new Path(statsDir(dir)), true) // torn first-write leftover
-    withPostingRows(docs) { (posts, dl) =>
-      posts
-        .withColumn("bucket", pmod(xxhash64(col("t")), lit(buckets.toLong)))
-        .withColumn("seq", lit(0))
-        // co-locate each bucket's rows before the partitioned write — the
-        // discipline append always had. Without it every one of the tf
-        // join's shuffle partitions opened a writer in EVERY bucket dir
-        // (partitions × buckets part files per build — measured 4-8× the
-        // build wall at sf0.1, §6 small-files both ways: slow to commit,
-        // slow for every later read/recover listing).
-        .repartition(col("bucket"))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("bucket", "seq")
-        .parquet(postingsDir(dir))
-      // a zero-row bootstrap batch writes NO part files; record the
-      // commit the way _SUCCESS would so markers-disabled sessions read
-      // the store as built, not torn (r17 verdict item 4)
-      graft.model.StoreSwap.sealIfEmpty(spark, postingsDir(dir))
-      // stats written LAST — it is the read path's entry point, so a crash
-      // mid-build leaves an index that loudly reads as not-ready rather
-      // than one that silently scores with stale corpus constants
-      // coalesce: a zero-row bootstrap's sum/avg are NULL, and a null
-      // sum_dl would poison every later append's running total (the
-      // empty-bootstrap fold case — RecoverySpec)
-      dl.agg(count(lit(1)).as("n_docs"),
-          coalesce(sum("dl"), lit(0.0)).as("sum_dl"),
-          coalesce(avg("dl"), lit(0.0)).as("avgdl"),
-          lit(buckets).as("n_buckets"),
-          lit(0L).as("max_seq"), lit(batchId).as("last_batch"))
-        .repartition(1) // one row
-        .write.mode(SaveMode.Overwrite)
-        .parquet(statsDir(dir))
-    }
+    val (nDocs, sumDl) =
+      writeLevel(spark, docs, dir, buckets, seq = 0, SaveMode.Overwrite)
+    // a zero-row bootstrap batch writes NO part files; record the
+    // commit the way _SUCCESS would so markers-disabled sessions read
+    // the store as built, not torn (r17 verdict item 4)
+    graft.model.StoreSwap.sealIfEmpty(spark, postingsDir(dir))
+    // stats written LAST — it is the read path's entry point, so a crash
+    // mid-build leaves an index that loudly reads as not-ready rather
+    // than one that silently scores with stale corpus constants
+    writeStats(spark, statsDir(dir), nDocs, sumDl, buckets,
+      maxSeq = 0L, lastBatch = batchId)
   }
 
   /** Repair any torn mutation before the next write (driver-side
@@ -304,8 +321,8 @@ object LexIndex {
     * private stats layout (r13 ADVICE: the fold hardcoded `$dir/stats`
     * and a layout change would have silently read "not built" forever,
     * rebuilding from each batch). COMMITTED, not merely existing: a
-    * crash during the bootstrap build's stats job leaves a
-    * _temporary-only stats dir, which must read as not-built so the
+    * crash during the bootstrap build's stats write leaves a stats dir
+    * holding only hidden staging, which must read as not-built so the
     * fold's replay rebuilds instead of crash-looping in append.
     */
   def isBuilt(spark: SparkSession, dir: String): Boolean =
@@ -334,8 +351,8 @@ object LexIndex {
     graft.model.StoreSwap.commit(spark, postingsDir(dir))
     val f = fs(spark)
     val posts = new Path(postingsDir(dir))
-    // COMMITTED probe: a _temporary-only stats dir (first build crashed
-    // mid-stats-job) must read as not-built — loudly, from the callers'
+    // COMMITTED probe: a staging-only stats dir (first build crashed
+    // mid-stats-write) must read as not-built — loudly, from the callers'
     // "index not built" error — not die inferring parquet schema here
     if (graft.model.StoreSwap.committedPath(spark, statsDir(dir)).isEmpty) None
     else {
@@ -384,39 +401,20 @@ object LexIndex {
       return // exact replay of the committed batch: no-op (below-mark ids throw)
     val nBuckets = prev.getAs[Int]("n_buckets")
     val newSeq = prev.getAs[Long]("max_seq") + 1
-    withPostingRows(docs) { (posts, dl) =>
-      posts
-        .withColumn("bucket", pmod(xxhash64(col("t")), lit(nBuckets.toLong)))
-        .withColumn("seq", lit(newSeq.toInt))
-        // one file per touched bucket per batch — appends must not shed a
-        // file per shuffle partition per bucket, or the serving file count
-        // grows 32x faster than the maintenance policy assumes
-        .repartition(col("bucket"))
-        .write.mode(SaveMode.Append)
-        .partitionBy("bucket", "seq")
-        .parquet(postingsDir(dir))
-      // THE commit point: stats swaps in crash-safe (two-rename; a
-      // complete stats row exists at every intermediate state), and only
-      // this swap makes seq=newSeq visible to readers
-      // Option-read: a pre-r18 empty-bootstrap store recorded NULL
-      // totals (sum of zero rows); treat them as 0 so the running total
-      // self-heals on the first real append
-      val prevSum = Option(prev.getAs[java.lang.Double]("sum_dl"))
-        .fold(0.0)(_.doubleValue)
-      dl.agg(
-          (count(lit(1)) + lit(prev.getAs[Long]("n_docs"))).as("n_docs"),
-          (coalesce(sum("dl"), lit(0.0)) // empty batch: totals carry over
-            + lit(prevSum)).as("sum_dl"))
-        .select(col("n_docs"), col("sum_dl"),
-          (col("sum_dl") / col("n_docs")).as("avgdl"),
-          lit(nBuckets).as("n_buckets"),
-          lit(newSeq).as("max_seq"),
-          lit(math.max(prev.getAs[Long]("last_batch"), batchId)).as("last_batch"))
-        .repartition(1)
-        .write.mode(SaveMode.Overwrite)
-        .parquet(graft.model.StoreSwap.tmpPath(statsDir(dir)))
-      graft.model.StoreSwap.commit(spark, statsDir(dir))
-    }
+    val (batchDocs, batchDl) = writeLevel(spark, docs, dir, nBuckets,
+      Math.toIntExact(newSeq), SaveMode.Append)
+    // Option-read: a pre-r18 empty-bootstrap store recorded NULL totals
+    // (sum of zero rows); treat them as 0 so the running total self-heals
+    // on the first real append
+    val prevSum = Option(prev.getAs[java.lang.Double]("sum_dl"))
+      .fold(0.0)(_.doubleValue)
+    // THE commit point: stats swaps in crash-safe (two-rename; a complete
+    // stats row exists at every intermediate state), and only this swap
+    // makes seq=newSeq visible to readers
+    writeStats(spark, graft.model.StoreSwap.tmpPath(statsDir(dir)),
+      batchDocs + prev.getAs[Long]("n_docs"), batchDl + prevSum, nBuckets,
+      maxSeq = newSeq, lastBatch = math.max(prev.getAs[Long]("last_batch"), batchId))
+    graft.model.StoreSwap.commit(spark, statsDir(dir))
   }
 
   /** Compact the postings in place (the [[VectorIndex.consolidate]]

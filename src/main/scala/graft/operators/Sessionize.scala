@@ -53,13 +53,13 @@ object Sessionize {
     s"""WITH pv AS (
        |  SELECT $dom AS domain, user_id, $ts AS ts_secs, event_id FROM events),
        |flagged AS (
-       |  SELECT domain, user_id, ts_secs,
+       |  SELECT domain, user_id, ts_secs, event_id,
        |         CASE WHEN ts_secs - lag(ts_secs) OVER w > ${GapSecs}
        |                OR lag(ts_secs) OVER w IS NULL THEN 1 ELSE 0 END AS ns
        |  FROM pv WINDOW w AS (PARTITION BY domain, user_id ORDER BY ts_secs, event_id)),
        |sess AS (
        |  SELECT domain, user_id, ts_secs,
-       |         sum(ns) OVER (PARTITION BY domain, user_id ORDER BY ts_secs
+       |         sum(ns) OVER (PARTITION BY domain, user_id ORDER BY ts_secs, event_id
        |                       ROWS UNBOUNDED PRECEDING) AS visit_id
        |  FROM flagged),
        |visits AS (

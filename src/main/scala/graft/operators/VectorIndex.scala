@@ -96,8 +96,8 @@ object VectorIndex {
     import spark.implicits._
     // repair a torn predecessor swap, then answer "has a build ever
     // COMMITTED" against the repaired state — committed probe, not bare
-    // existence: a crash during the first build's meta job leaves meta/
-    // existing with only _temporary staging inside, and that torn dir
+    // existence: a crash during the first build's meta write leaves
+    // meta/ existing with only hidden staging inside, and that torn dir
     // must be cleared and rebuilt, never refused
     graft.model.StoreSwap.commit(spark, metaDir(dir))
     graft.model.StoreSwap.commit(spark, codesDir(dir))
@@ -148,10 +148,14 @@ object VectorIndex {
       .toDF("kind", "sub", "idx", "vec")
       .repartition(1) // broadcast-sized side table: one file
       .write.mode(SaveMode.Overwrite).parquet(booksDir(dir))
-    Seq((0L, batchId)).toDF("max_seq", "last_batch")
-      .repartition(1)
-      .write.mode(SaveMode.Overwrite).parquet(metaDir(dir))
+    graft.model.OneRowParquet.write(spark, metaDir(dir), MetaSchema, 0L, batchId)
   }
+
+  /** The one-row meta table, written on the driver
+    * ([[graft.model.OneRowParquet.write]], no Spark job).
+    */
+  private val MetaSchema = new org.apache.spark.sql.types.StructType()
+    .add("max_seq", "long").add("last_batch", "long")
 
   /** Repair any torn mutation before the next write (driver-side
     * metadata only — the [[LexIndex.recover]] discipline on the vector
@@ -197,8 +201,8 @@ object VectorIndex {
     graft.model.StoreSwap.commit(spark, codesDir(dir))
     val f = fs(spark)
     val codes = new org.apache.hadoop.fs.Path(codesDir(dir))
-    // COMMITTED probe: a _temporary-only meta dir (first build crashed
-    // mid-meta-job) must read as not-built — loudly, via the callers'
+    // COMMITTED probe: a staging-only meta dir (first build crashed
+    // mid-meta-write) must read as not-built — loudly, via the callers'
     // "index not built" error — not die inferring parquet schema here
     if (graft.model.StoreSwap.committedPath(spark, metaDir(dir)).isEmpty) None
     else {
@@ -328,7 +332,6 @@ object VectorIndex {
     */
   def appendIvfPq(spark: SparkSession, newEmb: DataFrame, dir: String,
       batchId: Long = -1L): Unit = {
-    import spark.implicits._
     val prev = recoverAndReadMeta(spark, dir)
       .getOrElse(sys.error(s"no readable meta under ${metaDir(dir)} — index not built"))
     if (graft.model.BatchLedger.isReplay(prev.getAs[Long]("last_batch"), batchId,
@@ -346,11 +349,8 @@ object VectorIndex {
       .partitionBy("cell", "seq")
       .parquet(codesDir(dir))
     // THE commit point: only this swap makes seq=newSeq visible
-    Seq((newSeq, math.max(prev.getAs[Long]("last_batch"), batchId)))
-      .toDF("max_seq", "last_batch")
-      .repartition(1)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(graft.model.StoreSwap.tmpPath(metaDir(dir)))
+    graft.model.OneRowParquet.write(spark, graft.model.StoreSwap.tmpPath(metaDir(dir)),
+      MetaSchema, newSeq, math.max(prev.getAs[Long]("last_batch"), batchId))
     graft.model.StoreSwap.commit(spark, metaDir(dir))
   }
 

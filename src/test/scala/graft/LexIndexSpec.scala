@@ -142,6 +142,29 @@ class LexIndexSpec extends SparkSpec {
       "no double-counted postings after the retry")
   }
 
+  test("append crash MID stats write (staged stats tmp, no _SUCCESS): reads serve the old index; retry converges") {
+    val docs = Tables.documents(spark, sf0001)
+    val dir = freshDir()
+    LexIndex.build(spark, docs.where($"doc_id" % 2 === 0), dir)
+    val before = topk(dir)
+    val statsSnap = freshDir() + "/stats_snap"
+    copyDir(s"$dir/stats", statsSnap)
+    LexIndex.append(spark, docs.where($"doc_id" % 2 === 1), dir)
+    // the crash state: seq=1 postings landed, the new stats row was being
+    // written to stats.tmp when the process died (staged file only)
+    copyDir(s"$dir/stats", s"$dir/stats.tmp")
+    OneRowCrash.midFile(s"$dir/stats.tmp")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dir/stats"))
+    copyDir(statsSnap, s"$dir/stats")
+    assert(topk(dir) == before, "a torn stats write must leave readers on the old index")
+    LexIndex.append(spark, docs.where($"doc_id" % 2 === 1), dir)
+    val whole = freshDir()
+    LexIndex.build(spark, docs, whole)
+    assert(topk(dir) == topk(whole), "retried append must equal one build over the union")
+    assert(postingsCount(dir) == postingsCount(whole),
+      "no double-counted postings after the retry")
+  }
+
   test("append crash MID-postings (partial seq=1): reads serve the old index; retry converges") {
     val docs = Tables.documents(spark, sf0001)
     val dir = freshDir()

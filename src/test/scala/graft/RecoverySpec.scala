@@ -126,6 +126,17 @@ class RecoverySpec extends SparkSpec {
     assert(!hfs.exists(hp(StoreSwap.tmpPath(store))), "torn tmp discarded")
   }
 
+  test("StoreSwap never promotes a tmp whose driver-side one-row write died mid-file") {
+    val store = Files.createTempDirectory("graft_swap_onerow").toString + "/store"
+    val schema = new org.apache.spark.sql.types.StructType().add("v", "string")
+    graft.model.OneRowParquet.write(spark, store, schema, "v1")
+    graft.model.OneRowParquet.write(spark, StoreSwap.tmpPath(store), schema, "v2")
+    OneRowCrash.midFile(StoreSwap.tmpPath(store))
+    StoreSwap.commit(spark, store)
+    assert(readTags(store) == Set("v1"), "the complete version must survive")
+    assert(!hfs.exists(hp(StoreSwap.tmpPath(store))), "torn tmp discarded")
+  }
+
   test("StoreSwap accepts a committed write from a committer that drops no _SUCCESS marker") {
     // sessions setting mapreduce.fileoutputcommitter.marksuccessfuljobs
     // =false commit real data without the marker; reading those as torn

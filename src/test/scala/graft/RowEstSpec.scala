@@ -94,14 +94,18 @@ class RowEstSpec extends SparkSpec {
       "sample abstains")
   }
 
-  test("dirRowsExact equals the written level's count; missing dir reads as 0") {
+  test("dirRowsExact: the level's exact count, 0 for an empty dir, None for a missing one") {
     val dir = java.nio.file.Files.createTempDirectory("graft_rowest_dir").toString
     val docs = Tables.documents(spark, sf0001).limit(37)
     docs.write.mode("overwrite").parquet(dir)
     assert(RowEst.dirRowsExact(spark, dir).contains(37L),
       "footer sum must equal the written row count exactly")
-    assert(RowEst.dirRowsExact(spark, dir + "/nope").contains(0L),
-      "a missing dir is a zero-row level (empty batches write no files)")
+    assert(RowEst.dirRowsExact(spark, dir + "/nope").isEmpty,
+      "a missing dir is no evidence of a count (a wrong path reads the same)")
+    val empty = dir + "_empty"
+    docs.limit(0).write.mode("overwrite").parquet(empty)
+    assert(RowEst.dirRowsExact(spark, empty).contains(0L),
+      "a committed zero-row write is a count of 0")
   }
 
   test("routing a bare-scan input launches NO job (the whole point)") {

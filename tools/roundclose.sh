@@ -26,8 +26,11 @@ echo "== plans"
 sbt -batch "runMain graft.Plans" 2>/dev/null | grep '\[plans\]'
 
 echo "== bench @ sf0.1"
+# forked run output reaches stdout unprefixed (build.sbt StdoutOutput):
+# the bench's JSON lines start with a bare '{"'; no {"metric" line fails
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt -batch "runMain graft.Bench" \
-  2>"bench_out/r${R}_close.err" | grep -E '^\[info\] \{' | sed 's/^\[info\] //' \
-  > "bench_out/r${R}_close.json"
-tail -1 "bench_out/r${R}_close.json" | python3 -c "import json,sys; d=json.load(sys.stdin); print(d['value'],'s /',d['n_queries'],'queries,',d['errors'],'errors')"
+  2>"bench_out/r${R}_close.err" | grep -E '^\{"' > "bench_out/r${R}_close.json" || true
+grep -q '^{"metric"' "bench_out/r${R}_close.json" \
+  || { echo "bench printed no {\"metric\" line (see bench_out/r${R}_close.err)" >&2; exit 1; }
+grep '^{"metric"' "bench_out/r${R}_close.json" | tail -1 | python3 -c "import json,sys; d=json.load(sys.stdin); print(d['value'],'s /',d['n_queries'],'queries,',d['errors'],'errors')"
 echo "round-close artifacts ready: CORRECTNESS_SF01_r${R}.txt RECALL_r${R}.json PLANS.md bench_out/r${R}_close.json"
