@@ -69,7 +69,7 @@ object Engine {
   val vectors: operators.VectorOps.type = operators.VectorOps
 
   /** Persistent IVF-PQ index lifecycle: build / append-without-retrain /
-    * consolidate / search with partition-pruned reads (parquet cell
+    * maintain / search with partition-pruned reads (parquet cell
     * directories ARE the inverted lists).
     */
   val index: operators.VectorIndex.type = operators.VectorIndex

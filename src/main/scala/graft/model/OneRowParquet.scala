@@ -122,17 +122,23 @@ object OneRowParquet {
       val fs = p.getFileSystem(conf)
       if (!fs.exists(p)) None // let the fallback raise the real error
       else {
-        val parts = fs.listStatus(p)
-          .filter(st => st.isFile && st.getLen > 0 &&
-            !st.getPath.getName.startsWith("_") &&
-            !st.getPath.getName.startsWith("."))
-          .map(_.getPath)
-          .sortBy(_.getName)
-        parts.iterator.flatMap(readFirstRow(conf, _)).nextOption()
+        dataFiles(fs, p).iterator.flatMap(readFirstRow(conf, _)).nextOption()
       }
     } catch {
       case _: Exception => None // fallback owns the error story
     }
+
+  /** The non-empty data files directly under the existing dir `p` —
+    * neither `_`-prefixed (staging, markers) nor `.`-prefixed
+    * (checksums) — sorted by name.
+    */
+  def dataFiles(fs: org.apache.hadoop.fs.FileSystem, p: Path): Seq[Path] =
+    fs.listStatus(p).toSeq
+      .filter(st => st.isFile && st.getLen > 0 &&
+        !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+      .map(_.getPath)
+      .sortBy(_.getName)
 
   private def readFirstRow(conf: org.apache.hadoop.conf.Configuration,
       file: Path): Option[Row] = {

@@ -79,11 +79,7 @@ object RowEst {
       val p = new org.apache.hadoop.fs.Path(dir)
       val fs = p.getFileSystem(conf)
       if (!fs.exists(p)) None
-      else Some(fs.listStatus(p).iterator
-        .filter(st => st.isFile && st.getLen > 0 &&
-          !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith("."))
-        .map(st => footerRows(st.getPath.toString, conf)).sum)
+      else Some(OneRowParquet.dataFiles(fs, p).map(f => footerRows(f.toString, conf)).sum)
     } catch {
       case e: Exception =>
         System.err.println(s"[rowest] dir count failed for $dir, abstaining: $e")

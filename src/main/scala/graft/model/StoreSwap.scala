@@ -4,8 +4,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Crash-safe directory swap for parquet serving stores (the rebuilt
-  * batch-view hand-off: FactStore.consolidate, VectorIndex.consolidate,
-  * the stream_upsert/stream_cc foreachBatch maintainers).
+  * batch-view hand-off: FactStore.consolidate, the [[LevelStore]] commit
+  * rows, the stream_upsert/stream_cc foreachBatch maintainers).
   *
   * The naive `delete(store); rename(tmp, store)` has a window where the
   * serving store is ABSENT: a crash between the two calls loses the
@@ -62,31 +62,6 @@ object StoreSwap {
     val f = fs(spark)
     f.mkdirs(new Path(dir)) // a zero-file empty write may not even have made the dir
     f.create(new Path(dir, EmptyMarker), true).close()
-  }
-
-  /** [[markCommittedEmpty]] iff `dir` holds no data files — the
-    * maintainer-write-path wiring (r17 verdict item 4): call right
-    * after a successful payload write that is ALLOWED to be empty (an
-    * index bootstrapped from a zero-row first micro-batch writes no
-    * part files at all), and the commit is recorded the way `_SUCCESS`
-    * records it, so markers-disabled sessions read the store as built
-    * instead of torn — without every maintainer having to remember the
-    * empty case by hand. No-op when data files exist (the data-present
-    * fallback in [[committedPath]] already accepts those), harmless and
-    * redundant under markers-on sessions (`_SUCCESS` wins), and
-    * mode-independent: the marker is the PRODUCER's commit evidence, so
-    * a store written under one session convention classifies correctly
-    * when recovered under the other (the r17 ADVICE cross-session
-    * classification gap).
-    */
-  def sealIfEmpty(spark: SparkSession, dir: String): Unit = {
-    val f = fs(spark)
-    val p = new Path(dir)
-    val bare = !f.exists(p) || !f.listStatus(p).exists { st =>
-      val n = st.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
-    if (bare) markCommittedEmpty(spark, dir)
   }
 
   private def fs(spark: SparkSession): FileSystem =

@@ -147,19 +147,23 @@ object GraphOps {
       .getOrElse(bidir.count())
     if (longTyped && edgeN <= localMax) {
       val collected = bidir.collect()
-      bidir.unpersist()
-      val labeled = localMinLabels(collected)
-      // schema mirrors the loop's output (nullable longs) so the two
-      // routes are indistinguishable downstream, including in dumped
-      // parquet schemas
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node",
-          org.apache.spark.sql.types.LongType, nullable = true),
-        org.apache.spark.sql.types.StructField("label",
-          org.apache.spark.sql.types.LongType, nullable = true)))
-      return spark.createDataFrame(
-        java.util.Arrays.asList(labeled.map(t =>
-          org.apache.spark.sql.Row(t._1, t._2)): _*), schema)
+      // an under-read metric must not defeat the driver-memory bound:
+      // more edges than the threshold fall through to the loop
+      if (collected.length <= localMax) {
+        bidir.unpersist()
+        val labeled = localMinLabels(collected)
+        // schema mirrors the loop's output (nullable longs) so the two
+        // routes are indistinguishable downstream, including in dumped
+        // parquet schemas
+        val schema = org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("node",
+            org.apache.spark.sql.types.LongType, nullable = true),
+          org.apache.spark.sql.types.StructField("label",
+            org.apache.spark.sql.types.LongType, nullable = true)))
+        return spark.createDataFrame(
+          java.util.Arrays.asList(labeled.map(t =>
+            org.apache.spark.sql.Row(t._1, t._2)): _*), schema)
+      }
     }
 
     // Seed labels with the 1-hop minimum (label₀ = min(node, neighbors)):

@@ -1,8 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions._
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -13,54 +12,18 @@ import org.apache.spark.sql.types._
   * real code (reference analogue: the batch layer precomputing what
   * query time should not — BatchWorkflow.java's precomputed views).
   *
-  * Layout under `dir`:
+  * Layout under `dir` — a [[graft.model.LevelStore]] partitioned by
+  * bucket (commit, crash story, compaction and its grace window live
+  * there):
   *   - `postings/bucket=<pmod(xxhash64(t), nBuckets)>/seq=<n>/` —
-  *     (t, doc_id, tf, dl): the document length rides DENORMALIZED on
-  *     every posting (the norms-in-postings trick real engines use), so
-  *     query time never joins a corpus-sized doc-length table. The
-  *     second partition level is the APPEND SEQUENCE: batch n's
-  *     postings land under `seq=n` and become visible only once the
-  *     stats row records `max_seq >= n` (see the crash story).
-  *   - `stats/` — one row (n_docs, sum_dl, avgdl, n_buckets, max_seq,
-  *     last_batch): the corpus constants plus the store's recorded
+  *     (doc_id, t, tf, dl), level n: the document length rides
+  *     DENORMALIZED on every posting (the norms-in-postings trick real
+  *     engines use), so query time never joins a corpus-sized
+  *     doc-length table.
+  *   - `stats/` — the commit row: (n_docs, sum_dl, avgdl, n_buckets)
+  *     plus the level window — the corpus constants and the recorded
   *     bucket modulus, so reads are self-describing (no caller-supplied
   *     nBuckets to get wrong — the UpsertStore sidecar lesson).
-  *
-  * == Crash story (round 13) ==
-  *
-  * `stats` is the ONE commit point for every mutation:
-  *
-  *   - [[build]] writes postings first, stats LAST — a crash mid-build
-  *     leaves an index that loudly reads as not-ready, never one that
-  *     silently scores under stale corpus constants.
-  *   - [[append]] writes batch n's postings under `seq=n` (untouched by
-  *     any reader: every read filters `seq <= stats.max_seq`), then
-  *     swaps in a stats row with `max_seq = n` via the crash-safe
-  *     [[graft.model.StoreSwap]] two-rename. A crash anywhere before
-  *     that swap lands leaves readers serving EXACTLY the old index —
-  *     partially-appended postings are invisible, not
-  *     partially-scored. Re-running the append first prunes the
-  *     orphaned `seq > max_seq` directories ([[recover]]) and then
-  *     re-appends, so a retry CONVERGES instead of double-counting tf
-  *     and df. LexIndexSpec kill-tests both crash points.
-  *   - A caller with a durable batch sequence (a streaming fold's
-  *     foreachBatch id) passes it as `batchId`; stats records the last
-  *     applied id and a REPLAY of an already-committed batch is a
-  *     no-op — exactly-once across maintainer restarts without relying
-  *     on the engine never re-delivering (`stream_lex_append`).
-  *   - [[consolidate]] rewrites through the whole-dir StoreSwap
-  *     protocol (complete postings at every intermediate state) and
-  *     every entry point finishes a predecessor's torn swap before
-  *     touching the store ([[recover]]).
-  *
-  * Reads resolve stats through [[graft.model.StoreSwap.committedPath]]
-  * (a first-build stats write that crashed mid-file leaves a dir with
-  * only the hidden staging file, which must read as NOT BUILT — r14) and
-  * postings through [[graft.model.StoreSwap.readablePath]], applying
-  * the `seq <= max_seq` gate — correct against any crash state WITHOUT
-  * taking the writer's recovery lock; the single-WRITER contract (one
-  * maintainer owns build/append/consolidate) never has to cover
-  * readers.
   *
   * A query reads ONLY its terms' bucket partitions (partition-pruned
   * scan: ≤ |qTerms| of nBuckets directories, spec-pinned), filters to
@@ -74,15 +37,17 @@ import org.apache.spark.sql.types._
   * write, and the corpus constants are summed from the written postings;
   * an append is the same at batch size (one file per touched bucket); a
   * query touches query-term-sized data only — posting lists
-  * for 3 terms, never the corpus. Repeated appends accumulate one
-  * `seq=` directory per batch per touched bucket; [[maintain]] is the
-  * files-per-bucket compaction trigger (the UpsertStore/LabelStore
-  * policy) that folds them back to ~1 file per bucket.
+  * for 3 terms, never the corpus. [[maintain]] folds the accumulated
+  * levels back into one (one file per bucket).
   */
 object LexIndex {
 
-  private def postingsDir(dir: String) = s"$dir/postings"
-  private def statsDir(dir: String) = s"$dir/stats"
+  val levels = new graft.model.LevelStore("postings", "stats", Some("bucket"),
+    new StructType().add("n_docs", LongType).add("sum_dl", DoubleType)
+      .add("avgdl", DoubleType).add("n_buckets", IntegerType),
+    _ => new StructType().add("doc_id", LongType).add("t", StringType)
+      .add("tf", LongType).add("dl", DoubleType),
+    "lex index")
 
   val DefaultBuckets = 64
 
@@ -128,15 +93,6 @@ object LexIndex {
     }
   }
 
-  /** Part files a bucket may hold before [[needsCompact]] fires — each
-    * append adds ~1 file per touched bucket, so the count drifts up with
-    * batches folded since the last [[consolidate]].
-    */
-  val DefaultMaxFilesPerBucket = 16
-
-  private def fs(spark: SparkSession) =
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-
   /** The query terms' bucket ids under the store's recorded modulus,
     * computed by evaluating the SAME Catalyst expressions the build's
     * bucket column uses (`Pmod(XxHash64(term), nBuckets)`) on the
@@ -155,28 +111,6 @@ object LexIndex {
     }.distinct
   }
 
-  /** The postings relation at `path` — or, when the directory holds no
-    * part files yet (an index legitimately bootstrapped from a ZERO-ROW
-    * first micro-batch writes none, and parquet cannot infer a schema
-    * from nothing), the empty relation with the index's FIXED postings
-    * shape, so reads serve empty results instead of an
-    * AnalysisException until data arrives. Unlike [[ShingleStore]]'s
-    * caller-shaped sidecar, this schema is the store's own — safe to
-    * hardcode.
-    */
-  private def postingsRelation(spark: SparkSession, path: String): DataFrame =
-    try spark.read.parquet(path)
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(
-            StructField("doc_id", LongType), StructField("t", StringType),
-            StructField("tf", LongType), StructField("dl", DoubleType),
-            StructField("bucket", IntegerType), StructField("seq", IntegerType))))
-    }
-
   /** The batch's postings (doc_id, t, tf, dl), tokenizing `docs` once.
     * ONE `doc_id` shuffle serves both the (doc_id, t) count and the
     * per-doc length: hash-partitioning on doc_id satisfies the
@@ -192,188 +126,54 @@ object LexIndex {
       .withColumn("dl", sum("tf").over(Window.partitionBy("doc_id")).cast("double"))
 
   /** Write `docs`' postings as level `seq` (partitioned by bucket under
-    * the modulus `nBuckets`, one file per touched bucket) and return the
-    * level's (docs, sum of doc lengths), read back from the level just
-    * written — one small aggregate over the batch's postings, no second
-    * pass over the text. A doc's postings carry tf summing to its dl, so
-    * Σ tf is the level's Σ dl and Σ tf/dl counts its docs (each doc adds
-    * 1 up to rounding error far below ½ for any batch, hence the round).
+    * the modulus `nBuckets`) and return the commit-row fields with the
+    * level's (docs, sum of doc lengths) added to `prevDocs`/`prevDl`,
+    * read back from the level just written — one small aggregate over
+    * the batch's postings, no second pass over the text. A doc's
+    * postings carry tf summing to its dl, so Σ tf is the level's Σ dl
+    * and Σ tf/dl counts its docs (each doc adds 1 up to rounding error
+    * far below ½ for any batch, hence the round). avgdl is 0 for an
+    * index without documents (an empty bootstrap batch).
     */
   private def writeLevel(spark: SparkSession, docs: DataFrame, dir: String,
-      nBuckets: Int, seq: Int, mode: SaveMode): (Long, Double) = {
-    postingRows(docs)
-      .withColumn("bucket", pmod(xxhash64(col("t")), lit(nBuckets.toLong)))
-      .withColumn("seq", lit(seq))
-      // co-locate each bucket's rows before the partitioned write: one
-      // file per touched bucket per level. Without it every shuffle
-      // partition opens a writer in EVERY bucket dir (partitions ×
-      // buckets part files — measured 4-8× the build wall at sf0.1, §6
-      // small-files both ways: slow to commit, slow for every later
-      // read/recover listing), and the serving file count grows far
-      // faster than the maintenance policy assumes.
-      .repartition(col("bucket"))
-      .write.mode(mode)
-      .partitionBy("bucket", "seq")
-      .parquet(postingsDir(dir))
+      nBuckets: Int, seq: Int, prevDocs: Long, prevDl: Double): Seq[Any] = {
+    levels.writeLevel(
+      postingRows(docs).withColumn("bucket", pmod(xxhash64(col("t")), lit(nBuckets.toLong))),
+      dir, seq)
     // the schema is given, so the read infers none (inference is a job)
     val totals = spark.read.schema("tf long, dl double, seq int")
-      .parquet(postingsDir(dir))
+      .parquet(levels.dataDir(dir))
       .where(col("seq") === lit(seq))
       .agg(round(sum(col("tf") / col("dl"))).cast("long"), sum("tf"))
       .head()
     // zero-row level: no postings, both sums NULL
-    (if (totals.isNullAt(0)) 0L else totals.getLong(0),
-      if (totals.isNullAt(1)) 0.0 else totals.getLong(1).toDouble)
+    val nDocs = prevDocs + (if (totals.isNullAt(0)) 0L else totals.getLong(0))
+    val sumDl = prevDl + (if (totals.isNullAt(1)) 0.0 else totals.getLong(1).toDouble)
+    Seq(nDocs, sumDl, if (nDocs == 0) 0.0 else sumDl / nDocs, nBuckets)
   }
 
-  private val StatsSchema = new StructType()
-    .add("n_docs", LongType).add("sum_dl", DoubleType).add("avgdl", DoubleType)
-    .add("n_buckets", IntegerType).add("max_seq", LongType).add("last_batch", LongType)
-
-  /** The one-row stats table, written on the driver
-    * ([[graft.model.OneRowParquet.write]], no Spark job). avgdl is 0
-    * for an index without documents (an empty bootstrap batch).
-    */
-  private def writeStats(spark: SparkSession, target: String, nDocs: Long,
-      sumDl: Double, nBuckets: Int, maxSeq: Long, lastBatch: Long): Unit =
-    graft.model.OneRowParquet.write(spark, target, StatsSchema,
-      nDocs, sumDl, if (nDocs == 0) 0.0 else sumDl / nDocs, nBuckets, maxSeq, lastBatch)
-
   /** Build the index from `docs` (doc_id, text, …) into a dir that has
-    * never COMMITTED a build. `batchId` (optional) records a durable
-    * caller sequence id so a replayed bootstrap batch is skipped by the
-    * next [[append]] — see the crash story.
-    *
-    * Rebuilding over a BUILT index is refused loudly (r14, from r13
-    * ADVICE): the old overwrite path rewrote postings first and stats
-    * last with no swap between them, so a crash in that window left the
-    * OLD stats (reads as ready — stale n_docs/avgdl/max_seq) over torn
-    * NEW postings, and readers silently scored wrong instead of failing.
-    * Replacement corpora go to a fresh dir (every declared query and the
-    * stream fold already do — [[graft.Scratch.dir]]); in-place evolution
-    * is [[append]]/[[consolidate]], both single-commit-point. A TORN
-    * first build (postings staged, stats never committed) reads as
-    * not-built everywhere and is simply rebuilt here — the retry
-    * converges.
+    * never committed a build (see [[graft.model.LevelStore.build]]).
+    * `nBuckets` 0 (the default) sizes the modulus from the corpus's row
+    * metadata ([[autoBuckets]]); reads resolve the recorded n_buckets
+    * either way, so the choice only routes file layout, never results.
     */
   def build(spark: SparkSession, docs: DataFrame, dir: String,
       nBuckets: Int = 0, batchId: Long = -1L): Unit = {
-    // 0 (the default) = size the modulus from the corpus's row metadata;
-    // reads resolve the recorded n_buckets from stats either way, so the
-    // choice only routes file layout, never results. Negative moduli are
-    // a caller BUG and must fail loudly, not silently reroute to auto
-    // (r18 advice).
+    // negative moduli are a caller BUG and must fail loudly, not silently
+    // reroute to auto (r18 advice)
     require(nBuckets >= 0,
       s"nBuckets must be >= 0 (0 = auto-size from corpus metadata), got $nBuckets")
     val buckets = if (nBuckets > 0) nBuckets else autoBuckets(spark, docs)
     require(buckets >= 1, s"need nBuckets >= 1, got $buckets")
-    // finish a predecessor's torn swap first, so "is there a committed
-    // stats row" is answered against the repaired state
-    graft.model.StoreSwap.commit(spark, statsDir(dir))
-    graft.model.StoreSwap.commit(spark, postingsDir(dir))
-    // COMMITTED probe, not bare existence: a crash during the first
-    // build's stats write leaves stats/ existing with only hidden
-    // staging inside — that torn dir must be cleared and rebuilt, never
-    // refused (a bare exists() would brick the retry)
-    if (graft.model.StoreSwap.committedPath(spark, statsDir(dir)).isDefined)
-      sys.error(s"refusing to rebuild over the built index at $dir — " +
-        "write the replacement to a fresh dir, or maintain this one via " +
-        "append/consolidate (both crash-safe); rebuild-in-place has no " +
-        "atomic commit point")
-    fs(spark).delete(new Path(statsDir(dir)), true) // torn first-write leftover
-    val (nDocs, sumDl) =
-      writeLevel(spark, docs, dir, buckets, seq = 0, SaveMode.Overwrite)
-    // a zero-row bootstrap batch writes NO part files; record the
-    // commit the way _SUCCESS would so markers-disabled sessions read
-    // the store as built, not torn (r17 verdict item 4)
-    graft.model.StoreSwap.sealIfEmpty(spark, postingsDir(dir))
-    // stats written LAST — it is the read path's entry point, so a crash
-    // mid-build leaves an index that loudly reads as not-ready rather
-    // than one that silently scores with stale corpus constants
-    writeStats(spark, statsDir(dir), nDocs, sumDl, buckets,
-      maxSeq = 0L, lastBatch = batchId)
-  }
-
-  /** Repair any torn mutation before the next write (driver-side
-    * metadata ops only; the single-writer's entry guard — reads don't
-    * need it, see the object scaladoc):
-    *
-    *   1. finish/roll back an interrupted stats or postings StoreSwap
-    *      (a complete version exists at every protocol state);
-    *   2. delete `seq >` stats.max_seq posting directories — the
-    *      orphans of an append that crashed before its stats commit
-    *      (readers never saw them; deleting them is what makes an
-    *      append RETRY converge instead of double-counting);
-    *   3. drop any `_temporary` job-staging leftover, so a crashed
-    *      append job's half-committed task files can never be merged
-    *      into a later job's commit.
-    */
-  def recover(spark: SparkSession, dir: String): Unit = {
-    recoverAndReadStats(spark, dir)
-    ()
+    levels.build(spark, dir, batchId)(seq =>
+      writeLevel(spark, docs, dir, buckets, seq, 0L, 0.0))
   }
 
   /** Whether a COMMITTED build exists at `dir` — the bootstrap probe for
-    * an append loop (`stream_lex_append`'s fold). Resolves through a
-    * possibly-torn stats swap via
-    * [[graft.model.StoreSwap.committedPath]] — the same family of
-    * resolution every read path uses — so callers never duplicate the
-    * private stats layout (r13 ADVICE: the fold hardcoded `$dir/stats`
-    * and a layout change would have silently read "not built" forever,
-    * rebuilding from each batch). COMMITTED, not merely existing: a
-    * crash during the bootstrap build's stats write leaves a stats dir
-    * holding only hidden staging, which must read as not-built so the
-    * fold's replay rebuilds instead of crash-looping in append.
+    * an append loop (`stream_lex_append`'s fold).
     */
-  def isBuilt(spark: SparkSession, dir: String): Boolean =
-    graft.model.StoreSwap.committedPath(spark, statsDir(dir)).isDefined
-
-  /** The committed (max_seq, last_batch) watermark pair — the read-only
-    * monitoring/handoff probe (a rebuild catch-up replay checks the
-    * staged index's batch high-water mark through THIS, never by
-    * reading the private stats layout directly — the r13 ADVICE
-    * lesson). None if never built. Resolves through a possibly-torn
-    * stats swap like every read path.
-    */
-  def committedWatermarks(spark: SparkSession, dir: String): Option[(Long, Long)] =
-    graft.model.StoreSwap.committedPath(spark, statsDir(dir)).map { p =>
-      val r = graft.model.OneRowParquet.head(spark, p)
-      (r.getAs[Long]("max_seq"), r.getAs[Long]("last_batch"))
-    }
-
-  /** [[recover]], returning the (post-recovery) stats row so the append
-    * path pays ONE read of the one-row table, not two. None if the
-    * index has never been (completely) built.
-    */
-  private def recoverAndReadStats(spark: SparkSession,
-      dir: String): Option[org.apache.spark.sql.Row] = {
-    graft.model.StoreSwap.commit(spark, statsDir(dir))
-    graft.model.StoreSwap.commit(spark, postingsDir(dir))
-    val f = fs(spark)
-    val posts = new Path(postingsDir(dir))
-    // COMMITTED probe: a staging-only stats dir (first build crashed
-    // mid-stats-write) must read as not-built — loudly, from the callers'
-    // "index not built" error — not die inferring parquet schema here
-    if (graft.model.StoreSwap.committedPath(spark, statsDir(dir)).isEmpty) None
-    else {
-      val stats = graft.model.OneRowParquet.head(spark, statsDir(dir))
-      val maxSeq = stats.getAs[Long]("max_seq")
-      if (f.exists(posts)) f.listStatus(posts).foreach { b =>
-        val name = b.getPath.getName
-        if (name == "_temporary") f.delete(b.getPath, true)
-        else if (b.isDirectory && name.startsWith("bucket=")) {
-          f.listStatus(b.getPath).foreach { s =>
-            val sn = s.getPath.getName
-            if (sn == "_temporary") f.delete(s.getPath, true)
-            else if (s.isDirectory && sn.startsWith("seq=") &&
-                scala.util.Try(sn.stripPrefix("seq=").toLong).toOption.exists(_ > maxSeq))
-              f.delete(s.getPath, true)
-          }
-        }
-      }
-      Some(stats)
-    }
-  }
+  def isBuilt(spark: SparkSession, dir: String): Boolean = levels.isBuilt(spark, dir)
 
   /** Append `docs` to an existing index — EXACT, unlike PQ append (no
     * codebooks to go stale): new postings land in their terms' buckets
@@ -383,108 +183,43 @@ object LexIndex {
     * merge from the running (n_docs, sum_dl) totals. build + append ≡
     * one build over the union — the declared query proves it against
     * the direct form's oracle verbatim.
-    *
-    * CRASH-SAFE AND IDEMPOTENT (see the object scaladoc): the batch's
-    * postings are written under the next `seq=` partition — invisible to
-    * every reader until the stats swap records the new `max_seq` — so
-    * the stats two-rename is the single commit point; [[recover]] runs
-    * first, pruning any previous attempt's orphaned postings so a retry
-    * converges. Pass the caller's durable `batchId` (a foreachBatch id)
-    * to make a REPLAY of an already-committed batch a no-op.
     */
   def append(spark: SparkSession, docs: DataFrame, dir: String,
-      batchId: Long = -1L): Unit = {
-    val prev = recoverAndReadStats(spark, dir)
-      .getOrElse(sys.error(s"no readable stats under ${statsDir(dir)} — index not built"))
-    if (graft.model.BatchLedger.isReplay(prev.getAs[Long]("last_batch"), batchId,
-        s"lex index $dir"))
-      return // exact replay of the committed batch: no-op (below-mark ids throw)
-    val nBuckets = prev.getAs[Int]("n_buckets")
-    val newSeq = prev.getAs[Long]("max_seq") + 1
-    val (batchDocs, batchDl) = writeLevel(spark, docs, dir, nBuckets,
-      Math.toIntExact(newSeq), SaveMode.Append)
-    // Option-read: a pre-r18 empty-bootstrap store recorded NULL totals
-    // (sum of zero rows); treat them as 0 so the running total self-heals
-    // on the first real append
-    val prevSum = Option(prev.getAs[java.lang.Double]("sum_dl"))
-      .fold(0.0)(_.doubleValue)
-    // THE commit point: stats swaps in crash-safe (two-rename; a complete
-    // stats row exists at every intermediate state), and only this swap
-    // makes seq=newSeq visible to readers
-    writeStats(spark, graft.model.StoreSwap.tmpPath(statsDir(dir)),
-      batchDocs + prev.getAs[Long]("n_docs"), batchDl + prevSum, nBuckets,
-      maxSeq = newSeq, lastBatch = math.max(prev.getAs[Long]("last_batch"), batchId))
-    graft.model.StoreSwap.commit(spark, statsDir(dir))
+      batchId: Long = -1L): Unit =
+    levels.append(spark, dir, batchId) { (prev, seq) =>
+      writeLevel(spark, docs, dir, prev.getAs[Int]("n_buckets"), seq,
+        prev.getAs[Long]("n_docs"), prev.getAs[Double]("sum_dl"))
+    }
+
+  /** Compact the levels into one once more than `maxLevels` are live
+    * ([[graft.model.LevelStore.maintain]]); returns whether it ran. A
+    * level adds at most one file per bucket, so a bucket's live files
+    * never outnumber the live levels.
+    */
+  def maintain(spark: SparkSession, dir: String, maxLevels: Int = 16): Boolean =
+    levels.maintain(spark, dir, maxLevels)
+
+  /** The committed corpus constants (n_docs, avgdl) and the postings of
+    * `terms`: only their buckets' partitions are read, gated to the
+    * committed levels (both filters are partition pruning).
+    */
+  private def termPostings(spark: SparkSession, dir: String,
+      terms: Seq[String]): (Long, Double, DataFrame) = {
+    val (stats, postings) = levels.read(spark, dir)
+    // the terms' buckets via the same expression classes the build used
+    // ([[termBuckets]]) — same hashing, no per-read probe job
+    val buckets = termBuckets(terms, stats.getAs[Int]("n_buckets").toLong)
+    (stats.getAs[Long]("n_docs"), stats.getAs[Double]("avgdl"),
+      postings.where(col("bucket").isin(buckets: _*) && col("t").isin(terms: _*)))
   }
 
-  /** Compact the postings in place (the [[VectorIndex.consolidate]]
-    * shape): repeated appends leave one file per batch per touched
-    * bucket, and a query then pays per-file open cost across its terms'
-    * buckets. Rewrites to one file per bucket partition (all committed
-    * `seq=` levels collapsed back to `seq=0` — every surviving row is
-    * `<= max_seq` by the [[recover]] prune, so the read gate still
-    * passes them) through the crash-safe
-    * [[graft.model.StoreSwap.commit]] two-rename — a complete postings
-    * table exists at every intermediate state. Offline maintenance: run
-    * between serving windows.
+  /** One posting's BM25 (k1=1.2, b=0.75) contribution, given its term's
+    * document frequency `df`.
     */
-  def consolidate(spark: SparkSession, dir: String): Unit = {
-    // finish torn swaps, prune orphaned seq dirs (folding an orphan into
-    // the rewrite would silently commit it)
-    val maxSeq = recoverAndReadStats(spark, dir)
-      .getOrElse(sys.error(s"no readable stats under ${statsDir(dir)} — index not built"))
-      .getAs[Long]("max_seq")
-    postingsRelation(spark, postingsDir(dir))
-      .where(col("seq") <= lit(maxSeq.toInt)) // belt over recover's prune
-      .withColumn("seq", lit(0))
-      .repartition(col("bucket")).sortWithinPartitions("t", "doc_id")
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket", "seq")
-      .option("maxRecordsPerFile", 8L * 1000 * 1000)
-      .parquet(graft.model.StoreSwap.tmpPath(postingsDir(dir)))
-    graft.model.StoreSwap.commit(spark, postingsDir(dir))
-  }
-
-  /** Part-file count of the fullest bucket (driver metadata only —
-    * two-level listStatus over bucket and seq dirs, never a Spark job).
-    */
-  def maxFilesPerBucket(spark: SparkSession, dir: String): Int = {
-    val f = fs(spark)
-    graft.model.StoreSwap.readablePath(spark, postingsDir(dir)).map { root =>
-      val buckets = f.listStatus(new Path(root))
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("bucket="))
-      if (buckets.isEmpty) 0
-      else buckets.map { b =>
-        f.listStatus(b.getPath).map { s =>
-          if (s.isDirectory && s.getPath.getName.startsWith("seq="))
-            f.listStatus(s.getPath)
-              .count(st => st.isFile && !st.getPath.getName.startsWith("_"))
-          else if (s.isFile && !s.getPath.getName.startsWith("_")) 1
-          else 0
-        }.sum
-      }.max
-    }.getOrElse(0)
-  }
-
-  /** Maintenance trigger — the [[graft.streaming.UpsertStore]]/
-    * [[graft.streaming.LabelStore]] policy mirrored onto the lexical index: true once any bucket has
-    * accumulated more than `maxFiles` posting files (each append adds
-    * ~1 per touched bucket). Cheap enough to call after every append;
-    * the single-writer contract says WHO gets to act on it.
-    */
-  def needsCompact(spark: SparkSession, dir: String,
-      maxFiles: Int = DefaultMaxFilesPerBucket): Boolean =
-    maxFilesPerBucket(spark, dir) > maxFiles
-
-  /** Run [[consolidate]] iff [[needsCompact]]; returns whether it ran.
-    * The maintenance entry point for an append loop (e.g. the
-    * `stream_lex_append` fold): call between batches, never under one.
-    */
-  def maintain(spark: SparkSession, dir: String,
-      maxFiles: Int = DefaultMaxFilesPerBucket): Boolean = {
-    val due = needsCompact(spark, dir, maxFiles)
-    if (due) consolidate(spark, dir)
-    due
-  }
+  private def contrib(nDocs: Long, avgdl: Double) =
+    log((lit(nDocs) - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1)) *
+      col("tf") * lit(2.2) /
+      (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / lit(avgdl)))
 
   /** BM25 (k1=1.2, b=0.75) scores of the indexed corpus against
     * `qTerms`: (doc_id, bm25 rounded to 4) — the [[TextOps.bm25Scores]]
@@ -496,31 +231,10 @@ object LexIndex {
   def bm25Scores(spark: SparkSession, dir: String,
       qTerms: Seq[String]): DataFrame = {
     require(qTerms.nonEmpty, "need at least one query term")
-    // resolve through a possibly-interrupted swap: a complete stats (and
-    // postings) version exists at `dir` or `dir.old` at every protocol
-    // state
-    val statsPath = graft.model.StoreSwap.committedPath(spark, statsDir(dir))
-      .getOrElse(sys.error(s"no readable stats under ${statsDir(dir)} — index not built"))
-    val statsRow = graft.model.OneRowParquet.head(spark, statsPath)
-    val nDocs = statsRow.getAs[Long]("n_docs")
-    val avgdl = statsRow.getAs[Double]("avgdl")
-    val nBuckets = statsRow.getAs[Int]("n_buckets")
-    val maxSeq = statsRow.getAs[Long]("max_seq")
-    // the terms' buckets via the same expression classes the build used
-    // ([[termBuckets]]) — same hashing, no per-read probe job
-    val buckets = termBuckets(qTerms, nBuckets.toLong)
-    val postingsPath = graft.model.StoreSwap
-      .readablePath(spark, postingsDir(dir))
-      .getOrElse(sys.error(s"no readable postings under ${postingsDir(dir)}"))
-    val tfq = postingsRelation(spark, postingsPath)
-      .where(col("bucket").isin(buckets: _*) && col("seq") <= lit(maxSeq.toInt) &&
-        col("t").isin(qTerms: _*))
+    val (nDocs, avgdl, tfq) = termPostings(spark, dir, qTerms)
     val dfreq = tfq.groupBy("t").agg(count(lit(1)).as("df"))
     tfq.join(broadcast(dfreq), "t")
-      .withColumn("contrib",
-        log((lit(nDocs) - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1))
-          * col("tf") * lit(2.2)
-          / (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / lit(avgdl))))
+      .withColumn("contrib", contrib(nDocs, avgdl))
       .groupBy("doc_id").agg(round(sum("contrib"), 4).as("bm25"))
       .select(col("doc_id"), col("bm25"))
   }
@@ -578,21 +292,7 @@ object LexIndex {
     require(queries.map(_._1).distinct.size == queries.size,
       "query qids must be unique — duplicates would silently merge two " +
         "queries' term sets into one garbage score block")
-    val statsPath = graft.model.StoreSwap.committedPath(spark, statsDir(dir))
-      .getOrElse(sys.error(s"no readable stats under ${statsDir(dir)} — index not built"))
-    val statsRow = graft.model.OneRowParquet.head(spark, statsPath)
-    val nDocs = statsRow.getAs[Long]("n_docs")
-    val avgdl = statsRow.getAs[Double]("avgdl")
-    val nBuckets = statsRow.getAs[Int]("n_buckets")
-    val maxSeq = statsRow.getAs[Long]("max_seq")
-    val allTerms = queries.flatMap(_._2).distinct
-    val buckets = termBuckets(allTerms, nBuckets.toLong)
-    val postingsPath = graft.model.StoreSwap
-      .readablePath(spark, postingsDir(dir))
-      .getOrElse(sys.error(s"no readable postings under ${postingsDir(dir)}"))
-    val tfq = postingsRelation(spark, postingsPath)
-      .where(col("bucket").isin(buckets: _*) && col("seq") <= lit(maxSeq.toInt) &&
-        col("t").isin(allTerms: _*))
+    val (nDocs, avgdl, tfq) = termPostings(spark, dir, queries.flatMap(_._2).distinct)
     // df once per term — query-independent, so queries sharing a term
     // share its posting aggregate
     val dfreq = tfq.groupBy("t").agg(count(lit(1)).as("df"))
@@ -600,10 +300,7 @@ object LexIndex {
       .toDF("qid", "t")
     tfq.join(broadcast(dfreq), "t")
       .join(broadcast(qdf), "t") // fan out to the queries wanting this term
-      .withColumn("contrib",
-        log((lit(nDocs) - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1))
-          * col("tf") * lit(2.2)
-          / (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / lit(avgdl))))
+      .withColumn("contrib", contrib(nDocs, avgdl))
       .groupBy("qid", "doc_id").agg(round(sum("contrib"), 4).as("bm25"))
   }
 }

@@ -1,8 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions.shingleHashes
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -19,21 +18,16 @@ import org.apache.spark.sql.types._
   * long arrays — no text, no tokenizer) and shingles ONLY the new
   * batch, which then lands in the store for the next night.
   *
-  * Layout under `dir` (the [[LexIndex]] crash story, minus buckets —
-  * pair generation consumes the whole relation, so there is no
-  * query-key to partition by):
-  *   - `sigs/seq=<n>/` — (doc_id, hs: array<long>): batch n's
-  *     signatures, visible only once stats records `max_seq >= n`.
-  *   - `stats/` — one row (n_docs, shingle_n, min_seq, max_seq,
-  *     last_batch, sidecar_cols): the single commit point. Build writes sigs first and stats
-  *     LAST; append writes under `seq = max_seq + 1` (invisible to
-  *     every reader) and commits by swapping stats through the
-  *     crash-safe [[graft.model.StoreSwap]] two-rename. A crash
-  *     anywhere before that swap leaves readers on EXACTLY the old
-  *     relation; a retry first prunes the orphaned `seq > max_seq`
-  *     dirs ([[recover]]) and converges. A caller with a durable batch
-  *     sequence passes `batchId` — replaying an already-committed
-  *     batch is a no-op (exactly-once across maintainer restarts).
+  * Layout under `dir` — a [[graft.model.LevelStore]] (commit, crash
+  * story, compaction and its grace window live there), without a
+  * partition above `seq`: pair generation consumes the whole relation,
+  * so there is no query key to partition by.
+  *   - `sigs/seq=<n>/` — (doc_id, hs: array<long>, sidecar…): level n.
+  *   - `stats/` — the commit row: (n_docs, shingle_n, sigs_schema) plus
+  *     the level window. `sigs_schema` is the payload's data columns,
+  *     read back as the fixed read schema (an empty store reads as an
+  *     empty relation of that shape); the sidecar columns are the ones
+  *     after (doc_id, hs).
   *
   * Signatures are computed by the SAME expression the recompute forms
   * use (`shingleHashes(text, n)`, null-signature docs dropped at
@@ -57,11 +51,16 @@ import org.apache.spark.sql.types._
   */
 object ShingleStore {
 
-  private def sigsDir(dir: String) = s"$dir/sigs"
-  private def statsDir(dir: String) = s"$dir/stats"
+  /** The commit row's own fields; the payload schema is the recorded
+    * `sigs_schema`.
+    */
+  val levels = new graft.model.LevelStore("sigs", "stats", None,
+    new StructType().add("n_docs", LongType).add("shingle_n", IntegerType)
+      .add("sigs_schema", StringType),
+    sigsSchema, "shingle store")
 
-  private def fs(spark: SparkSession) =
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+  private def sigsSchema(stats: Row): StructType =
+    DataType.fromJson(stats.getAs[String]("sigs_schema")).asInstanceOf[StructType]
 
   /** The stored relation: EVERY doc (null-signature docs — fewer tokens
     * than the shingle width — are kept as null-`hs` rows so sidecar
@@ -76,241 +75,64 @@ object ShingleStore {
     docs.select(col("doc_id") +: shingleHashes(col("text"), n).as("hs") +:
       sidecar.map { case (name, c) => c.as(name) }: _*)
 
-  /** Build the store from `docs` into a dir that has never COMMITTED a
-    * build. Rebuilding over a built store is refused loudly (the
-    * [[LexIndex.build]] stance: rewrite-in-place has no atomic commit
-    * point — replacement corpora go to a fresh dir, evolution is
-    * [[append]]); a TORN first build reads as not-built and is simply
-    * rebuilt.
+  /** Write `sigs` as level `seq`: one shingle pass, one job. The level's
+    * doc count is read back from the footers of the level just written
+    * (exact, driver-side, synchronous); a zero-row level writes no dir,
+    * and a footer-read failure abstains too, so both pay a count.
+    */
+  private def writeLevel(spark: SparkSession, sigs: DataFrame, dir: String,
+      seq: Int): Long = {
+    levels.writeLevel(sigs, dir, seq)
+    graft.model.RowEst.dirRowsExact(spark, levels.dataDir(dir) + s"/seq=$seq")
+      .getOrElse(sigs.count())
+  }
+
+  /** Build the store from `docs` into a dir that has never committed a
+    * build (see [[graft.model.LevelStore.build]]).
     */
   def build(spark: SparkSession, docs: DataFrame, dir: String,
       n: Int = 3, batchId: Long = -1L,
       sidecar: Seq[(String, org.apache.spark.sql.Column)] = Nil): Unit = {
     require(n >= 1, s"need shingle width >= 1, got $n")
-    graft.model.StoreSwap.commit(spark, statsDir(dir))
-    graft.model.StoreSwap.commit(spark, sigsDir(dir))
-    if (graft.model.StoreSwap.committedPath(spark, statsDir(dir)).isDefined)
-      sys.error(s"refusing to rebuild over the built signature store at $dir — " +
-        "write the replacement to a fresh dir, or evolve this one via append")
-    fs(spark).delete(new Path(statsDir(dir)), true) // torn first-write leftover
     val sigs = signatures(docs, n, sidecar)
-    // one shingle pass, one job; the batch count is read back from the
-    // footers of the level just written (exact, driver-side, zero jobs,
-    // SYNCHRONOUS — r18 verdict item 7: Observation.get waits on the
-    // async listener bus, the one wait class the CC loop already purged)
-    sigs.withColumn("seq", lit(0))
-      .write.mode(SaveMode.Overwrite).partitionBy("seq")
-      .parquet(sigsDir(dir))
-    val nDocs = graft.model.RowEst
-      .dirRowsExact(spark, sigsDir(dir) + "/seq=0")
-      .getOrElse(sigs.count()) // zero-row build or footer-read failure
-    // a zero-row bootstrap batch writes NO part files; record the commit
-    // the way _SUCCESS would so markers-disabled sessions don't read the
-    // store as torn (r17 verdict item 4 — the stream fold's live case)
-    graft.model.StoreSwap.sealIfEmpty(spark, sigsDir(dir))
-    // stats LAST — the read path's entry point, so a crash mid-build
-    // reads as not-built, never as a store with missing signatures.
-    // sigs_schema makes an EMPTY store readable: with zero part files
-    // parquet cannot infer the relation's shape, so [[read]] serves the
-    // recorded schema instead of an AnalysisException until data lands.
-    writeStats(spark, dir,
-      nDocs = nDocs, shingleN = n,
-      minSeq = 0L, maxSeq = 0L, lastBatch = batchId,
-      sidecarCols = sidecar.map(_._1).mkString(","),
-      sigsSchema = sigs.schema.json, overwriteInPlace = true)
-  }
-
-  private val StatsSchema = new StructType()
-    .add("n_docs", LongType).add("shingle_n", IntegerType)
-    .add("min_seq", LongType).add("max_seq", LongType)
-    .add("last_batch", LongType).add("sidecar_cols", StringType)
-    .add("sigs_schema", StringType)
-
-  /** The one-row stats table from driver-held values (every mutation's
-    * counts are read back from the written level's parquet footers —
-    * exact and synchronous), written on the driver
-    * ([[graft.model.OneRowParquet.write]], no Spark job).
-    * `overwriteInPlace` = the build's first write; appends/compactions
-    * stage at the StoreSwap tmp path and commit via the two-rename.
-    */
-  private def writeStats(spark: SparkSession, dir: String, nDocs: Long,
-      shingleN: Int, minSeq: Long, maxSeq: Long, lastBatch: Long,
-      sidecarCols: String, sigsSchema: String,
-      overwriteInPlace: Boolean): Unit = {
-    val target =
-      if (overwriteInPlace) statsDir(dir)
-      else graft.model.StoreSwap.tmpPath(statsDir(dir))
-    graft.model.OneRowParquet.write(spark, target, StatsSchema,
-      nDocs, shingleN, minSeq, maxSeq, lastBatch, sidecarCols, sigsSchema)
-    if (!overwriteInPlace) graft.model.StoreSwap.commit(spark, statsDir(dir))
-  }
-
-  /** Whether a COMMITTED build exists at `dir` — resolves through a
-    * possibly-torn stats swap like every read path.
-    */
-  def isBuilt(spark: SparkSession, dir: String): Boolean =
-    graft.model.StoreSwap.committedPath(spark, statsDir(dir)).isDefined
-
-  /** Repair any torn mutation, returning the post-recovery stats row
-    * (None if never completely built): finish interrupted swaps, prune
-    * `seq > max_seq` orphans and `_temporary` staging — the single-
-    * writer's entry guard, the [[LexIndex]] recovery shape.
-    */
-  private def recoverAndReadStats(spark: SparkSession,
-      dir: String): Option[org.apache.spark.sql.Row] = {
-    graft.model.StoreSwap.commit(spark, statsDir(dir))
-    graft.model.StoreSwap.commit(spark, sigsDir(dir))
-    val f = fs(spark)
-    if (graft.model.StoreSwap.committedPath(spark, statsDir(dir)).isEmpty) None
-    else {
-      val stats = graft.model.OneRowParquet.head(spark, statsDir(dir))
-      val maxSeq = stats.getAs[Long]("max_seq")
-      val min = minSeq(stats)
-      val sigs = new Path(sigsDir(dir))
-      if (f.exists(sigs)) f.listStatus(sigs).foreach { s =>
-        val sn = s.getPath.getName
-        if (sn == "_temporary") f.delete(s.getPath, true)
-        else if (s.isDirectory && sn.startsWith("seq=") &&
-            scala.util.Try(sn.stripPrefix("seq=").toLong).toOption
-              // > max_seq: a crashed append/compaction's orphan;
-              // < min_seq: levels a committed compaction superseded
-              // (readers gate on [min_seq, max_seq], so both invisible)
-              .exists(v => v > maxSeq || v < min))
-          f.delete(s.getPath, true)
-      }
-      Some(stats)
+    levels.build(spark, dir, batchId) { seq =>
+      Seq(writeLevel(spark, sigs, dir, seq), n, sigs.schema.json)
     }
   }
 
-  /** The committed relation's LOWEST live seq level (0 until a
-    * compaction raises it). Tolerates pre-compaction stats rows.
-    */
-  private def minSeq(stats: org.apache.spark.sql.Row): Long =
-    if (stats.schema.fieldNames.contains("min_seq"))
-      stats.getAs[Long]("min_seq")
-    else 0L
-
-  def recover(spark: SparkSession, dir: String): Unit = {
-    recoverAndReadStats(spark, dir)
-    ()
-  }
+  def isBuilt(spark: SparkSession, dir: String): Boolean = levels.isBuilt(spark, dir)
 
   /** Append `docs`' signatures — EXACT (a signature is per-doc; nothing
-    * existing changes). Batch lands under the next `seq=` partition,
-    * invisible until the stats swap commits; replaying an
-    * already-committed `batchId` is a no-op. Shingle width comes from
-    * the store's own stats, never the caller.
+    * existing changes). Shingle width comes from the store's own stats,
+    * never the caller, and the batch must carry exactly the store's
+    * sidecar shape.
     */
   def append(spark: SparkSession, docs: DataFrame, dir: String,
       batchId: Long = -1L,
-      sidecar: Seq[(String, org.apache.spark.sql.Column)] = Nil): Unit = {
-    val prev = recoverAndReadStats(spark, dir)
-      .getOrElse(sys.error(s"no readable stats under ${statsDir(dir)} — store not built"))
-    if (graft.model.BatchLedger.isReplay(prev.getAs[Long]("last_batch"), batchId,
-        s"shingle store $dir"))
-      return // exact replay of the committed batch: no-op (below-mark ids throw)
-    // the appended batch must carry exactly the store's sidecar shape —
-    // a parquet schema-union would silently null-fill the mismatch and a
-    // later sidecar read would serve holes as data
-    val storedSidecar = sidecarCols(prev)
-    require(sidecar.map(_._1) == storedSidecar,
-      s"sidecar mismatch on append to $dir: store carries " +
-        s"[${storedSidecar.mkString(",")}], batch supplies " +
-        s"[${sidecar.map(_._1).mkString(",")}]")
-    val n = prev.getAs[Int]("shingle_n")
-    // ONE value names the partition the write creates and the level the
-    // count reads back (the `seq` column is int; overflow fails loudly
-    // instead of writing one dir and counting another)
-    val newSeq = Math.toIntExact(prev.getAs[Long]("max_seq") + 1)
-    val sigs = signatures(docs, n, sidecar)
-    // one shingle pass, one job; batch count read back from the new
-    // level's footers — synchronous, no listener-bus wait (r18 item 7)
-    sigs.withColumn("seq", lit(newSeq))
-      .write.mode(SaveMode.Append).partitionBy("seq")
-      .parquet(sigsDir(dir))
-    val batchDocs = graft.model.RowEst
-      .dirRowsExact(spark, sigsDir(dir) + s"/seq=$newSeq")
-      // no level dir: a zero-row batch (partitioned writes create no
-      // dir for it) or a footer-read failure — count to tell them apart
-      .getOrElse(sigs.count())
-    graft.model.StoreSwap.sealIfEmpty(spark, sigsDir(dir))
-    // THE commit point: the stats swap makes seq=newSeq visible.
-    // sigs_schema is re-derived from the batch relation (pure schema,
-    // no execution — identical by the sidecar-shape check above), which
-    // also upgrades pre-schema stats rows on their first append.
-    writeStats(spark, dir,
-      nDocs = batchDocs + prev.getAs[Long]("n_docs"),
-      shingleN = n, minSeq = minSeq(prev), maxSeq = newSeq,
-      lastBatch = math.max(prev.getAs[Long]("last_batch"), batchId),
-      sidecarCols = storedSidecar.mkString(","),
-      sigsSchema = sigs.schema.json, overwriteInPlace = false)
-  }
+      sidecar: Seq[(String, org.apache.spark.sql.Column)] = Nil): Unit =
+    levels.append(spark, dir, batchId) { (prev, seq) =>
+      // a parquet schema-union would silently null-fill a mismatch and a
+      // later sidecar read would serve holes as data
+      val stored = sigsSchema(prev).fieldNames.toSeq.drop(2)
+      require(sidecar.map(_._1) == stored,
+        s"sidecar mismatch on append to $dir: store carries " +
+          s"[${stored.mkString(",")}], batch supplies " +
+          s"[${sidecar.map(_._1).mkString(",")}]")
+      val n = prev.getAs[Int]("shingle_n")
+      val sigs = signatures(docs, n, sidecar)
+      Seq(writeLevel(spark, sigs, dir, seq) + prev.getAs[Long]("n_docs"), n,
+        prev.getAs[String]("sigs_schema"))
+    }
 
-  /** Compaction trigger + action (the [[LexIndex.maintain]] policy on
-    * the dedup-state store): a streamed fold ([[append]] per micro-
-    * batch) accumulates one `seq=` directory per batch, and a reader
-    * eventually pays per-level file-listing and small-file overhead for
-    * state that never changes. When the live level count exceeds
-    * `maxSeqDirs`, rewrite the whole committed relation into ONE fresh
-    * level and retire the old ones — crash-safe under the same protocol
-    * as append: the compacted level lands at `max_seq + 1` (invisible —
-    * readers gate on `[min_seq, max_seq]`), the stats two-rename
-    * committing `min_seq = max_seq = max_seq + 1` is the single flip,
-    * and a crash anywhere leaves readers on exactly the old levels (a
-    * retry re-compacts after [[recover]] prunes the orphan). Retired
-    * levels are NOT deleted here: a reader that resolved stats just
-    * before the swap is still mid-scan over them, and [[read]] has no
-    * vanished-file retry (it returns a lazy plan — the miss would
-    * surface as a task-time FileNotFoundException long after any
-    * retry wrapper here returned). They are already invisible to every
-    * new reader (the `[min_seq, max_seq]` gate partition-prunes them),
-    * so they cost only disk until the NEXT maintainer entry —
-    * append/maintain/recover's entry recovery prunes `seq < min_seq` —
-    * which is the grace window: a read that outlives one full
-    * maintenance interval is the remaining (documented) hazard, the
-    * same one-interval contract ServingPointer.dropSuperseded gives
-    * version dirs. No-op below the trigger. Returns true when a
-    * compaction ran.
+  /** Compact the levels into one once more than `maxLevels` are live
+    * ([[graft.model.LevelStore.maintain]]); returns whether it ran.
     */
-  def maintain(spark: SparkSession, dir: String, maxSeqDirs: Int = 8): Boolean = {
-    val prev = recoverAndReadStats(spark, dir)
-      .getOrElse(sys.error(s"no readable stats under ${statsDir(dir)} — store not built"))
-    val liveLevels = prev.getAs[Long]("max_seq") - minSeq(prev) + 1
-    if (liveLevels <= maxSeqDirs) return false
-    val newSeq = prev.getAs[Long]("max_seq") + 1
-    val committed = read(spark, dir)
-    committed
-      .withColumn("seq", lit(newSeq.toInt))
-      .write.mode(SaveMode.Append).partitionBy("seq")
-      .parquet(sigsDir(dir))
-    graft.model.StoreSwap.sealIfEmpty(spark, sigsDir(dir))
-    // THE commit point: one swap moves the whole window to the new level
-    writeStats(spark, dir,
-      nDocs = prev.getAs[Long]("n_docs"),
-      shingleN = prev.getAs[Int]("shingle_n"),
-      minSeq = newSeq, maxSeq = newSeq,
-      lastBatch = prev.getAs[Long]("last_batch"),
-      sidecarCols = sidecarCols(prev).mkString(","),
-      sigsSchema = committed.schema.json, overwriteInPlace = false)
-    // retired levels stay on disk until the next maintainer entry prunes
-    // them (grace window for in-flight readers — see the scaladoc)
-    true
-  }
+  def maintain(spark: SparkSession, dir: String, maxLevels: Int = 8): Boolean =
+    levels.maintain(spark, dir, maxLevels)
 
-  /** The store's recorded sidecar column names (empty for a plain
-    * signature store). Tolerates pre-sidecar stats rows.
-    */
-  private def sidecarCols(stats: org.apache.spark.sql.Row): Seq[String] =
-    if (!stats.schema.fieldNames.contains("sidecar_cols")) Nil
-    else Option(stats.getAs[String]("sidecar_cols"))
-      .filter(_.nonEmpty).map(_.split(",").toSeq).getOrElse(Nil)
-
-  /** The committed (doc_id, hs) relation — resolves stats through
-    * [[graft.model.StoreSwap.committedPath]] and sigs through
-    * [[graft.model.StoreSwap.readablePath]], gated to `seq <= max_seq`
-    * (partition pruning: uncommitted appends cost nothing and are
-    * invisible). This is the scan the nightly dedup reads INSTEAD of
-    * re-shingling the corpus: long arrays only, no text column.
+  /** The committed (doc_id, hs) relation of the signed docs — the scan
+    * the nightly dedup reads INSTEAD of re-shingling the corpus: long
+    * arrays only, no text column.
     */
   def hashes(spark: SparkSession, dir: String): DataFrame =
     read(spark, dir)
@@ -319,40 +141,10 @@ object ShingleStore {
 
   /** The full committed store relation — (doc_id, hs, sidecar…), null-
     * signature docs INCLUDED (a doc too short to shingle still has its
-    * sidecar values; keep-best must score it as a singleton). Same
-    * commit resolution and `seq <= max_seq` partition pruning as
-    * [[hashes]]; consumers that touch only (doc_id, sidecar) columns
-    * never read the hash arrays (parquet column pruning).
+    * sidecar values; keep-best must score it as a singleton). Consumers
+    * that touch only (doc_id, sidecar) columns never read the hash
+    * arrays (parquet column pruning).
     */
-  def read(spark: SparkSession, dir: String): DataFrame = {
-    val statsPath = graft.model.StoreSwap.committedPath(spark, statsDir(dir))
-      .getOrElse(sys.error(s"no readable stats under ${statsDir(dir)} — store not built"))
-    val stats = graft.model.OneRowParquet.head(spark, statsPath)
-    val maxSeq = stats.getAs[Long]("max_seq")
-    val sigsPath = graft.model.StoreSwap.readablePath(spark, sigsDir(dir))
-      .getOrElse(sys.error(s"no readable sigs under ${sigsDir(dir)}"))
-    val sigs =
-      try spark.read.parquet(sigsPath)
-      catch {
-        // a store legitimately bootstrapped from a ZERO-ROW first batch
-        // has no part files, so parquet has no schema to infer — serve
-        // the empty relation with the schema the build recorded instead
-        // of erroring until data arrives (any marker mode)
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") &&
-              stats.schema.fieldNames.contains("sigs_schema") =>
-          val recorded = org.apache.spark.sql.types.DataType
-            .fromJson(stats.getAs[String]("sigs_schema"))
-            .asInstanceOf[org.apache.spark.sql.types.StructType]
-            .add("seq", org.apache.spark.sql.types.IntegerType)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], recorded)
-      }
-    sigs
-      // [min_seq, max_seq]: above = uncommitted appends/compactions,
-      // below = levels a committed compaction retired — both invisible
-      // (partition pruning: neither costs a read)
-      .where(col("seq").between(lit(minSeq(stats).toInt), lit(maxSeq.toInt)))
-      .select((col("doc_id") +: col("hs") +: sidecarCols(stats).map(col)): _*)
-  }
+  def read(spark: SparkSession, dir: String): DataFrame =
+    levels.read(spark, dir)._2.drop("seq")
 }

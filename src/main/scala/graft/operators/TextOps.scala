@@ -711,7 +711,7 @@ object TextOps {
       // idempotence must no-op B (snapshot already has it) and apply C
       val v1dir = ServingPointer.versionDir(root, v1)
       LexIndex.append(s, b, v1dir, batchId = 1) // replay of a snapshot batch
-      require(LexIndex.committedWatermarks(s, v1dir).exists(_._1 == 0L),
+      require(LexIndex.levels.committed(s, v1dir).exists(_.getAs[Long]("max_seq") == 0L),
         "replaying a batch the snapshot contains must be a no-op")
       LexIndex.append(s, c, v1dir, batchId = 2) // the in-flight batch
       ServingPointer.flip(s, root, v1)

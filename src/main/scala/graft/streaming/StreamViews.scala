@@ -700,7 +700,7 @@ object StreamViews {
     // stream_cc). Appends are batch-sized — one file per touched bucket,
     // never a corpus rewrite; LexIndexSpec pins that an append touches
     // only the batch's terms' buckets, and production runs
-    // LexIndex.maintain between batches (files-per-bucket trigger).
+    // LexIndex.maintain between batches (level-count trigger).
     // Folding ANY batching sequentially lands the same index as one
     // build, so the query shares text_bm25_topk's oracle SQL verbatim —
     // the driver proves stream-fold ≡ batch build ≡ direct scan.
@@ -863,8 +863,8 @@ object StreamViews {
     // an uncommitted seq= partition, the meta swap is the single commit
     // point, the engine batch id rides into meta so a re-delivery after
     // a maintainer crash is a no-op) and runs VectorIndex.maintain
-    // BETWEEN batches (files-per-cell policy; a no-op until drift trips
-    // it). Appends encode with the SAVED codebooks — the speed layer
+    // BETWEEN batches (level-count policy; a no-op until enough levels
+    // accumulate). Appends encode with the SAVED codebooks — the speed layer
     // never retrains; quantizer refresh is a batch-layer policy
     // decision served from a fresh dir (build refuses in-place
     // rebuilds). Approximate (PQ + stale-codebook appends), so
@@ -941,9 +941,8 @@ object StreamViews {
           else {
             graft.operators.ShingleStore.append(s, batch.toDF(), store,
               batchId = id)
-            // level-count compaction between batches (the LexIndex/
-            // VectorIndex maintain policy; a no-op until the fold has
-            // accumulated enough seq levels to matter)
+            // level-count compaction between batches (a no-op until the
+            // fold has accumulated enough seq levels to matter)
             graft.operators.ShingleStore.maintain(s, store)
             ()
           }

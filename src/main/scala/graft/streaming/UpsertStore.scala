@@ -48,7 +48,7 @@ import org.apache.spark.sql.functions._
   * commit would be swapped away). The natural seam is the foreachBatch
   * maintainer calling [[maintain]] between batches, or an operator
   * running [[compact]] in a maintenance window — the same discipline as
-  * FactStore/VectorIndex consolidate.
+  * FactStore consolidate.
   */
 object UpsertStore {
 

@@ -56,7 +56,9 @@ class GraphOpsSpec extends SparkSpec {
       def run(): Set[(Long, Long)] = GraphOps.connectedComponents(edges)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val local = run() // default threshold: these all take the local route
-      spark.conf.set("graft.cc.localMaxEdges", "0") // force the loop
+      // -1, not 0: zero-edge shapes (self-loops only, empty) must take
+      // the loop too (0 edges <= 0 would keep them local)
+      spark.conf.set("graft.cc.localMaxEdges", "-1") // force the loop
       val dist = try run() finally spark.conf.unset("graft.cc.localMaxEdges")
       assert(local == dist, s"shape $i: local route diverged from the loop")
     }

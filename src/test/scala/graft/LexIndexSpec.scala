@@ -91,7 +91,10 @@ class LexIndexSpec extends SparkSpec {
         .count(_.getName.endsWith(".parquet"))
     }
     val filesBefore = parquetFiles()
-    LexIndex.consolidate(spark, dir)
+    assert(LexIndex.maintain(spark, dir, maxLevels = 1), "two live levels exceed one")
+    // the retired levels survive the compaction (in-flight readers); the
+    // next writer entry prunes them
+    assert(!LexIndex.maintain(spark, dir, maxLevels = 1))
     val after = LexIndex.bm25TopK(spark, dir, qTerms, k = 10)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
     assert(after.sameElements(before), "consolidation must not change answers")
@@ -116,7 +119,8 @@ class LexIndexSpec extends SparkSpec {
   private def postingsCount(dir: String): Long = {
     val stats = spark.read.parquet(s"$dir/stats").head()
     spark.read.parquet(s"$dir/postings")
-      .where(col("seq") <= stats.getAs[Long]("max_seq").toInt).count()
+      .where(col("seq").between(stats.getAs[Long]("min_seq").toInt,
+        stats.getAs[Long]("max_seq").toInt)).count()
   }
 
   test("append crash BEFORE the stats swap: reads serve the old index; retry converges") {
@@ -194,23 +198,6 @@ class LexIndexSpec extends SparkSpec {
       "the surviving partial dirs must be pruned, not double-appended")
   }
 
-  test("append over a consolidate that crashed mid-swap recovers the prior corpus first") {
-    // the round-12 ADVICE medium: postings present only at postings.old
-    // (swap step 2 done), staged tmp complete — a bare SaveMode.Append
-    // would create a fresh live postings/ holding ONLY the new batch
-    val docs = Tables.documents(spark, sf0001)
-    val dir = freshDir()
-    LexIndex.build(spark, docs.where($"doc_id" % 2 === 0), dir)
-    val posts = new java.io.File(s"$dir/postings")
-    copyDir(s"$dir/postings", s"$dir/postings.tmp") // complete staged rewrite
-    assert(posts.renameTo(new java.io.File(s"$dir/postings.old")))
-    LexIndex.append(spark, docs.where($"doc_id" % 2 === 1), dir)
-    val whole = freshDir()
-    LexIndex.build(spark, docs, whole)
-    assert(topk(dir) == topk(whole),
-      "append must finish the torn swap before writing — the prior corpus survives")
-  }
-
   test("a replayed batchId is a no-op (exactly-once for a streaming fold)") {
     val docs = Tables.documents(spark, sf0001)
     val dir = freshDir()
@@ -224,21 +211,21 @@ class LexIndexSpec extends SparkSpec {
     assert(topk(dir) == after, "replaying a committed batch must not change answers")
   }
 
-  test("maintain: files-per-bucket trigger fires after appends, compaction idempotent, answers unchanged") {
+  test("maintain: level-count trigger fires after appends, compaction idempotent, answers unchanged") {
     val docs = Tables.documents(spark, sf0001)
     val dir = freshDir()
     LexIndex.build(spark, docs.where($"doc_id" % 4 === 0), dir)
-    (1 to 3).foreach(i =>
+    (1 to 2).foreach(i =>
       LexIndex.append(spark, docs.where($"doc_id" % 4 === i), dir))
+    assert(!LexIndex.maintain(spark, dir, maxLevels = 3), "3 live levels fit a 3-level budget")
+    LexIndex.append(spark, docs.where($"doc_id" % 4 === 3), dir)
     val before = topk(dir)
-    assert(LexIndex.needsCompact(spark, dir, maxFiles = 3),
-      "3 appends over a build must exceed a 3-file bucket budget")
-    assert(LexIndex.maintain(spark, dir, maxFiles = 3), "maintain must run when due")
-    assert(!LexIndex.needsCompact(spark, dir, maxFiles = 3),
-      "a compacted bucket is back to ~1 file")
-    assert(!LexIndex.maintain(spark, dir, maxFiles = 3),
-      "maintain is a no-op when not due")
+    assert(LexIndex.maintain(spark, dir, maxLevels = 3), "maintain must run when due")
+    assert(!LexIndex.maintain(spark, dir, maxLevels = 3),
+      "a compacted index is back to one level: maintain is a no-op")
     assert(topk(dir) == before, "maintenance must not change answers")
+    val stats = spark.read.parquet(s"$dir/stats").head()
+    assert(stats.getAs[Long]("min_seq") == 4L && stats.getAs[Long]("max_seq") == 4L)
   }
 
   test("batch serving: each query's block equals serving it alone, in ONE pruned scan") {

@@ -404,14 +404,14 @@ class NearDedupSpec extends SparkSpec {
       .select($"doc_id", $"hs").as[(Long, Seq[Long])].collect().toMap
     assert(levels == (0L to 5L).toSet)
     // below the trigger: no-op
-    assert(!ShingleStore.maintain(spark, dir, maxSeqDirs = 8))
+    assert(!ShingleStore.maintain(spark, dir, maxLevels = 8))
     assert(levels == (0L to 5L).toSet)
     // above the trigger: one fresh level, relation identical. Retired
     // levels SURVIVE the swap (r17 ADVICE: an eager delete races a
     // reader that resolved stats pre-swap and is still mid-scan over
     // them — read() is lazy, so no retry wrapper can help) but are
     // invisible: the [min_seq, max_seq] gate partition-prunes them.
-    assert(ShingleStore.maintain(spark, dir, maxSeqDirs = 2))
+    assert(ShingleStore.maintain(spark, dir, maxLevels = 2))
     assert(levels == (0L to 6L).toSet,
       s"retired levels stay on disk as the in-flight-reader grace window: $levels")
     val after = ShingleStore.hashes(spark, dir)
@@ -419,7 +419,7 @@ class NearDedupSpec extends SparkSpec {
     assert(after == before, "compaction must not change the committed relation")
     // idempotent: a second call is a no-op (one live level) — and its
     // entry recovery is the DEFERRED prune of the retired levels
-    assert(!ShingleStore.maintain(spark, dir, maxSeqDirs = 2))
+    assert(!ShingleStore.maintain(spark, dir, maxLevels = 2))
     assert(levels == Set(6L),
       s"the next maintainer entry prunes the retired levels: $levels")
     // the fold continues on the compacted store: appends and replay

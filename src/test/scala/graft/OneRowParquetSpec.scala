@@ -79,7 +79,8 @@ class OneRowParquetSpec extends SparkSpec {
       .groupBy("doc_id").agg(sum("tf").cast("double").as("dl"))
     val lexExpected = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
       .select($"n_docs", $"sum_dl", ($"sum_dl" / $"n_docs").as("avgdl"),
-        lit(8).as("n_buckets"), lit(1L).as("max_seq"), lit(4L).as("last_batch"))
+        lit(8).as("n_buckets"), lit(0L).as("min_seq"), lit(1L).as("max_seq"),
+        lit(4L).as("last_batch"))
     assertSameTable(s"$lex/stats", sparkWritten(lexExpected))
 
     // ShingleStore after a build and an append
@@ -90,8 +91,8 @@ class OneRowParquetSpec extends SparkSpec {
       .shingleHashes($"text", 3).as("hs")).schema.json
     val nSigs = docs.count()
     assertSameTable(s"$sh/stats", sparkWritten(
-      Seq((nSigs, 3, 0L, 1L, 9L, "", sigsJson)).toDF("n_docs", "shingle_n",
-        "min_seq", "max_seq", "last_batch", "sidecar_cols", "sigs_schema")))
+      Seq((nSigs, 3, sigsJson, 0L, 1L, 9L)).toDF("n_docs", "shingle_n",
+        "sigs_schema", "min_seq", "max_seq", "last_batch")))
 
     // VectorIndex meta after a build and an append
     val emb = Tables.embeddings(spark, sf0001)
@@ -99,7 +100,7 @@ class OneRowParquetSpec extends SparkSpec {
     VectorIndex.buildIvfPq(spark, emb.where($"vec_id" % 2 === 0), vec, batchId = 5L)
     VectorIndex.appendIvfPq(spark, emb.where($"vec_id" % 2 === 1), vec, batchId = 6L)
     assertSameTable(s"$vec/meta",
-      sparkWritten(Seq((1L, 6L)).toDF("max_seq", "last_batch")))
+      sparkWritten(Seq((0L, 1L, 6L)).toDF("min_seq", "max_seq", "last_batch")))
 
     // ServingPointer
     val root = freshDir()

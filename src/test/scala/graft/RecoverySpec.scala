@@ -256,14 +256,12 @@ class RecoverySpec extends SparkSpec {
   test("empty-bootstrap streamed fold passes under a markers-disabled session without manual intervention") {
     // r17 verdict item 4: the stream folds' live empty case — batch 0 of
     // an AvailableNow fold can be zero rows, and the bootstrap branch
-    // builds the store from it. The build paths now (a) seal the
-    // zero-file payload dir with the EmptyMarker (commit evidence a
-    // markers-disabled session can read — StoreSwap.sealIfEmpty), and
-    // (b) record the payload schema so reads serve EMPTY results, not
-    // UNABLE_TO_INFER_SCHEMA, until data arrives. The fold then appends
-    // forward with no manual intervention. Exercised under BOTH marker
-    // modes: the schema fix is mode-independent; the marker seal is what
-    // makes the markers-off session classify the store as built.
+    // builds the store from it. The commit row is the store's only
+    // commit evidence (written on the driver with its own _SUCCESS), and
+    // reads use the payload's fixed schema, so they serve EMPTY results,
+    // not UNABLE_TO_INFER_SCHEMA, until data arrives. The fold then
+    // appends forward with no manual intervention. Exercised under BOTH
+    // marker modes.
     import graft.operators.{LexIndex, ShingleStore}
     val emptyDocs = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],

@@ -13,6 +13,13 @@ class VectorIndexSpec extends SparkSpec {
   private def freshDir(): String =
     java.nio.file.Files.createTempDirectory("graft_vecindex_spec").toString
 
+  /** The committed codes: levels inside the meta's [min_seq, max_seq]. */
+  private def committedCodes(dir: String): org.apache.spark.sql.DataFrame = {
+    val meta = spark.read.parquet(s"$dir/meta").head()
+    spark.read.parquet(s"$dir/codes").where($"seq".between(
+      meta.getAs[Long]("min_seq").toInt, meta.getAs[Long]("max_seq").toInt))
+  }
+
   test("prebuilt search equals the in-query ann_ivfpq exactly (same shapes, sf0.001)") {
     val emb = Tables.embeddings(spark, sf0001)
     val dir = freshDir()
@@ -77,7 +84,7 @@ class VectorIndexSpec extends SparkSpec {
       booksBefore._2.map(_.map(_.toSeq).toSeq).toSeq == booksAfter._2.map(_.map(_.toSeq).toSeq).toSeq,
       "append must not retrain or rewrite codebooks")
     // every corpus row is indexed exactly once
-    val codes = spark.read.parquet(dir + "/codes")
+    val codes = committedCodes(dir)
     assert(codes.count() == emb.count())
     assert(codes.select("c").distinct().count() == emb.count())
     // appended rows' codes are bit-identical to encoding them directly
@@ -125,7 +132,7 @@ class VectorIndexSpec extends SparkSpec {
     input.addData(half1.toSeq); q.processAllAvailable()
     input.addData(half2.toSeq); q.processAllAvailable()
     q.stop()
-    def indexRows(dir: String) = spark.read.parquet(dir + "/codes")
+    def indexRows(dir: String) = committedCodes(dir)
       .select($"c", $"cell", hex($"codes").as("h")).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
     assert(indexRows(streamDir) == indexRows(batchDir),
@@ -137,7 +144,7 @@ class VectorIndexSpec extends SparkSpec {
     val b = VectorIndex.searchIvfPq(spark, streamDir, emb, probes, k = 5,
       nProbe = 8, rerank = 8).collect().map(_.toSeq).toSeq
     assert(a == b)
-    // consolidate: micro-batch appends left >1 file in multi-write cells;
+    // maintain: micro-batch appends left >1 file in multi-write cells;
     // the compaction leaves one per cell, identical rows, same answers
     def filesPerCell(dir: String): Map[String, Int] = {
       def walk(f: java.io.File): Seq[java.io.File] =
@@ -151,13 +158,15 @@ class VectorIndexSpec extends SparkSpec {
     assert(before.values.exists(_ > 1),
       s"expected multi-file cells after build+2 streamed appends, got $before")
     val rowsBefore = indexRows(streamDir)
-    VectorIndex.consolidate(spark, streamDir)
+    assert(VectorIndex.maintain(spark, streamDir, maxLevels = 1))
+    // the next writer entry prunes the retired levels
+    assert(!VectorIndex.maintain(spark, streamDir, maxLevels = 1))
     val after = filesPerCell(streamDir)
     assert(after.values.forall(_ == 1), s"cells not compacted to one file: $after")
-    assert(indexRows(streamDir) == rowsBefore, "consolidate changed the row multiset")
+    assert(indexRows(streamDir) == rowsBefore, "compaction changed the row multiset")
     val c = VectorIndex.searchIvfPq(spark, streamDir, emb, probes, k = 5,
       nProbe = 8, rerank = 8).collect().map(_.toSeq).toSeq
-    assert(c == b, "consolidate changed search answers")
+    assert(c == b, "compaction changed search answers")
   }
 
   // ---- Append crash story (round 13, the LexIndex discipline): meta is
@@ -182,7 +191,7 @@ class VectorIndexSpec extends SparkSpec {
       new java.io.File(s"$dir/meta"), new java.io.File(metaSnap))
     VectorIndex.appendIvfPq(spark, odds, dir)
     val committed = searchRows(dir, emb)
-    val nCommitted = spark.read.parquet(s"$dir/codes").count()
+    val nCommitted = committedCodes(dir).count()
     // manufacture the crash: batch codes fully landed under seq=1, meta
     // still the pre-append row (the swap never ran)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dir/meta"))
@@ -194,7 +203,7 @@ class VectorIndexSpec extends SparkSpec {
     VectorIndex.appendIvfPq(spark, odds, dir)
     assert(searchRows(dir, emb) == committed,
       "retried append must serve what the uninterrupted append served")
-    val codes = spark.read.parquet(s"$dir/codes")
+    val codes = committedCodes(dir)
     assert(codes.count() == nCommitted && codes.count() == emb.count(),
       "no double-inserted ids after the retry")
     assert(codes.select("c").distinct().count() == emb.count())
@@ -209,11 +218,11 @@ class VectorIndexSpec extends SparkSpec {
       VectorIndex.appendIvfPq(spark, emb.where($"vec_id" % 4 === i), dir,
         batchId = i.toLong))
     val after = searchRows(dir, emb)
-    val n = spark.read.parquet(s"$dir/codes").count()
+    val n = committedCodes(dir).count()
     // exactly-once: an engine re-delivery replays the LAST committed
     // batch — a no-op
     VectorIndex.appendIvfPq(spark, emb.where($"vec_id" % 4 === 3), dir, batchId = 3L)
-    assert(spark.read.parquet(s"$dir/codes").count() == n,
+    assert(committedCodes(dir).count() == n,
       "replaying the last committed batch must not re-insert its rows")
     assert(searchRows(dir, emb) == after)
     // an id BELOW the high-water mark is a sequencing violation — the old
@@ -221,28 +230,26 @@ class VectorIndexSpec extends SparkSpec {
     val ooo = intercept[IllegalStateException](
       VectorIndex.appendIvfPq(spark, emb.where($"vec_id" % 4 === 1), dir, batchId = 1L))
     assert(ooo.getMessage.contains("out-of-order"), ooo.getMessage)
-    assert(spark.read.parquet(s"$dir/codes").count() == n,
+    assert(committedCodes(dir).count() == n,
       "the refused out-of-order append must not mutate the index")
-    // maintenance: 3 appends drift files-per-cell up; maintain restores
-    assert(VectorIndex.needsCompact(spark, dir, maxFiles = 3),
-      s"file drift must trip the trigger, max=${VectorIndex.maxFilesPerCell(spark, dir)}")
-    assert(VectorIndex.maintain(spark, dir, maxFiles = 3))
-    assert(!VectorIndex.needsCompact(spark, dir, maxFiles = 3))
-    assert(!VectorIndex.maintain(spark, dir, maxFiles = 3), "no-op when not due")
+    // maintenance: build + 3 appends = 4 live levels trip a 3-level
+    // budget; the compaction leaves one
+    assert(VectorIndex.maintain(spark, dir, maxLevels = 3))
+    assert(!VectorIndex.maintain(spark, dir, maxLevels = 3), "no-op when not due")
+    assert(committedCodes(dir).count() == n, "compaction must keep every row once")
     assert(searchRows(dir, emb) == after, "maintenance must not change answers")
   }
 
   test("maintain under the STREAMED fold: trigger fires between batches, idempotent, answers unchanged") {
     // the stream_lex_append pairing on the vector side (r13 VERDICT
     // task): a foreachBatch fold appends each micro-batch
-    // transactionally and runs the files-per-cell maintenance trigger
+    // transactionally and runs the level-count maintenance trigger
     // BETWEEN batches (never under one) — the production append-loop
-    // shape, mirroring LexIndexSpec's maintain case. With maxFiles=1
-    // the trigger must fire once appends land a second file in some
-    // cell, compact back to one file per cell partition, stay a no-op
-    // when not due, and never change served answers vs the batch
-    // build+append reference (same corpus, same seeds -> same
-    // codebooks and codes).
+    // shape, mirroring LexIndexSpec's maintain case. With maxLevels=1
+    // the trigger must fire once an append lands a second level,
+    // compact back to one level, stay a no-op when not due, and never
+    // change served answers vs the batch build+append reference (same
+    // corpus, same seeds -> same codebooks and codes).
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.Trigger
     implicit val sqlCtx = spark.sqlContext
@@ -262,7 +269,7 @@ class VectorIndexSpec extends SparkSpec {
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
         VectorIndex.appendIvfPq(spark, batch, dir, batchId = id)
-        if (VectorIndex.maintain(spark, dir, maxFiles = 1)) fired += 1
+        if (VectorIndex.maintain(spark, dir, maxLevels = 1)) fired += 1
         ()
       }
       .trigger(Trigger.ProcessingTime(0)).start()
@@ -270,10 +277,11 @@ class VectorIndexSpec extends SparkSpec {
     input.addData(half1.toSeq); q.processAllAvailable()
     input.addData(half2.toSeq); q.processAllAvailable()
     q.stop()
-    assert(fired >= 1, "the files-per-cell trigger must fire under the fold")
-    assert(!VectorIndex.needsCompact(spark, dir, maxFiles = 1),
-      s"fold-closing maintain left drift: max=${VectorIndex.maxFilesPerCell(spark, dir)}")
-    assert(!VectorIndex.maintain(spark, dir, maxFiles = 1),
+    assert(fired >= 1, "the level-count trigger must fire under the fold")
+    val meta = spark.read.parquet(s"$dir/meta").head()
+    assert(meta.getAs[Long]("min_seq") == meta.getAs[Long]("max_seq"),
+      s"fold-closing maintain left more than one live level: $meta")
+    assert(!VectorIndex.maintain(spark, dir, maxLevels = 1),
       "maintain must be a no-op when not due (idempotent trigger)")
     assert(searchRows(dir, emb) == want,
       "maintenance under the streamed fold must not change served answers")

@@ -14,8 +14,11 @@ python3 tools/check.py /root/testdata/sf0.01 /tmp/rc_verify | tail -1
 
 echo "== correctness @ sf0.1 (bench scale)"
 rm -rf /tmp/rc_verify01 && sbt -batch "runMain graft.Verify /root/testdata/sf0.1 /tmp/rc_verify01" >/tmp/rc_verify01.log 2>&1
-python3 tools/check.py /root/testdata/sf0.1 /tmp/rc_verify01 > "CORRECTNESS_SF01_r${R}.txt" || true
+# the artifact is written either way; a failing oracle stops the close
+rc=0
+python3 tools/check.py /root/testdata/sf0.1 /tmp/rc_verify01 > "CORRECTNESS_SF01_r${R}.txt" || rc=$?
 tail -1 "CORRECTNESS_SF01_r${R}.txt"
+[ "$rc" -eq 0 ] || { echo "sf0.1 oracle failed (see CORRECTNESS_SF01_r${R}.txt)" >&2; exit 1; }
 
 echo "== recall + drift gate"
 sbt -batch "runMain graft.Recall /root/testdata/sf0.01 RECALL_r${R}.json" >/tmp/rc_recall.log 2>&1
