@@ -143,17 +143,16 @@ object Engine {
     */
   val serving: model.ServingPointer.type = model.ServingPointer
 
-  /** Speed-layer label store for streaming connected components:
-    * bucket-partitioned, folds rewrite only changed buckets; lookup()
-    * is the bucket-pruned canonical-id point read, compact() pins to
-    * the store's recorded modulus (explicit count = reshard).
+  /** Speed-layer label store for streaming connected components: a
+    * bucket-partitioned level store, each fold appends only the changed
+    * labels; lookup() is the bucket-pruned canonical-id point read.
     */
   val labels: streaming.LabelStore.type = streaming.LabelStore
 
-  /** LSM-flavored streamed upsert store: folds are pure appends with a
-    * batch sequence number, reads resolve latest-per-key (tombstone
-    * deletes), lookup() is the bucket-pruned per-key get (the
-    * ElephantDB random-read role), compact() is the maintenance pass.
+  /** Streamed upsert store: each fold appends one level under a batch
+    * id, reads resolve latest-per-key (tombstone deletes), lookup() is
+    * the bucket-pruned per-key get (the ElephantDB random-read role),
+    * maintain() compacts the levels to the live rows.
     */
   val upserts: streaming.UpsertStore.type = streaming.UpsertStore
 

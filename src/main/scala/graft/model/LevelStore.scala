@@ -8,16 +8,18 @@ import org.apache.spark.sql.types._
 /** The seq-level store lifecycle shared by the persistent stores that
   * take small appends and are compacted later (the Pail `absorb` /
   * `consolidate` pair): [[graft.operators.ShingleStore]],
-  * [[graft.operators.LexIndex]] and [[graft.operators.VectorIndex]].
+  * [[graft.operators.LexIndex]], [[graft.operators.VectorIndex]],
+  * [[graft.streaming.UpsertStore]] and [[graft.streaming.LabelStore]].
   * Each store supplies only its payload write, its own commit-row
-  * fields and its read expression; this class owns the commit, the
-  * recovery and the compaction.
+  * fields, its read expression and, if it collapses versions, its
+  * compaction expression; this class owns the commit, the recovery and
+  * the compaction.
   *
   * Layout under a store `dir`:
   *   - `<data>/[<part>=<k>/]seq=<n>/` — level n of the payload, under an
-  *     optional store partition (`bucket=` for postings, `cell=` for
-  *     codes, none for signatures). A level adds at most one file per
-  *     partition for the partitioned stores.
+  *     optional store partition (`bucket=` for postings, upsert rows
+  *     and labels, `cell=` for codes, none for signatures). A level
+  *     adds at most one file per partition for the partitioned stores.
   *   - `<commit>/` — ONE row: the store's own fields, then `min_seq`,
   *     `max_seq` and `last_batch`. Written on the driver with
   *     [[OneRowParquet.write]] (no Spark job).
@@ -53,17 +55,19 @@ import org.apache.spark.sql.types._
   *
   * [[maintain]] fires when the live level count `max_seq - min_seq + 1`
   * (from the commit row — no listing) exceeds `maxLevels`. It rewrites
-  * the committed relation into ONE new level at `max_seq + 1` and
-  * commits `min_seq = max_seq` = that level: one swap moves every reader
-  * planned after it to the compacted level, and a crash before the swap
-  * leaves the old levels serving (the orphan is pruned on the next
-  * entry). The retired levels are NOT deleted by the compaction: a read
-  * planned before the swap is a lazy plan still listing their files, and
-  * would fail at task time. They are invisible to every new reader and
-  * cost only disk until the NEXT writer entry prunes `seq < min_seq` —
-  * that interval is the grace window. A read that outlives a whole
-  * maintenance interval is the remaining hazard, the same one-interval
-  * contract [[ServingPointer.dropSuperseded]] gives version dirs.
+  * the committed relation through the store's compaction expression
+  * (the identity unless the store collapses versions) into ONE new
+  * level at `max_seq + 1` and commits `min_seq = max_seq` = that level:
+  * one swap moves every reader planned after it to the compacted level,
+  * and a crash before the swap leaves the old levels serving (the
+  * orphan is pruned on the next entry). The retired levels are NOT
+  * deleted by the compaction: a read planned before the swap is a lazy
+  * plan still listing their files, and would fail at task time. They
+  * are invisible to every new reader and cost only disk until the NEXT
+  * writer entry prunes `seq < min_seq` — that interval is the grace
+  * window. A read that outlives a whole maintenance interval is the
+  * remaining hazard, the same one-interval contract
+  * [[ServingPointer.dropSuperseded]] gives version dirs.
   *
   * == Old formats ==
   *
@@ -117,10 +121,11 @@ final class LevelStore(data: String, commit: String, part: Option[String],
     */
   def read(spark: SparkSession, dir: String): (Row, DataFrame) = {
     val row = committedOrFail(spark, dir)
-    (row, levels(spark, dir, row))
+    (row, read(spark, dir, row))
   }
 
-  private def levels(spark: SparkSession, dir: String, row: Row): DataFrame = {
+  /** The levels `row`, a committed row of this store, makes live. */
+  def read(spark: SparkSession, dir: String, row: Row): DataFrame = {
     val schema = part.foldLeft(payload(row))(_.add(_, IntegerType)).add("seq", IntegerType)
     spark.read.schema(schema).parquet(dataDir(dir))
       .where(col("seq").between(
@@ -166,15 +171,18 @@ final class LevelStore(data: String, commit: String, part: Option[String],
   }
 
   /** Compact into one level when more than `maxLevels` are live (see the
-    * grace window above). Returns whether a compaction ran.
+    * grace window above). `compact` maps the live levels (payload, store
+    * partition and `seq` columns) to the compacted level's rows. Returns
+    * whether a compaction ran.
     */
-  def maintain(spark: SparkSession, dir: String, maxLevels: Int): Boolean = {
+  def maintain(spark: SparkSession, dir: String, maxLevels: Int,
+      compact: DataFrame => DataFrame = identity): Boolean = {
     val prev = recover(spark, dir)
     val maxSeq = prev.getAs[Long]("max_seq")
     val due = maxSeq - prev.getAs[Long]("min_seq") + 1 > maxLevels
     if (due) {
       val seq = Math.toIntExact(maxSeq + 1)
-      writeLevel(levels(spark, dir, prev), dir, seq)
+      writeLevel(compact(read(spark, dir, prev)), dir, seq)
       swapIn(spark, dir, fields.fieldNames.toSeq.map(f => prev.get(prev.fieldIndex(f))),
         seq, seq, prev.getAs[Long]("last_batch"))
     }

@@ -4,8 +4,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Crash-safe directory swap for parquet serving stores (the rebuilt
-  * batch-view hand-off: FactStore.consolidate, the [[LevelStore]] commit
-  * rows, the stream_upsert/stream_cc foreachBatch maintainers).
+  * batch-view hand-off): FactStore.consolidate, the [[LevelStore]] commit
+  * rows and the [[ServingPointer]] pointer row.
   *
   * The naive `delete(store); rename(tmp, store)` has a window where the
   * serving store is ABSENT: a crash between the two calls loses the
@@ -27,7 +27,7 @@ import org.apache.spark.sql.SparkSession
   * [[commit]] from ANY crash point finishes the interrupted swap
   * (it is idempotent on its own intermediate states). Readers that may
   * observe a mid-swap crash resolve the current version with
-  * [[readablePath]] — `store` if present, else the `store.old` the
+  * [[committedPath]] — `store` if complete, else the `store.old` the
   * interrupted swap preserved. Directory renames are atomic on HDFS and
   * local filesystems (the deployments this targets); object stores
   * without atomic rename want a pointer-file scheme instead, which this
@@ -169,28 +169,17 @@ object StoreSwap {
     if (f.exists(s) && f.exists(o)) f.delete(o, true)
   }
 
-  /** The current readable version of `store`: the store itself, or the
-    * `.old` a mid-swap crash preserved (step 2 done, step 3 not). None
-    * only if the store has never been written. Maintainers bootstrapping
-    * "empty on first batch" MUST use this rather than a bare exists():
-    * a bare check reads absence-during-swap as "never existed" and
-    * silently restarts state from empty.
-    */
-  def readablePath(spark: SparkSession, store: String): Option[String] = {
-    val f = fs(spark)
-    if (f.exists(new Path(store))) Some(store)
-    else if (f.exists(new Path(oldPath(store)))) Some(oldPath(store))
-    else None
-  }
-
-  /** [[readablePath]] restricted to versions whose write COMMITTED (the
-    * `_SUCCESS` marker): the probe for "has this store ever been built".
-    * The distinction matters for stores whose FIRST version is written
-    * directly (not through a tmp swap — LexIndex/VectorIndex builds):
-    * a crash during that job leaves the directory existing with only
-    * `_temporary` staging inside, which a bare exists() misreads as
-    * built — bricking the retry behind a rebuild refusal, or routing a
-    * bootstrap fold to an append that dies reading the torn table.
+  /** The current readable version of `store` whose write COMMITTED (the
+    * `_SUCCESS` marker): the store itself, or the `.old` a mid-swap crash
+    * preserved (step 2 done, step 3 not). None if no committed version
+    * exists — the probe for "has this store ever been built".
+    * Maintainers bootstrapping "empty on first batch" MUST use this
+    * rather than a bare exists(): a bare check reads absence-during-swap
+    * as "never existed" and silently restarts state from empty, and
+    * for a version written directly (not through a tmp swap) it reads a
+    * crashed job's `_temporary`-only dir as built — bricking the retry
+    * behind a rebuild refusal, or routing a bootstrap fold to an append
+    * that dies reading the torn table.
     * Each candidate is checked independently (an incomplete live dir
     * never hides a complete `.old`).
     */

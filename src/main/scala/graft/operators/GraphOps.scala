@@ -614,10 +614,11 @@ object GraphOps {
     // bucket-partitioned LabelStore once, then resolve two
     // representative node ids (min and max — driver scalars standing in
     // for a serving request's literals) through LabelStore.lookup,
-    // which reads ONLY those ids' bucket directories (driver-evaluated
-    // hash -> static partition filter; LabelStoreSpec pins
-    // partitions-read = |distinct buckets|). Shares the recursive-CTE
-    // closure oracle, sliced to the same two keys.
+    // which reads ONLY those ids' buckets (bucket ids from the modulus
+    // in the store's commit row, driver-evaluated hash -> static
+    // partition filter; LabelStoreSpec pins partitions-read =
+    // |distinct buckets|). Shares the recursive-CTE closure oracle,
+    // sliced to the same two keys.
     //
     // Scale: a lookup touches <= |keys| of the store's buckets no
     // matter how many billions of ids the labeling holds — the

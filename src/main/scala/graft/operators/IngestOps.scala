@@ -200,17 +200,16 @@ object IngestOps {
     // The STREAMED form of snapshot_upsert: the changes batch arrives as
     // a stream (one file per microbatch via maxFilesPerTrigger) and
     // foreachBatch folds each slice into the bucket-partitioned
-    // UpsertStore — a pure APPEND of the batch rows carrying the
-    // batchId as their version, with deletes as tombstones; reads
-    // resolve latest-per-key. No whole-store read-merge-rewrite per
-    // microbatch (the round-9 shape — store-sized I/O per batch, the
-    // scale bug), no swap window (nothing on the write path deletes),
-    // and batchId-replay is idempotent. compact() is run once at the
-    // end as the maintenance pass. Change keys are disjoint, so
-    // sequential application over ANY batching converges to the
-    // one-shot batch merge — proven by sharing its oracle. This is the
-    // relational analogue of the vector index's streamed appends: the
-    // speed layer MAINTAINS the serving view instead of rebuilding it.
+    // UpsertStore — one level per batch, deletes as tombstones; reads
+    // resolve latest-per-key by level. No whole-store read-merge-rewrite
+    // per microbatch (the round-9 shape — store-sized I/O per batch, the
+    // scale bug), and the batchId rides into the commit row, so a replay
+    // is a no-op. maintain(maxLevels = 1) is run once at the end as the
+    // maintenance pass. Change keys are disjoint, so sequential
+    // application over ANY batching converges to the one-shot batch
+    // merge — proven by sharing its oracle. This is the relational
+    // analogue of the vector index's streamed appends: the speed layer
+    // MAINTAINS the serving view instead of rebuilding it.
     withOracle(
       "stream_upsert",
       """WITH ch AS (
@@ -249,7 +248,7 @@ object IngestOps {
         }
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-      graft.streaming.UpsertStore.compact(s, storeDir, keys)
+      graft.streaming.UpsertStore.maintain(s, storeDir, keys, maxLevels = 1)
       graft.streaming.UpsertStore.read(s, storeDir, keys)
         .getOrElse(sys.error(s"serving store missing at $storeDir"))
         .select(col("o_orderkey"), col("o_custkey"),

@@ -23,7 +23,7 @@ import org.apache.spark.sql.types._
   *   - `stats/` — the commit row: (n_docs, sum_dl, avgdl, n_buckets)
   *     plus the level window — the corpus constants and the recorded
   *     bucket modulus, so reads are self-describing (no caller-supplied
-  *     nBuckets to get wrong — the UpsertStore sidecar lesson).
+  *     nBuckets to get wrong).
   *
   * A query reads ONLY its terms' bucket partitions (partition-pruned
   * scan: ≤ |qTerms| of nBuckets directories, spec-pinned), filters to

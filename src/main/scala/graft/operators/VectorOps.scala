@@ -1036,9 +1036,11 @@ object VectorOps {
       // filtered relation would silently change the emitted pairs — a
       // non-exact plan pays the count() job instead.
       val n = graft.model.RowEst.exactCount(emb).getOrElse(emb.count())
+      // both decide the survivor set, so both ride the index-cache key
+      val (threshold, nAssign) = (0.4, 2)
       val rawPairs =
-        if (n <= lshMaxRows) cosineNearDupLsh(s, emb, threshold = 0.4)
-        else cosineNearDupSemantic(s, emb, threshold = 0.4, nAssign = 2)
+        if (n <= lshMaxRows) cosineNearDupLsh(s, emb, threshold = threshold)
+        else cosineNearDupSemantic(s, emb, threshold = threshold, nAssign = nAssign)
       val pairs = rawPairs
         .select(col("i").as("src"), col("j").as("dst"))
       // cc's output column is renamed: `label` is already a column of the
@@ -1064,14 +1066,14 @@ object VectorOps {
       // "dedup before indexing, index once, serve many"), so it rides the
       // content-keyed [[graft.IndexCache]] like ann_ivfpq_indexed — the
       // key carries the corpus identity plus everything that decides the
-      // survivor set (the route threshold) and the index shape, so a
-      // different corpus/route/params can never alias. The DEDUP stage
+      // survivor set (the route, its threshold and nAssign) and the index
+      // shape, so a different corpus/route/params can never alias. The DEDUP stage
       // (pairs → CC → survivor join) still executes per invocation — only
       // the byte-identical index rebuild is amortized, production's
       // nightly-build/serve-many split. Scaling turns the cache off, so
       // build-cost exponents are unaffected.
       val idx = graft.IndexCache.serve(
-        s"embpipe|$dir|$lshMaxRows|16|16|16", "graft_embpipe")(
+        s"embpipe|$dir|$lshMaxRows|$threshold|$nAssign|16|16|16", "graft_embpipe")(
         VectorIndex.buildIvfPq(s, survivors, _, nCells = 16, m = 16, ks = 16))
       VectorIndex.searchIvfPq(s, idx, survivors,
         probes = emb.where(col("vec_id") < 10), k = 5, nProbe = 8, rerank = 8)

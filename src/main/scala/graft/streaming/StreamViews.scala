@@ -649,11 +649,12 @@ object StreamViews {
     // incremental CC (GraphOps.connectedComponentsIncremental — the
     // prior labeling's node-sized star edges union the new batch, never
     // the full historical edge set). foreachBatch maintains the store
-    // through LabelStore.fold: bucket-partitioned by node, each batch
-    // rewrites ONLY the buckets holding a changed label (per-bucket
-    // two-rename swap; LabelStoreSpec pins untouched buckets'
-    // files byte-identical) — at 100 TB the labeling is node-sized and
-    // a whole-store rewrite per microbatch is the I/O bug. Folding ANY
+    // through LabelStore.fold: each batch appends ONE level holding only
+    // the relabeled and new nodes, and touches no existing file
+    // (LabelStoreSpec pins every pre-fold file unchanged) — at 100 TB the
+    // labeling is node-sized and a whole-store rewrite per microbatch is
+    // the I/O bug. The foreachBatch id rides into the store's commit row,
+    // so a restart's replay of the last batch is a no-op. Folding ANY
     // batching sequentially lands the full recompute's labeling, so the
     // query shares connected_components' recursive-CTE oracle.
     withOracle(
@@ -674,11 +675,12 @@ object StreamViews {
       val q = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(eventsDir)
         .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
           // the shared Spark-side edge rule — one definition with the
           // batch/incremental forms and the recursive-CTE oracle
           LabelStore.fold(s, labelsDir,
-            graft.operators.GraphOps.equivEdgesOf(batch.select("user_id")))
+            graft.operators.GraphOps.equivEdgesOf(batch.select("user_id")),
+            batchId = batchId)
           ()
         }
         .trigger(Trigger.AvailableNow()).start()

@@ -1,307 +1,170 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-/** Bucket-partitioned LSM-flavored upsert store for streamed serving
-  * views (`stream_upsert`'s maintainer).
+/** Upsert store for streamed serving views (`stream_upsert`'s
+  * maintainer, the ElephantDB per-key random-read role —
+  * `BatchWorkflow.java:359-364`).
   *
-  * The round-9 form re-read and re-wrote the WHOLE serving store every
-  * microbatch (anti-join + union + swap) — at 100 TB the store is the
-  * full keyspace and a microbatch touches a sliver, so whole-store I/O
-  * per batch is the same scale bug the label store had. Here a fold is
-  * pure APPEND: the change batch lands as new files in its keys' hash
-  * buckets carrying a monotone `_seq` (Structured Streaming's batchId)
-  * and a `_deleted` tombstone flag; nothing existing is read, rewritten
-  * or renamed. Reads resolve each key to its highest-_seq version and
-  * drop tombstones; [[lookup]] is the point-read form (the ElephantDB
-  * random-read role this store replaces — `BatchWorkflow.java:359-364`):
-  * it prunes the scan to the looked-up keys' bucket directories.
-  * [[compact]] is the offline maintenance pass that rewrites the store
-  * down to one live row per key (the batch layer to the folds' speed
-  * layer — the Lambda shape at the storage level); [[needsCompact]] /
-  * [[maintain]] are the files-per-bucket trigger policy.
+  * Payload: the caller's rows plus a `_deleted` tombstone flag. A fold
+  * is one append of the change batch; nothing existing is read,
+  * rewritten or renamed.
   *
-  * Crash story, simpler than a swap protocol on the WRITE path because
-  * folds never delete anything:
+  * Layout under `dir` — a [[graft.model.LevelStore]] partitioned by
+  * bucket (commit, crash story, replay ledger, compaction and its grace
+  * window live there):
+  *   - `rows/bucket=<pmod(hash(keys), n_buckets)>/seq=<n>/` — level n:
+  *     one fold's rows, one file per touched bucket.
+  *   - `stats/` — the commit row: (n_buckets, rows_schema) plus the level
+  *     window. `rows_schema` is the payload's data columns, the fixed
+  *     read schema; `n_buckets` is the modulus every fold and lookup
+  *     hashes keys with.
   *
-  *   - a fold that crashes mid-commit leaves at most a PREFIX of the
-  *     batch's files visible; every prior version remains untouched, so
-  *     reads stay correct (they just don't see the half-landed batch);
-  *   - Structured Streaming replays an uncommitted batch with the SAME
-  *     batchId, so the retry writes rows with the same `_seq` — reads
-  *     collapse exact (key, _seq) duplicates, making replay idempotent;
-  *   - [[compact]] REPLACES the store, so it goes through the
-  *     [[graft.model.StoreSwap]] two-rename protocol: the new version
-  *     is fully staged at `dir.tmp` before any live file is touched,
-  *     and a crash at any point leaves a complete version under `dir`
-  *     or `dir.old` (never the delete-before-rename empty-bucket window
-  *     a dynamic partition overwrite has). Reads resolve the current
-  *     version via `StoreSwap.readablePath`; folds roll an interrupted
-  *     swap back before appending (an append into a mid-swap-absent
-  *     `dir` would silently found a NEW store holding only that batch).
-  *
-  * SINGLE-WRITER maintenance contract: the process that owns folds also
-  * owns compaction — [[compact]]/[[maintain]] must not run concurrently
-  * with a live fold (a fold appended between compact's read and its
-  * commit would be swapped away). The natural seam is the foreachBatch
-  * maintainer calling [[maintain]] between batches, or an operator
-  * running [[compact]] in a maintenance window — the same discipline as
-  * FactStore consolidate.
+  * Read path: the latest version of each key by level `seq`, tombstones
+  * dropped. [[lookup]] prunes the scan to the looked-up keys' buckets.
+  * [[maintain]] compacts the levels down to the live rows.
   */
 object UpsertStore {
 
-  /** Hash buckets for the keyspace; FIXED for the store's life (it is
-    * the partitioning folds append into). Production sizes this so a
-    * compacted bucket is ~128 MB.
+  /** Hash buckets for the keyspace, fixed at the first fold. Production
+    * sizes this so a compacted bucket is ~128 MB.
     */
   val DefaultBuckets = 8
 
-  /** Folds-per-bucket a bucket may accumulate before [[needsCompact]]
-    * fires. Each fold adds O(shuffle-partitions-touching-the-bucket)
-    * files; past this the read-side merge (and open-file count) starts
-    * to dominate — the LSM "too many sorted runs" signal.
-    */
-  val DefaultMaxFilesPerBucket = 16
+  val levels = new graft.model.LevelStore("rows", "stats", Some("bucket"),
+    new StructType().add("n_buckets", IntegerType).add("rows_schema", StringType),
+    rowsSchema, "upsert store")
+
+  private def rowsSchema(stats: Row): StructType =
+    DataType.fromJson(stats.getAs[String]("rows_schema")).asInstanceOf[StructType]
 
   private def bucketCol(keys: Seq[String], n: Int): Column =
     pmod(hash(keys.map(col): _*), lit(n))
 
-  private def fs(spark: SparkSession) =
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+  /** A store of the layout before the level store kept its rows under
+    * `bucket=` dirs at the root, with its modulus in `_graft_buckets`
+    * beside them and no commit row. It is refused, never misread.
+    */
+  private def refuseOldFormat(spark: SparkSession, dir: String): Unit =
+    if (FileSystem.get(spark.sparkContext.hadoopConfiguration)
+        .exists(new Path(dir, "_graft_buckets")))
+      sys.error(s"the upsert store at $dir is in the pre-level layout " +
+        "(bucket dirs and _graft_buckets at its root) — rebuild it into a fresh dir")
 
-  // The store self-describes its bucket count via the shared
-  // [[BucketMeta]] sidecar (atomic temp-then-rename write; an
-  // unparsable file reads as absent rather than poisoning every later
-  // fold/lookup/compact with a parse error).
-
-  /** Append one change batch: `deletedCol` (if set) names a Boolean
-    * column of `batch` marking tombstone rows — it is consumed into the
-    * store's `_deleted` flag (NULL = not deleted: a nullable CDC op
-    * flag must not silently drop live rows through three-valued
-    * `!null`), so payload schemas stay identical across folds with and
-    * without deletes. `seq` must be monotone across folds —
-    * foreachBatch's batchId is exactly that. Writes ONLY into the batch
-    * keys' bucket directories; existing files are never touched.
+  /** Append one change batch as one level. `deletedCol` (if set) names a
+    * Boolean column of `batch` marking tombstone rows; it becomes the
+    * `_deleted` flag (NULL = not deleted). `seq` is the batch id of the
+    * [[graft.model.BatchLedger]]: a replay of the last folded `seq` is a
+    * no-op and a lower one throws — foreachBatch's batchId is exactly
+    * that. The first non-empty fold builds the store and fixes its
+    * bucket count and row schema; every later batch must carry the same
+    * columns and types.
     *
     * Contract: a batch carries AT MOST ONE row per key. Rows sharing a
-    * key within one fold also share `_seq`, and the read-side argmax
-    * would resolve them arbitrarily — a DataFrame has no row order to
-    * define "last write wins" inside a batch. Pre-aggregate multi-op
-    * CDC batches to their final per-key state before folding (what a
-    * keyed CDC feed does anyway).
+    * key within one level would resolve arbitrarily — a DataFrame has no
+    * row order to define "last write wins" inside a batch.
     */
   def fold(spark: SparkSession, dir: String, batch: DataFrame,
       keys: Seq[String], seq: Long, deletedCol: Option[String] = None,
       nBuckets: Int = DefaultBuckets): Unit = {
-    // an empty batch must not create an empty directory (a dir holding
-    // only _SUCCESS fails schema inference on the next read)
+    refuseOldFormat(spark, dir)
+    // an empty first batch must not build an empty store
     if (batch.isEmpty) return
-    // a compact that crashed mid-swap leaves `dir` absent and the real
-    // store at `dir.old`; appending would found a new store holding only
-    // this batch, and the later swap recovery would then DELETE the old
-    // version under it. Roll the interrupted swap back first (no-op on a
-    // healthy store; the stale staged `dir.tmp` is discarded, never
-    // promoted over folds that may postdate it).
-    recoverForWrite(spark, dir)
-    // persist (and enforce) the store's bucket modulus: folding with a
-    // different count than the store was built with would scatter a
-    // key's versions across incompatible partitionings
-    BucketMeta.read(spark, dir).foreach { n =>
-      require(n == nBuckets,
-        s"store at $dir was built with nBuckets=$n; fold got $nBuckets")
-    }
-    val withDel = deletedCol match {
+    val rows = deletedCol match {
       case Some(c) => batch.withColumn(c, coalesce(col(c), lit(false)))
         .withColumnRenamed(c, "_deleted")
       case None => batch.withColumn("_deleted", lit(false))
     }
-    withDel
-      .withColumn("_seq", lit(seq))
-      .withColumn("bucket", bucketCol(keys, nBuckets))
-      // one file per touched bucket per batch (the compact discipline),
-      // not one per batch partition per bucket
-      .repartition(col("bucket"))
-      .write.mode(SaveMode.Append).partitionBy("bucket").parquet(dir)
-    BucketMeta.write(spark, dir, nBuckets)
-  }
-
-  /** Roll back a compact swap that crashed with the store absent; keep
-    * any stale staging out of the way. Never promotes `dir.tmp` — only
-    * [[compact]] itself does, immediately after staging it, so a tmp
-    * found here may predate later folds.
-    */
-  private def recoverForWrite(spark: SparkSession, dir: String): Unit = {
-    val f = fs(spark)
-    val s = new Path(dir)
-    val o = new Path(graft.model.StoreSwap.oldPath(dir))
-    val t = new Path(graft.model.StoreSwap.tmpPath(dir))
-    if (!f.exists(s) && f.exists(o)) {
-      require(f.rename(o, s), s"rollback rename $o -> $s failed")
-      if (f.exists(t)) f.delete(t, true)
+    def write(schema: StructType, n: Int, level: Int): Unit = {
+      def cols(s: StructType) = s.map(f => f.name -> f.dataType).toSet
+      require(cols(schema) == cols(rows.schema), s"a fold into the upsert store at " +
+        s"$dir must carry ${schema.simpleString}; got ${rows.schema.simpleString}")
+      // parquet reads resolve columns by name: the order may differ
+      levels.writeLevel(rows.withColumn("bucket", bucketCol(keys, n)), dir, level)
+    }
+    if (levels.isBuilt(spark, dir))
+      levels.append(spark, dir, seq) { (prev, level) =>
+        val n = prev.getAs[Int]("n_buckets")
+        require(n == nBuckets, s"store at $dir was built with nBuckets=$n; fold got $nBuckets")
+        write(rowsSchema(prev), n, level)
+        Seq(n, prev.getAs[String]("rows_schema"))
+      }
+    else {
+      val schema = StructType(rows.schema.map(_.copy(nullable = true)))
+      levels.build(spark, dir, seq) { level =>
+        write(schema, nBuckets, level)
+        Seq(nBuckets, schema.json)
+      }
     }
   }
 
-  /** One-pass latest-version resolve: max_by over the non-key columns
-    * keyed on `_seq` — a map-side-combinable argmax aggregate, not a
-    * per-key window and not a max+self-join (which would scan the store
-    * twice). One row per key by construction, so the exact duplicates a
-    * replayed fold leaves (same key, same _seq, same content) collapse
-    * for free.
+  /** The live rows: each key's version at its highest level `seq`, in
+    * one pass — max_by over the non-key columns, a map-side-combinable
+    * argmax aggregate, not a per-key window and not a max+self-join —
+    * with tombstoned keys dropped.
     */
-  private def latestPerKey(rows: DataFrame, keys: Seq[String]): DataFrame = {
+  private def live(rows: DataFrame, keys: Seq[String]): DataFrame = {
     val carried = rows.columns.filterNot(keys.contains)
     rows.groupBy(keys.map(col): _*)
-      .agg(max_by(struct(carried.map(col): _*), col("_seq")).as("_r"))
+      .agg(max_by(struct(carried.map(col): _*), col("seq")).as("_r"))
       .select(keys.map(col) ++ carried.map(c => col(s"_r.$c").as(c)): _*)
+      .where(!col("_deleted"))
   }
 
-  /** The store's current readable root: `dir`, or the `dir.old` a
-    * mid-compact crash preserved. None if never written.
-    */
-  private def readableRoot(spark: SparkSession, dir: String): Option[String] =
-    graft.model.StoreSwap.readablePath(spark, dir)
-
   /** Current state: latest version per key, tombstones dropped,
-    * bookkeeping columns removed. None if the store has never been
-    * written. Resolves a mid-compact-crash store through
-    * `StoreSwap.readablePath` (absence-during-swap is NOT "empty").
+    * bookkeeping columns removed. None if the store was never built.
     */
-  def read(spark: SparkSession, dir: String, keys: Seq[String]): Option[DataFrame] =
-    readableRoot(spark, dir).map { root =>
-      latestPerKey(spark.read.parquet(root), keys)
-        .where(!col("_deleted"))
-        .drop("_seq", "_deleted", "bucket")
+  def read(spark: SparkSession, dir: String, keys: Seq[String]): Option[DataFrame] = {
+    refuseOldFormat(spark, dir)
+    levels.committed(spark, dir).map { row =>
+      live(levels.read(spark, dir, row), keys).drop("seq", "_deleted", "bucket")
     }
+  }
 
-  /** Point lookup — the serving random-read: resolve `keyVals` (one
-    * Seq per composite key tuple, values in `keys` order) reading ONLY
-    * those keys' bucket directories. The bucket ids are computed
-    * DRIVER-SIDE by evaluating the same `pmod(hash(...), n)` expression
-    * the folds partition by (zero Spark jobs — Catalyst interpreted
-    * eval over literals), then pushed as a static `bucket IN (...)`
-    * partition filter, so the scan reads ≤ |keyVals| of the store's
-    * `bucket=` directories; the key equality predicate prunes rows
-    * within them. Results ≡ `read(...).filter(keys in keyVals)`
-    * (UpsertStoreSpec pins both the equivalence and the partition
-    * count).
-    *
-    * Literals are cast to the STORE's key column types before hashing —
-    * `hash` is type-sensitive (hash(5) != hash(5L)), so an Int passed
-    * for a Long key column would otherwise probe the wrong bucket.
-    *
-    * The bucket count comes from the store's OWN metadata sidecar
-    * (written by fold), never trusted from a parameter: a
-    * caller-supplied count that disagreed with the fold-time
-    * partitioning would hash keys into buckets the filter then
-    * excludes — an existing key silently resolving to nothing.
-    * `nBuckets` remains only as an explicit override for pre-sidecar
-    * stores (0 = read the sidecar, the default).
+  /** Point lookup — the serving random-read: resolve `keyVals` (one Seq
+    * per composite key tuple, values in `keys` order) reading ONLY those
+    * keys' bucket directories. The bucket ids are computed DRIVER-SIDE
+    * by evaluating the `pmod(hash(...), n_buckets)` expression the folds
+    * partition by over literals cast to the recorded key types (`hash`
+    * is type-sensitive: hash(5) != hash(5L)) under the session timezone,
+    * then pushed as a static `bucket IN (...)` partition filter.
+    * Results ≡ `read(...).filter(keys in keyVals)`.
     */
   def lookup(spark: SparkSession, dir: String, keys: Seq[String],
-      keyVals: Seq[Seq[Any]], nBuckets: Int = 0): Option[DataFrame] =
-    readableRoot(spark, dir).map { root =>
+      keyVals: Seq[Seq[Any]]): Option[DataFrame] = {
+    refuseOldFormat(spark, dir)
+    levels.committed(spark, dir).map { row =>
       require(keyVals.nonEmpty, "lookup needs at least one key tuple")
       require(keyVals.forall(_.length == keys.length),
         s"every key tuple must have ${keys.length} values (keys=$keys)")
-      val n =
-        if (nBuckets > 0) nBuckets
-        else BucketMeta.read(spark, root).getOrElse(sys.error(
-          s"store at $root has no readable bucket-count sidecar " +
-            "(pre-r11 store, or a torn pre-r12 sidecar write); " +
-            "pass nBuckets explicitly"))
-      val store = spark.read.parquet(root)
-      val keyTypes = keys.map(k => store.schema(k).dataType)
+      val n = row.getAs[Int]("n_buckets")
+      val keyTypes = keys.map(k => rowsSchema(row)(k).dataType)
       import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, Murmur3Hash, Pmod}
-      // cast under the SESSION timezone, not a hardcoded zone: for
-      // timestamp-typed keys folded under a non-UTC session a "UTC"
-      // literal cast can hash to a different bucket than the fold-time
-      // hash(col), and the partition filter would then exclude the
-      // key's real bucket — the silent-miss this sidecar-driven path
-      // exists to prevent
       val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
       val bucketIds = keyVals.map { vs =>
         val lits = vs.zip(keyTypes).map { case (v, dt) =>
-          Cast(Literal(v), dt, tz).eval(null)
-        }.zip(keyTypes).map { case (v, dt) => Literal(v, dt) }
-        Pmod(new Murmur3Hash(lits), Literal(n))
-          .eval(null).asInstanceOf[Int]
+          Literal(Cast(Literal(v), dt, tz).eval(null), dt)
+        }
+        Pmod(new Murmur3Hash(lits), Literal(n)).eval(null).asInstanceOf[Int]
       }.distinct
       val keyPred = keyVals.map { vs =>
         keys.zip(vs).map { case (k, v) => col(k) === lit(v) }.reduce(_ && _)
       }.reduce(_ || _)
-      latestPerKey(
-        store.where(col("bucket").isin(bucketIds: _*) && keyPred), keys)
-        .where(!col("_deleted"))
-        .drop("_seq", "_deleted", "bucket")
+      live(levels.read(spark, dir, row).where(col("bucket").isin(bucketIds: _*) && keyPred),
+        keys).drop("seq", "_deleted", "bucket")
     }
-
-  /** Live parquet part-file count of the fullest bucket (one listStatus
-    * per bucket — driver metadata only, no Spark job). 0 for a store
-    * that was never written.
-    */
-  def maxFilesPerBucket(spark: SparkSession, dir: String): Int =
-    readableRoot(spark, dir).map { root =>
-      val f = fs(spark)
-      val buckets = f.listStatus(new Path(root))
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("bucket="))
-      if (buckets.isEmpty) 0
-      else buckets.map(b => f.listStatus(b.getPath)
-        .count(st => st.isFile && !st.getPath.getName.startsWith("_"))).max
-    }.getOrElse(0)
-
-  /** The compaction trigger: true once any bucket has accumulated more
-    * than `maxFiles` part files (each fold appends its own). Cheap
-    * enough to call every batch; see the single-writer contract on the
-    * object scaladoc for WHO gets to act on it.
-    */
-  def needsCompact(spark: SparkSession, dir: String,
-      maxFiles: Int = DefaultMaxFilesPerBucket): Boolean =
-    maxFilesPerBucket(spark, dir) > maxFiles
-
-  /** Run [[compact]] iff [[needsCompact]]; returns whether it ran. The
-    * maintenance policy entry point for a fold loop: call between
-    * batches (never concurrently with one).
-    */
-  def maintain(spark: SparkSession, dir: String, keys: Seq[String],
-      maxFiles: Int = DefaultMaxFilesPerBucket): Boolean = {
-    val due = needsCompact(spark, dir, maxFiles)
-    if (due) compact(spark, dir, keys)
-    due
   }
 
-  /** Rewrite the store down to its live rows (latest version per key,
-    * tombstoned keys dropped entirely — safe because their shadowed
-    * versions are dropped in the same pass). `_seq` and `_deleted` are
-    * kept so later folds keep winning and the on-disk schema stays
-    * uniform. The rows are repartitioned by bucket before the write so
-    * a compacted bucket is ~1 file.
-    *
-    * Crash-safe via [[graft.model.StoreSwap]]: the compacted version is
-    * fully staged at `dir.tmp` (so the plan reads the live store while
-    * writing elsewhere — no lineage cut needed), then swapped in with
-    * the two-rename protocol. At every crash point a complete version
-    * exists under `dir` or `dir.old` — never the empty-bucket window of
-    * a dynamic partition overwrite, whose job commit deletes a bucket's
-    * files before renaming replacements in. A store whose rows are ALL
-    * tombstones keeps its files (an empty parquet dir would fail schema
-    * inference); its reads are empty either way. Run in maintenance
-    * windows, not under live writers (see the single-writer contract).
+  /** Compact the levels into the live rows (latest version per key,
+    * tombstoned keys dropped) once more than `maxLevels` are live
+    * ([[graft.model.LevelStore.maintain]]); returns whether it ran.
     */
-  def compact(spark: SparkSession, dir: String, keys: Seq[String]): Unit = {
-    recoverForWrite(spark, dir)
-    val f = fs(spark)
-    val tmp = graft.model.StoreSwap.tmpPath(dir)
-    f.delete(new Path(tmp), true) // stale staging from a crashed compact
-    val live = latestPerKey(spark.read.parquet(dir), keys)
-      .where(!col("_deleted"))
-    if (live.isEmpty) return
-    live
-      .repartition(col("bucket"))
-      .write.partitionBy("bucket").parquet(tmp)
-    // the bucket-count sidecar must survive the swap (tmp becomes dir)
-    BucketMeta.read(spark, dir).foreach(BucketMeta.write(spark, tmp, _))
-    graft.model.StoreSwap.commit(spark, dir)
+  def maintain(spark: SparkSession, dir: String, keys: Seq[String],
+      maxLevels: Int = 16): Boolean = {
+    refuseOldFormat(spark, dir)
+    levels.maintain(spark, dir, maxLevels, live(_, keys))
   }
 }

@@ -5,10 +5,11 @@ import java.nio.file.Files
 import graft.streaming.LabelStore
 import org.apache.spark.sql.functions._
 
-/** The delta-partitioned speed-layer label store: folds rewrite only the
-  * buckets whose labels changed (untouched buckets byte-identical on
+/** The speed-layer label store: a fold appends one level holding only
+  * the relabeled and new nodes (every pre-fold file byte-identical on
   * disk), the labeling always equals the full recompute, and the
-  * min-fold read repairs torn-commit duplicates.
+  * min-fold read resolves a node's labels across levels. The
+  * commit-point crash matrix is LevelStoreSpec's.
   */
 class LabelStoreSpec extends SparkSpec {
   import spark.implicits._
@@ -16,9 +17,9 @@ class LabelStoreSpec extends SparkSpec {
   private def freshDir(): String =
     Files.createTempDirectory("graft_labelstore").toString + "/labels"
 
-  /** (relative path → (length, checksum)) for every data file under dir. */
+  /** (relative path → (length, checksum)) for every payload file. */
   private def fileStates(dir: String): Map[String, (Long, Long)] = {
-    val base = new java.io.File(dir)
+    val base = new java.io.File(LabelStore.levels.dataDir(dir))
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
     walk(base)
@@ -30,6 +31,12 @@ class LabelStoreSpec extends SparkSpec {
         f.getPath.stripPrefix(base.getPath) -> (f.length(), crc.getValue)
       }.toMap
   }
+
+  private def bucketDir(path: String): String =
+    path.split("/").find(_.startsWith("bucket=")).get
+
+  private def bucketOf(node: Long, n: Int = LabelStore.DefaultBuckets): Int =
+    spark.range(1).select(pmod(hash(lit(node)), lit(n))).head().getInt(0)
 
   private def labelsOf(dir: String): Map[Long, Long] =
     LabelStore.read(spark, dir).get
@@ -43,29 +50,26 @@ class LabelStoreSpec extends SparkSpec {
     LabelStore.fold(spark, dir, edges0)
     val before = fileStates(dir)
     assert(before.nonEmpty)
-    val bucketsOnDisk = before.keySet.map(_.split("/").find(_.startsWith("bucket=")).get)
+    val bucketsOnDisk = before.keySet.map(bucketDir)
     assert(bucketsOnDisk.size == LabelStore.DefaultBuckets,
       s"fixture must populate every bucket, got $bucketsOnDisk")
 
-    // batch 2: one new edge joining node 0's component to a new node —
-    // only the buckets of the relabeled/new nodes may be rewritten
-    LabelStore.fold(spark, dir, Seq((5000L, 0L)).toDF("src", "dst"))
+    // batch 2: a new node joins node 0's component, and {1, 1001} merges
+    // into it — 5000 is new, 1 and 1001 relabel to 0; 0 and 1000 keep 0
+    LabelStore.fold(spark, dir, Seq((5000L, 0L), (1000L, 1L)).toDF("src", "dst"))
     val after = fileStates(dir)
-
-    val changedNodes = Seq(5000L) // 0 and 1000 keep their min-id label 0
-    val changedBuckets = changedNodes
-      .map(n => spark.range(1).select(pmod(hash(lit(n)), lit(8))).head().getInt(0))
-      .map(b => s"bucket=$b").toSet
-    val untouched = before.keySet.filterNot(p => changedBuckets.exists(p.contains))
-    assert(untouched.nonEmpty, "fixture must leave some buckets untouched")
-    untouched.foreach { p =>
-      assert(after.get(p).contains(before(p)),
-        s"untouched bucket file $p was rewritten (or removed) by the fold")
+    before.foreach { case (p, st) =>
+      assert(after.get(p).contains(st), s"pre-fold file $p was rewritten or removed")
     }
-    // and the changed buckets WERE rewritten (new file names per job)
-    assert(changedBuckets.exists(b => !before.keySet.filter(_.contains(b))
-      .forall(p => after.get(p).contains(before(p)))),
-      "the changed bucket must actually be rewritten")
+    val level = LabelStore.levels.read(spark, dir)._2.where($"seq" === 1)
+      .select("node", "label").as[(Long, Long)].collect().toSet
+    assert(level == Set(5000L -> 0L, 1L -> 0L, 1001L -> 0L),
+      s"the new level holds exactly the relabeled and new nodes: $level")
+    val wanted = Seq(5000L, 1L, 1001L).map(n => s"bucket=${bucketOf(n)}").toSet
+    assert((after.keySet -- before.keySet).map(bucketDir) == wanted,
+      "new files land only in the changed nodes' buckets")
+    assert(labelsOf(dir) == labelsOf(dir).keySet.map(n =>
+      n -> (if (Set(0L, 1L, 1000L, 1001L, 5000L)(n)) 0L else n % 1000)).toMap)
   }
 
   test("sequential folds equal the full recompute over all edges") {
@@ -118,187 +122,44 @@ class LabelStoreSpec extends SparkSpec {
   test("min-fold read repairs torn-commit duplicates (labels only decrease)") {
     val dir = freshDir()
     LabelStore.fold(spark, dir, Seq((1L, 2L), (2L, 3L)).toDF("src", "dst"))
-    // simulate a torn dynamic overwrite: an old, higher label for node 3
-    // survives alongside the new row in its bucket directory
-    val bucket3 = spark.range(1).select(pmod(hash(lit(3L)), lit(8))).head().getInt(0)
+    // an older, higher label for node 3 beside its newest one in the
+    // committed level — the shape every relabel leaves across levels
     Seq((3L, 2L)).toDF("node", "label")
-      .write.mode("append").parquet(s"$dir/bucket=$bucket3")
-    val raw = spark.read.parquet(dir).where(col("node") === 3L).count()
-    assert(raw == 2, "fixture: the torn duplicate must be on disk")
+      .write.mode("append")
+      .parquet(s"${LabelStore.levels.dataDir(dir)}/bucket=${bucketOf(3L)}/seq=0")
+    val raw = LabelStore.levels.read(spark, dir)._2.where(col("node") === 3L).count()
+    assert(raw == 2, "fixture: the duplicate must be on disk")
     val labels = labelsOf(dir)
     assert(labels(3L) == 1L,
       "read must repair the duplicate to the newest (minimum) label")
-    // and folding onward from the torn state converges to the truth
+    // and folding onward from it converges to the truth
     LabelStore.fold(spark, dir, Seq((3L, 4L)).toDF("src", "dst"))
     val after = labelsOf(dir)
     assert(after == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
   }
 
-  test("per-bucket swap crash windows: a bucket is never absent-and-forgotten") {
-    val f = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    def P(s: String) = new org.apache.hadoop.fs.Path(s)
-
-    // window 1: crash BETWEEN the two renames of one bucket — the live
-    // bucket dir is ABSENT, its content preserved under dir.old. Before
-    // round 11 (dynamic partition overwrite) this state was an EMPTY
-    // bucket: prior labels for nodes not in the replayed batch were
-    // permanently lost. Now read()/fold() rename it back first.
-    val d1 = freshDir()
-    LabelStore.fold(spark, d1,
-      Seq.tabulate(32)(i => (i.toLong, (i + 1000).toLong)).toDF("src", "dst"))
-    val before = labelsOf(d1)
-    val victim = spark.range(1).select(pmod(hash(lit(0L)), lit(8))).head().getInt(0)
-    // the faithful r15 crash state: the fold wrote its staging dir and
-    // the _displaced manifest BEFORE the first rename, so a mid-loop
-    // crash always leaves both beside the displaced bucket
-    f.mkdirs(P(s"$d1.tmp"))
-    val mOut = f.create(P(s"$d1.tmp/_displaced"), true)
-    mOut.write(victim.toString.getBytes("UTF-8")); mOut.close()
-    f.mkdirs(P(s"$d1.old"))
-    require(f.rename(P(s"$d1/bucket=$victim"), P(s"$d1.old/bucket=$victim")))
-    assert(labelsOf(d1) == before,
-      "a mid-swap-absent bucket must be recovered, not read as forgotten labels")
-    assert(f.exists(P(s"$d1/bucket=$victim")) && !f.exists(P(s"$d1.old")),
-      "recovery must restore the bucket and clean the .old staging")
-    assert(!f.exists(P(s"$d1.tmp")), "staging (and its manifest) cleaned after recovery")
-
-    // window 2: crash between staging and the first rename — dir.tmp
-    // holds a complete staged write; it is DISCARDED (replay re-folds),
-    // never promoted, and the store is untouched
-    val d2 = freshDir()
-    LabelStore.fold(spark, d2, Seq((1L, 2L)).toDF("src", "dst"))
-    val want = labelsOf(d2)
-    Seq((99L, 1L)).toDF("node", "label")
-      .withColumn("bucket", pmod(hash(col("node")), lit(8)))
-      .write.partitionBy("bucket").parquet(s"$d2.tmp")
-    assert(labelsOf(d2) == want, "stale staging must never leak into reads")
-    assert(!f.exists(P(s"$d2.tmp")), "read must discard the stale staging")
-    LabelStore.fold(spark, d2, Seq((2L, 3L)).toDF("src", "dst"))
-    assert(labelsOf(d2) == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
-
-    // window 3: fold mid-swap with SOME buckets already swapped — the
-    // store is a valid old/new bucket mixture; folding onward converges
-    val d3 = freshDir()
-    LabelStore.fold(spark, d3,
-      Seq((1L, 2L), (10L, 11L)).toDF("src", "dst"))
-    // hand-plant a torn mixture: node 11 relabeled to 10's component min
-    // in its bucket, node 10's bucket left stale — monotone-valid
-    LabelStore.fold(spark, d3, Seq((11L, 12L)).toDF("src", "dst"))
-    assert(labelsOf(d3) == Map(1L -> 1L, 2L -> 1L, 10L -> 10L, 11L -> 10L, 12L -> 10L))
-  }
-
-  test("file-count drift trips needsCompact; compact restores ~1 file/bucket, reads unchanged") {
-    val dir = freshDir()
-    LabelStore.fold(spark, dir,
-      Seq.tabulate(64)(i => (i.toLong, (i + 1).toLong)).toDF("src", "dst"))
-    assert(!LabelStore.needsCompact(spark, dir, maxFiles = 4))
-    // At production scale a changed bucket's rewrite lands one file per
-    // shuffle partition holding its rows; at fixture scale AQE coalesces
-    // every rewrite to one file, so the drifted state is planted
-    // directly: extra files of monotone-valid rows (the same labels the
-    // bucket already holds — a torn commit leaves exactly these)
-    val bucket0 = spark.range(1).select(pmod(hash(lit(0L)), lit(8))).head().getInt(0)
-    (0 until 5).foreach { _ =>
-      Seq((0L, 0L)).toDF("node", "label")
-        .coalesce(1).write.mode("append").parquet(s"$dir/bucket=$bucket0")
-    }
-    assert(LabelStore.needsCompact(spark, dir, maxFiles = 4),
-      s"planted drift must trip the trigger, max=${LabelStore.maxFilesPerBucket(spark, dir)}")
-    val before = labelsOf(dir)
-    assert(LabelStore.maintain(spark, dir, maxFiles = 4))
-    assert(labelsOf(dir) == before, "compaction must not change the labeling")
-    assert(LabelStore.maxFilesPerBucket(spark, dir) <= 2,
-      s"compacted store still holds ${LabelStore.maxFilesPerBucket(spark, dir)} files in a bucket")
-    assert(!LabelStore.needsCompact(spark, dir, maxFiles = 4))
-    // folds keep working after compaction
-    LabelStore.fold(spark, dir, Seq((0L, 200L)).toDF("src", "dst"))
-    assert(labelsOf(dir)(200L) == 0L)
-  }
-
-  test("a compact-crash leftover .old: out-of-modulus buckets SKIPPED, not resurrected") {
-    // compact() swapped the new version in (its StoreSwap step 3) but
-    // crashed before deleting `.old`. A REAL leftover holds the complete
-    // pre-compact store — every node also lives in the live version
-    // (compact never drops nodes), possibly with STALE (larger) labels.
-    // recover must not lose any current label; since r15 the rule is
-    // manifest-gated — a manifest-less .old beside a live store is a
-    // superseded whole-swap leftover in its entirety (folds delete .old
-    // strictly before their staging dir, so every fold crash state
-    // still carries the manifest) and is dropped whole.
-    val f = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    def P(s: String) = new org.apache.hadoop.fs.Path(s)
-    val dir = freshDir()
-    LabelStore.fold(spark, dir, Seq((1L, 2L), (1L, 3L)).toDF("src", "dst"), nBuckets = 4)
-    val want = labelsOf(dir)
-    // the superseded pre-compact version: node 3 still carries its stale
-    // pre-merge label (3 >= the current 1 — monotone-valid), under an
-    // out-of-modulus bucket id (7) from before a shrinking reshard
-    Seq((3L, 3L)).toDF("node", "label")
-      .withColumn("bucket", lit(7))
-      .coalesce(1).write.partitionBy("bucket").parquet(s"$dir.old")
-    assert(labelsOf(dir) == want, "reads unchanged across the cleanup")
-    assert(!f.exists(P(s"$dir.old")), "the leftover .old must be cleaned")
-    assert(!f.exists(P(s"$dir/bucket=7")),
-      "an out-of-modulus .old bucket (7 >= modulus 4) is a reshard " +
-        "leftover — skipped, never renamed into the live store")
-    assert(labelsOf(dir) == want)
-  }
-
-  test("crashed GROWING reshard with a legitimately-empty live twin restores NOTHING") {
-    // the r14 presence-probe's blind spot (r14 ADVICE → r15): a reshard
-    // to a LARGER modulus whose new partitioning leaves some bucket
-    // with no nodes creates no dir for it; the crashed swap's leftover
-    // .old then holds an IN-modulus bucket id missing from live, which
-    // the probe read as "fold-displaced — restore", injecting stale
-    // old-modulus rows that only the min-fold absorbed. Manifest-gated
-    // recovery restores nothing here: no staging dir, no manifest, so
-    // the whole .old is a superseded version and dies.
-    val f = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    def P(s: String) = new org.apache.hadoop.fs.Path(s)
-    val dir = freshDir()
-    // live store: reshard to modulus 4 completed (StoreSwap step 3 done),
-    // with bucket=1 legitimately EMPTY — no node hashes there
-    Seq((1L, 1L), (2L, 1L)).toDF("node", "label")
-      .withColumn("bucket", lit(0))
-      .coalesce(1).write.partitionBy("bucket").parquet(dir)
-    graft.streaming.BucketMeta.write(spark, dir, 4)
-    val want = labelsOf(dir)
-    // the superseded pre-reshard version (modulus 2): bucket=1 is
-    // IN-modulus for the live sidecar (1 < 4) and missing from live —
-    // exactly the state the probe mis-restored; its node 2 row carries
-    // a STALE label under the OLD partitioning
-    Seq((2L, 2L)).toDF("node", "label")
-      .withColumn("bucket", lit(1))
-      .coalesce(1).write.partitionBy("bucket").parquet(s"$dir.old")
-    assert(labelsOf(dir) == want,
-      "no stale old-modulus rows may leak into reads — not even min-absorbable ones")
-    assert(!f.exists(P(s"$dir.old")), "superseded .old dropped whole")
-    assert(!f.exists(P(s"$dir/bucket=1")),
-      "the empty live twin stays empty: nothing was resurrected into it")
-  }
-
-  test("compact defaults to the recorded modulus; an explicit count reshards and re-pins it") {
+  test("maintain compacts the levels to each node's newest label; the modulus is fixed") {
     val dir = freshDir()
     LabelStore.fold(spark, dir,
       Seq.tabulate(32)(i => (i.toLong, (i + 100).toLong)).toDF("src", "dst"),
-      nBuckets = 16)
+      nBuckets = 16, batchId = 0L)
+    LabelStore.fold(spark, dir, Seq((0L, 101L), (2L, 103L)).toDF("src", "dst"),
+      nBuckets = 16, batchId = 1L)
     val before = labelsOf(dir)
-    // default compact must keep the fold-time 16-bucket partitioning
-    // (compacting under a different modulus breaks the changed-bucket
-    // delta detection folds key on)
-    LabelStore.compact(spark, dir)
-    assert(labelsOf(dir) == before)
-    LabelStore.fold(spark, dir, Seq((0L, 500L)).toDF("src", "dst"), nBuckets = 16)
-    assert(labelsOf(dir)(500L) == 0L)
-    // explicit count = deliberate reshard: the sidecar follows, so the
-    // old modulus is rejected and the new one required
-    LabelStore.compact(spark, dir, nBuckets = 4)
+    assert(before(101L) == 0L && before(1L) == 0L && before(103L) == 2L)
+    assert(!LabelStore.maintain(spark, dir, maxLevels = 2))
+    assert(LabelStore.maintain(spark, dir, maxLevels = 1))
+    assert(labelsOf(dir) == before, "compaction must not change the labeling")
+    assert(LabelStore.levels.read(spark, dir)._2.count() == before.size,
+      "one row per node after the compaction")
+    // folds and lookups keep the recorded 16-bucket modulus
     val e = intercept[IllegalArgumentException] {
-      LabelStore.fold(spark, dir, Seq((1L, 501L)).toDF("src", "dst"), nBuckets = 16)
+      LabelStore.fold(spark, dir, Seq((1L, 501L)).toDF("src", "dst"), batchId = 2L)
     }
     assert(e.getMessage.contains("nBuckets"))
-    LabelStore.fold(spark, dir, Seq((1L, 501L)).toDF("src", "dst"), nBuckets = 4)
-    assert(labelsOf(dir)(501L) == 1L)
+    LabelStore.fold(spark, dir, Seq((1L, 501L)).toDF("src", "dst"), nBuckets = 16, batchId = 2L)
+    assert(LabelStore.lookup(spark, dir, Seq(501L, 103L)).get.as[(Long, Long)].collect().toSet ==
+      Set(501L -> 0L, 103L -> 2L))
   }
 
   private def allNodes(p: org.apache.spark.sql.execution.SparkPlan):
@@ -339,5 +200,23 @@ class LabelStoreSpec extends SparkSpec {
       .as[(Long, Long)].collect().toSet == Set(3L -> 3L))
     // a never-written store has no labels to serve
     assert(LabelStore.lookup(spark, freshDir(), Seq(1L)).isEmpty)
+  }
+
+  test("a store in the pre-level layout is refused on every entry, and nothing is deleted") {
+    val dir = freshDir()
+    // the old layout: bucket dirs and the bucket-count file at the root
+    Seq((1L, 1L), (2L, 1L)).toDF("node", "label").write.parquet(s"$dir/bucket=0")
+    Files.write(java.nio.file.Paths.get(dir, "_graft_buckets"), "8".getBytes("UTF-8"))
+    def files = org.apache.commons.io.FileUtils.listFiles(new java.io.File(dir), null, true).size
+    val before = files
+    for (op <- Seq[() => Any](
+        () => LabelStore.read(spark, dir),
+        () => LabelStore.lookup(spark, dir, Seq(1L)),
+        () => LabelStore.fold(spark, dir, Seq((2L, 3L)).toDF("src", "dst")),
+        () => LabelStore.maintain(spark, dir))) {
+      val e = intercept[RuntimeException](op())
+      assert(e.getMessage.contains("rebuild it into a fresh dir"), e.getMessage)
+    }
+    assert(files == before)
   }
 }

@@ -70,7 +70,7 @@ class RecoverySpec extends SparkSpec {
     val store = Files.createTempDirectory("graft_swap_a").toString + "/store"
     writeVersion(store, "v1", 10)
     writeVersion(StoreSwap.tmpPath(store), "v2", 12)
-    val readable = StoreSwap.readablePath(spark, store)
+    val readable = StoreSwap.committedPath(spark, store)
     assert(readable.contains(store) && readTags(readable.get) == Set("v1"))
     StoreSwap.commit(spark, store)
     assert(readTags(store) == Set("v2") && spark.read.parquet(store).count() == 12)
@@ -84,7 +84,7 @@ class RecoverySpec extends SparkSpec {
     // serving path itself is gone
     writeVersion(StoreSwap.oldPath(store), "v1", 10)
     writeVersion(StoreSwap.tmpPath(store), "v2", 12)
-    val readable = StoreSwap.readablePath(spark, store)
+    val readable = StoreSwap.committedPath(spark, store)
     assert(readable.contains(StoreSwap.oldPath(store)),
       "mid-swap the .old preserved by step 2 must be the readable version")
     assert(readTags(readable.get) == Set("v1"))
@@ -97,7 +97,7 @@ class RecoverySpec extends SparkSpec {
     val store = Files.createTempDirectory("graft_swap_c").toString + "/store"
     writeVersion(store, "v2", 12)
     writeVersion(StoreSwap.oldPath(store), "v1", 10)
-    assert(StoreSwap.readablePath(spark, store).contains(store))
+    assert(StoreSwap.committedPath(spark, store).contains(store))
     StoreSwap.commit(spark, store) // recovery mode: no tmp
     assert(readTags(store) == Set("v2"))
     assert(!hfs.exists(hp(StoreSwap.oldPath(store))), "leftover .old cleaned")
@@ -335,39 +335,5 @@ class RecoverySpec extends SparkSpec {
     assert(readTags(store) == Set("v3"))
     assert(!hfs.exists(hp(StoreSwap.tmpPath(store))) &&
       !hfs.exists(hp(StoreSwap.oldPath(store))))
-  }
-
-  test("a label-store maintainer on StoreSwap survives a mid-swap crash: prior labels NOT discarded") {
-    // the failure mode the round-9 verdict called the engine's worst: a
-    // crash between delete and rename left a serving store absent, and a
-    // maintainer's bare exists() check silently restarted state from
-    // empty. Reproduce the crash state and run the readablePath
-    // bootstrap a StoreSwap maintainer uses. (StoreSwap now guards the
-    // consolidate maintainers — FactStore/VectorIndex; the streamed
-    // maintainers moved to finer-grained delta stores whose crash
-    // stories are pinned in LabelStoreSpec / UpsertStoreSpec.)
-    val labelsDir = Files.createTempDirectory("graft_swap_cc").toString + "/labels"
-    // a valid prior labeling (every CC component has >= 2 nodes — the
-    // star-edge contract of connectedComponentsIncremental)
-    Seq((1L, 1L), (2L, 1L), (3L, 3L), (5L, 3L)).toDF("node", "label")
-      .coalesce(1).write.parquet(StoreSwap.oldPath(labelsDir)) // crashed mid-swap
-    writeVersion(StoreSwap.tmpPath(labelsDir), "half-written", 1)
-    val existing = StoreSwap.readablePath(spark, labelsDir)
-      .map(p => spark.read.parquet(p))
-      .getOrElse(spark.range(0).select(col("id").as("node"), col("id").as("label")))
-    assert(existing.count() == 4,
-      "prior labeling must be recovered from .old, not restarted from empty")
-    // and folding the next batch from the recovered labeling keeps them
-    val edges = Seq((4L, 2L)).toDF("src", "dst")
-    val updated = graft.operators.GraphOps
-      .connectedComponentsIncremental(existing, edges)
-    updated.write.mode("overwrite").parquet(StoreSwap.tmpPath(labelsDir))
-    StoreSwap.commit(spark, labelsDir)
-    val labels = spark.read.parquet(labelsDir)
-      .as[(Long, Long)].collect().toMap
-    assert(labels.keySet == Set(1L, 2L, 3L, 4L, 5L), "all prior nodes retained")
-    assert(labels(4L) == labels(2L) && labels(2L) == labels(1L),
-      "new edge folded into the recovered component")
-    assert(labels(5L) == labels(3L), "untouched component survives the crash")
   }
 }

@@ -3,12 +3,13 @@ package graft
 import java.nio.file.Files
 
 import graft.streaming.UpsertStore
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
 
-/** The LSM-flavored streamed upsert store: folds are pure appends into
-  * the batch keys' buckets only, reads resolve latest-per-key and drop
-  * tombstones, replayed folds are idempotent, compaction preserves the
-  * read result.
+/** The streamed upsert store: each fold appends one level into the batch
+  * keys' buckets only, reads resolve latest-per-key and drop tombstones,
+  * replayed folds are ledger no-ops, compaction preserves the read
+  * result. The commit-point crash matrix is LevelStoreSpec's.
   */
 class UpsertStoreSpec extends SparkSpec {
   import spark.implicits._
@@ -16,10 +17,11 @@ class UpsertStoreSpec extends SparkSpec {
   private def freshDir(): String =
     Files.createTempDirectory("graft_upsertstore").toString + "/store"
 
+  /** Every payload file of the store (the commit row excluded). */
   private def fileSet(dir: String): Set[String] = {
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-    walk(new java.io.File(dir)).map(_.getPath)
+    walk(new java.io.File(UpsertStore.levels.dataDir(dir))).map(_.getPath)
       .filter(_.endsWith(".parquet")).toSet
   }
 
@@ -28,6 +30,9 @@ class UpsertStoreSpec extends SparkSpec {
   private def readMap(dir: String): Map[Long, String] =
     UpsertStore.read(spark, dir, keys).get
       .select("k", "v").as[(Long, String)].collect().toMap
+
+  private def bucketOf(k: Long, n: Int = UpsertStore.DefaultBuckets): Int =
+    spark.range(1).select(pmod(hash(lit(k)), lit(n))).head().getInt(0)
 
   test("fold appends only into the batch keys' buckets; existing files untouched") {
     val dir = freshDir()
@@ -38,9 +43,7 @@ class UpsertStoreSpec extends SparkSpec {
     val after = fileSet(dir)
     assert(before.subsetOf(after), "a fold must never rewrite or remove existing files")
     val newFiles = after -- before
-    val changedBucket = spark.range(1)
-      .select(pmod(hash(lit(3L)), lit(UpsertStore.DefaultBuckets))).head().getInt(0)
-    assert(newFiles.nonEmpty && newFiles.forall(_.contains(s"bucket=$changedBucket")),
+    assert(newFiles.nonEmpty && newFiles.forall(_.contains(s"bucket=${bucketOf(3L)}/")),
       s"new files must land only in the changed key's bucket, got $newFiles")
     assert(readMap(dir)(3L) == "v1-3" && readMap(dir)(4L) == "v0-4")
   }
@@ -62,9 +65,13 @@ class UpsertStoreSpec extends SparkSpec {
     UpsertStore.fold(spark, dir, Seq((1L, "a"), (2L, "b")).toDF("k", "v"), keys, seq = 0)
     val batch = Seq((2L, "b2")).toDF("k", "v")
     UpsertStore.fold(spark, dir, batch, keys, seq = 1)
+    val files = fileSet(dir)
     UpsertStore.fold(spark, dir, batch, keys, seq = 1) // the retry
-    val rows = UpsertStore.read(spark, dir, keys).get
-    assert(rows.count() == 2, "duplicate (key, seq) rows must collapse on read")
+    assert(fileSet(dir) == files, "a replay of the last folded seq writes nothing")
+    assert(readMap(dir) == Map(1L -> "a", 2L -> "b2"))
+    val e = intercept[IllegalStateException](
+      UpsertStore.fold(spark, dir, Seq((1L, "a0")).toDF("k", "v"), keys, seq = 0))
+    assert(e.getMessage.contains("out-of-order"), e.getMessage)
     assert(readMap(dir) == Map(1L -> "a", 2L -> "b2"))
   }
 
@@ -78,10 +85,9 @@ class UpsertStoreSpec extends SparkSpec {
       Seq((5L, null.asInstanceOf[String], true)).toDF("k", "v", "del"),
       keys, seq = 2, deletedCol = Some("del"))
     val beforeCompact = readMap(dir)
-    UpsertStore.compact(spark, dir, keys)
+    assert(UpsertStore.maintain(spark, dir, keys, maxLevels = 1))
     assert(readMap(dir) == beforeCompact, "compaction must not change the read result")
-    val raw = spark.read.parquet(dir)
-    assert(raw.count() == beforeCompact.size,
+    assert(UpsertStore.levels.read(spark, dir)._2.count() == beforeCompact.size,
       "after compaction the store holds exactly the live rows")
     // a post-compaction fold still supersedes compacted versions
     UpsertStore.fold(spark, dir, Seq((0L, "v3-0")).toDF("k", "v"), keys, seq = 3)
@@ -104,11 +110,16 @@ class UpsertStoreSpec extends SparkSpec {
   test("torn fold (prefix of batch files visible) leaves prior versions readable") {
     val dir = freshDir()
     UpsertStore.fold(spark, dir, Seq((1L, "a"), (2L, "b")).toDF("k", "v"), keys, seq = 0)
-    // simulate the crash state: only PART of batch 1 landed — key 1's
-    // new version is on disk, key 2's never made it
-    UpsertStore.fold(spark, dir, Seq((1L, "a1")).toDF("k", "v"), keys, seq = 1)
-    assert(readMap(dir) == Map(1L -> "a1", 2L -> "b"),
-      "reads see every fully-landed version; nothing is ever lost mid-fold")
+    // the crash state: PART of batch 1's level landed — key 1's new
+    // version is on disk, key 2's never made it — and the commit did not
+    UpsertStore.levels.writeLevel(Seq((1L, "a1", false)).toDF("k", "v", "_deleted")
+      .withColumn("bucket", pmod(hash(col("k")), lit(UpsertStore.DefaultBuckets))), dir, 1)
+    assert(readMap(dir) == Map(1L -> "a", 2L -> "b"),
+      "an uncommitted level is invisible; nothing prior is ever lost mid-fold")
+    // the retry prunes the torn level and lands the whole batch once
+    UpsertStore.fold(spark, dir, Seq((1L, "a1"), (2L, "b1")).toDF("k", "v"), keys, seq = 1)
+    assert(readMap(dir) == Map(1L -> "a1", 2L -> "b1"))
+    assert(UpsertStore.levels.read(spark, dir)._2.count() == 4)
   }
 
   private def allNodes(p: org.apache.spark.sql.execution.SparkPlan):
@@ -132,19 +143,17 @@ class UpsertStoreSpec extends SparkSpec {
       .where($"k".isin(3L, 4L)).as[(Long, String)].collect().toSet
     assert(looked.as[(Long, String)].collect().toSet == expect)
     assert(expect.contains((3L -> "v1-3")))
-    // the scan reads ONLY the looked-up keys' bucket partitions
-    val wanted = spark.range(1).select(
-      pmod(hash(lit(3L)), lit(UpsertStore.DefaultBuckets)),
-      pmod(hash(lit(4L)), lit(UpsertStore.DefaultBuckets)))
-      .head()
-    val nWanted = Set(wanted.getInt(0), wanted.getInt(1)).size
+    // the scan reads ONLY the looked-up keys' bucket partitions: one
+    // (bucket, seq) partition per live level holding the bucket
+    val wanted = Set(bucketOf(3L), bucketOf(4L))
     val scans = allNodes(looked.queryExecution.executedPlan).collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
     }
     assert(scans.nonEmpty, "no file scan in the lookup plan")
-    val scanned = scans.map(_.selectedPartitions.partitionCount).max
-    assert(scanned == nWanted,
-      s"lookup read $scanned of ${UpsertStore.DefaultBuckets} buckets; wanted $nWanted")
+    val buckets = scans.flatMap(_.selectedPartitions.filePartitionIterator
+      .map(_.values.getInt(0))).toSet
+    assert(buckets == wanted,
+      s"lookup read buckets $buckets of ${UpsertStore.DefaultBuckets}; wanted $wanted")
   }
 
   test("lookup casts literals to the store's key types (Int probe for a Long key)") {
@@ -158,10 +167,9 @@ class UpsertStoreSpec extends SparkSpec {
     assert(got == Map(5L -> "v-5"))
   }
 
-  test("lookup reads the bucket modulus from the store's sidecar, not the caller") {
+  test("lookup reads the bucket modulus from the store's commit row, not the caller") {
     // a store folded at 16 buckets must lookup correctly with NO
-    // caller-supplied count (the sidecar self-describes); a mismatched
-    // fold is rejected outright (review finding, round 11)
+    // caller-supplied count; a mismatched fold is rejected outright
     val dir = freshDir()
     UpsertStore.fold(spark, dir,
       (0L until 64L).map(i => (i, s"v-$i")).toDF("k", "v"), keys, seq = 0,
@@ -169,112 +177,114 @@ class UpsertStoreSpec extends SparkSpec {
     val got = UpsertStore.lookup(spark, dir, keys, Seq(Seq(7L)))
       .get.as[(Long, String)].collect().toMap
     assert(got == Map(7L -> "v-7"),
-      s"sidecar-derived modulus must find the key, got $got")
+      s"the recorded modulus must find the key, got $got")
     val e = intercept[IllegalArgumentException] {
       UpsertStore.fold(spark, dir, Seq((1L, "x")).toDF("k", "v"), keys,
         seq = 1, nBuckets = 8)
     }
     assert(e.getMessage.contains("nBuckets"))
-    // compaction preserves the sidecar across the whole-dir swap
-    UpsertStore.compact(spark, dir, keys)
-    assert(UpsertStore.lookup(spark, dir, keys, Seq(Seq(7L)))
-      .get.as[(Long, String)].collect().toMap == Map(7L -> "v-7"))
+    // compaction keeps the modulus
+    UpsertStore.fold(spark, dir, Seq((1L, "x")).toDF("k", "v"), keys, seq = 1, nBuckets = 16)
+    assert(UpsertStore.maintain(spark, dir, keys, maxLevels = 1))
+    assert(UpsertStore.lookup(spark, dir, keys, Seq(Seq(7L), Seq(1L)))
+      .get.as[(Long, String)].collect().toMap == Map(7L -> "v-7", 1L -> "x"))
+  }
+
+  test("a fold whose columns differ from the store's is refused") {
+    val dir = freshDir()
+    UpsertStore.fold(spark, dir, Seq((1L, "a")).toDF("k", "v"), keys, seq = 0)
+    for (bad <- Seq(Seq((2L, 1)).toDF("k", "v"), Seq((2L, "b", 1)).toDF("k", "v", "w"))) {
+      val e = intercept[IllegalArgumentException](
+        UpsertStore.fold(spark, dir, bad, keys, seq = 1))
+      assert(e.getMessage.contains("must carry"), e.getMessage)
+    }
+    // the same columns in another order are fine
+    UpsertStore.fold(spark, dir, Seq(("b", 2L)).toDF("v", "k"), keys, seq = 1)
+    assert(readMap(dir) == Map(1L -> "a", 2L -> "b"))
   }
 
   test("files accumulate per fold until the trigger fires; maintain compacts to ~1 file/bucket") {
     val dir = freshDir()
-    val maxFiles = 4
+    val maxLevels = 4
     var reads = Vector.empty[Map[Long, String]]
     var fired = 0
     (0 until 6).foreach { i =>
       UpsertStore.fold(spark, dir,
         (0L until 16L).map(k => (k, s"v$i-$k")).toDF("k", "v"), keys, seq = i.toLong)
-      if (UpsertStore.maintain(spark, dir, keys, maxFiles)) fired += 1
+      if (UpsertStore.maintain(spark, dir, keys, maxLevels)) fired += 1
       reads :+= readMap(dir)
     }
-    assert(fired >= 1, "six 16-key folds at maxFiles=4 must trip the trigger at least once")
+    assert(fired == 1, s"six folds at maxLevels=4 trip the trigger once, got $fired")
     // every read along the way saw the latest fold's values
     reads.zipWithIndex.foreach { case (m, i) =>
       assert(m == (0L until 16L).map(k => k -> s"v$i-$k").toMap,
         s"read after fold $i diverged (compaction ran: $fired)")
     }
-    // after a final compact every bucket is ~1 file
-    UpsertStore.compact(spark, dir, keys)
-    assert(UpsertStore.maxFilesPerBucket(spark, dir) <= 2,
-      s"compacted bucket still holds ${UpsertStore.maxFilesPerBucket(spark, dir)} files")
-    assert(!UpsertStore.needsCompact(spark, dir, maxFiles))
+    // after a final compaction every bucket holds ~1 file
+    assert(UpsertStore.maintain(spark, dir, keys, maxLevels = 1))
+    val seq = UpsertStore.levels.committed(spark, dir).get.getAs[Long]("max_seq")
+    val perBucket = fileSet(dir).filter(_.contains(s"/seq=$seq/"))
+      .groupBy(_.split("/").find(_.startsWith("bucket=")).get).values.map(_.size)
+    assert(perBucket.nonEmpty && perBucket.max <= 2,
+      s"compacted buckets hold $perBucket files")
+    assert(!UpsertStore.maintain(spark, dir, keys, maxLevels = 1), "one live level: not due")
   }
 
   test("compact crash windows: store (or its .old) is always complete; fold/read recover") {
-    import graft.model.StoreSwap
-    val f = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    def P(s: String) = new org.apache.hadoop.fs.Path(s)
+    val dir = freshDir()
+    UpsertStore.fold(spark, dir, Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"), keys, seq = 0)
+    UpsertStore.fold(spark, dir,
+      Seq((2L, "b2", false), (3L, null.asInstanceOf[String], true)).toDF("k", "v", "del"),
+      keys, seq = 1, deletedCol = Some("del"))
+    val before = readMap(dir)
+    val stats = new java.io.File(s"$dir/stats")
+    def sibling(suffix: String) = new java.io.File(stats.getPath + suffix)
+    val snap = new java.io.File(Scratch.dir("upsert_snap"), "stats")
+    FileUtils.copyDirectory(stats, snap)
 
-    // window 1: compact staged dir.tmp but crashed BEFORE the swap —
-    // reads ignore the staging; later folds append; a later compact
-    // discards the stale tmp rather than promoting it over newer folds
-    val d1 = freshDir()
-    UpsertStore.fold(spark, d1, Seq((1L, "a"), (2L, "b")).toDF("k", "v"), keys, seq = 0)
-    spark.read.parquet(d1).write.parquet(StoreSwap.tmpPath(d1)) // the stale staging
-    UpsertStore.fold(spark, d1, Seq((1L, "a1")).toDF("k", "v"), keys, seq = 1)
-    assert(readMap(d1) == Map(1L -> "a1", 2L -> "b"))
-    UpsertStore.compact(spark, d1, keys)
-    assert(readMap(d1) == Map(1L -> "a1", 2L -> "b"),
-      "a stale pre-fold staging must never be promoted over newer folds")
+    // window 1: the compacted level landed, its commit did not
+    assert(UpsertStore.maintain(spark, dir, keys, maxLevels = 1))
+    FileUtils.deleteDirectory(stats)
+    FileUtils.copyDirectory(snap, stats)
+    assert(readMap(dir) == before, "an uncommitted compaction is invisible")
+    assert(UpsertStore.maintain(spark, dir, keys, maxLevels = 1), "the retry compacts again")
+    assert(readMap(dir) == before)
 
-    // window 2: crash BETWEEN the two renames — store absent, .old holds
-    // the current version, tmp holds the staged compacted version.
-    // read() resolves through .old; fold() first rolls the swap back, so
-    // nothing under the appended batch can be deleted by later recovery.
-    val d2 = freshDir()
-    UpsertStore.fold(spark, d2, Seq((1L, "a"), (2L, "b")).toDF("k", "v"), keys, seq = 0)
-    spark.read.parquet(d2).write.parquet(StoreSwap.tmpPath(d2))
-    require(f.rename(P(d2), P(StoreSwap.oldPath(d2)))) // crash point
-    assert(readMap(d2) == Map(1L -> "a", 2L -> "b"),
-      "mid-swap absence must read as the preserved .old, not as empty")
-    UpsertStore.fold(spark, d2, Seq((3L, "c")).toDF("k", "v"), keys, seq = 1)
-    assert(!f.exists(P(StoreSwap.oldPath(d2))) && !f.exists(P(StoreSwap.tmpPath(d2))),
-      "fold must finish the rollback before appending")
-    assert(readMap(d2) == Map(1L -> "a", 2L -> "b", 3L -> "c"))
+    // window 2: the compaction's commit swap died between its renames —
+    // the new row at stats.tmp, the old one at stats.old, stats absent
+    FileUtils.copyDirectory(stats, sibling(".tmp"))
+    FileUtils.deleteDirectory(stats)
+    FileUtils.copyDirectory(snap, sibling(".old"))
+    assert(readMap(dir) == before, "readers resolve the preserved .old row")
+    UpsertStore.fold(spark, dir, Seq((4L, "d")).toDF("k", "v"), keys, seq = 2)
+    assert(!sibling(".tmp").exists() && !sibling(".old").exists(),
+      "the fold finishes the swap before appending")
+    assert(readMap(dir) == before + (4L -> "d"))
 
-    // window 3: crash AFTER the swap, before .old cleanup — the next
-    // compact (or StoreSwap.commit) cleans it; reads already see dir
-    val d3 = freshDir()
-    UpsertStore.fold(spark, d3, Seq((1L, "a")).toDF("k", "v"), keys, seq = 0)
-    spark.read.parquet(d3).write.parquet(StoreSwap.oldPath(d3)) // leftover .old
-    assert(readMap(d3) == Map(1L -> "a"))
-    UpsertStore.compact(spark, d3, keys)
-    assert(!f.exists(P(StoreSwap.oldPath(d3))))
-    assert(readMap(d3) == Map(1L -> "a"))
+    // window 3: a swap that finished but left its .old behind
+    FileUtils.copyDirectory(snap, sibling(".old"))
+    assert(readMap(dir) == before + (4L -> "d"))
+    assert(UpsertStore.maintain(spark, dir, keys, maxLevels = 1))
+    assert(!sibling(".old").exists(), "the next writer entry cleans the leftover")
+    assert(readMap(dir) == before + (4L -> "d"))
   }
 
-  test("a torn (empty/garbage) bucket-count sidecar reads as absent and self-heals") {
-    // a crash mid-sidecar-write used to leave an empty _graft_buckets
-    // that made every later fold/lookup/compact throw
-    // NumberFormatException — the one state the store couldn't recover
-    // from. Now the sidecar is written temp-then-rename, and an
-    // unparsable one (from an old store) is treated as absent.
-    val f = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    def P(s: String) = new org.apache.hadoop.fs.Path(s)
+  test("a store in the pre-level layout is refused on every entry, and nothing is deleted") {
     val dir = freshDir()
-    UpsertStore.fold(spark, dir,
-      (0L until 16L).map(i => (i, s"v-$i")).toDF("k", "v"), keys, seq = 0)
-    // plant the torn state: truncate the sidecar to zero bytes
-    f.create(P(s"$dir/_graft_buckets"), true).close()
-    // sidecar-less lookup degrades to the explicit-count path with a
-    // actionable error, never a bare parse exception
-    val e = intercept[RuntimeException] {
-      UpsertStore.lookup(spark, dir, keys, Seq(Seq(5L)))
+    // the old layout: bucket dirs and the bucket-count file at the root
+    Seq((1L, "a", false, 0L)).toDF("k", "v", "_deleted", "_seq")
+      .write.parquet(s"$dir/bucket=${bucketOf(1L)}")
+    Files.write(java.nio.file.Paths.get(dir, "_graft_buckets"), "8".getBytes("UTF-8"))
+    def files = FileUtils.listFiles(new java.io.File(dir), null, true).size
+    val before = files
+    for (op <- Seq[() => Any](
+        () => UpsertStore.read(spark, dir, keys),
+        () => UpsertStore.lookup(spark, dir, keys, Seq(Seq(1L))),
+        () => UpsertStore.fold(spark, dir, Seq((2L, "b")).toDF("k", "v"), keys, seq = 1),
+        () => UpsertStore.maintain(spark, dir, keys))) {
+      val e = intercept[RuntimeException](op())
+      assert(e.getMessage.contains("rebuild it into a fresh dir"), e.getMessage)
     }
-    assert(e.getMessage.contains("nBuckets"), s"wanted the fallback hint, got: $e")
-    assert(UpsertStore.lookup(spark, dir, keys, Seq(Seq(5L)),
-      nBuckets = UpsertStore.DefaultBuckets).get
-      .as[(Long, String)].collect().toMap == Map(5L -> "v-5"))
-    // reads and compaction never needed the sidecar
-    assert(readMap(dir).size == 16)
-    // the next fold re-records the modulus; sidecar-less lookup works again
-    UpsertStore.fold(spark, dir, Seq((5L, "v1-5")).toDF("k", "v"), keys, seq = 1)
-    assert(UpsertStore.lookup(spark, dir, keys, Seq(Seq(5L))).get
-      .as[(Long, String)].collect().toMap == Map(5L -> "v1-5"))
+    assert(files == before)
   }
 }
