@@ -37,8 +37,9 @@ import org.apache.spark.sql.functions.col
   *
   * // build + serve a persistent ANN index
   * Engine.index.buildIvfPq(spark, embeddings, "/indexes/corpus")
+  * // probes: (vec_id, embedding); the rerank reads the indexed vectors
   * val hits = Engine.index.searchIvfPq(spark, "/indexes/corpus",
-  *   embeddings, probes, k = 10, nProbe = 8, rerank = 8)
+  *   probes, k = 10, nProbe = 8, rerank = 8)
   * }}}
   */
 object Engine {

@@ -199,27 +199,52 @@ object LexIndex {
   def maintain(spark: SparkSession, dir: String, maxLevels: Int = 16): Boolean =
     levels.maintain(spark, dir, maxLevels)
 
-  /** The committed corpus constants (n_docs, avgdl) and the postings of
-    * `terms`: only their buckets' partitions are read, gated to the
-    * committed levels (both filters are partition pruning).
+  /** A query term's BM25 inputs beside its postings: document frequency,
+    * the corpus constants and the ids of the batch queries that hold it.
+    */
+  private case class TermStats(df: Long, n_docs: Long, avgdl: Double, qids: Seq[Int])
+
+  /** The committed postings of `queries`' terms — only their buckets'
+    * partitions are read, gated to the committed levels (both filters
+    * are partition pruning) — each row with its term's [[TermStats]] in
+    * column `ts`.
+    *
+    * df comes from the same pruned scan in ONE job: each task counts its
+    * rows per term and the driver sums the counts (|terms| numbers per
+    * task), so no task holds a term's whole postings list and no df
+    * aggregate is shuffled and broadcast back. The stats then ride the
+    * rows as a map literal looked up by term. A map is not a primitive,
+    * so generated code references it instead of inlining its values:
+    * one compiled class serves every fold's n_docs and avgdl, where
+    * primitive literals would compile new classes after each append.
     */
   private def termPostings(spark: SparkSession, dir: String,
-      terms: Seq[String]): (Long, Double, DataFrame) = {
+      queries: Seq[(Int, Seq[String])]): DataFrame = {
+    import spark.implicits._
+    val terms = queries.flatMap(_._2).distinct
     val (stats, postings) = levels.read(spark, dir)
     // the terms' buckets via the same expression classes the build used
     // ([[termBuckets]]) — same hashing, no per-read probe job
     val buckets = termBuckets(terms, stats.getAs[Int]("n_buckets").toLong)
-    (stats.getAs[Long]("n_docs"), stats.getAs[Double]("avgdl"),
-      postings.where(col("bucket").isin(buckets: _*) && col("t").isin(terms: _*)))
+    val tfq = postings.where(col("bucket").isin(buckets: _*) && col("t").isin(terms: _*))
+    val df = tfq.select("t").as[String].mapPartitions { ts =>
+      val n = scala.collection.mutable.HashMap.empty[String, Long]
+      ts.foreach(t => n(t) = n.getOrElse(t, 0L) + 1L)
+      n.iterator
+    }.collect().groupMapReduce(_._1)(_._2)(_ + _)
+    val byTerm = terms.map(t => t -> TermStats(df.getOrElse(t, 0L),
+      stats.getAs[Long]("n_docs"), stats.getAs[Double]("avgdl"),
+      queries.collect { case (qid, ts) if ts.contains(t) => qid })).toMap
+    tfq.withColumn("ts", element_at(typedLit(byTerm), col("t")))
   }
 
-  /** One posting's BM25 (k1=1.2, b=0.75) contribution, given its term's
-    * document frequency `df`.
+  /** One posting's BM25 (k1=1.2, b=0.75) contribution from its term's
+    * stats column `ts`.
     */
-  private def contrib(nDocs: Long, avgdl: Double) =
-    log((lit(nDocs) - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1)) *
+  private val contrib =
+    log((col("ts.n_docs") - col("ts.df") + lit(0.5)) / (col("ts.df") + lit(0.5)) + lit(1)) *
       col("tf") * lit(2.2) /
-      (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / lit(avgdl)))
+      (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("ts.avgdl")))
 
   /** BM25 (k1=1.2, b=0.75) scores of the indexed corpus against
     * `qTerms`: (doc_id, bm25 rounded to 4) — the [[TextOps.bm25Scores]]
@@ -231,16 +256,14 @@ object LexIndex {
   def bm25Scores(spark: SparkSession, dir: String,
       qTerms: Seq[String]): DataFrame = {
     require(qTerms.nonEmpty, "need at least one query term")
-    val (nDocs, avgdl, tfq) = termPostings(spark, dir, qTerms)
-    val dfreq = tfq.groupBy("t").agg(count(lit(1)).as("df"))
-    tfq.join(broadcast(dfreq), "t")
-      .withColumn("contrib", contrib(nDocs, avgdl))
-      .groupBy("doc_id").agg(round(sum("contrib"), 4).as("bm25"))
-      .select(col("doc_id"), col("bm25"))
+    termPostings(spark, dir, Seq(0 -> qTerms))
+      .groupBy("doc_id").agg(round(sum(contrib), 4).as("bm25"))
   }
 
-  /** Indexed BM25 top-k: (rank, doc_id, bm25) — byte-identical to the
-    * direct [[TextOps.bm25Scores]] → [[TextOps.bm25Rank]] path.
+  /** Indexed BM25 top-k: (rank, doc_id, bm25) in rank order —
+    * byte-identical to the direct [[TextOps.bm25Scores]] →
+    * [[TextOps.bm25Rank]] path. Four jobs: the df count, the per-doc
+    * shuffle, the top-k shuffle and the result.
     */
   def bm25TopK(spark: SparkSession, dir: String, qTerms: Seq[String],
       k: Int = 10): DataFrame =
@@ -250,13 +273,15 @@ object LexIndex {
     * the production serving shape (a search tier evaluates a request
     * batch, not one query at a time): the postings read covers the
     * UNION of all queries' terms' buckets once, each posting row fans
-    * out to the queries sharing its term through a broadcast
-    * (qid, term) join, document frequency is computed once per term
-    * (query-independent), and per-query top-k reduces through the
-    * map-side TopKAgg heap keyed by qid — ≤ k rows per query per task
-    * reach the shuffle, never a per-query corpus pass.
+    * out to the queries sharing its term, document frequency is
+    * computed once per term (query-independent), and per-query top-k
+    * reduces through the map-side TopKAgg heap keyed by qid — ≤ k rows
+    * per query per task reach the shuffle, never a per-query corpus
+    * pass.
     *
-    * Output (qid, rank, doc_id, bm25); ranks on the ROUNDED score with
+    * Output (qid, rank, doc_id, bm25) in (qid, rank) order, sorted
+    * locally in one partition from the heaps' ranked output (≤ queries·k
+    * rows, no range-partitioned sort); ranks on the ROUNDED score with
     * doc_id tie-break — each query's block is byte-identical to running
     * [[bm25TopK]] with its terms alone (LexIndexSpec pins it), so
     * batching is pure amortization: B queries cost one pruned scan of
@@ -273,34 +298,27 @@ object LexIndex {
       .select(col("key").as("qid"), posexplode(col("top.items")).as(Seq("pos", "e")))
       .select(col("qid"), (col("pos") + 1).as("rank"), col("e.id").as("doc_id"),
         col("e.value").as("bm25"))
-      .orderBy("qid", "rank")
+      .coalesce(1)
+      .sortWithinPartitions("qid", "rank")
   }
 
   /** The scores-level batch serving relation [[bm25TopKBatch]] ranks:
     * (qid, doc_id, bm25 rounded to 4) for every indexed doc matching any
     * of the query's terms — one partition-pruned postings scan for the
     * UNION of all queries' terms' buckets, df once per term, per-posting
-    * fan-out to the queries sharing its term through a broadcast
-    * (qid, t) join. The hybrid batch serving tier consumes this directly
-    * (it fuses DEPTH-ranked branch lists, not top-k blocks).
+    * fan-out to the queries holding its term. The hybrid batch serving
+    * tier consumes this directly (it fuses DEPTH-ranked branch lists,
+    * not top-k blocks).
     */
   def bm25ScoresBatch(spark: SparkSession, dir: String,
       queries: Seq[(Int, Seq[String])]): DataFrame = {
-    import spark.implicits._
     require(queries.nonEmpty && queries.forall(_._2.nonEmpty),
       "need at least one query, each with at least one term")
     require(queries.map(_._1).distinct.size == queries.size,
       "query qids must be unique — duplicates would silently merge two " +
         "queries' term sets into one garbage score block")
-    val (nDocs, avgdl, tfq) = termPostings(spark, dir, queries.flatMap(_._2).distinct)
-    // df once per term — query-independent, so queries sharing a term
-    // share its posting aggregate
-    val dfreq = tfq.groupBy("t").agg(count(lit(1)).as("df"))
-    val qdf = queries.flatMap { case (qid, ts) => ts.distinct.map(t => (qid, t)) }
-      .toDF("qid", "t")
-    tfq.join(broadcast(dfreq), "t")
-      .join(broadcast(qdf), "t") // fan out to the queries wanting this term
-      .withColumn("contrib", contrib(nDocs, avgdl))
-      .groupBy("qid", "doc_id").agg(round(sum("contrib"), 4).as("bm25"))
+    termPostings(spark, dir, queries)
+      .withColumn("qid", explode(col("ts.qids"))) // the queries wanting this term
+      .groupBy("qid", "doc_id").agg(round(sum(contrib), 4).as("bm25"))
   }
 }

@@ -394,7 +394,9 @@ object TextOps {
     * heap — each task ships at most k rows, no single-partition window
     * over every matching document. Output: (rank, doc_id, bm25), rank on
     * (bm25 DESC, doc_id ASC) over the ROUNDED scores — the cross-engine
-    * ranking contract.
+    * ranking contract. The heap's one group explodes in rank order in
+    * one partition, so the output is already in rank order: a trailing
+    * sort would only add its range-sampling job and shuffle.
     */
   def bm25Rank(scores: DataFrame, k: Int): DataFrame = {
     val sess = scores.sparkSession
@@ -406,7 +408,6 @@ object TextOps {
       .select(posexplode(col("top.items")).as(Seq("pos", "e")))
       .select((col("pos") + 1).as("rank"), col("e.id").as("doc_id"),
         col("e.value").as("bm25"))
-      .orderBy("rank")
   }
 
   /** Shared DuckDB oracle for text_bm25_topk AND text_bm25_indexed —

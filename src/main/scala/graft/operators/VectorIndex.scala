@@ -29,9 +29,15 @@ import org.apache.spark.sql.types._
   * Layout under `dir` — a [[graft.model.LevelStore]] partitioned by
   * cell (commit, crash story, compaction, its grace window and the
   * old-format stance live there):
-  *   - `codes/cell=<k>/seq=<n>/` — (c, codes), level n;
+  *   - `codes/cell=<k>/seq=<n>/` — (c, codes, embedding), level n: the
+  *     PQ codes and, beside them, the row's raw embedding as appended
+  *     (not the unit vector), so a search's exact rerank reads the
+  *     probed cells only and never the corpus. A row costs m + 4·dims
+  *     bytes before compression instead of m;
   *   - `codebooks/` — (kind, sub, idx, vec), written once by the build;
-  *   - `meta/` — the commit row: just the level window.
+  *   - `meta/` — the commit row: `dims` and the level window. An index
+  *     written before the codes carried their vectors has no `dims` and
+  *     fails loudly on every entry (rebuild it into a fresh dir).
   *
   * Search reads the pruned codes table and runs the same
   * [[VectorOps.ivfPqSearch]] the in-query `ann_ivfpq` form uses — one
@@ -41,7 +47,9 @@ import org.apache.spark.sql.types._
 object VectorIndex {
 
   val levels = new graft.model.LevelStore("codes", "meta", Some("cell"),
-    new StructType(), _ => new StructType().add("c", LongType).add("codes", BinaryType),
+    new StructType().add("dims", IntegerType),
+    _ => new StructType().add("c", LongType).add("codes", BinaryType)
+      .add("embedding", ArrayType(FloatType)),
     "vector index")
 
   private def booksDir(dir: String) = dir + "/codebooks"
@@ -97,7 +105,7 @@ object VectorIndex {
         .toDF("kind", "sub", "idx", "vec")
         .repartition(1) // broadcast-sized side table: one file
         .write.mode(SaveMode.Overwrite).parquet(booksDir(dir))
-      Nil
+      Seq(dims)
     }
   }
 
@@ -191,12 +199,12 @@ object VectorIndex {
     */
   def appendIvfPq(spark: SparkSession, newEmb: DataFrame, dir: String,
       batchId: Long = -1L): Unit =
-    levels.append(spark, dir, batchId) { (_, seq) =>
+    levels.append(spark, dir, batchId) { (prev, seq) =>
       val (coarse, books) = readCodebooks(spark, dir)
       val unitEmb = VectorOps.withUnit(newEmb, "embedding", "unit")
       levels.writeLevel(
         VectorOps.ivfPqEncode(VectorOps.ivfPqAssign(spark, unitEmb, coarse), books), dir, seq)
-      Nil
+      Seq(prev.getAs[Int]("dims"))
     }
 
   /** Compact the levels into one once more than `maxLevels` are live
@@ -215,20 +223,31 @@ object VectorIndex {
     * (the documented serving-session setting) gets the fully
     * driver-free form instead, where the broadcast candidate join on
     * `cell` plants a dynamicpruning subquery on the partition column.
-    * VectorIndexSpec pins BOTH paths' pruning. `emb` supplies raw
-    * vectors for the exact rerank of the top candidates only.
+    * VectorIndexSpec pins BOTH paths' pruning.
+    *
+    * The exact rerank of the top candidates uses the vectors as they
+    * were appended, read from the probed cells' rows: an id appended
+    * twice is two candidates with their own vectors. `probes` supplies
+    * only the query vectors (vec_id, embedding); a probe need not be
+    * indexed, and an indexed probe never returns itself.
     *
     * Defaults sit at the measured curve knees (nProbe 8, rerank 12 —
     * the documented stale-codebook-append stance for the indexed form);
     * both are probe/serving-side knobs with zero corpus-side cost
     * beyond the nProbe/nCells scan fraction.
     */
-  def searchIvfPq(spark: SparkSession, dir: String, emb: DataFrame,
-      probes: DataFrame, k: Int, nProbe: Int = 8, rerank: Int = 12,
-      probeMargin: Double = 0.0): DataFrame = {
+  def searchIvfPq(spark: SparkSession, dir: String, probes: DataFrame, k: Int,
+      nProbe: Int = 8, rerank: Int = 12, probeMargin: Double = 0.0): DataFrame = {
     val (coarse, books) = readCodebooks(spark, dir)
     val (_, codes) = levels.read(spark, dir)
-    VectorOps.ivfPqSearch(spark, codes, emb,
-      probes, coarse, books, k, nProbe, rerank, probeMargin)
+    VectorOps.ivfPqSearch(spark, codes, probes, coarse, books, k, nProbe, rerank,
+      probeMargin)
   }
+
+  /** The five-argument form for existing callers: `emb` is ignored, the
+    * rerank reads the indexed vectors.
+    */
+  @deprecated("the rerank reads the indexed vectors; drop `emb`", "0.1.0")
+  def searchIvfPq(spark: SparkSession, dir: String, emb: DataFrame,
+      probes: DataFrame, k: Int): DataFrame = searchIvfPq(spark, dir, probes, k)
 }

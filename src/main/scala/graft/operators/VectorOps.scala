@@ -172,7 +172,7 @@ object VectorOps {
       vecDir: String, emb: DataFrame, qTerms: Seq[String], probeId: Long,
       depth: Int = 50, k: Int = 10, rrfK: Int = 60,
       nProbe: Int = 8, rerank: Int = 12): DataFrame = {
-    val sem = VectorIndex.searchIvfPq(spark, vecDir, emb,
+    val sem = VectorIndex.searchIvfPq(spark, vecDir,
         probes = emb.where(col("vec_id") === probeId),
         k = depth, nProbe = nProbe, rerank = rerank)
       .select(col("neighbor_id").as("doc_id"), col("cos"))
@@ -228,7 +228,7 @@ object VectorOps {
     *
     *   - lexical: [[LexIndex.bm25ScoresBatch]] — one partition-pruned
     *     postings scan over the UNION of all requests' terms' buckets,
-    *     df once per term, per-qid fan-out via a broadcast (qid, t) join;
+    *     df once per term, per-qid fan-out to the queries holding a term;
     *   - semantic (exact): ONE corpus scan joined against the broadcast
     *     probe set — per-(qid, doc) cosine, N requests never cost N scans.
     *
@@ -285,7 +285,7 @@ object VectorOps {
     val reqDf = broadcast(requests.map { case (qid, _, pid) => (qid, pid) }
       .toDF("qid", "pid"))
     val lexScores = batchLexScores(spark, lexDir, requests, reqDf)
-    val sem = VectorIndex.searchIvfPq(spark, vecDir, emb,
+    val sem = VectorIndex.searchIvfPq(spark, vecDir,
         probes = emb.where(col("vec_id").isin(requests.map(_._3): _*)),
         k = depth, nProbe = nProbe, rerank = rerank)
       .join(reqDf, col("probe_id") === col("pid"))
@@ -955,7 +955,7 @@ object VectorOps {
       // an index that has absorbed appends (measured round 10: 0.78 →
       // 0.84 recall@5 at rerank 12, 0.90 at 16; the cost is rerank·k
       // exact cosines per probe, nothing corpus-shaped).
-      VectorIndex.searchIvfPq(s, idx, emb,
+      VectorIndex.searchIvfPq(s, idx,
         probes = emb.where(col("vec_id") < 10), k = 5, nProbe = 8, rerank = 12)
     },
 
@@ -985,7 +985,7 @@ object VectorOps {
           localCoarseTrain = true))
       graft.model.ServingPointer.flip(s, root, v0)
       val servedV0 = graft.model.ServingPointer.resolve(s, root).get
-      require(VectorIndex.searchIvfPq(s, servedV0, emb,
+      require(VectorIndex.searchIvfPq(s, servedV0,
         probes = emb.where(col("vec_id") < 10), k = 5).count() > 0)
       val v1 = graft.model.ServingPointer.stage(s, root)(
         VectorIndex.buildIvfPq(s, emb, _, nCells = 16, m = 16, ks = 16))
@@ -993,7 +993,7 @@ object VectorOps {
         "pointer moved before the flip committed")
       graft.model.ServingPointer.flip(s, root, v1)
       VectorIndex.searchIvfPq(s,
-        graft.model.ServingPointer.resolve(s, root).get, emb,
+        graft.model.ServingPointer.resolve(s, root).get,
         probes = emb.where(col("vec_id") < 10), k = 5, nProbe = 8,
         rerank = 12)
     },
@@ -1058,9 +1058,9 @@ object VectorOps {
         .where(col("canonical").isNull || col("canonical") === col("vec_id"))
         .select(col("vec_id"), col("embedding"))
         .localCheckpoint()
-      // (no unpersist here: the returned search plan reranks against the
-      // checkpointed survivors — its blocks must outlive this call; the
-      // ContextCleaner frees them once the result DF is unreachable)
+      // (no unpersist needed: the search reranks against the vectors
+      // stored in the index, so only the build reads the checkpoint; the
+      // ContextCleaner frees its blocks once `survivors` is unreachable)
       //
       // The survivor index is BUILD-THEN-SERVE (the pipeline's own claim:
       // "dedup before indexing, index once, serve many"), so it rides the
@@ -1075,7 +1075,7 @@ object VectorOps {
       val idx = graft.IndexCache.serve(
         s"embpipe|$dir|$lshMaxRows|$threshold|$nAssign|16|16|16", "graft_embpipe")(
         VectorIndex.buildIvfPq(s, survivors, _, nCells = 16, m = 16, ks = 16))
-      VectorIndex.searchIvfPq(s, idx, survivors,
+      VectorIndex.searchIvfPq(s, idx,
         probes = emb.where(col("vec_id") < 10), k = 5, nProbe = 8, rerank = 8)
     },
 
@@ -1332,34 +1332,21 @@ object VectorOps {
     * unit sphere ≡ maximizing p̂·c − |c|²/2; `pdotc` (= p̂·c) rides
     * along as the cell-constant half of the decomposed IVF-PQ score.
     * Input `probes` needs `p` and the unit vector `pu`; every other
-    * probe column is carried through. Output: nProbe rows per probe.
+    * probe column is carried through. Output: (cell, pdotc) added, up
+    * to nProbe rows per probe.
+    *
+    * A row-local expression ([[org.apache.spark.sql.graft.ProbeCells]])
+    * ranks the centroid table per probe: no shuffle, no broadcast of
+    * the table, so the probe side of a search is a narrow pass.
     */
-  private def nearestProbeCells(spark: SparkSession, probes: DataFrame,
+  private def nearestProbeCells(probes: DataFrame,
       centroidArr: Array[Array[Float]], nProbe: Int,
-      margin: Double = 0.0): DataFrame = {
-    val ranked = probes.crossJoin(broadcast(centroidsDF(spark, centroidArr)))
-      .withColumn("pdotc", dot(col("pu"), col("centroid")))
-      .withColumn("d", col("pdotc") -
-        lit(0.5) * dot(col("centroid"), col("centroid")))
-      .withColumn("rnk",
-        row_number().over(Window.partitionBy("p").orderBy(col("d").desc, col("cell"))))
-      .where(col("rnk") <= nProbe)
-    // MARGIN-ADAPTIVE probing (margin > 0): nProbe becomes the CAP and a
-    // cell is probed only while its spherical score stays within
-    // `margin` of the probe's best cell — probes deep inside a Voronoi
-    // cell scan one cell, boundary probes scan several. The margin test
-    // runs over the already-ranked, probes×nProbe-sized relation (a
-    // per-probe window over ≤ nProbe rows), so the corpus-side scan can
-    // only SHRINK vs the fixed form at the same cap.
-    if (margin <= 0) ranked
-    else {
-      val best = Window.partitionBy("p")
-      ranked
-        .withColumn("_dbest", max("d").over(best))
-        .where(col("rnk") === 1 || col("_dbest") - col("d") <= margin)
-        .drop("_dbest")
-    }
-  }
+      margin: Double = 0.0): DataFrame =
+    probes.withColumn("_pc", explode(org.apache.spark.sql.graft.SrpNative
+        .probeCells(col("pu"), centroidArr, nProbe, margin)))
+      .withColumn("cell", col("_pc.cell"))
+      .withColumn("pdotc", col("_pc.pdotc"))
+      .drop("_pc")
 
   /** Embedding width probed from the first NON-NULL row. `size(null)`
     * is null under Spark defaults, so a bare `.head().getInt(0)` NPEs
@@ -1536,7 +1523,7 @@ object VectorOps {
     val probes = withUnit(emb.where(probeFilter && col("embedding").isNotNull),
       "embedding", "pu")
       .select(col("vec_id").as("p"), col("pu"))
-    nearestProbeCells(spark, probes, centroidArr, nProbe, probeMargin).count()
+    nearestProbeCells(probes, centroidArr, nProbe, probeMargin).count()
   }
 
   def annIvf(spark: SparkSession, emb: DataFrame, probeFilter: Column, k: Int,
@@ -1576,7 +1563,7 @@ object VectorOps {
     // falls more than the margin behind the probe's best — the
     // cost-adaptive serving mode (easy probes scan 1 cell, boundary
     // probes up to nProbe)
-    val probeCells = nearestProbeCells(spark, probes, centroidArr, nProbe,
+    val probeCells = nearestProbeCells(probes, centroidArr, nProbe,
       probeMargin)
       .select(col("p"), col("pe"), col("cell"))
     // top-k per probe via the map-side-combinable heap (identical
@@ -1823,9 +1810,9 @@ object VectorOps {
     * concentrate near 0 with cell-local structure, so the same code
     * budget quantizes them much more finely than raw vectors (Jégou et
     * al., TPAMI 2011 §IV). Candidates are ranked by the approximate dot,
-    * the top `rerank·k` rejoin raw vectors for the exact cosine rerank —
-    * same contract as every ANN path here: emitted cosines are exact,
-    * only recall is approximate.
+    * and the top `rerank·k` are exact-cosine reranked on the raw vectors
+    * their code rows carry — same contract as every ANN path here:
+    * emitted cosines are exact, only recall is approximate.
     *
     * Scale: probes touch nProbe/nCells of the rows and m bytes per row
     * touched — the row-pruning of [[annIvf]] times the byte-shrink of
@@ -1850,19 +1837,20 @@ object VectorOps {
       assigned.select(col("residual").as("embedding")), mSub, kCent, dims,
       maxTrainRows, n)
     val codes = ivfPqEncode(assigned, books)
-    ivfPqSearch(spark, codes, emb, emb.where(probeFilter), centroidArr, books,
+    ivfPqSearch(spark, codes, emb.where(probeFilter), centroidArr, books,
       k, nProbe, rerank)
   }
 
   /** Cell assignment + residual for the IVF-PQ family: one codegen pass
     * for the nearest (spherical) centroid, a broadcast join against the
     * cells-sized centroid table, a codegen'd zip_with for the residual.
-    * Input needs `vec_id`, `embedding`, `unit` (see [[withUnit]]).
+    * Input needs `vec_id`, `embedding`, `unit` (see [[withUnit]]); the
+    * raw `embedding` rides through for [[ivfPqEncode]].
     */
   def ivfPqAssign(spark: SparkSession, unitEmb: DataFrame,
       centroidArr: Array[Array[Float]]): DataFrame = {
     val centroids = centroidsDF(spark, centroidArr)
-    unitEmb.select(col("vec_id").as("c"), col("unit"),
+    unitEmb.select(col("vec_id").as("c"), col("embedding"), col("unit"),
       org.apache.spark.sql.graft.SrpNative
         .nearestCentroid(col("unit"), centroidArr).as("cell"))
       .join(broadcast(centroids), "cell")
@@ -1870,15 +1858,21 @@ object VectorOps {
         zip_with(col("unit"), col("centroid"), (u, cv) => (u - cv).cast("float")))
   }
 
-  /** The compressed index rows: (id, cell, m residual-PQ bytes). */
+  /** The index rows: (id, cell, m residual-PQ bytes, raw embedding).
+    * The ADC scan reads the codes; the exact rerank of the top
+    * candidates reads the raw floats from the same row, so a search
+    * touches only its probed cells.
+    */
   def ivfPqEncode(assigned: DataFrame,
       books: Array[Array[Array[Float]]]): DataFrame =
     assigned.select(col("c"), col("cell"), org.apache.spark.sql.graft.PqNative
-      .pqEncode(col("residual"), books).as("codes"))
+      .pqEncode(col("residual"), books).as("codes"), col("embedding"))
 
-  /** Search a (c, cell, codes) table — computed in-query ([[annIvfPq]])
-    * or read from a prebuilt index ([[VectorIndex]]) — with the
-    * decomposed score dot(p,c_cell) + ADC(residual codes).
+  /** Search a (c, cell, codes, embedding) table — computed in-query
+    * ([[annIvfPq]]) or read from a prebuilt index ([[VectorIndex]]) —
+    * with the decomposed score dot(p,c_cell) + ADC(residual codes), then
+    * an exact cosine rerank against the `embedding` stored in the same
+    * rows: the vectors as they were indexed, not a separate table.
     *
     * Inverted-list pruning (the IVF contract on disk) has two paths,
     * chosen by what the SESSION can guarantee:
@@ -1895,7 +1889,7 @@ object VectorOps {
     *     reuse, which its benefit heuristic can silently decline — and
     *     a search that quietly degrades to a full index scan is worse
     *     than a bounded driver hop. So the default path collects the
-    *     probed cell ids (≤ min(probes·nProbe, nCells) ints — the cell
+    *     probed cell ids (probes·nProbe ints, one narrow job; the cell
     *     count is capped at 4096 by [[ivfCells]]) and pushes a static
     *     `cell IN (...)` partition filter that prunes DETERMINISTICALLY.
     *
@@ -1911,10 +1905,15 @@ object VectorOps {
     * `ann_ivfpq` form) has no partitions to prune — the broadcast
     * equi-join IS the cell filter — so it skips the verification.
     *
-    * Candidate selection and final ranking use the map-side top-k heap
-    * (see [[annPq]]).
+    * Selection is ONE shuffle: the map-side-combinable
+    * [[graft.functions.TopKAgg.TopKVec]] heap keeps each probe's ADC top
+    * rerank·k (score DESC, id ASC) together with their vectors and the
+    * probe's; the exact cosines of that pool are then a projection over
+    * the heap's output, ranked (cos DESC, id ASC) and cut to k. The
+    * result is emitted in (probe_id, rank) order by a local sort of the
+    * ≤ probes·k rows in one partition, not a range-partitioned sort.
     */
-  def ivfPqSearch(spark: SparkSession, codes: DataFrame, emb: DataFrame,
+  def ivfPqSearch(spark: SparkSession, codes: DataFrame,
       probesRaw: DataFrame, centroidArr: Array[Array[Float]],
       books: Array[Array[Array[Float]]], k: Int, nProbe: Int,
       rerank: Int, probeMargin: Double = 0.0): DataFrame = {
@@ -1931,9 +1930,8 @@ object VectorOps {
     // pdotc carried as the cell-constant half of the decomposed score
     // probeMargin > 0 = margin-adaptive cell pruning (see annIvf): with
     // a partitioned index it directly shrinks the partitions read
-    val probeCells = nearestProbeCells(spark, probes, centroidArr, nProbe,
-      probeMargin)
-      .select(col("p"), col("cell"), col("pdotc"), col("lut"))
+    val probeCells = nearestProbeCells(probes, centroidArr, nProbe, probeMargin)
+      .select(col("p"), col("pe"), col("cell"), col("pdotc"), col("lut"))
     val dppReliable =
       spark.conf.get("spark.sql.optimizer.dynamicPartitionPruning.enabled",
         "true").toBoolean &&
@@ -1952,9 +1950,8 @@ object VectorOps {
       case _ => false
     }
     def staticPruned: DataFrame = {
-      val probedCells = probeCells.select("cell").distinct()
-        .collect().map(_.getInt(0)).toSeq
-      codes.where(col("cell").isin(probedCells: _*))
+      val probedCells = probeCells.select("cell").collect().map(_.getInt(0)).distinct
+      codes.where(col("cell").isin(probedCells.toSeq: _*))
     }
     val prunedCodes =
       if (!dppReliable) staticPruned
@@ -1967,27 +1964,26 @@ object VectorOps {
             _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.DynamicPruning])))
         if (planted) codes else staticPruned
       }
-    val candidates = prunedCodes
+    prunedCodes
       .join(broadcast(probeCells), Seq("cell"))
       .where(col("p") =!= col("c"))
-      .withColumn("score", col("pdotc") + PqNative.pqAdc(col("lut"), col("codes"), kCent))
-      .select(col("p"), col("c"), col("score"))
-      .as[(Long, Long, Double)]
+      .select(col("p"), col("c"),
+        (col("pdotc") + PqNative.pqAdc(col("lut"), col("codes"), kCent)).as("score"),
+        col("embedding"), col("pe"))
+      .as[(Long, Long, Double, Array[Float], Array[Float])]
       .groupByKey(_._1)
-      .mapValues { case (_, c, score) => (c, score) }
-      .agg(graft.functions.TopKAgg.TopK(rerank * k).toColumn.name("top"))
-      .select(col("key").as("p"), explode(col("top.items")).as("e"))
-      .select(col("p"), col("e.id").as("c"))
-    candidates
-      .join(emb.select(col("vec_id").as("c"), col("embedding").as("ce")), "c")
-      .join(broadcast(probes.select(col("p"), col("pe"))), "p")
-      .withColumn("cos", cosine(col("pe"), col("ce")))
-      .withColumn("rank",
-        row_number().over(Window.partitionBy("p").orderBy(col("cos").desc, col("c"))))
-      .where(col("rank") <= k)
-      .select(col("p").as("probe_id"), col("rank"), col("c").as("neighbor_id"),
-        round(col("cos"), 4).as("cos"))
-      .orderBy("probe_id", "rank")
+      .mapValues { case (_, c, score, vec, pe) => (c, score, vec, pe) }
+      .agg(graft.functions.TopKAgg.TopKVec(rerank * k).toColumn.name("top"))
+      // exact cosines of the pool; sort_array orders doubles as the SQL
+      // ORDER BY does, and ~c (descending) is c ascending
+      .select(col("key").as("p"), posexplode(slice(sort_array(
+        transform(col("top.items"), e => struct(
+          cosine(col("top.probe"), e("vec")).as("cos"), bitwise_not(e("id")).as("nc"))),
+        asc = false), 1, k)).as(Seq("pos", "e")))
+      .select(col("p").as("probe_id"), (col("pos") + 1).as("rank"),
+        bitwise_not(col("e.nc")).as("neighbor_id"), round(col("e.cos"), 4).as("cos"))
+      .coalesce(1)
+      .sortWithinPartitions("probe_id", "rank")
   }
 
   /** LSH-bucketed approximate top-k: band join on (table, code), distinct

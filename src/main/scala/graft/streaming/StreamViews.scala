@@ -900,7 +900,7 @@ object StreamViews {
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       val emb = Tables.embeddings(s, dir)
-      graft.operators.VectorIndex.searchIvfPq(s, idx, emb,
+      graft.operators.VectorIndex.searchIvfPq(s, idx,
         probes = emb.where(col("vec_id") < 10), k = 5, nProbe = 8,
         rerank = 12)
     },

@@ -3,10 +3,11 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, FloatType, IntegerType, LongType}
+import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType, StructType}
 
 /** All sign-random-projection band codes of a float-array embedding in one
   * whole-stage-codegen'd row-local pass — `nTables` codes of `nPlanes` bits
@@ -215,6 +216,78 @@ case class NearestCentroids(child: Expression, centroids: Array[Array[Float]],
   override def prettyName: String = "nearest_centroids"
 }
 
+/** The IVF cells a probe scans, in rank order: array of (cell,
+  * pdotc) structs. Probe unit vector p̂ against the centroid table,
+  * minimizing |p̂ − c|² on the unit sphere ≡ maximizing
+  * d = p̂·c − |c|²/2; `pdotc` (= p̂·c) is the cell-constant half of the
+  * decomposed IVF-PQ score. Cells rank by d descending, ties to the
+  * lower cell id, and the first min(nProbe, cells) are kept. With
+  * `margin > 0`, a cell after the first is kept only while d stays
+  * within `margin` of the first cell's d.
+  *
+  * The arithmetic is the Column form's, step for step: both dots
+  * accumulate sequentially in double over the common prefix as
+  * [[FloatVecDot]] does, d is `pdotc - 0.5 * |c|²`, and doubles compare
+  * as Spark orders them (NaN largest, -0.0 equal to 0.0). So the cells
+  * and scores equal a cross join with the centroid table ranked by a
+  * `row_number` window, without the window's shuffle or the table's
+  * broadcast.
+  */
+case class ProbeCells(child: Expression, centroids: Array[Array[Float]],
+    nProbe: Int, margin: Double)
+    extends UnaryExpression with ExpectsInputTypes {
+
+  require(centroids.nonEmpty, "centroid table must be non-empty")
+  require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(FloatType))
+
+  override def dataType: DataType = ArrayType(new StructType()
+    .add("cell", IntegerType, nullable = false)
+    .add("pdotc", DoubleType, nullable = false), containsNull = false)
+
+  private def dot(a: ArrayData, b: Array[Float]): Double = {
+    val n = math.min(a.numElements(), b.length)
+    var acc = 0.0
+    var i = 0
+    while (i < n) { acc += a.getFloat(i).toDouble * b(i).toDouble; i += 1 }
+    acc
+  }
+
+  // |c|² per centroid, accumulated as FloatVecDot(c, c) does
+  @transient private lazy val halfNorms: Array[Double] = centroids.map { c =>
+    var acc = 0.0
+    var i = 0
+    while (i < c.length) { acc += c(i).toDouble * c(i).toDouble; i += 1 }
+    0.5 * acc
+  }
+
+  def compute(v: ArrayData): ArrayData = {
+    val pdotc = centroids.map(c => dot(v, c))
+    val d = Array.tabulate(centroids.length)(i => pdotc(i) - halfNorms(i))
+    val ranked = d.indices.sortWith { (a, b) =>
+      val c = org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(d(b), d(a))
+      c < 0 || (c == 0 && a < b)
+    }.take(nProbe)
+    val kept = if (margin <= 0) ranked
+      else ranked.head +: ranked.tail.filter(i => d(ranked.head) - d(i) <= margin)
+    new GenericArrayData(kept.map(i => InternalRow(i, pdotc(i))).toArray[Any])
+  }
+
+  override def nullSafeEval(input: Any): Any =
+    compute(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("pc", this, classOf[ProbeCells].getName)
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): ProbeCells =
+    copy(child = newChild)
+
+  override def prettyName: String = "probe_cells"
+}
+
 /** Multi-probe SRP codes for the PROBE side of an LSH search (Lv et al.,
   * VLDB'07 §4): per table, the base band code plus `nFlips` perturbed
   * codes — the 1-bit and 2-bit flip sets ranked by summed projection
@@ -380,6 +453,12 @@ object SrpNative {
   def nearestCentroid(vec: Column, centroids: Array[Array[Float]]): Column =
     ExpressionUtils.column(
       NearestCentroid(ExpressionUtils.expression(vec), centroids))
+
+  /** `probe_cells(unit vec, nProbe, margin)` — a probe's IVF cells, as a Column. */
+  def probeCells(unit: Column, centroids: Array[Array[Float]], nProbe: Int,
+      margin: Double): Column =
+    ExpressionUtils.column(
+      ProbeCells(ExpressionUtils.expression(unit), centroids, nProbe, margin))
 
   /** `nearest_centroids(vec, n)` — the n nearest cells, as a Column. */
   def nearestCentroids(vec: Column, centroids: Array[Array[Float]], n: Int): Column =

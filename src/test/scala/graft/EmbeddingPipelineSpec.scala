@@ -121,7 +121,7 @@ class EmbeddingPipelineSpec extends SparkSpec {
     val idx = java.nio.file.Files.createTempDirectory("graft_degidx").toString + "/idx"
     operators.VectorIndex.buildIvfPq(spark, survivors, idx,
       nCells = 16, m = 16, ks = 16)
-    val served = operators.VectorIndex.searchIvfPq(spark, idx, survivors,
+    val served = operators.VectorIndex.searchIvfPq(spark, idx,
       probes = emb.where($"vec_id".isin(0L, 48L, 96L)), k = 3,
       nProbe = 8, rerank = 8)
     val rows = served.collect()

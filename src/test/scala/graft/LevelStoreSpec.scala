@@ -51,7 +51,7 @@ class LevelStoreSpec extends SparkSpec {
         ks = 16, batchId = b),
       (df, dir, b) => VectorIndex.appendIvfPq(spark, df, dir, batchId = b),
       (dir, n) => VectorIndex.maintain(spark, dir, n),
-      dir => VectorIndex.searchIvfPq(spark, dir, emb, emb.where($"vec_id" < 10),
+      dir => VectorIndex.searchIvfPq(spark, dir, emb.where($"vec_id" < 10),
         k = 5, nProbe = 8, rerank = 8)),
     // overlapping keys across slices, with tombstones
     Subject("UpsertStore", UpsertStore.levels, "stats",
@@ -119,6 +119,23 @@ class LevelStoreSpec extends SparkSpec {
         () => LexIndex.append(spark, docs.where($"doc_id" % 4 === 1), dir))) {
       val e = intercept[RuntimeException](op())
       assert(e.getMessage.contains("older format") && e.getMessage.contains("min_seq"),
+        e.getMessage)
+    }
+  }
+
+  test("a vector index committed before its codes carried vectors (no dims) fails loudly on read and write") {
+    import org.apache.spark.sql.types._
+    val dir = Scratch.dir("levelstore_old_vec")
+    VectorIndex.buildIvfPq(spark, emb.where($"vec_id" % 4 === 0), dir, nCells = 16, m = 8, ks = 16)
+    // the meta row such an index committed: the level window alone
+    graft.model.OneRowParquet.write(spark, s"$dir/meta", new StructType()
+      .add("min_seq", LongType).add("max_seq", LongType).add("last_batch", LongType),
+      0L, 0L, -1L)
+    for (op <- Seq[() => Any](
+        () => VectorIndex.searchIvfPq(spark, dir, emb.where($"vec_id" < 10), k = 5).collect(),
+        () => VectorIndex.appendIvfPq(spark, emb.where($"vec_id" % 4 === 1), dir))) {
+      val e = intercept[RuntimeException](op())
+      assert(e.getMessage.contains("older format") && e.getMessage.contains("dims"),
         e.getMessage)
     }
   }

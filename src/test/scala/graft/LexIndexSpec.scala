@@ -35,6 +35,22 @@ class LexIndexSpec extends SparkSpec {
       s"direct=${direct.mkString(",")} indexed=${indexed.mkString(",")}")
   }
 
+  test("bm25TopK and bm25TopKBatch run at most 4 jobs, answers in rank order (sf0.001)") {
+    // df counted in one job off the pruned scan, one per-doc shuffle,
+    // one top-k shuffle, the result — and no range sort after the heap
+    val docs = Tables.documents(spark, sf0001)
+    val dir = freshDir()
+    LexIndex.build(spark, docs.where($"doc_id" % 2 === 0), dir)
+    LexIndex.append(spark, docs.where($"doc_id" % 2 === 1), dir)
+    val single = LexIndex.bm25TopK(spark, dir, qTerms)
+    assert(jobsOf(single.collect()) <= 4)
+    assert(single.collect().map(_.getInt(0)).toSeq == (1 to 10))
+    val batch = LexIndex.bm25TopKBatch(spark, dir, Seq(2 -> qTerms, 1 -> Seq("data")))
+    assert(jobsOf(batch.collect()) <= 4)
+    val keys = batch.collect().map(r => (r.getInt(0), r.getInt(1))).toSeq
+    assert(keys == keys.sorted && keys.map(_._1).distinct == Seq(1, 2))
+  }
+
   test("query scan reads only the query terms' bucket partitions") {
     val docs = Tables.documents(spark, sf0001)
     val dir = freshDir()

@@ -1,7 +1,7 @@
 package graft
 
 import graft.model.{OneRowParquet, ServingPointer, StoreSwap}
-import graft.operators.{LexIndex, ShingleStore, VectorIndex}
+import graft.operators.{LexIndex, ShingleStore, VectorIndex, VectorOps}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -99,8 +99,8 @@ class OneRowParquetSpec extends SparkSpec {
     val vec = freshDir()
     VectorIndex.buildIvfPq(spark, emb.where($"vec_id" % 2 === 0), vec, batchId = 5L)
     VectorIndex.appendIvfPq(spark, emb.where($"vec_id" % 2 === 1), vec, batchId = 6L)
-    assertSameTable(s"$vec/meta",
-      sparkWritten(Seq((0L, 1L, 6L)).toDF("min_seq", "max_seq", "last_batch")))
+    assertSameTable(s"$vec/meta", sparkWritten(Seq((VectorOps.embDims(emb), 0L, 1L, 6L))
+      .toDF("dims", "min_seq", "max_seq", "last_batch")))
 
     // ServingPointer
     val root = freshDir()

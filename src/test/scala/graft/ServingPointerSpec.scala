@@ -111,12 +111,12 @@ class ServingPointerSpec extends SparkSpec {
       VectorIndex.buildIvfPq(spark, emb, _, nCells = 16, m = 16, ks = 16))
     ServingPointer.flip(spark, root, v1)
     val served = VectorIndex.searchIvfPq(spark,
-        ServingPointer.resolve(spark, root).get, emb,
+        ServingPointer.resolve(spark, root).get,
         probes = emb.where($"vec_id" < 10), k = 5, nProbe = 8, rerank = 12)
       .collect().map(_.toSeq).toSeq
     val directDir = freshRoot()
     VectorIndex.buildIvfPq(spark, emb, directDir, nCells = 16, m = 16, ks = 16)
-    val direct = VectorIndex.searchIvfPq(spark, directDir, emb,
+    val direct = VectorIndex.searchIvfPq(spark, directDir,
         probes = emb.where($"vec_id" < 10), k = 5, nProbe = 8, rerank = 12)
       .collect().map(_.toSeq).toSeq
     assert(served == direct,

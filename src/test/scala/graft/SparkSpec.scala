@@ -22,6 +22,18 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+  /** Spark jobs `f` runs on this thread: a job group isolates them from
+    * the suite's async stragglers (broadcast and ContextCleaner jobs).
+    */
+  def jobsOf(f: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs_of_${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, "counted", false)
+    try f finally sc.clearJobGroup()
+    org.apache.spark.TestBus.drain(sc)
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
   def sf0001 = "/root/testdata/sf0.001"
   def sf001 = "/root/testdata/sf0.01"
 }

@@ -76,6 +76,17 @@ class TopKAggSpec extends SparkSpec {
       val merged = bufs.foldLeft(a.zero)(a.merge)
       assert(canon(a.finish(merged).items) == canon(reference(rows, k)),
         s"trial $trial k=$k rows=$rows")
+      // TopKVec: the same entries, each still holding the vector its row
+      // carried, plus the group's probe vector
+      val av = TopKAgg.TopKVec(k)
+      val probe = Array(42f)
+      val vbufs = rnd.shuffle(chunks.map(_.foldLeft(av.zero) { case (b, (id, v)) =>
+        av.reduce(b, (id, v, Array(id.toFloat, v.toFloat), probe)) }))
+      val out = av.finish(vbufs.foldLeft(av.zero)(av.merge))
+      assert(canon(out.items.map(e => Entry(e.value, e.id))) == canon(reference(rows, k)))
+      assert(out.items.forall(e => e.vec(0) == e.id.toFloat &&
+        java.lang.Float.floatToIntBits(e.vec(1)) == java.lang.Float.floatToIntBits(e.value.toFloat)))
+      assert(rows.isEmpty || out.probe.sameElements(probe))
     }
   }
 

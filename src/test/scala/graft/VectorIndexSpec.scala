@@ -24,7 +24,7 @@ class VectorIndexSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf0001)
     val dir = freshDir()
     VectorIndex.buildIvfPq(spark, emb, dir, nCells = 16, m = 8, ks = 16)
-    val prebuilt = VectorIndex.searchIvfPq(spark, dir, emb,
+    val prebuilt = VectorIndex.searchIvfPq(spark, dir,
       probes = emb.where($"vec_id" < 10), k = 5, nProbe = 8, rerank = 8)
       .collect().map(_.toSeq).toSeq
     val inQuery = VectorOps.annIvfPq(spark, emb, probeFilter = $"vec_id" < 10,
@@ -32,6 +32,107 @@ class VectorIndexSpec extends SparkSpec {
       .collect().map(_.toSeq).toSeq
     assert(prebuilt == inQuery,
       "one code path, same training sample and seeds -> identical answers")
+  }
+
+  test("metamorphic: full probe and full rerank equal the exact top-k over the indexed vectors, duplicates included") {
+    // ANN has no oracle, but with every cell probed and a rerank pool
+    // holding every row, the search must equal brute force over what
+    // was INDEXED: an id appended in two batches is two rows, each
+    // reranked on its own vector (the second copy is nudged)
+    import org.apache.spark.sql.expressions.Window
+    val emb = Tables.embeddings(spark, sf0001).select("vec_id", "embedding")
+    val dup = 2L
+    val nudged = emb.where($"vec_id" === dup).select($"vec_id",
+      transform($"embedding", x => (x + 0.01f).cast("float")).as("embedding"))
+    val batches = Seq(
+      emb.where($"vec_id" % 3 === 0),
+      emb.where($"vec_id" % 3 === 1 || $"vec_id" === dup),
+      emb.where($"vec_id" % 3 === 2 && $"vec_id" =!= dup).unionByName(nudged))
+    val dir = freshDir()
+    VectorIndex.buildIvfPq(spark, batches(0), dir, nCells = 16, m = 8, ks = 16)
+    batches.tail.foreach(b => VectorIndex.appendIvfPq(spark, b, dir))
+    val indexed = batches.reduce(_ unionByName _)
+      .select($"vec_id".as("c"), $"embedding".as("ce"))
+    val k = 5
+    val rerank = (indexed.count() / k + 1).toInt
+    // dup's nearest neighbour probes too, so some answer holds both copies
+    val nn = indexed.where($"c" =!= dup)
+      .crossJoin(emb.where($"vec_id" === dup).select($"embedding".as("pe")))
+      .orderBy(VectorOps.cosine($"pe", $"ce").desc, $"c").head().getLong(0)
+    val probes = emb.where($"vec_id" < 10 || $"vec_id" === nn)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
+    val got = rows(VectorIndex.searchIvfPq(spark, dir, probes, k, nProbe = 16, rerank = rerank))
+    val want = rows(indexed
+      .crossJoin(probes.select($"vec_id".as("p"), $"embedding".as("pe")))
+      .where($"p" =!= $"c")
+      .withColumn("cos", VectorOps.cosine($"pe", $"ce"))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy("p").orderBy($"cos".desc, $"c")))
+      .where($"rank" <= k)
+      .select($"p", $"rank", $"c", round($"cos", 4))
+      .orderBy("p", "rank"))
+    assert(want.exists { case (p, _, _, _) => want.count(w => w._1 == p && w._3 == dup) == 2 },
+      "the fixture must put both copies of the twice-appended id in one answer")
+    assert(got == want)
+  }
+
+  test("probe_cells equals the cross join with the centroids ranked by a row_number window, margins included") {
+    // the reference form the row-local expression replaced: same cells,
+    // same pdotc bits, for every probe of the fixture
+    import org.apache.spark.sql.expressions.Window
+    val emb = Tables.embeddings(spark, sf0001)
+    val dir = freshDir()
+    VectorIndex.buildIvfPq(spark, emb, dir, nCells = 16, m = 8, ks = 16)
+    val (coarse, _) = VectorIndex.readCodebooks(spark, dir)
+    val probes = VectorOps.withUnit(emb.where($"embedding".isNotNull), "embedding", "pu")
+      .select($"vec_id".as("p"), $"pu")
+    val centroids = coarse.zipWithIndex.map { case (v, i) => (i, v) }.toSeq
+      .toDF("cell", "centroid")
+    for (nProbe <- Seq(4, 20); margin <- Seq(0.0, 0.02)) {
+      val ranked = probes.crossJoin(centroids)
+        .withColumn("pdotc", VectorOps.dot($"pu", $"centroid"))
+        .withColumn("d", $"pdotc" - lit(0.5) * VectorOps.dot($"centroid", $"centroid"))
+        .withColumn("rnk", row_number().over(
+          Window.partitionBy("p").orderBy($"d".desc, $"cell")))
+        .where($"rnk" <= nProbe)
+        .withColumn("dbest", max("d").over(Window.partitionBy("p")))
+        .where(lit(margin) <= 0 || $"rnk" === 1 || $"dbest" - $"d" <= margin)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select("p", "cell", "pdotc").collect()
+          .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSet
+      val native = probes.select($"p", explode(org.apache.spark.sql.graft.SrpNative
+        .probeCells($"pu", coarse, nProbe, margin)).as("pc"))
+        .select($"p", $"pc.cell".as("cell"), $"pc.pdotc".as("pdotc"))
+      assert(rows(native) == rows(ranked), s"nProbe=$nProbe margin=$margin")
+    }
+  }
+
+  test("searchIvfPq job and exchange ceilings: 4 jobs under default confs, 3 and 2 exchanges under the serving confs (sf0.001)") {
+    // first execution of a fresh search each time: the probe side is a
+    // narrow pass, the selection one heap shuffle, the output a local
+    // sort — default confs add one job for the static cell list
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val emb = Tables.embeddings(spark, sf0001)
+    val dir = freshDir()
+    VectorIndex.buildIvfPq(spark, emb.where($"vec_id" % 2 === 0), dir,
+      nCells = 16, m = 8, ks = 16)
+    VectorIndex.appendIvfPq(spark, emb.where($"vec_id" % 2 === 1), dir)
+    def search() = VectorIndex.searchIvfPq(spark, dir, emb.where($"vec_id" === 7L), k = 10)
+    val default = jobsOf(search().collect())
+    assert(default <= 4, s"default-conf search ran $default jobs")
+    val key = "spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly"
+    spark.conf.set(key, "false")
+    try {
+      val df = search()
+      val serving = jobsOf(df.collect())
+      assert(serving <= 3, s"serving-conf search ran $serving jobs")
+      val exchanges = new AdaptiveSparkPlanHelper {}.collectWithSubqueries(
+        df.queryExecution.executedPlan) {
+        case e: org.apache.spark.sql.execution.exchange.Exchange => e
+      }
+      assert(exchanges.size <= 2, s"serving-conf search planned exchanges:\n${exchanges.mkString("\n")}")
+    } finally spark.conf.unset(key)
   }
 
   test("driver-side codebooks read equals the Spark read bit-for-bit") {
@@ -63,7 +164,7 @@ class VectorIndexSpec extends SparkSpec {
     assert(coarse.length == 8, "coarse quantizer keeps the declared drifted shape")
     assert(books.length == 8 && books.forall(_.length == 16),
       "PQ books keep the declared 8x16 shape")
-    val hits = VectorIndex.searchIvfPq(spark, dir, emb,
+    val hits = VectorIndex.searchIvfPq(spark, dir,
       probes = emb.where($"vec_id" < 10), k = 5, nProbe = 8, rerank = 12)
     assert(hits.count() > 0, "the sacrificial index must serve searches")
     // every corpus row is indexed exactly once (the encode pass is the
@@ -139,9 +240,9 @@ class VectorIndexSpec extends SparkSpec {
       "streamed appends diverged from the batch append")
     // and the served answers agree
     val probes = emb.where($"vec_id" < 10)
-    val a = VectorIndex.searchIvfPq(spark, batchDir, emb, probes, k = 5,
+    val a = VectorIndex.searchIvfPq(spark, batchDir, probes, k = 5,
       nProbe = 8, rerank = 8).collect().map(_.toSeq).toSeq
-    val b = VectorIndex.searchIvfPq(spark, streamDir, emb, probes, k = 5,
+    val b = VectorIndex.searchIvfPq(spark, streamDir, probes, k = 5,
       nProbe = 8, rerank = 8).collect().map(_.toSeq).toSeq
     assert(a == b)
     // maintain: micro-batch appends left >1 file in multi-write cells;
@@ -164,7 +265,7 @@ class VectorIndexSpec extends SparkSpec {
     val after = filesPerCell(streamDir)
     assert(after.values.forall(_ == 1), s"cells not compacted to one file: $after")
     assert(indexRows(streamDir) == rowsBefore, "compaction changed the row multiset")
-    val c = VectorIndex.searchIvfPq(spark, streamDir, emb, probes, k = 5,
+    val c = VectorIndex.searchIvfPq(spark, streamDir, probes, k = 5,
       nProbe = 8, rerank = 8).collect().map(_.toSeq).toSeq
     assert(c == b, "compaction changed search answers")
   }
@@ -175,7 +276,7 @@ class VectorIndexSpec extends SparkSpec {
   // converges — no lost corpus, no double-inserted ids.
 
   private def searchRows(dir: String, emb: org.apache.spark.sql.DataFrame) =
-    VectorIndex.searchIvfPq(spark, dir, emb,
+    VectorIndex.searchIvfPq(spark, dir,
       probes = emb.where($"vec_id" < 10), k = 5, nProbe = 8, rerank = 8)
       .collect().map(_.toSeq).toSeq
 
@@ -317,7 +418,7 @@ class VectorIndexSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf0001)
     val dir = freshDir()
     VectorIndex.buildIvfPq(spark, emb, dir, nCells = 16, m = 8, ks = 16)
-    val df = VectorIndex.searchIvfPq(spark, dir, emb,
+    val df = VectorIndex.searchIvfPq(spark, dir,
       probes = emb.where($"vec_id" < 10), k = 5, nProbe = 4, rerank = 8)
     df.collect()
     def allNodes(p: org.apache.spark.sql.execution.SparkPlan):
@@ -348,7 +449,7 @@ class VectorIndexSpec extends SparkSpec {
     val dir = freshDir()
     VectorIndex.buildIvfPq(spark, emb, dir, nCells = 16, m = 8, ks = 16)
     def partitionsRead(margin: Double): Int = {
-      val df = VectorIndex.searchIvfPq(spark, dir, emb,
+      val df = VectorIndex.searchIvfPq(spark, dir,
         probes = emb.where($"vec_id" < 10), k = 5, nProbe = 8, rerank = 8,
         probeMargin = margin)
       df.collect()
@@ -414,7 +515,7 @@ class VectorIndexSpec extends SparkSpec {
       spark.sparkContext.addSparkListener(listener)
       val df =
         try {
-          val d = VectorOps.ivfPqSearch(spark, codes, emb,
+          val d = VectorOps.ivfPqSearch(spark, codes,
             probesRaw = emb.where($"vec_id" < 10), coarse, books,
             k = 5, nProbe = 4, rerank = 8)
           Thread.sleep(500) // listener bus is async; jobs run synchronously
@@ -475,7 +576,7 @@ class VectorIndexSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf0001)
     val dir = freshDir()
     VectorIndex.buildIvfPq(spark, emb, dir, nCells = 16, m = 8, ks = 16)
-    val search = () => VectorIndex.searchIvfPq(spark, dir, emb,
+    val search = () => VectorIndex.searchIvfPq(spark, dir,
       probes = emb.where($"vec_id" < 5), k = 5, nProbe = 8, rerank = 8)
       .collect().map(_.toSeq).toSeq
     val before = search()
@@ -494,7 +595,7 @@ class VectorIndexSpec extends SparkSpec {
     assert(new java.io.File(tornMeta, "_temporary").mkdir())
     assert(!VectorIndex.isBuilt(spark, torn), "no COMMITTED meta = not built")
     VectorIndex.buildIvfPq(spark, emb, torn, nCells = 16, m = 8, ks = 16)
-    val retried = VectorIndex.searchIvfPq(spark, torn, emb,
+    val retried = VectorIndex.searchIvfPq(spark, torn,
       probes = emb.where($"vec_id" < 5), k = 5, nProbe = 8, rerank = 8)
       .collect().map(_.toSeq).toSeq
     assert(retried == before,
