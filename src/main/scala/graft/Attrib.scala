@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
-/** Round-agnostic job-level attribution probe (not part of the driver
-  * contract; the Prof.scala pattern). At sf0.1 the inputs are sub-MB, so
+/** Job-level attribution probe (not part of the driver contract), the
+  * engine's one probe main. At sf0.1 the inputs are sub-MB, so
   * a multi-second query is spending its time on FIXED per-job overhead
   * (scheduling, commit protocols, file creates), not data — which makes
   * "how many jobs / stages / tasks / file writes does one invocation
@@ -23,11 +23,8 @@ object Attrib {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(sys.error("usage: Attrib <query>[,<query>...] [reps]"))
     val reps = args.drop(1).headOption.map(_.toInt).getOrElse(2)
-    // shared recipe (graft.Sessions) + the cached-AQE A/B override seam
-    val spark = Sessions.base(s"local[$cpus]", cpus)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("ATTRIB_CACHED_AQE", "true"))
-      .getOrCreate()
+    // shared recipe (graft.Sessions) so probed plans == benched plans
+    val spark = Sessions.base(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val jobs = new java.util.concurrent.atomic.AtomicLong
     val stages = new java.util.concurrent.atomic.AtomicLong

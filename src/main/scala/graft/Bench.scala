@@ -78,25 +78,8 @@ object Bench {
     // Sorted by name: Map iteration order reshuffles whenever a query is
     // added, which changes which query pays each warm-cache/GC transition
     // and makes cross-round per-query comparisons noisy. A fixed order
-    // keeps timing attribution stable across rounds. SPARK_GRAFT_ORDER=
-    // reverse exists only for controlled order-sensitivity experiments.
-    // SPARK_GRAFT_ONLY=a,b,c restricts the run to named queries — for
-    // local attribution probes only; the driver never sets it.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val ordered0 = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    val orderEnv = sys.env.get("SPARK_GRAFT_ORDER")
-    val ordered = orderEnv match {
-      case Some("reverse")       => ordered0.reverse
-      case None | Some("sorted") => ordered0
-      case Some(other) =>
-        // an unnoticed typo (e.g. "reversed") must not silently invalidate
-        // an order-sensitivity experiment
-        System.err.println(
-          s"[bench] WARNING: unrecognized SPARK_GRAFT_ORDER='$other'; using sorted order")
-        ordered0
-    }
+    // keeps timing attribution stable across rounds.
+    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
     // Single-run per-query times in this sandbox carry >2x environmental
     // noise (page cache, GC, machine load — r6 vs r7 swung 3-5x both ways
     // on identical binaries). Medians over N>=3 back-to-back reps are the
@@ -104,7 +87,7 @@ object Bench {
     val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS")
       .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ >= 1).getOrElse(3)
     System.err.println(
-      s"[bench] order=${if (ordered eq ordered0) "sorted" else "reverse"} reps=$reps queries=${ordered.size} sf=$sfDir")
+      s"[bench] reps=$reps queries=${ordered.size} sf=$sfDir")
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       val n = s.size
@@ -119,9 +102,7 @@ object Bench {
     // block manager. Between REPS of one query no GC is needed: the
     // leak only hurts once it accumulates across many queries (measured:
     // cc_union, the leakiest query, is flat across 6 back-to-back reps
-    // standalone — 4.35-4.5 s; see BASELINE.md probe A). SPARK_GRAFT_
-    // BENCH_GC=0 disables (for experiments).
-    val gcBetween = !sys.env.get("SPARK_GRAFT_BENCH_GC").contains("0")
+    // standalone — 4.35-4.5 s; see BASELINE.md probe A).
     // (median, min) per query; -1 marks a failure so a fast crash can't
     // masquerade as a speedup; failures don't contribute to the total
     // Per-query state-band pulse (r17 verdict top item): the host's slow
@@ -144,7 +125,7 @@ object Bench {
     val diskSeries =
       scala.collection.mutable.ArrayBuffer[(String, Double, Double, Double)]()
     val results = ordered.map { case (name, fn) =>
-      if (gcBetween) { System.gc(); Thread.sleep(200) }
+      System.gc(); Thread.sleep(200)
       statePulses += name -> Canary.statePulse(canaryDir)
       val disk0 = Canary.diskSnapshot()
       val wall0 = System.nanoTime()

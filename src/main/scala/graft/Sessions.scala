@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** ONE session recipe for every harness (Bench / Verify / Plans / Scaling
-  * / Attrib / Recall / Prof, and the lambdabench driver), so the plans that are verified against the
+  * / Recall, and the lambdabench driver), so the plans that are verified against the
   * oracle, the plans committed to PLANS.md, and the plans the bench times
   * are the same physical plans. Round-18's verdict flagged the drift:
   * `canChangeCachedPlanOutputPartitioning` was set only in the measurement

@@ -33,15 +33,14 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   */
 object RowEst {
 
-  /** Max parquet footers read per estimate (`graft.rowest.maxFooters`):
-    * footer reads are driver-side metadata I/O, fine for thousands of
+  /** Max parquet footers read per estimate: footer reads are
+    * driver-side metadata I/O, fine for thousands of
     * files, wrong for a 100 TB table's hundreds of thousands — above
     * the cap the estimate abstains (None) rather than stall the driver.
     * Footer row counts are immutable per file (part files are
     * write-once, uniquely named), so they cache permanently.
     */
-  private def maxFooters(spark: org.apache.spark.sql.SparkSession): Int =
-    spark.conf.get("graft.rowest.maxFooters", "4096").toInt
+  private val MaxFooters = 4096
 
   private val footerCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
@@ -142,7 +141,7 @@ object RowEst {
       case fs: HadoopFsRelation if fs.fileFormat.isInstanceOf[
           org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat] =>
         val files = fs.location.inputFiles
-        if (files.length > maxFooters(spark)) None
+        if (files.length > MaxFooters) None
         else {
           val conf = spark.sparkContext.hadoopConfiguration
           Some(files.iterator.map(footerRows(_, conf)).sum)

@@ -51,6 +51,10 @@ object CorpusOps {
     */
   val DsirK = 100
 
+  /** [[importanceSample]]'s frequency floor and broadcast guard. */
+  val DsirMinCount = 2
+  val DsirMaxVocab = 5000000L
+
   /** DSIR-style importance scoring + top-K selection (Xie et al.,
     * NeurIPS'23 "Data Selection for Language Models via Importance
     * Resampling"): score every doc by its mean per-token log-likelihood
@@ -62,7 +66,7 @@ object CorpusOps {
     * same estimator.
     *
     * Model semantics (part of the operator contract, mirrored verbatim in
-    * the oracle): counts below `graft.dsir.minCount` (default 2) floor to
+    * the oracle): counts below [[DsirMinCount]] (2) floor to
     * 0 in BOTH models — the hashed-feature-style variance bound DSIR gets
     * from bucketing, taken here as an explicit frequency floor — and both
     * models add-1 smooth over the shared floored vocabulary V, so a
@@ -71,24 +75,21 @@ object CorpusOps {
     * Scale: the model relation is ONE map-side-combinable aggregate over
     * the token stream carrying both counts (never two corpus scans); the
     * floor bounds it to the frequent-type vocabulary, broadcast to the
-    * scoring join until `graft.dsir.maxVocab` (default 5M types) demotes
+    * scoring join until [[DsirMaxVocab]] (5M types) demotes
     * it to a shuffle join (the unigramLogprob r8 hardening, applied from
     * birth). Selection is top-K by (rounded score, doc_id) — a
     * TakeOrderedAndProject, ≤K rows per task, never a global sort.
     */
   def importanceSample(docs: org.apache.spark.sql.DataFrame,
       isTarget: org.apache.spark.sql.Column, k: Int): org.apache.spark.sql.DataFrame = {
-    val spark = docs.sparkSession
-    val minCount = spark.conf.get("graft.dsir.minCount", "2").toInt
-    val maxVocab = spark.conf.get("graft.dsir.maxVocab", "5000000").toLong
     val tok = docs.select(col("doc_id"), col("source"), isTarget.as("is_t"),
       explode(tokens(col("text"))).as("t"))
     val vc = tok.groupBy("t")
       .agg(count(lit(1)).as("crRaw"),
         sum(when(col("is_t"), 1L).otherwise(0L)).as("ctRaw"))
-      .where(col("crRaw") >= minCount)
+      .where(col("crRaw") >= DsirMinCount)
       .select(col("t"), col("crRaw").as("cr"),
-        when(col("ctRaw") >= minCount, col("ctRaw")).otherwise(lit(0L)).as("ct"))
+        when(col("ctRaw") >= DsirMinCount, col("ctRaw")).otherwise(lit(0L)).as("ct"))
     // one tiny action for the three model constants; null on an
     // empty/all-blank corpus (sum over zero rows) — the result is empty
     // either way, but the smoothing denominators must stay positive
@@ -97,7 +98,7 @@ object CorpusOps {
     val v = stats.getLong(2)
     val nrV = math.max((if (stats.isNullAt(0)) 0L else stats.getLong(0)) + v, 1L).toDouble
     val ntV = math.max((if (stats.isNullAt(1)) 0L else stats.getLong(1)) + v, 1L).toDouble
-    val vcSide = if (v <= maxVocab) broadcast(vc) else vc
+    val vcSide = if (v <= DsirMaxVocab) broadcast(vc) else vc
     tok.join(vcSide, Seq("t"), "left_outer")
       .groupBy("doc_id", "source")
       .agg(round(avg(

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{GraftConf, QueryDef, Tables}
 import graft.QueryDef.withOracle
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -16,31 +16,6 @@ import org.apache.spark.sql.functions._
   */
 object GraphOps {
 
-  /** Min-label-propagation connected components with pointer-jumping, the
-    * Spark-idiomatic form of the reference's driver-side iteration
-    * (BatchWorkflow.java:653-687): per round each node adopts the smallest
-    * label among itself and its neighbors, then shortcuts through its
-    * label's label (`label(v) ← label(label(v))`); terminate when no label
-    * changes (the reference's "progress edges empty" probe becomes a count
-    * on the changed set).
-    *
-    * Scale notes (100 TB): labels are shuffled on the node key each round;
-    * `localCheckpoint` truncates lineage so the plan doesn't grow with
-    * iterations; the convergence probe is an aggregate on the label table,
-    * never a collect. The shortcut step halves the remaining label-chain
-    * length each round, so rounds = O(log diameter) — plain neighbor
-    * propagation needs O(diameter) rounds, which sparse chain-shaped equiv
-    * graphs (avg degree ≈ 2) do hit in practice. A cap still guards
-    * against runaway iteration.
-    *
-    * Non-convergence within the cap THROWS (a silent partial labeling
-    * would quietly merge/split identities downstream). The cap defaults
-    * from session conf `graft.cc.maxIter` (25) so production callers of
-    * the fixed-signature query entry points — batch_workflow,
-    * near_dedup_apply, pipeline_pretraining_corpus — can raise it with
-    * `spark.conf.set("graft.cc.maxIter", n)`, no library edit needed;
-    * pass `maxIter = Some(n)` to override per call.
-    */
   /** Driver-local labeling for the small-graph route: min-root
     * union-find with path compression over the collected (src, dst)
     * edge rows. Union always roots the SMALLER id, so every find
@@ -90,11 +65,33 @@ object GraphOps {
     out
   }
 
-  def connectedComponents(edges: DataFrame,
-      maxIter: Option[Int] = None): DataFrame = {
+  /** Min-label-propagation connected components with pointer-jumping, the
+    * Spark-idiomatic form of the reference's driver-side iteration
+    * (BatchWorkflow.java:653-687): per round each node adopts the smallest
+    * label among itself and its neighbors, then shortcuts through its
+    * label's label (`label(v) ← label(label(v))`); terminate when no label
+    * changes (the reference's "progress edges empty" probe becomes a count
+    * on the changed set).
+    *
+    * Scale notes (100 TB): labels are shuffled on the node key each round;
+    * `localCheckpoint` truncates lineage so the plan doesn't grow with
+    * iterations; the convergence probe is an aggregate on the label table,
+    * never a collect. The shortcut step halves the remaining label-chain
+    * length each round, so rounds = O(log diameter) — plain neighbor
+    * propagation needs O(diameter) rounds, which sparse chain-shaped equiv
+    * graphs (avg degree ≈ 2) do hit in practice. A cap still guards
+    * against runaway iteration.
+    *
+    * Non-convergence within the cap THROWS (a silent partial labeling
+    * would quietly merge/split identities downstream). The cap is
+    * [[graft.GraftConf.CcMaxIter]] (25), a session conf so callers of
+    * the fixed-signature query entry points — batch_workflow,
+    * near_dedup_apply, pipeline_pretraining_corpus — can raise it
+    * without a library edit.
+    */
+  def connectedComponents(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
-    val iterCap = maxIter.getOrElse(
-      spark.conf.get("graft.cc.maxIter", "25").toInt)
+    val iterCap = GraftConf.CcMaxIter(spark).toInt
     // Bidirectional, self-loop-free edge set (BidirectionalEdge,
     // BatchWorkflow.java:570-581), deduplicated once up front.
     // Partition the edge set by `src` ONCE before checkpointing: every
@@ -124,7 +121,7 @@ object GraphOps {
 
     // SIZE ROUTE (the stats-routing discipline of the dedup/span
     // families, applied to the iteration itself): below
-    // `graft.cc.localMaxEdges` deduped bidirectional edges the component
+    // GraftConf.CcLocalMaxEdges deduped bidirectional edges the component
     // labeling is DRIVER-SIZED work — a seeded min-root union-find over
     // the already-materialized checkpoint blocks computes the identical
     // labeling (label = component-minimum id, the converged fixed point
@@ -137,7 +134,7 @@ object GraphOps {
     // routes are proven output-identical (GraphOpsSpec route-equality
     // pin + every CC consumer's oracle). Long-typed ids only — the
     // collect decode is typed; anything else keeps the loop.
-    val localMax = spark.conf.get("graft.cc.localMaxEdges", "100000").toLong
+    val localMax = GraftConf.CcLocalMaxEdges(spark).toLong
     val longTyped =
       bidir.schema("src").dataType == org.apache.spark.sql.types.LongType &&
         bidir.schema("dst").dataType == org.apache.spark.sql.types.LongType
@@ -234,7 +231,7 @@ object GraphOps {
     bidir.unpersist()
     require(converged,
       s"connected components did not converge within $iterCap iterations — " +
-        "raise maxIter (spark.conf graft.cc.maxIter; rounds scale with log " +
+        s"raise spark.conf ${GraftConf.CcMaxIter.name} (rounds scale with log " +
         "of graph diameter)")
     current.select(col("node"), col("label"))
   }

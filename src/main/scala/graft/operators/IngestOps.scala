@@ -92,12 +92,10 @@ object IngestOps {
          |FROM ex WHERE url = 'purchase' AND g = 'w'
          |GROUP BY url, g, bucket ORDER BY url, g, bucket""".stripMargin) { (s, dir) =>
       val store = newMaster()
-      // the serving layer's shard count is deployment config (ElephantDB
-      // domains fix it at creation, BatchWorkflow.java:304-330); default
-      // 32 matches the fixture layout
-      val shards = s.conf.get("graft.kv.shards", "32").toInt
+      // 32 shards, fixed at creation like an ElephantDB domain
+      // (BatchWorkflow.java:304-330), matches the fixture layout
       BatchViews.pageviewsOverTime(s, dir)
-        .repartition(shards, col("url"))
+        .repartition(32, col("url"))
         .write.parquet(store)
       s.read.parquet(store)
         .where(col("url") === "purchase" && col("g") === "w")

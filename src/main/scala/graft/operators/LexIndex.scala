@@ -51,47 +51,37 @@ object LexIndex {
 
   val DefaultBuckets = 64
 
-  /** Floor/ceiling for [[autoBuckets]] (`graft.lexindex.minBuckets` /
-    * `maxBuckets`), and the sizing target (`graft.lexindex.docsPerBucket`):
-    * the bucket count an auto-sized build aims for is
-    * ceil(rows / docsPerBucket) clamped to [min, max]. Rationale: every
+  /** Floor/ceiling for [[autoBuckets]] and its sizing target: an
+    * auto-sized build aims for ceil(rows / DefaultDocsPerBucket) buckets
+    * clamped to [DefaultMinBuckets, DefaultMaxBuckets]. Rationale: every
     * append writes ~1 file per TOUCHED bucket and every recover/list
     * walks all of them, so the bucket count must GROW with the corpus —
     * a fixed modulus is simultaneously too many dirs for a 5 k-doc
     * corpus (64 near-empty files per mutation, measured 4-8× the build
     * wall at sf0.1) and far too few for a 10 B-doc one (each bucket's
     * posting slice would be ~1/64 of the corpus, unboundedly large).
-    * Production deployments size docsPerBucket so one bucket's postings
-    * land in the low hundreds of MB and raise maxBuckets to match; the
-    * defaults below keep the local bench honest (derived from the
-    * input's actual row metadata, never from the core count).
+    * A deployment whose buckets' postings outgrow the low hundreds of MB
+    * changes these constants (or passes `nBuckets` to [[build]]); the
+    * values below keep the local bench honest (derived from the input's
+    * actual row metadata, never from the core count).
     */
   val DefaultDocsPerBucket = 2048L
   val DefaultMinBuckets = 4
   val DefaultMaxBuckets = 4096
 
-  /** Scale-adaptive bucket count: ceil(rows / docsPerBucket) clamped to
-    * [minBuckets, maxBuckets], with rows from parquet footer metadata
+  /** Scale-adaptive bucket count (sizing above), with rows from parquet footer metadata
     * ([[graft.model.RowEst]] — no job); [[DefaultBuckets]] when the
     * relation carries no free row bound (the estimate must never cost a
-    * pass over the corpus it is trying to size). `graft.lexindex.buckets`
-    * (> 0) pins the count outright.
+    * pass over the corpus it is trying to size).
     */
-  def autoBuckets(spark: SparkSession, docs: DataFrame): Int = {
-    val pinned = spark.conf.get("graft.lexindex.buckets", "0").toInt
-    if (pinned > 0) pinned
-    else graft.model.RowEst.upperBound(docs) match {
+  def autoBuckets(docs: DataFrame): Int =
+    graft.model.RowEst.upperBound(docs) match {
       case Some(rows) =>
-        val per = spark.conf.get("graft.lexindex.docsPerBucket",
-          DefaultDocsPerBucket.toString).toLong
-        val lo = spark.conf.get("graft.lexindex.minBuckets",
-          DefaultMinBuckets.toString).toInt
-        val hi = spark.conf.get("graft.lexindex.maxBuckets",
-          DefaultMaxBuckets.toString).toInt
-        math.min(hi.toLong, math.max(lo.toLong, (rows + per - 1) / per)).toInt
+        val per = DefaultDocsPerBucket
+        math.min(DefaultMaxBuckets.toLong,
+          math.max(DefaultMinBuckets.toLong, (rows + per - 1) / per)).toInt
       case None => DefaultBuckets
     }
-  }
 
   /** The query terms' bucket ids under the store's recorded modulus,
     * computed by evaluating the SAME Catalyst expressions the build's
@@ -164,7 +154,7 @@ object LexIndex {
     // reroute to auto (r18 advice)
     require(nBuckets >= 0,
       s"nBuckets must be >= 0 (0 = auto-size from corpus metadata), got $nBuckets")
-    val buckets = if (nBuckets > 0) nBuckets else autoBuckets(spark, docs)
+    val buckets = if (nBuckets > 0) nBuckets else autoBuckets(docs)
     require(buckets >= 1, s"need nBuckets >= 1, got $buckets")
     levels.build(spark, dir, batchId)(seq =>
       writeLevel(spark, docs, dir, buckets, seq, 0L, 0.0))

@@ -256,7 +256,7 @@ object NearDedup {
     * (VectorOps.embeddingCorpusPipeline).
     */
   private[graft] def exactPairMaxRows(s: org.apache.spark.sql.SparkSession): Long =
-    s.conf.get("graft.neardedup.exactMaxRows", "20000").toLong
+    graft.GraftConf.NearDedupExactMaxRows(s).toLong
 
   /** Candidate-VOLUME routing cap (`graft.neardedup.exactMaxPairRows`,
     * default 5e7) — the second routing axis (r15, from the r14 verdict):
@@ -271,7 +271,7 @@ object NearDedup {
     * stays on the exact-definition side.
     */
   private[graft] def exactMaxPairRows(s: org.apache.spark.sql.SparkSession): Long =
-    s.conf.get("graft.neardedup.exactMaxPairRows", "50000000").toLong
+    graft.GraftConf.NearDedupExactMaxPairRows(s).toLong
 
   /** The EXACT number of rows the exact route's hot-capped shingle
     * self-join would emit: Σ_s C(f_s, 2) over the under-cap shingle
@@ -425,13 +425,7 @@ object NearDedup {
       "near_dedup_apply",
       applyOracleSql) { (s, dir) =>
       val docs = Tables.documents(s, dir)
-      val pairs = routedJaccardPairs(docs, 0.1)
-        .select(col("i").as("src"), col("j").as("dst"))
-      val cc = GraphOps.connectedComponents(pairs)
-      docs.join(cc.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left_outer")
-        .where(col("label").isNull || col("label") === col("doc_id"))
-        .select(col("doc_id"))
-        .orderBy("doc_id")
+      keepMin(docs, GraphOps.connectedComponents(asEdges(routedJaccardPairs(docs, 0.1))))
     },
 
     // The NIGHTLY form of the apply step — the canonical clustering is
@@ -457,20 +451,7 @@ object NearDedup {
           shingleHashes(col("text"), 3).as("hs"))
         .where(col("hs").isNotNull)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      try {
-        // prior state: clustering of the existing corpus only
-        val pairsE = routedJaccardPairsFromHashes(
-          hashed.where(!col("is_new")).select("doc_id", "hs"), 0.1)
-          .select(col("i").as("src"), col("j").as("dst"))
-        val labels = GraphOps.connectedComponents(pairsE)
-        // nightly absorb: pairs touching the new batch only
-        val pairsNew = routedIncrementalPairs(hashed, 0.1)
-        val cc = GraphOps.connectedComponentsIncremental(labels, pairsNew)
-        docs.join(cc.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left_outer")
-          .where(col("label").isNull || col("label") === col("doc_id"))
-          .select(col("doc_id"))
-          .orderBy("doc_id")
-      } finally hashed.unpersist()
+      try keepMinIncremental(docs, hashed) finally hashed.unpersist()
     },
 
     // The STORE-SERVED nightly apply (r16): identical semantics and
@@ -503,18 +484,7 @@ object NearDedup {
       val hashed = ShingleStore.hashes(s, store)
         .withColumn("is_new", isNew)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      try {
-        val pairsE = routedJaccardPairsFromHashes(
-          hashed.where(!col("is_new")).select("doc_id", "hs"), 0.1)
-          .select(col("i").as("src"), col("j").as("dst"))
-        val labels = GraphOps.connectedComponents(pairsE)
-        val pairsNew = routedIncrementalPairs(hashed, 0.1)
-        val cc = GraphOps.connectedComponentsIncremental(labels, pairsNew)
-        docs.join(cc.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left_outer")
-          .where(col("label").isNull || col("label") === col("doc_id"))
-          .select(col("doc_id"))
-          .orderBy("doc_id")
-      } finally hashed.unpersist()
+      try keepMinIncremental(docs, hashed) finally hashed.unpersist()
     },
 
     // Keep-BEST canonical selection — see [[keepBestCanonical]].
@@ -616,15 +586,32 @@ object NearDedup {
       store: String, docs: DataFrame, threshold: Double = 0.1): DataFrame = {
     val hashed = ShingleStore.hashes(spark, store)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    try {
-      val pairs = routedJaccardPairsFromHashes(hashed, threshold)
-        .select(col("i").as("src"), col("j").as("dst"))
-      val cc = GraphOps.connectedComponents(pairs)
-      docs.join(cc.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left_outer")
-        .where(col("label").isNull || col("label") === col("doc_id"))
-        .select(col("doc_id"))
-        .orderBy("doc_id")
-    } finally hashed.unpersist()
+    try keepMin(docs, GraphOps.connectedComponents(
+      asEdges(routedJaccardPairsFromHashes(hashed, threshold))))
+    finally hashed.unpersist()
+  }
+
+  private def asEdges(pairs: DataFrame): DataFrame =
+    pairs.select(col("i").as("src"), col("j").as("dst"))
+
+  /** The keep-MIN canonical set: every doc outside a cluster plus each
+    * cluster's smallest id, given the clusters' (node, label) labeling.
+    */
+  private def keepMin(docs: DataFrame, labels: DataFrame): DataFrame =
+    docs.join(labels.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left_outer")
+      .where(col("label").isNull || col("label") === col("doc_id"))
+      .select(col("doc_id"))
+      .orderBy("doc_id")
+
+  /** The nightly keep-min apply over (doc_id, hs, is_new) signatures: the
+    * prior state clusters the existing corpus only, then the absorb runs
+    * incremental CC over the pairs that touch the new batch.
+    */
+  private def keepMinIncremental(docs: DataFrame, hashed: DataFrame): DataFrame = {
+    val labels = GraphOps.connectedComponents(asEdges(routedJaccardPairsFromHashes(
+      hashed.where(!col("is_new")).select("doc_id", "hs"), 0.1)))
+    keepMin(docs, GraphOps.connectedComponentsIncremental(labels,
+      routedIncrementalPairs(hashed, 0.1)))
   }
 
   /** Shared DuckDB oracle for near_dedup_keep_best AND its incremental
@@ -761,9 +748,7 @@ object NearDedup {
     */
   def keepBestCanonical(docs: DataFrame, threshold: Double = 0.1,
       rule: KeepRule = KeepRule.quality): DataFrame = {
-    val pairs = routedJaccardPairs(docs, threshold)
-      .select(col("i").as("src"), col("j").as("dst"))
-    val cc = GraphOps.connectedComponents(pairs)
+    val cc = GraphOps.connectedComponents(asEdges(routedJaccardPairs(docs, threshold)))
     docs.select(col("doc_id"), rule.score.as("q"))
       .join(cc.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left_outer")
       .withColumn("cluster", coalesce(col("label"), col("doc_id")))
@@ -932,10 +917,8 @@ object NearDedup {
       threshold: Double): DataFrame = {
     {
       // prior state: the existing corpus's labeling and kept table
-      val pairsE = routedJaccardPairsFromHashes(
-        hashed.where(!col("is_new")).select("doc_id", "hs"), threshold)
-        .select(col("i").as("src"), col("j").as("dst"))
-      val labels = GraphOps.connectedComponents(pairsE)
+      val labels = GraphOps.connectedComponents(asEdges(routedJaccardPairsFromHashes(
+        hashed.where(!col("is_new")).select("doc_id", "hs"), threshold)))
         .localCheckpoint() // feeds the incremental CC AND the change diff
       val keptPrior = argmaxBest(
         docsQ.where(!col("is_new"))

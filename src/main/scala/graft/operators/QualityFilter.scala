@@ -167,7 +167,7 @@ object QualityFilter {
     */
   def trainDeclaredModel(s: org.apache.spark.sql.SparkSession,
       docs: DataFrame): QualityModel = {
-    val dim = s.conf.get("graft.quality.dim", "4096").toInt
+    val dim = graft.GraftConf.QualityDim(s).toInt
     val split = conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
       .cast("int") % 100
     trainQualityModel(docs.where(split < 80), stopRatioTeacher(0.06), dim)

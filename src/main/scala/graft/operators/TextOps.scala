@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{GraftConf, QueryDef, Tables}
 import graft.QueryDef.withOracle
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.DataFrame
@@ -96,8 +96,8 @@ object TextOps {
     */
   def unigramLogprob(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
-    val minCount = spark.conf.get("graft.unigram.minCount", "2").toInt
-    val maxVocab = spark.conf.get("graft.unigram.maxVocab", "5000000").toLong
+    val minCount = GraftConf.UnigramMinCount(spark).toInt
+    val maxVocab = GraftConf.UnigramMaxVocab(spark).toLong
     val oovCount = math.max(minCount - 1, 1).toLong
     val tok = docs.select(col("doc_id"), explode(tokens(col("text"))).as("t"))
     val vcAll = tok.groupBy("t").agg(count(lit(1)).as("c"))
@@ -149,9 +149,9 @@ object TextOps {
     */
   def bigramLogprob(docs: DataFrame, lambda: Double = 0.75): DataFrame = {
     val spark = docs.sparkSession
-    val minCount = spark.conf.get("graft.bigram.minCount", "2").toInt
-    val maxTypes = spark.conf.get("graft.bigram.maxTypes", "5000000").toLong
-    val maxVocab = spark.conf.get("graft.unigram.maxVocab", "5000000").toLong
+    val minCount = GraftConf.BigramMinCount(spark).toInt
+    val maxTypes = GraftConf.BigramMaxTypes(spark).toLong
+    val maxVocab = GraftConf.UnigramMaxVocab(spark).toLong
     val oov = math.max(minCount - 1, 1).toLong
     val tok = docs
       .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("i", "t")))
@@ -185,6 +185,11 @@ object TextOps {
           lit(1.0 - lambda) * coalesce(col("cb"), lit(oov)) / lit(total))), 4).as("nll"))
   }
 
+  /** Trigram types up to which [[trigramLogprob]] broadcasts the
+    * floored trigram counts.
+    */
+  val TrigramMaxTypes = 5000000L
+
   /** Per-doc mean NLL under an interpolated TRIGRAM model — the
     * KenLM-grade quality-filter fidelity step past [[bigramLogprob]]
     * (r15 task 4):
@@ -208,8 +213,8 @@ object TextOps {
     *     DuckDB oracle (which computes the unbounded model) stays exact
     *     at any scale factor.
     *   - Size guards: each floored count relation broadcasts only while
-    *     its type count fits (`graft.trigram.maxTypes` /
-    *     `graft.bigram.maxTypes` / `graft.unigram.maxVocab`, default 5M
+    *     its type count fits ([[TrigramMaxTypes]] /
+    *     `graft.bigram.maxTypes` / `graft.unigram.maxVocab`, 5M
     *     each — the sample_importance broadcast-until-capped stance);
     *     above a guard that score join demotes to shuffle — slower,
     *     cannot OOM.
@@ -229,10 +234,9 @@ object TextOps {
     require(math.abs(lambda3 + lambda2 + lambda1 - 1.0) < 1e-9,
       s"interpolation weights must sum to 1, got $lambda3 + $lambda2 + $lambda1")
     val spark = docs.sparkSession
-    val minCount = spark.conf.get("graft.trigram.minCount", "2").toInt
-    val maxTri = spark.conf.get("graft.trigram.maxTypes", "5000000").toLong
-    val maxTypes = spark.conf.get("graft.bigram.maxTypes", "5000000").toLong
-    val maxVocab = spark.conf.get("graft.unigram.maxVocab", "5000000").toLong
+    val minCount = GraftConf.TrigramMinCount(spark).toInt
+    val maxTypes = GraftConf.BigramMaxTypes(spark).toLong
+    val maxVocab = GraftConf.UnigramMaxVocab(spark).toLong
     val oov = math.max(minCount - 1, 1).toLong
     val tok = docs
       .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("i", "t")))
@@ -262,7 +266,7 @@ object TextOps {
     val c3 = c3All.where(col("c3") >= minCount)
     val c1Side = if (uniTypes <= maxVocab) broadcast(c1) else c1
     val c2Side = if (bgTypes <= maxTypes) broadcast(c2) else c2
-    val c3Side = if (tgTypes <= maxTri) broadcast(c3) else c3
+    val c3Side = if (tgTypes <= TrigramMaxTypes) broadcast(c3) else c3
     tg
       .join(c3Side, Seq("w1", "w2", "w3"), "left_outer")
       .join(c2Side.select(col("w1"), col("w2"), col("c2").as("cctx")),
@@ -1540,7 +1544,7 @@ object TextOps {
     */
   private[graft] def spanScrubDirectMaxRows(
       s: org.apache.spark.sql.SparkSession): Long =
-    s.conf.get("graft.spanscrub.directMaxRows", "200000").toLong
+    GraftConf.SpanScrubDirectMaxRows(s).toLong
 
   /** Volume-routed exact-substring scrub: [[spanScrub]] at or below
     * [[spanScrubDirectMaxRows]] rows, [[spanScrubWindowed]] above. The

@@ -89,7 +89,7 @@ object VectorIndex {
         if (localCoarseTrain)
           VectorOps.trainQuantizerLocal(trainIn, cells, maxTrainRows)
         else VectorOps.trainQuantizer(trainIn, cells, maxTrainRows, n)
-      val assigned = VectorOps.ivfPqAssign(spark, unitEmb, centroidArr)
+      val assigned = VectorOps.ivfPqAssign(unitEmb, centroidArr)
       val books = VectorOps.trainPqCodebooks(
         assigned.select(col("residual").as("embedding")), mSub, kCent, dims,
         maxTrainRows, n)
@@ -203,7 +203,7 @@ object VectorIndex {
       val (coarse, books) = readCodebooks(spark, dir)
       val unitEmb = VectorOps.withUnit(newEmb, "embedding", "unit")
       levels.writeLevel(
-        VectorOps.ivfPqEncode(VectorOps.ivfPqAssign(spark, unitEmb, coarse), books), dir, seq)
+        VectorOps.ivfPqEncode(VectorOps.ivfPqAssign(unitEmb, coarse), books), dir, seq)
       Seq(prev.getAs[Int]("dims"))
     }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{GraftConf, QueryDef, Tables}
 import graft.QueryDef.{noOracle, withOracle}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -91,7 +91,7 @@ object VectorOps {
     */
   def hybridSearchRrf(docs: DataFrame, emb: DataFrame, qTerms: Seq[String],
       probeId: Long, depth: Int = 50, k: Int = 10, rrfK: Int = 60): DataFrame =
-    hybridFuse(
+    hybridFuseSolo(
       TextOps.bm25Scores(docs.where(col("doc_id") =!= probeId), qTerms),
       bruteSemScores(emb, probeId), depth, k, rrfK)
 
@@ -153,7 +153,7 @@ object VectorOps {
   def hybridSearchRrfIndexed(spark: SparkSession, indexDir: String,
       emb: DataFrame, qTerms: Seq[String], probeId: Long,
       depth: Int = 50, k: Int = 10, rrfK: Int = 60): DataFrame =
-    hybridFuse(LexIndex.bm25Scores(spark, indexDir, qTerms),
+    hybridFuseSolo(LexIndex.bm25Scores(spark, indexDir, qTerms),
       bruteSemScores(emb, probeId), depth, k, rrfK)
 
   /** [[hybridSearchRrf]] with BOTH branches index-served — the 100 TB
@@ -176,13 +176,13 @@ object VectorOps {
         probes = emb.where(col("vec_id") === probeId),
         k = depth, nProbe = nProbe, rerank = rerank)
       .select(col("neighbor_id").as("doc_id"), col("cos"))
-    hybridFuse(LexIndex.bm25Scores(spark, lexDir, qTerms), sem,
+    hybridFuseSolo(LexIndex.bm25Scores(spark, lexDir, qTerms), sem,
       depth, k, rrfK)
   }
 
   /** The exact semantic branch: one corpus scan against the broadcast
     * probe — (doc_id, cos rounded to 4), the (id, score) contract
-    * [[hybridFuse]] ranks under (shared verbatim by the IVF-served
+    * [[hybridFuseBatch]] ranks under (shared verbatim by the IVF-served
     * branch, which is what makes the index swap-in a drop-in).
     */
   private def bruteSemScores(emb: DataFrame, probeId: Long): DataFrame = {
@@ -194,31 +194,13 @@ object VectorOps {
         round(cosine(col("pe"), col("embedding")), 4).as("cos"))
   }
 
-  private def hybridFuse(lexScores: DataFrame, semScores: DataFrame,
+  /** A solo request fused as a batch of one: both (id, score) branches
+    * under the constant qid 0, which the fused output then drops.
+    */
+  private def hybridFuseSolo(lexScores: DataFrame, semScores: DataFrame,
       depth: Int, k: Int, rrfK: Int): DataFrame = {
-    val sess = lexScores.sparkSession
-    import sess.implicits._
-    def branchRanks(scores: DataFrame, rankName: String): DataFrame =
-      scores.as[(Long, Double)]
-        .groupByKey(_ => 0)
-        .mapValues { case (id, v) => (id, v) }
-        .agg(graft.functions.TopKAgg.TopK(depth).toColumn.name("top"))
-        .select(posexplode(col("top.items")).as(Seq("pos", "e")))
-        .select(col("e.id").as("doc_id"), (col("pos") + 1).as(rankName))
-    val lex = branchRanks(lexScores, "lex_rank")
-    val sem = branchRanks(semScores, "sem_rank")
-    // the fusion relation is ≤ 2·depth rows — the global window is over
-    // a constant-size input, not the corpus
-    lex.join(sem, Seq("doc_id"), "full_outer")
-      .withColumn("rrf", round(
-        coalesce(lit(1.0) / (lit(rrfK) + col("lex_rank")), lit(0.0))
-          + coalesce(lit(1.0) / (lit(rrfK) + col("sem_rank")), lit(0.0)), 6))
-      .withColumn("rank",
-        row_number().over(Window.orderBy(col("rrf").desc, col("doc_id"))))
-      .where(col("rank") <= k)
-      .select(col("rank"), col("doc_id"), col("rrf"),
-        col("lex_rank"), col("sem_rank"))
-      .orderBy("rank")
+    def one(scores: DataFrame) = scores.select(lit(0).as("qid") +: scores.columns.map(col): _*)
+    hybridFuseBatch(one(lexScores), one(semScores), depth, k, rrfK).drop("qid")
   }
 
   /** Hybrid retrieval for a BATCH of requests (qid, terms, probe id) —
@@ -307,9 +289,10 @@ object VectorOps {
 
   /** Per-qid rrf fusion of two (qid, doc_id, score) branch relations:
     * each branch ranks per qid to `depth` through the map-side TopKAgg
-    * heap (same ordering contract as the solo [[hybridFuse]] — rounded
-    * score desc, id asc), so the fusion join and the per-qid rank window
-    * see ≤ 2·depth rows per request, never the corpus.
+    * heap (rounded score desc, id asc), so the fusion join and the
+    * per-qid rank window see ≤ 2·depth rows per request, never the
+    * corpus. The solo forms run through it as a batch of one
+    * ([[hybridFuseSolo]]).
     */
   private def hybridFuseBatch(lexScores: DataFrame, semScores: DataFrame,
       depth: Int, k: Int, rrfK: Int): DataFrame = {
@@ -1027,8 +1010,7 @@ object VectorOps {
     // multi-assign semantic dedup, the documented 100 TB path.
     noOracle("pipeline_embedding_corpus") { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
-      val lshMaxRows =
-        s.conf.get("graft.embpipe.lshMaxRows", "5000").toLong
+      val lshMaxRows = GraftConf.EmbPipeLshMaxRows(s).toLong
       // metadata row count where available (parquet footers via RowEst).
       // EXACT count only (r18 verdict "what's wrong" #5): unlike the
       // dedup/span families, the two routes here are NOT oracle-proven
@@ -1219,8 +1201,8 @@ object VectorOps {
     * [[trainQuantizer]]/nearestCentroid machinery IVF search uses), then
     * self-join per cell with exact cosine at `threshold`. The shuffle
     * carries one corpus copy keyed by cell; a cell's pairs never leave
-    * its partition. `maxCell` (conf `graft.semantic.maxCell`) is the
-    * hot-cell quadratic guard — an over-full cell (degenerate clustering,
+    * its partition. `maxCell` is the hot-cell quadratic guard — an
+    * over-full cell (degenerate clustering,
     * duplicate-heavy corpora) is dropped and LOGGED by dropHotBuckets,
     * the same lossy-but-loud policy as the minhash/SRP band paths.
     * Cross-cell near-dups are missed by design; the LSH path is the
@@ -1245,13 +1227,10 @@ object VectorOps {
     */
   def cosineNearDupSemantic(spark: SparkSession, emb: DataFrame,
       threshold: Double, nCells: Int = 0,
-      maxTrainRows: Long = 100000L, maxCell: Int = 0,
+      maxTrainRows: Long = 100000L, maxCell: Int = 5000,
       nAssign: Int = 2): DataFrame = {
     val n = emb.count()
     val cells = if (nCells > 0) nCells else ivfCells(n)
-    val cap =
-      if (maxCell > 0) maxCell
-      else spark.conf.getOption("graft.semantic.maxCell").map(_.toInt).getOrElse(5000)
     // spherical quantizer (see annIvf): cells partition by the metric
     // the dedup thresholds on (cosine), so fewer near-dup pairs straddle
     // a Voronoi boundary; the exact verify still runs on raw vectors
@@ -1268,7 +1247,7 @@ object VectorOps {
       val assigned = unitEmb.select(col("vec_id"), col("embedding"),
         org.apache.spark.sql.graft.SrpNative
           .nearestCentroid(col("unit"), centroidArr).as("cell"))
-      val bounded = NearDedup.dropHotBuckets(assigned, Seq("cell"), cap, "semantic-cell")
+      val bounded = NearDedup.dropHotBuckets(assigned, Seq("cell"), maxCell, "semantic-cell")
       val a = bounded.select(col("cell"), col("vec_id").as("i"), col("embedding").as("ei"))
       val b = bounded.select(col("cell"), col("vec_id").as("j"), col("embedding").as("ej"))
       a.join(b, Seq("cell"))
@@ -1292,7 +1271,7 @@ object VectorOps {
       val assigned = unitEmb.select(col("vec_id"), col("embedding"),
         explode(org.apache.spark.sql.graft.SrpNative
           .nearestCentroids(col("unit"), centroidArr, assign)).as("cell"))
-      val bounded = NearDedup.dropHotBuckets(assigned, Seq("cell"), cap, "semantic-cell")
+      val bounded = NearDedup.dropHotBuckets(assigned, Seq("cell"), maxCell, "semantic-cell")
       val a = bounded.select(col("cell"), col("vec_id").as("i"), col("embedding").as("ei"))
       val b = bounded.select(col("cell"), col("vec_id").as("j"), col("embedding").as("ej"))
       a.join(b, Seq("cell"))
@@ -1318,13 +1297,6 @@ object VectorOps {
   /** The trained centroids as the broadcast-sized (cell, centroid)
     * side table every IVF path joins against (≤4096 × dims floats).
     */
-  private def centroidsDF(spark: SparkSession,
-      centroidArr: Array[Array[Float]]): DataFrame = {
-    import spark.implicits._
-    centroidArr.zipWithIndex.map { case (v, i) => (i, v) }
-      .toSeq.toDF("cell", "centroid")
-  }
-
   /** nProbe nearest cells per probe under the shared spherical-L2
     * ranking — the ONE place the cell-selection metric lives (annIvf
     * and ivfPqSearch both consume it; round 9's mixed-metric recall
@@ -1832,7 +1804,7 @@ object VectorOps {
     val centroidArr = trainQuantizer(
       unitEmb.select(col("vec_id"), col("unit").as("embedding")),
       cells, maxTrainRows, n)
-    val assigned = ivfPqAssign(spark, unitEmb, centroidArr)
+    val assigned = ivfPqAssign(unitEmb, centroidArr)
     val books = trainPqCodebooks(
       assigned.select(col("residual").as("embedding")), mSub, kCent, dims,
       maxTrainRows, n)
@@ -1841,22 +1813,23 @@ object VectorOps {
       k, nProbe, rerank)
   }
 
-  /** Cell assignment + residual for the IVF-PQ family: one codegen pass
-    * for the nearest (spherical) centroid, a broadcast join against the
-    * cells-sized centroid table, a codegen'd zip_with for the residual.
-    * Input needs `vec_id`, `embedding`, `unit` (see [[withUnit]]); the
-    * raw `embedding` rides through for [[ivfPqEncode]].
+  /** Cell assignment + residual for the IVF-PQ family, row-local: one
+    * codegen pass for the nearest (spherical) centroid, then a
+    * codegen'd zip_with against that cell's row of the centroid table,
+    * which rides the plan as a literal (no join, so no broadcast job).
+    * Rows without a unit vector get no cell and are dropped. Input
+    * needs `vec_id`, `embedding`, `unit` (see [[withUnit]]); the raw
+    * `embedding` rides through for [[ivfPqEncode]].
     */
-  def ivfPqAssign(spark: SparkSession, unitEmb: DataFrame,
-      centroidArr: Array[Array[Float]]): DataFrame = {
-    val centroids = centroidsDF(spark, centroidArr)
+  def ivfPqAssign(unitEmb: DataFrame,
+      centroidArr: Array[Array[Float]]): DataFrame =
     unitEmb.select(col("vec_id").as("c"), col("embedding"), col("unit"),
       org.apache.spark.sql.graft.SrpNative
         .nearestCentroid(col("unit"), centroidArr).as("cell"))
-      .join(broadcast(centroids), "cell")
-      .withColumn("residual",
-        zip_with(col("unit"), col("centroid"), (u, cv) => (u - cv).cast("float")))
-  }
+      .where(col("cell").isNotNull)
+      .withColumn("residual", zip_with(col("unit"),
+        element_at(typedLit(centroidArr), col("cell") + 1),
+        (u, cv) => (u - cv).cast("float")))
 
   /** The index rows: (id, cell, m residual-PQ bytes, raw embedding).
     * The ADC scan reads the codes; the exact rerank of the top
@@ -2067,20 +2040,17 @@ object VectorOps {
       .orderBy("probe_id", "rank")
   }
 
-  /** 100 TB guard: refuse the all-pairs form above a row budget — the
-    * caller must switch to the LSH form. The count is one cheap
+  /** 100 TB guard: refuse the O(n²) all-pairs form above a row budget —
+    * the caller must switch to the LSH form. The count is one cheap
     * column-free aggregate job (no vector bytes read), paid once before
-    * committing to an O(n²) join.
+    * committing to the join. The default 20k rows is already 2×10⁸
+    * candidate pairs — roughly the most a single job should spend on the
+    * exact form; anything larger belongs on the bucketed paths (ann_lsh /
+    * near_dedup_minhash). Raise [[GraftConf.AllPairsMaxRows]] per session
+    * if a one-off exact run is really wanted.
     */
-  /** Refuses the O(n²) all-pairs form above `maxRows`. 20k rows is already
-    * 2×10⁸ candidate pairs — roughly the most a single job should spend on
-    * the exact form; anything larger belongs on the bucketed paths
-    * (ann_lsh / near_dedup_minhash). Raise deliberately per-session via
-    * `graft.allpairs.maxRows` if a one-off exact run is really wanted.
-    */
-  def pairGuard(df: DataFrame, maxRows: Option[Long] = None): Unit = {
-    val cap = maxRows.getOrElse(
-      df.sparkSession.conf.get("graft.allpairs.maxRows", "20000").toLong)
+  def pairGuard(df: DataFrame): Unit = {
+    val cap = GraftConf.AllPairsMaxRows(df.sparkSession).toLong
     val n = df.count()
     require(n <= cap,
       s"all-pairs similarity on $n rows exceeds the $cap guard; use ann_lsh")

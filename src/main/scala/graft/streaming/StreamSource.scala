@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.GraftConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -10,7 +11,7 @@ import org.apache.spark.sql.types.StructType
   * TridentSpeedLayer.java:66-90). This sandbox has no broker (and no
   * kafka connector jar), so the tested default replays the events table
   * through the file source — but production wiring must be a conf, not a
-  * code edit: `spark.conf.set("graft.stream.source", "kafka")` plus the
+  * code edit: setting [[graft.GraftConf.StreamSourceKind]] to `kafka` plus the
   * broker/topic confs switches the SAME speed-layer queries onto
   * `readStream.format("kafka")`, with records JSON-decoded to the events
   * schema. The spec-to-be-requested is exposed as data ([[resolve]]) so
@@ -18,24 +19,23 @@ import org.apache.spark.sql.types.StructType
   */
 object StreamSource {
 
-  val SourceKey = "graft.stream.source" // files (default) | kafka
-  val BrokersKey = "graft.stream.kafka.brokers"
-  val TopicKey = "graft.stream.kafka.topic"
-  val StartingOffsetsKey = "graft.stream.kafka.startingOffsets"
+  val SourceKey = GraftConf.StreamSourceKind.name
+  val BrokersKey = GraftConf.KafkaBrokers.name
+  val TopicKey = GraftConf.KafkaTopic.name
 
   /** What the seam will ask Spark for, as plain data. */
   final case class SourceSpec(format: String, options: Map[String, String])
 
   def resolve(conf: String => Option[String]): SourceSpec =
-    conf(SourceKey).getOrElse("files") match {
+    GraftConf.StreamSourceKind.in(conf) match {
       case "files" => SourceSpec("parquet", Map.empty)
       case "kafka" =>
         val brokers = conf(BrokersKey).getOrElse(throw new IllegalArgumentException(
           s"$BrokersKey must be set when $SourceKey=kafka"))
         SourceSpec("kafka", Map(
           "kafka.bootstrap.servers" -> brokers,
-          "subscribe" -> conf(TopicKey).getOrElse("pageviews"),
-          "startingOffsets" -> conf(StartingOffsetsKey).getOrElse("earliest")))
+          "subscribe" -> GraftConf.KafkaTopic.in(conf),
+          "startingOffsets" -> GraftConf.KafkaStartingOffsets.in(conf)))
       case other => throw new IllegalArgumentException(
         s"unknown $SourceKey '$other' (expected files|kafka)")
     }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import graft.{QueryDef, Tables}
+import graft.{GraftConf, QueryDef, Tables}
 import graft.QueryDef.{noOracle, withOracle}
 import graft.functions.TimeFunctions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -65,33 +65,20 @@ object StreamViews {
   private def stagedDoubledEventsDir(dir: String): String =
     stagedDir("dup", dir, "a.parquet" -> "events", "b.parquet" -> "events")
 
-  /** Run `f` with the shuffle-partition count a *streaming* query should
-    * use for its state stores. A stateful streaming query instantiates
-    * (and per-microbatch commits) one state store per shuffle partition,
-    * so state parallelism must be sized to the STATE volume, not to the
-    * session's batch shuffle setting — measured 3.3× on the stateful
-    * queries here (32 → 8 partitions at sf0.1). The partition count is
-    * pinned into the checkpoint at query start; production raises
-    * `graft.stream.statePartitions` for large keyspaces (it only applies
-    * to new checkpoints — these queries stage fresh ones per run).
-    */
-  private def withStateParallelism[A](spark: SparkSession)(f: => A): A =
-    withStreamStateConf(spark)(f)
-
   /** Fully-qualified provider for `graft.stream.stateStore=rocksdb`. */
   val RocksDBProvider: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Run `f` with the streaming-state configuration the graft confs ask
-    * for, restoring the session's settings afterwards. Two seams:
+  /** Run `f` with the streaming-state configuration, restoring the
+    * session's settings afterwards. Two seams:
     *
-    *  - `graft.stream.statePartitions` (default 8): a stateful streaming
+    *  - [[StatePartitions]] (8): a stateful streaming
     *    query instantiates (and per-microbatch commits) one state store
     *    per shuffle partition, so state parallelism must be sized to the
     *    STATE volume, not the session's batch shuffle setting — measured
     *    3.3× on the stateful queries here (32 → 8 partitions at sf0.1).
-    *    Pinned into the checkpoint at query start; production raises it
-    *    for large keyspaces (applies to new checkpoints only — these
+    *    Pinned into the checkpoint at query start; a large keyspace
+    *    needs a larger constant (applies to new checkpoints only — these
     *    queries stage fresh ones per run).
     *  - `graft.stream.stateStore` = `memory` (default) | `rocksdb`: the
     *    100 TB answer for sessionize/dedup state. The default provider
@@ -102,21 +89,23 @@ object StreamViews {
     *    (CassandraState.java:47-59), minus the extra cluster. Results
     *    are provider-independent (StateStoreSpec pins it).
     */
+  private val StatePartitions = 8
+
   private[graft] def withStreamStateConf[A](spark: SparkSession)(f: => A): A = {
     val key = "spark.sql.shuffle.partitions"
     val provKey = "spark.sql.streaming.stateStore.providerClass"
     // validate BEFORE any session mutation: throwing between the first
     // conf.set and the try would leak the state-partition setting into
     // every subsequent batch query of the session
-    val provider = spark.conf.get("graft.stream.stateStore", "memory") match {
+    val provider = GraftConf.StreamStateStore(spark) match {
       case "rocksdb" => Some(RocksDBProvider)
       case "memory" => None // provider default (HDFSBackedStateStoreProvider)
       case other => throw new IllegalArgumentException(
-        s"graft.stream.stateStore must be memory|rocksdb, got '$other'")
+        s"${GraftConf.StreamStateStore.name} must be memory|rocksdb, got '$other'")
     }
     val prev = spark.conf.get(key)
     val prevProv = spark.conf.getOption(provKey)
-    spark.conf.set(key, spark.conf.get("graft.stream.statePartitions", "8"))
+    spark.conf.set(key, StatePartitions.toString)
     provider.foreach(p => spark.conf.set(provKey, p))
     try f finally {
       spark.conf.set(key, prev)
@@ -160,7 +149,7 @@ object StreamViews {
     */
   private def runToMemory(spark: SparkSession, dir: String, outputMode: String,
       needsFinalFlush: Boolean = false)(
-      transform: DataFrame => DataFrame): DataFrame = withStateParallelism(spark) {
+      transform: DataFrame => DataFrame): DataFrame = withStreamStateConf(spark) {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val prevNoData = spark.conf.getOption("spark.sql.streaming.noDataMicroBatches.enabled")
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", needsFinalFlush)
@@ -190,7 +179,7 @@ object StreamViews {
     // drop entries pinned to stopped sessions so the object-level cache
     // can't grow across session lifecycles
     sessionizeCache.entrySet().removeIf(e => e.getKey._1.sparkContext.isStopped)
-    sessionizeCache.computeIfAbsent((s, dir), _ => withStateParallelism(s) {
+    sessionizeCache.computeIfAbsent((s, dir), _ => withStreamStateConf(s) {
       import s.implicits._
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       // the trailing NO-DATA microbatch is what fires the event-time
@@ -357,7 +346,7 @@ object StreamViews {
     withOracle(
       "stream_dedup",
       "SELECT count(*) AS n FROM events") { (s, dir) =>
-      withStateParallelism(s) {
+      withStreamStateConf(s) {
         val schema = Tables.eventsFileSchema(s, dir)
         sinkToMemory(s,
           s.readStream.schema(schema).parquet(stagedDoubledEventsDir(dir))
@@ -377,7 +366,7 @@ object StreamViews {
     withOracle(
       "stream_dedup_bounded",
       "SELECT count(*) AS n FROM events") { (s, dir) =>
-      withStateParallelism(s) {
+      withStreamStateConf(s) {
         val schema = Tables.eventsFileSchema(s, dir)
         sinkToMemory(s,
           Tables.normalizeTs(
@@ -405,20 +394,19 @@ object StreamViews {
       val ev = graft.Tables.events(s, dir)
       // The cutoff is DEPLOYMENT METADATA — the last batch run's high
       // watermark, which a production serving layer reads from the batch
-      // pipeline's commit record, not from the data. `graft.serving.
-      // cutoffSecs` is that seam; only when unset do we derive a
+      // pipeline's commit record, not from the data. GraftConf.
+      // ServingCutoffSecs is that seam; only when unset do we derive a
       // deterministic stand-in (~4/5 of the event-time span) with one
       // 2-scalar min/max scan. The batch view owns [min, cutoff), the
       // speed view [cutoff, max].
-      val cutoff = s.conf.getOption("graft.serving.cutoffSecs")
-        .map(_.toLong).getOrElse {
-          val mm = ev.agg(min(col("ts_secs")), max(col("ts_secs"))).head()
-          // empty events: the global min/max agg returns one all-null
-          // row — any split point yields the same (empty) answer, so
-          // take 0 rather than NPE on the null dereference
-          if (mm.isNullAt(0)) 0L
-          else mm.getLong(0) + (mm.getLong(1) - mm.getLong(0)) * 4 / 5
-        }
+      val cutoff = GraftConf.ServingCutoffSecs(s).map(_.toLong).getOrElse {
+        val mm = ev.agg(min(col("ts_secs")), max(col("ts_secs"))).head()
+        // empty events: the global min/max agg returns one all-null
+        // row — any split point yields the same (empty) answer, so
+        // take 0 rather than NPE on the null dereference
+        if (mm.isNullAt(0)) 0L
+        else mm.getLong(0) + (mm.getLong(1) - mm.getLong(0)) * 4 / 5
+      }
       val batchView = ev.where(col("ts_secs") < cutoff)
         .groupBy(col("event_type").as("url"), hourBucket(col("ts_secs")).as("hbv"))
         .agg(count(lit(1)).as("pv"))
@@ -449,7 +437,7 @@ object StreamViews {
          |  ON p.user_id = c.user_id
          | AND c.ts_secs BETWEEN p.ts_secs - 3600 AND p.ts_secs
          |ORDER BY purchase_id, click_id""".stripMargin) { (s, dir) =>
-      withStateParallelism(s) {
+      withStreamStateConf(s) {
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val schema = Tables.eventsRaw(s, dir).schema
         def side(kind: String, idAs: String, userAs: String, tsAs: String) =
@@ -551,7 +539,7 @@ object StreamViews {
       // testdata; a mutating corpus would need a content key). Keyed on
       // graft.quality.dim too — a mid-session conf change must not serve
       // a model of the wrong feature dimension.
-      val dimKey = s.conf.get("graft.quality.dim", "4096")
+      val dimKey = GraftConf.QualityDim(s)
       val m = qualityModelCache.computeIfAbsent(s"qmodel|$dimKey|$dir",
         _ => graft.operators.QualityFilter.trainDeclaredModel(s, docs))
       val schema = docs.schema
@@ -720,7 +708,7 @@ object StreamViews {
       // a micro-batch relation carries no free row metadata (autoBuckets
       // would abstain to the fixed fallback), but the staged intake dir
       // does — size the store's modulus from the corpus it will fold
-      val nb = graft.operators.LexIndex.autoBuckets(s, s.read.parquet(docsDir))
+      val nb = graft.operators.LexIndex.autoBuckets(s.read.parquet(docsDir))
       val q = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(docsDir)
         .writeStream
@@ -814,7 +802,7 @@ object StreamViews {
       val schema = s.read.parquet(docsDir).schema
       // micro-batch relations carry no free row metadata — size the
       // bootstrap's modulus from the staged intake dir (stream_lex_append)
-      val nb = LexIndex.autoBuckets(s, s.read.parquet(docsDir))
+      val nb = LexIndex.autoBuckets(s.read.parquet(docsDir))
       @volatile var staged: Option[Long] = None
       val q = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(docsDir)

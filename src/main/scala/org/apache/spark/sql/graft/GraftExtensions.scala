@@ -18,8 +18,10 @@ import org.apache.spark.sql.internal.SQLConf
   * rewrite happens before distinct-aggregate planning.
   */
 case class ApproxDistinctRewrite(lgK: Int = 14) extends Rule[LogicalPlan] {
-  private def enabled: Boolean =
-    SQLConf.get.getConfString("graft.sql.approxDistinct", "false") == "true"
+  private def enabled: Boolean = {
+    val key = _root_.graft.GraftConf.SqlApproxDistinct
+    SQLConf.get.getConfString(key.name, key.default) == "true"
+  }
 
   // HllSketchAgg only accepts these input types (its checkInputDataTypes);
   // rewriting a count(DISTINCT <double>) would turn a valid exact query

@@ -192,7 +192,7 @@ class VectorIndexSpec extends SparkSpec {
     // with the read-back books — the float round trip is exact
     val (coarse, books) = booksAfter
     val expected = VectorOps.ivfPqEncode(
-      VectorOps.ivfPqAssign(spark, VectorOps.withUnit(odds, "embedding", "unit"), coarse),
+      VectorOps.ivfPqAssign(VectorOps.withUnit(odds, "embedding", "unit"), coarse),
       books)
       .select($"c", $"cell", hex($"codes").as("h")).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
