@@ -28,7 +28,8 @@ object GraftConf {
     * (or refuses to run without it).
     */
   final case class OptionalKey(name: String, doc: String) extends Entry {
-    def apply(spark: SparkSession): Option[String] = spark.conf.getOption(name)
+    def apply(spark: SparkSession): Option[String] = in(spark.conf.getOption)
+    def in(conf: String => Option[String]): Option[String] = conf(name)
   }
 
   val AllPairsMaxRows = Key("graft.allpairs.maxRows", "20000",

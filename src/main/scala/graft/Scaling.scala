@@ -218,6 +218,9 @@ object Scaling {
     // a single query after a plan change without the full ~1h sweep
     // (merge the filtered artifact into the round file by hand)
     val only = args.lift(1).map(_.split(",").toSet)
+    for (names <- only; unknown = names -- Targets.map(_._1) if unknown.nonEmpty)
+      throw new IllegalArgumentException(
+        s"not a scaling target: ${unknown.toSeq.sorted.mkString(",")} (see Scaling.Targets)")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.get("SPARK_GRAFT_SCALING_REPS")
       .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ >= 1).getOrElse(3)

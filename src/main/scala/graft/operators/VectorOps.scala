@@ -1201,7 +1201,7 @@ object VectorOps {
     * [[trainQuantizer]]/nearestCentroid machinery IVF search uses), then
     * self-join per cell with exact cosine at `threshold`. The shuffle
     * carries one corpus copy keyed by cell; a cell's pairs never leave
-    * its partition. `maxCell` is the hot-cell quadratic guard — an
+    * its partition. [[SemanticMaxCell]] is the hot-cell quadratic guard — an
     * over-full cell (degenerate clustering,
     * duplicate-heavy corpora) is dropped and LOGGED by dropHotBuckets,
     * the same lossy-but-loud policy as the minhash/SRP band paths.
@@ -1225,10 +1225,12 @@ object VectorOps {
     * throughput-bound passes that tolerate boundary misses; both
     * operating points stay tracked per round in RECALL_r{N}.json.
     */
+  /** Rows above which [[cosineNearDupSemantic]] drops a cell. */
+  val SemanticMaxCell = 5000
+
   def cosineNearDupSemantic(spark: SparkSession, emb: DataFrame,
       threshold: Double, nCells: Int = 0,
-      maxTrainRows: Long = 100000L, maxCell: Int = 5000,
-      nAssign: Int = 2): DataFrame = {
+      maxTrainRows: Long = 100000L, nAssign: Int = 2): DataFrame = {
     val n = emb.count()
     val cells = if (nCells > 0) nCells else ivfCells(n)
     // spherical quantizer (see annIvf): cells partition by the metric
@@ -1247,7 +1249,7 @@ object VectorOps {
       val assigned = unitEmb.select(col("vec_id"), col("embedding"),
         org.apache.spark.sql.graft.SrpNative
           .nearestCentroid(col("unit"), centroidArr).as("cell"))
-      val bounded = NearDedup.dropHotBuckets(assigned, Seq("cell"), maxCell, "semantic-cell")
+      val bounded = NearDedup.dropHotBuckets(assigned, Seq("cell"), SemanticMaxCell, "semantic-cell")
       val a = bounded.select(col("cell"), col("vec_id").as("i"), col("embedding").as("ei"))
       val b = bounded.select(col("cell"), col("vec_id").as("j"), col("embedding").as("ej"))
       a.join(b, Seq("cell"))
@@ -1271,7 +1273,7 @@ object VectorOps {
       val assigned = unitEmb.select(col("vec_id"), col("embedding"),
         explode(org.apache.spark.sql.graft.SrpNative
           .nearestCentroids(col("unit"), centroidArr, assign)).as("cell"))
-      val bounded = NearDedup.dropHotBuckets(assigned, Seq("cell"), maxCell, "semantic-cell")
+      val bounded = NearDedup.dropHotBuckets(assigned, Seq("cell"), SemanticMaxCell, "semantic-cell")
       val a = bounded.select(col("cell"), col("vec_id").as("i"), col("embedding").as("ei"))
       val b = bounded.select(col("cell"), col("vec_id").as("j"), col("embedding").as("ej"))
       a.join(b, Seq("cell"))
@@ -1294,9 +1296,6 @@ object VectorOps {
   def ivfCells(nRows: Long): Int =
     math.max(16, math.min(4096, math.ceil(math.sqrt(nRows.toDouble)).toInt))
 
-  /** The trained centroids as the broadcast-sized (cell, centroid)
-    * side table every IVF path joins against (≤4096 × dims floats).
-    */
   /** nProbe nearest cells per probe under the shared spherical-L2
     * ranking — the ONE place the cell-selection metric lives (annIvf
     * and ivfPqSearch both consume it; round 9's mixed-metric recall
@@ -1814,22 +1813,21 @@ object VectorOps {
   }
 
   /** Cell assignment + residual for the IVF-PQ family, row-local: one
-    * codegen pass for the nearest (spherical) centroid, then a
-    * codegen'd zip_with against that cell's row of the centroid table,
-    * which rides the plan as a literal (no join, so no broadcast job).
+    * codegen pass picks the nearest (spherical) centroid and subtracts
+    * it ([[org.apache.spark.sql.graft.NearestCentroid]] `withResidual`), so the centroid
+    * table rides the plan once and no join or broadcast job runs.
     * Rows without a unit vector get no cell and are dropped. Input
     * needs `vec_id`, `embedding`, `unit` (see [[withUnit]]); the raw
     * `embedding` rides through for [[ivfPqEncode]].
     */
   def ivfPqAssign(unitEmb: DataFrame,
       centroidArr: Array[Array[Float]]): DataFrame =
-    unitEmb.select(col("vec_id").as("c"), col("embedding"), col("unit"),
-      org.apache.spark.sql.graft.SrpNative
-        .nearestCentroid(col("unit"), centroidArr).as("cell"))
-      .where(col("cell").isNotNull)
-      .withColumn("residual", zip_with(col("unit"),
-        element_at(typedLit(centroidArr), col("cell") + 1),
-        (u, cv) => (u - cv).cast("float")))
+    unitEmb.where(col("unit").isNotNull)
+      .select(col("vec_id").as("c"), col("embedding"), col("unit"),
+        org.apache.spark.sql.graft.SrpNative
+          .nearestCentroid(col("unit"), centroidArr, withResidual = true).as("_a"))
+      .select(col("c"), col("embedding"), col("unit"),
+        col("_a.cell").as("cell"), col("_a.residual").as("residual"))
 
   /** The index rows: (id, cell, m residual-PQ bytes, raw embedding).
     * The ADC scan reads the codes; the exact rerank of the top

@@ -19,10 +19,6 @@ import org.apache.spark.sql.types.StructType
   */
 object StreamSource {
 
-  val SourceKey = GraftConf.StreamSourceKind.name
-  val BrokersKey = GraftConf.KafkaBrokers.name
-  val TopicKey = GraftConf.KafkaTopic.name
-
   /** What the seam will ask Spark for, as plain data. */
   final case class SourceSpec(format: String, options: Map[String, String])
 
@@ -30,14 +26,14 @@ object StreamSource {
     GraftConf.StreamSourceKind.in(conf) match {
       case "files" => SourceSpec("parquet", Map.empty)
       case "kafka" =>
-        val brokers = conf(BrokersKey).getOrElse(throw new IllegalArgumentException(
-          s"$BrokersKey must be set when $SourceKey=kafka"))
+        val brokers = GraftConf.KafkaBrokers.in(conf).getOrElse(throw new IllegalArgumentException(
+          s"${GraftConf.KafkaBrokers.name} must be set when ${GraftConf.StreamSourceKind.name}=kafka"))
         SourceSpec("kafka", Map(
           "kafka.bootstrap.servers" -> brokers,
           "subscribe" -> GraftConf.KafkaTopic.in(conf),
           "startingOffsets" -> GraftConf.KafkaStartingOffsets.in(conf)))
       case other => throw new IllegalArgumentException(
-        s"unknown $SourceKey '$other' (expected files|kafka)")
+        s"unknown ${GraftConf.StreamSourceKind.name} '$other' (expected files|kafka)")
     }
 
   /** Kafka value bytes → typed event rows. JSON wire encoding; a

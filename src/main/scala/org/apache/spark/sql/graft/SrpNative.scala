@@ -99,15 +99,26 @@ case class SrpBandCodes(child: Expression, nTables: Int, nPlanes: Int, dims: Int
   * Distances use the exact Σ(x−c)² form in double precision (no norm-trick
   * cancellation), over the common prefix when row and centroid widths
   * differ (ragged rows, as in [[SrpBandCodes]]).
+  *
+  * `withResidual` makes the result the struct (cell, residual): the row
+  * minus that cell's centroid, `v(i) − c(i)` in float arithmetic, which is
+  * the IVF-PQ encode input taken from the same centroid table. As
+  * `zip_with` pads, a position past either side's length, or a null
+  * component, gives a null residual component.
   */
-case class NearestCentroid(child: Expression, centroids: Array[Array[Float]])
+case class NearestCentroid(child: Expression, centroids: Array[Array[Float]],
+    withResidual: Boolean = false)
     extends UnaryExpression with ExpectsInputTypes {
 
   require(centroids.nonEmpty, "centroid table must be non-empty")
 
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(FloatType))
 
-  override def dataType: DataType = IntegerType
+  override def dataType: DataType =
+    if (!withResidual) IntegerType
+    else new StructType()
+      .add("cell", IntegerType, nullable = false)
+      .add("residual", ArrayType(FloatType, containsNull = true), nullable = false)
 
   def compute(v: ArrayData): Int = {
     var best = 0
@@ -129,12 +140,34 @@ case class NearestCentroid(child: Expression, centroids: Array[Array[Float]])
     best
   }
 
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
+  def computeWithResidual(v: ArrayData): InternalRow = {
+    val cell = compute(v)
+    val c = centroids(cell)
+    val n = v.numElements()
+    var dense = n == c.length
+    var j = 0
+    while (dense && j < n) { dense = !v.isNullAt(j); j += 1 }
+    val residual =
+      if (dense) {
+        val out = new Array[Float](n)
+        var i = 0
+        while (i < n) { out(i) = v.getFloat(i) - c(i); i += 1 }
+        UnsafeArrayData.fromPrimitiveArray(out)
+      } else new GenericArrayData(Array.tabulate[Any](math.max(n, c.length)) { i =>
+        if (i < n && i < c.length && !v.isNullAt(i)) v.getFloat(i) - c(i) else null
+      })
+    InternalRow(cell, residual)
+  }
+
+  override def nullSafeEval(input: Any): Any = {
+    val v = input.asInstanceOf[ArrayData]
+    if (withResidual) computeWithResidual(v) else compute(v)
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("nc", this, classOf[NearestCentroid].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
+    val fn = if (withResidual) "computeWithResidual" else "compute"
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.$fn($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): NearestCentroid =
@@ -449,10 +482,13 @@ object SrpNative {
     ExpressionUtils.column(
       SrpMultiProbeCodes(ExpressionUtils.expression(vec), nTables, nPlanes, dims, nFlips))
 
-  /** `nearest_centroid(vec)` against a fixed centroid table, as a Column. */
-  def nearestCentroid(vec: Column, centroids: Array[Array[Float]]): Column =
+  /** `nearest_centroid(vec)` against a fixed centroid table, as a Column:
+    * the cell, or with `withResidual` the (cell, residual) struct.
+    */
+  def nearestCentroid(vec: Column, centroids: Array[Array[Float]],
+      withResidual: Boolean = false): Column =
     ExpressionUtils.column(
-      NearestCentroid(ExpressionUtils.expression(vec), centroids))
+      NearestCentroid(ExpressionUtils.expression(vec), centroids, withResidual))
 
   /** `probe_cells(unit vec, nProbe, margin)` — a probe's IVF cells, as a Column. */
   def probeCells(unit: Column, centroids: Array[Array[Float]], nProbe: Int,

@@ -16,9 +16,9 @@ class StreamSourceSpec extends SparkSpec {
     assert(StreamSource.resolve(_ => None) ==
       StreamSource.SourceSpec("parquet", Map.empty))
     val conf = Map(
-      StreamSource.SourceKey -> "kafka",
-      StreamSource.BrokersKey -> "broker1:9092,broker2:9092",
-      StreamSource.TopicKey -> "pageviews_prod")
+      GraftConf.StreamSourceKind.name -> "kafka",
+      GraftConf.KafkaBrokers.name -> "broker1:9092,broker2:9092",
+      GraftConf.KafkaTopic.name -> "pageviews_prod")
     assert(StreamSource.resolve(conf.get) == StreamSource.SourceSpec("kafka", Map(
       "kafka.bootstrap.servers" -> "broker1:9092,broker2:9092",
       "subscribe" -> "pageviews_prod",
@@ -27,10 +27,10 @@ class StreamSourceSpec extends SparkSpec {
 
   test("kafka source without brokers, or an unknown source, is rejected") {
     intercept[IllegalArgumentException] {
-      StreamSource.resolve(Map(StreamSource.SourceKey -> "kafka").get)
+      StreamSource.resolve(Map(GraftConf.StreamSourceKind.name -> "kafka").get)
     }
     intercept[IllegalArgumentException] {
-      StreamSource.resolve(Map(StreamSource.SourceKey -> "pulsar").get)
+      StreamSource.resolve(Map(GraftConf.StreamSourceKind.name -> "pulsar").get)
     }
   }
 
@@ -47,8 +47,8 @@ class StreamSourceSpec extends SparkSpec {
 
   test("the kafka branch asks Spark for the kafka data source") {
     val schema = Tables.eventsRaw(spark, sf0001).schema
-    spark.conf.set(StreamSource.SourceKey, "kafka")
-    spark.conf.set(StreamSource.BrokersKey, "localhost:9092")
+    spark.conf.set(GraftConf.StreamSourceKind.name, "kafka")
+    spark.conf.set(GraftConf.KafkaBrokers.name, "localhost:9092")
     try {
       // the connector jar is not shipped in this sandbox: reaching the
       // data-source lookup failure proves format("kafka") was requested
@@ -57,8 +57,8 @@ class StreamSourceSpec extends SparkSpec {
       }
       assert(e.getMessage.toLowerCase.contains("kafka"), e.getMessage)
     } finally {
-      spark.conf.unset(StreamSource.SourceKey)
-      spark.conf.unset(StreamSource.BrokersKey)
+      spark.conf.unset(GraftConf.StreamSourceKind.name)
+      spark.conf.unset(GraftConf.KafkaBrokers.name)
     }
   }
 }

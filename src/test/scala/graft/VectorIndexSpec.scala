@@ -108,6 +108,38 @@ class VectorIndexSpec extends SparkSpec {
     }
   }
 
+  test("ivfPqAssign's residuals equal a join with the centroid table and a zip_with subtraction") {
+    // the reference form the row-local expression replaced: same cells,
+    // same residual float bits, ragged and null-component rows included
+    val emb = Tables.embeddings(spark, sf0001)
+    val dir = freshDir()
+    VectorIndex.buildIvfPq(spark, emb, dir, nCells = 16, m = 8, ks = 16)
+    val (coarse, _) = VectorIndex.readCodebooks(spark, dir)
+    val odd = Seq((-1L, Seq[java.lang.Float](0.5f, null, 0.25f)),
+      (-2L, Seq[java.lang.Float](0.5f, 0.5f)))
+      .toDF("vec_id", "unit").withColumn("embedding", $"unit")
+    val unitEmb = VectorOps.withUnit(emb, "embedding", "unit")
+      .select("vec_id", "embedding", "unit").unionByName(odd)
+    val centroids = coarse.zipWithIndex.map { case (v, i) => (i, v) }.toSeq
+      .toDF("cell", "centroid")
+    val reference = unitEmb.where($"unit".isNotNull)
+      .select($"vec_id".as("c"), $"unit", org.apache.spark.sql.graft.SrpNative
+        .nearestCentroid($"unit", coarse).as("cell"))
+      .join(centroids, "cell")
+      .select($"c", $"cell", zip_with($"unit", $"centroid",
+        (u, cv) => (u - cv).cast("float")).as("residual"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("c", "cell", "residual").collect().map(r => (r.getLong(0), r.getInt(1),
+        r.getSeq[java.lang.Float](2).map(x => Option(x).map(f => java.lang.Float.floatToRawIntBits(f)))))
+        .toSet
+    val native = rows(VectorOps.ivfPqAssign(unitEmb, coarse))
+    val expected = rows(reference)
+    assert(native.size == unitEmb.where($"unit".isNotNull).count())
+    val differ = native.diff(expected)
+    assert(differ.isEmpty && native.size == expected.size,
+      s"${differ.size} rows differ, e.g. ${differ.headOption.map(r => (r._1, r._2))}")
+  }
+
   test("searchIvfPq job and exchange ceilings: 4 jobs under default confs, 3 and 2 exchanges under the serving confs (sf0.001)") {
     // first execution of a fresh search each time: the probe side is a
     // narrow pass, the selection one heap shuffle, the output a local
