@@ -45,7 +45,7 @@ object GraftConf {
   val TrigramMinCount = Key("graft.trigram.minCount", "2",
     "Frequency floor of the trigram LM relations; rarer types back off as OOV.")
   val CcLocalMaxEdges = Key("graft.cc.localMaxEdges", "100000",
-    "Bidirectional edges up to which connected components run as a driver-local union-find.")
+    "Bidirectional edges up to which CC over long or string ids runs as a driver-local union-find.")
   val CcMaxIter = Key("graft.cc.maxIter", "25",
     "Rounds after which the distributed connected-components loop fails as non-converged.")
   val EmbPipeLshMaxRows = Key("graft.embpipe.lshMaxRows", "5000",

@@ -2,8 +2,10 @@ package graft.operators
 
 import graft.{GraftConf, QueryDef, Tables}
 import graft.QueryDef.withOracle
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The user-id-normalization graph pipeline (SURVEY.md §2.2 edgify/
   * bidirectional edges, §2.6 connected components; reference
@@ -16,54 +18,45 @@ import org.apache.spark.sql.functions._
   */
 object GraphOps {
 
-  /** Driver-local labeling for the small-graph route: min-root
-    * union-find with path compression over the collected (src, dst)
-    * edge rows. Union always roots the SMALLER id, so every find
-    * resolves to the component minimum — exactly the fixed point the
-    * distributed min-propagation loop converges to. Output: (node,
-    * component-min) for every edge endpoint, node-sorted (deterministic;
-    * consumers order downstream anyway).
+  /** Driver-local labeling for the small-graph route: each edge's two
+    * endpoint keys (`ends(2i)`, `ends(2i+1)`) are replaced by their index
+    * in the sorted dictionary of distinct keys, and a min-root union-find
+    * over an `Int` parent array joins them. Union always roots the
+    * SMALLER index, so every find resolves to the component's smallest
+    * key under the key `Ordering` — the fixed point the distributed
+    * min-propagation loop converges to when that is the order Spark's
+    * `min` uses.
+    * Output: (node, component-min) for every endpoint, node-sorted.
     */
-  private def localMinLabels(
-      rows: Array[org.apache.spark.sql.Row]): Array[(Long, Long)] = {
-    val parent = new java.util.HashMap[java.lang.Long, java.lang.Long](
-      math.max(16, rows.length * 2))
-    def find(x0: Long): Long = {
+  private def localMinLabels[K: Ordering: scala.reflect.ClassTag](
+      ends: Array[K]): Array[(K, K)] = {
+    val keys = ends.distinct.sorted
+    val index = keys.iterator.zipWithIndex.toMap
+    val parent = Array.range(0, keys.length)
+    def find(x0: Int): Int = {
       var x = x0
-      var p = Option(parent.get(x)).map(_.longValue).getOrElse(x)
-      while (p != x) {
-        val gp = Option(parent.get(p)).map(_.longValue).getOrElse(p)
-        parent.put(x, gp) // path compression
-        x = gp
-        p = Option(parent.get(x)).map(_.longValue).getOrElse(x)
+      while (parent(x) != x) {
+        parent(x) = parent(parent(x)) // path halving
+        x = parent(x)
       }
       x
     }
     var i = 0
-    while (i < rows.length) {
-      val a = rows(i).getLong(0); val b = rows(i).getLong(1)
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) {
-        if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
-      }
-      i += 1
+    while (i < ends.length) {
+      val ra = find(index(ends(i))); val rb = find(index(ends(i + 1)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      i += 2
     }
-    val nodes = new java.util.TreeSet[java.lang.Long]()
-    i = 0
-    while (i < rows.length) {
-      nodes.add(rows(i).getLong(0)); nodes.add(rows(i).getLong(1))
-      i += 1
-    }
-    val out = new Array[(Long, Long)](nodes.size)
-    val it = nodes.iterator()
-    i = 0
-    while (it.hasNext) {
-      val n = it.next().longValue
-      out(i) = (n, find(n))
-      i += 1
-    }
-    out
+    keys.indices.iterator.map(j => (keys(j), keys(find(j)))).toArray
   }
+
+  /** Spark's `min` order on UTF8_BINARY strings: unsigned bytes of the
+    * UTF-8 encoding (code-point order). Java's `String.compareTo` compares
+    * UTF-16 units and puts supplementary-plane characters below
+    * U+E000..U+FFFF, so it would pick a different component minimum.
+    */
+  private implicit val utf8Order: Ordering[UTF8String] =
+    Ordering.fromLessThan[UTF8String](_.binaryCompare(_) < 0)
 
   /** Min-label-propagation connected components with pointer-jumping, the
     * Spark-idiomatic form of the reference's driver-side iteration
@@ -122,44 +115,49 @@ object GraphOps {
     // SIZE ROUTE (the stats-routing discipline of the dedup/span
     // families, applied to the iteration itself): below
     // GraftConf.CcLocalMaxEdges deduped bidirectional edges the component
-    // labeling is DRIVER-SIZED work — a seeded min-root union-find over
-    // the already-materialized checkpoint blocks computes the identical
+    // labeling is DRIVER-SIZED work — a min-root union-find over the
+    // already-materialized checkpoint blocks computes the identical
     // labeling (label = component-minimum id, the converged fixed point
     // of the min-propagation loop) in one collect job, where the
     // distributed loop pays ~5 AQE stage-jobs per iteration × O(log d)
     // iterations of pure fixed overhead (measured: 3.2 s for an
     // 840-edge graph at sf0.1). At 100 TB graphs exceed the threshold
-    // and the loop below runs unchanged — the threshold bounds driver
-    // memory at ~16 bytes/edge (default 100k ≈ 2 MB collected). Both
-    // routes are proven output-identical (GraphOpsSpec route-equality
-    // pin + every CC consumer's oracle). Long-typed ids only — the
-    // collect decode is typed; anything else keeps the loop.
+    // and the loop below runs unchanged. Long and UTF8_BINARY string ids
+    // take this route; any other key type keeps the loop. The threshold
+    // bounds driver memory: a few hundred bytes per edge for the
+    // collected rows, boxed keys and dictionary, plus, for string ids,
+    // about 4 bytes per key character per edge (each endpoint held as a
+    // String and a UTF8String), so the default 100k edges of personKeys
+    // (21 characters for user ids) stay within tens of MB. Both routes
+    // are proven output-identical (GraphOpsSpec route-equality pins +
+    // every CC consumer's oracle).
     val localMax = GraftConf.CcLocalMaxEdges(spark).toLong
-    val longTyped =
-      bidir.schema("src").dataType == org.apache.spark.sql.types.LongType &&
-        bidir.schema("dst").dataType == org.apache.spark.sql.types.LongType
+    val keyType = bidir.schema("src").dataType
     val edgeN = bidirObs.queryExecution.observedMetrics.get("cc_edges")
       .map(_.getAs[Long]("n"))
       .filter(_ != 0L) // zero/absent: confirm against the cached blocks
       .getOrElse(bidir.count())
-    if (longTyped && edgeN <= localMax) {
+    if ((keyType == LongType || keyType == StringType) && edgeN <= localMax) {
       val collected = bidir.collect()
       // an under-read metric must not defeat the driver-memory bound:
       // more edges than the threshold fall through to the loop
       if (collected.length <= localMax) {
         bidir.unpersist()
-        val labeled = localMinLabels(collected)
-        // schema mirrors the loop's output (nullable longs) so the two
-        // routes are indistinguishable downstream, including in dumped
-        // parquet schemas
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node",
-            org.apache.spark.sql.types.LongType, nullable = true),
-          org.apache.spark.sql.types.StructField("label",
-            org.apache.spark.sql.types.LongType, nullable = true)))
-        return spark.createDataFrame(
-          java.util.Arrays.asList(labeled.map(t =>
-            org.apache.spark.sql.Row(t._1, t._2)): _*), schema)
+        val labeled: Array[Row] =
+          if (keyType == LongType)
+            localMinLabels(collected.flatMap(r => Array(r.getLong(0), r.getLong(1))))
+              .map { case (n, l) => Row(n, l) }
+          else
+            localMinLabels(collected.flatMap(r => Array(
+              UTF8String.fromString(r.getString(0)),
+              UTF8String.fromString(r.getString(1)))))
+              .map { case (n, l) => Row(n.toString, l.toString) }
+        // schema mirrors the loop's output (nullable ids of the edge
+        // type) so the two routes are indistinguishable downstream,
+        // including in dumped parquet schemas
+        val schema = StructType(Seq(StructField("node", keyType, nullable = true),
+          StructField("label", keyType, nullable = true)))
+        return spark.createDataFrame(java.util.Arrays.asList(labeled: _*), schema)
       }
     }
 

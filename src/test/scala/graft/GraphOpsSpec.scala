@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.GraphOps
+import org.apache.spark.sql.DataFrame
 
 class GraphOpsSpec extends SparkSpec {
   import spark.implicits._
@@ -40,6 +41,19 @@ class GraphOpsSpec extends SparkSpec {
     assert(total < 1.0 && total > 0.5, s"total rank $total")
   }
 
+  /** CC of `edges` on the route the default threshold picks, and on the
+    * distributed loop (forced by `graft.cc.localMaxEdges = -1`; -1, not 0:
+    * zero-edge shapes would stay local at 0).
+    */
+  private def bothRoutes(edges: DataFrame): (Set[(Any, Any)], Set[(Any, Any)]) = {
+    def run(): Set[(Any, Any)] = GraphOps.connectedComponents(edges)
+      .collect().map(r => (r.get(0), r.get(1))).toSet
+    val local = run()
+    spark.conf.set(GraftConf.CcLocalMaxEdges.name, "-1")
+    val dist = try run() finally spark.conf.unset(GraftConf.CcLocalMaxEdges.name)
+    (local, dist)
+  }
+
   test("driver-local CC route equals the distributed loop on every graph shape") {
     // random graphs + the adversarial shapes: long chain (max diameter),
     // star (max degree), duplicate/self-loop edges, empty graph
@@ -52,16 +66,60 @@ class GraphOpsSpec extends SparkSpec {
       Seq.empty[(Long, Long)] // empty
     )
     shapes.zipWithIndex.foreach { case (es, i) =>
-      val edges = es.toDF("src", "dst")
-      def run(): Set[(Long, Long)] = GraphOps.connectedComponents(edges)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val local = run() // default threshold: these all take the local route
-      // -1, not 0: zero-edge shapes (self-loops only, empty) must take
-      // the loop too (0 edges <= 0 would keep them local)
-      spark.conf.set("graft.cc.localMaxEdges", "-1") // force the loop
-      val dist = try run() finally spark.conf.unset("graft.cc.localMaxEdges")
+      val (local, dist) = bothRoutes(es.toDF("src", "dst"))
       assert(local == dist, s"shape $i: local route diverged from the loop")
     }
+  }
+
+  /** personKey-shaped ids: `1:<cookie>` / `2:<zero-padded user id>`. */
+  private def cookie(i: Int): String = s"1:ck${i * 7919 % 1000}"
+  private def user(i: Int): String = f"2:$i%019d"
+  private def person(i: Int): String = if (i % 3 == 0) cookie(i) else user(i)
+
+  test("driver-local CC route equals the distributed loop on string-keyed graphs") {
+    val rnd = new scala.util.Random(11)
+    // U+FF21 sorts above U+1F600 in UTF-16 units (0xFF21 > 0xD83D) but
+    // below it in UTF-8 bytes (EF < F0), the order Spark's min uses
+    val bmp = "1:\uFF21"; val astral = "1:\uD83D\uDE00"
+    val shapes: Seq[Seq[(String, String)]] = Seq(
+      // chain: with a cookie key every third hop the loop's pointer jumps
+      // stall at those local minima and its rounds grow with the chain's
+      // length (60 hops do not converge within graft.cc.maxIter = 25)
+      (1 to 24).map(i => (person(i), person(i + 1))),
+      (2 to 120).map(i => (user(1), person(i))), // star
+      Seq.tabulate(300)(_ => (person(rnd.nextInt(80)), person(rnd.nextInt(80)))), // random w/ self-loops
+      Seq((astral, user(3)), (user(3), bmp), (cookie(4), user(5))), // BMP vs supplementary
+      Seq((user(5), user(5))), // only self-loops -> empty labeling
+      Seq.empty[(String, String)] // empty
+    )
+    val locals = shapes.zipWithIndex.map { case (es, i) =>
+      val (local, dist) = bothRoutes(es.toDF("src", "dst"))
+      assert(local == dist, s"shape $i: local route diverged from the loop")
+      local
+    }
+    val mixed = locals(3).toMap
+    assert(mixed(astral) == bmp && mixed(user(3)) == bmp && mixed(user(5)) == cookie(4),
+      s"component minimum must follow UTF-8 byte order: $mixed")
+  }
+
+  test("a string graph below the threshold takes the local route: at most 5 jobs") {
+    val edges = (1 to 24).map(i => (person(i), person(i + 1))).toDF("src", "dst")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val n =
+      try {
+        GraphOps.connectedComponents(edges).collect()
+        Thread.sleep(500) // listener bus is async; jobs run synchronously
+        jobs.get()
+      } finally spark.sparkContext.removeSparkListener(listener)
+    // the distributed loop runs dozens of jobs on this chain (57 on
+    // Spark 4.1 local[4]), so a silent fall-back to it fails here
+    assert(n <= 5, s"connectedComponents + collect ran $n jobs")
   }
 
   test("incremental CC equals full recompute when new edges merge old components") {
@@ -80,6 +138,24 @@ class GraphOpsSpec extends SparkSpec {
     assert(inc == full)
     // the merged component relabeled to the global min across BOTH halves
     assert(inc(11L) == 1L && inc(23L) == 20L && inc(31L) == 30L)
+  }
+
+  test("incremental CC equals full recompute on a string-keyed graph") {
+    // old: {c1, u1, u2}, {u10, u11}, {u20, u21}; new: u2-u10 merges the
+    // first two, u21-u22 attaches a new node, c30-u31 is a new component
+    val oldEdges = Seq((cookie(1), user(1)), (user(1), user(2)),
+      (user(10), user(11)), (user(20), user(21))).toDF("src", "dst")
+    val newEdges = Seq((user(2), user(10)), (user(21), user(22)),
+      (cookie(30), user(31))).toDF("src", "dst")
+    val labels = GraphOps.connectedComponents(oldEdges)
+    val inc = GraphOps.connectedComponentsIncremental(labels, newEdges)
+    assert(inc.schema == labels.schema)
+    val got = inc.collect().map(r => (r.getString(0), r.getString(1))).toMap
+    val full = GraphOps.connectedComponents(oldEdges.unionAll(newEdges))
+      .collect().map(r => (r.getString(0), r.getString(1))).toMap
+    assert(got == full)
+    assert(got(user(11)) == cookie(1) && got(user(22)) == user(20) &&
+      got(user(31)) == cookie(30), s"got $got")
   }
 
   test("incremental CC with an empty new batch reproduces the old labeling") {
