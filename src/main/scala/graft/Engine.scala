@@ -129,7 +129,9 @@ object Engine {
     */
   val store: model.FactStore.type = model.FactStore
 
-  /** Serving-store swap + bootstrap primitives (two-rename protocol). */
+  /** Serving-store swap (two-rename protocol; `_SUCCESS` is the only
+    * commit evidence) and the committed-version probe.
+    */
   val swap: model.StoreSwap.type = model.StoreSwap
 
   /** Versioned serving roots for REBUILD-WHILE-SERVING (r15 — the

@@ -160,10 +160,16 @@ object FactStore {
     // tmp rolls the preserved version back into place, so this re-run
     // self-heals instead of failing on a missing path
     StoreSwap.commit(spark, masterPath)
+    val tmp = StoreSwap.tmpPath(masterPath)
     spark.read.parquet(masterPath)
       .repartition(targetFiles)
       .write.mode(SaveMode.Overwrite).partitionBy("kind")
-      .parquet(StoreSwap.tmpPath(masterPath))
+      .parquet(tmp)
+    // the write returned, so its job committed: assert that with the
+    // marker StoreSwap requires, also under a session whose committer
+    // is configured to drop none
+    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+      .create(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"), true).close()
     StoreSwap.commit(spark, masterPath)
   }
 

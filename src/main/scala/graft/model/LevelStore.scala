@@ -47,7 +47,8 @@ import org.apache.spark.sql.types._
   *     it a no-op (an id below it throws) — exactly-once across
   *     maintainer restarts.
   *   - Readers never take the writer's recovery path: they resolve the
-  *     committed row (through a torn swap) and read with the `seq` gate,
+  *     committed row (through a torn swap, retrying a read that straddles
+  *     a live one) and read with the `seq` gate,
   *     which is partition pruning — uncommitted and retired levels cost
   *     nothing. The single-writer contract covers writers only.
   *
@@ -101,10 +102,12 @@ final class LevelStore(data: String, commit: String, part: Option[String],
   def isBuilt(spark: SparkSession, dir: String): Boolean =
     StoreSwap.committedPath(spark, commitDir(dir)).isDefined
 
-  /** The committed row, None if never built. Read-only (no recovery). */
+  /** The committed row, None if never built. Read-only (no recovery);
+    * a read racing a live commit swap is retried
+    * ([[OneRowParquet.committed]]).
+    */
   def committed(spark: SparkSession, dir: String): Option[Row] =
-    StoreSwap.committedPath(spark, commitDir(dir)).map { p =>
-      val row = OneRowParquet.head(spark, p)
+    OneRowParquet.committed(spark, commitDir(dir)).map { row =>
       val missing = commitSchema.fieldNames.filterNot(row.schema.fieldNames.contains)
       if (missing.nonEmpty) sys.error(s"the $what at $dir was committed in an " +
         s"older format (no ${missing.mkString(", ")}) — rebuild it into a fresh dir")

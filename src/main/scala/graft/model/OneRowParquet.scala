@@ -1,6 +1,14 @@
 package graft.model
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.conf.HadoopParquetConfiguration
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.api.ReadSupport
+import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.types._
@@ -23,13 +31,12 @@ import org.apache.spark.sql.types._
   *
   * Supports exactly the shapes the stores use: flat OPTIONAL primitives
   * (plain int64, int32, double, float, boolean, UTF-8 binary), nulls
-  * included. On the read side anything else — or any read error other
-  * than a missing row — falls back to the Spark read, so correctness
-  * never depends on this fast path; [[head]] mirrors `head()`: the first
-  * row encountered, throwing (via the Spark fallback) when the table is
-  * empty. [[write]] refuses other types loudly, and commits the way the
-  * Hadoop committer does (data file complete before `_SUCCESS`), so
-  * [[StoreSwap]] classifies a crashed write exactly as a crashed job.
+  * included. Both sides refuse anything else loudly, and [[head]]
+  * throws on an empty table — there is no second reader behind this
+  * one. [[write]] commits the way the Hadoop committer does (data file
+  * complete before `_SUCCESS`), so [[StoreSwap]] classifies a crashed
+  * write exactly as a crashed job, and [[committed]] is the one read of
+  * a swapped commit row, retrying a read that straddled a live swap.
   */
 object OneRowParquet {
 
@@ -41,20 +48,17 @@ object OneRowParquet {
     * names, types and values.
     *
     * Commit order: the data file is written under a `_`-prefixed
-    * staging name (hidden from every reader and from [[StoreSwap]]'s
-    * data-present check), renamed into place, then `_SUCCESS` is
-    * dropped. A crash while the file is being written leaves a dir with
-    * no visible data and no marker — torn, so [[StoreSwap.commit]]
-    * discards it and [[StoreSwap.committedPath]] never resolves it; a
-    * crash after the rename leaves a complete file.
+    * staging name (hidden from every reader), renamed into place, then
+    * `_SUCCESS` is dropped. A crash anywhere before the marker leaves a
+    * torn dir: [[StoreSwap.commit]] discards it and
+    * [[StoreSwap.committedPath]] never resolves it.
     */
   def write(spark: SparkSession, dir: String, schema: StructType,
       values: Any*): Unit = {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.hadoop.util.HadoopOutputFile
-    import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    import org.apache.parquet.schema.{MessageType, Types}
     require(values.size == schema.size,
       s"${values.size} values for the ${schema.size} fields of $schema")
     val parquetType = new MessageType("spark_schema",
@@ -101,32 +105,62 @@ object OneRowParquet {
     fs.create(new Path(p, "_SUCCESS"), true).close()
   }
 
-  def head(spark: SparkSession, dir: String): Row =
-    headOption(spark, dir).getOrElse(
-      // empty or unsupported: fall through to Spark for the standard
-      // behavior (and the standard error when the table is truly empty)
-      spark.read.parquet(dir).head())
-
-  /** First row of the one-row table at `dir`, or None when the
-    * driver-side reader cannot serve it (unsupported shape, no part
-    * files, reader error). Callers needing head()'s throw-on-empty use
-    * [[head]].
+  /** The committed row of the one-row table that [[StoreSwap]] swaps at
+    * `store`, resolved through a torn swap; None iff no version has
+    * committed. The one read of a commit row (the serving pointer, the
+    * [[LevelStore]] rows).
+    *
+    * Reads are lock-free OPTIMISTIC: the two-rename keeps a complete
+    * committed row visible at every instant, but a read can straddle a
+    * concurrent swap in two ways. [[StoreSwap.committedPath]]'s two
+    * probes can both miss when a swap's step-3 rename and step-4
+    * cleanup land between them (a false None), and the listed part-file
+    * can vanish before it is opened (a `FileNotFoundException`). Renames
+    * are atomic and the writer is single, so re-resolving always lands
+    * on a complete row: both cases re-probe, with exponential backoff
+    * (4/8/16/32/64 ms, ~124 ms worst case) so the bounded retry spans a
+    * slow filesystem's swap window. A store where none of `store`,
+    * `.old` and `.tmp` exists has never committed and reads None at
+    * once.
     */
-  def headOption(spark: SparkSession, dir: String): Option[Row] =
-    try {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val p = new Path(dir)
-      // the path's OWN filesystem, not the default one: on s3a://, abfs://
-      // etc. FileSystem.get(conf) throws Wrong-FS and the fast path would
-      // silently vanish exactly on the object-store deployments it targets
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) None // let the fallback raise the real error
-      else {
-        dataFiles(fs, p).iterator.flatMap(readFirstRow(conf, _)).nextOption()
+  def committed(spark: SparkSession, store: String): Option[Row] = {
+    val fs = new Path(store).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // `.old` first, `store` last: missing all three while a swap runs
+    // takes a whole new tmp write between two exists() calls
+    def virgin = Seq(StoreSwap.oldPath(store), StoreSwap.tmpPath(store), store)
+      .forall(s => !fs.exists(new Path(s)))
+    @annotation.tailrec
+    def attempt(n: Int): Option[Row] = {
+      val read =
+        try Right(StoreSwap.committedPath(spark, store).map(head(spark, _)))
+        catch { case e: java.io.FileNotFoundException if n < MaxRetries => Left(e) }
+      read match {
+        case Right(row) if row.isDefined || n == MaxRetries || virgin => row
+        case _ => Thread.sleep(4L << n); attempt(n + 1)
       }
-    } catch {
-      case _: Exception => None // fallback owns the error story
     }
+    attempt(0)
+  }
+
+  private val MaxRetries = 5
+
+  /** The first row of the one-row table at `dir` (the first data file by
+    * name holding one). Throws when the table holds no row or has a
+    * shape other than flat supported primitives; a `dir` or part-file
+    * that vanished surfaces as the filesystem's own
+    * `FileNotFoundException`.
+    */
+  def head(spark: SparkSession, dir: String): Row = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(dir)
+    // the path's OWN filesystem, not the default one: on s3a://, abfs://
+    // etc. FileSystem.get(conf) throws Wrong-FS
+    dataFiles(p.getFileSystem(conf), p).iterator
+      .flatMap(f => withGroups(conf, f)(r => Option(r.read())))
+      .nextOption()
+      .map(toRow(_, dir))
+      .getOrElse(throw new IllegalStateException(s"the one-row table at $dir holds no row"))
+  }
 
   /** The non-empty data files directly under the existing dir `p` —
     * neither `_`-prefixed (staging, markers) nor `.`-prefixed
@@ -140,75 +174,54 @@ object OneRowParquet {
       .map(_.getPath)
       .sortBy(_.getName)
 
-  private def readFirstRow(conf: org.apache.hadoop.conf.Configuration,
-      file: Path): Option[Row] = {
-    import org.apache.parquet.conf.HadoopParquetConfiguration
-    import org.apache.parquet.example.data.Group
-    import org.apache.parquet.hadoop.ParquetReader
-    import org.apache.parquet.hadoop.api.ReadSupport
-    import org.apache.parquet.hadoop.example.GroupReadSupport
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    // the InputFile builder reads `conf` as given; the Path builder first
-    // parses a fresh Configuration's default resources, ~10 ms of driver
-    // CPU on every commit-row read
-    val reader: ParquetReader[Group] = new ParquetReader.Builder[Group](
+  /** `use` over a parquet-example Group reader of `file`, closed after.
+    * Built from an InputFile: the Path builder first parses a fresh
+    * Configuration's default resources, ~10 ms of driver CPU per read.
+    */
+  def withGroups[A](conf: org.apache.hadoop.conf.Configuration, file: Path)(
+      use: ParquetReader[Group] => A): A = {
+    val reader = new ParquetReader.Builder[Group](
         HadoopInputFile.fromPath(file, conf), new HadoopParquetConfiguration(conf)) {
       override def getReadSupport(): ReadSupport[Group] = new GroupReadSupport()
     }.build()
-    try {
-      val g = reader.read()
-      if (g == null) None
-      else {
-        val schema = g.getType
-        val n = schema.getFieldCount
-        val values = new Array[Any](n)
-        val fields = new Array[StructField](n)
-        var ok = true
-        var i = 0
-        while (ok && i < n) {
-          val f = schema.getType(i)
-          if (!f.isPrimitive) ok = false // nested: not a stats shape
-          else {
-            val prim = f.asPrimitiveType()
-            val ptn = prim.getPrimitiveTypeName
-            val ann = prim.getLogicalTypeAnnotation
-            val isString = ptn == PrimitiveTypeName.BINARY &&
-              ann.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation]
-            // annotated non-string primitives (dates, decimals, …) are
-            // not the stores' stats shape — bail to the Spark reader
-            val dt: Option[DataType] = ptn match {
-              case PrimitiveTypeName.INT64 if ann == null => Some(LongType)
-              case PrimitiveTypeName.INT32 if ann == null => Some(IntegerType)
-              case PrimitiveTypeName.DOUBLE if ann == null => Some(DoubleType)
-              case PrimitiveTypeName.FLOAT if ann == null => Some(FloatType)
-              case PrimitiveTypeName.BOOLEAN if ann == null => Some(BooleanType)
-              case PrimitiveTypeName.BINARY if isString => Some(StringType)
-              case _ => None
-            }
-            dt match {
-              case None => ok = false
-              case Some(t) =>
-                fields(i) = StructField(f.getName, t, nullable = true)
-                values(i) =
-                  if (g.getFieldRepetitionCount(i) == 0) null
-                  else ptn match {
-                    case PrimitiveTypeName.INT64 => g.getLong(i, 0)
-                    case PrimitiveTypeName.INT32 => g.getInteger(i, 0)
-                    case PrimitiveTypeName.DOUBLE => g.getDouble(i, 0)
-                    case PrimitiveTypeName.FLOAT => g.getFloat(i, 0)
-                    case PrimitiveTypeName.BOOLEAN => g.getBoolean(i, 0)
-                    case PrimitiveTypeName.BINARY => g.getString(i, 0)
-                    case _ => null // unreachable under dt match above
-                  }
-            }
-          }
-          i += 1
-        }
-        if (ok) Some(new GenericRowWithSchema(values, StructType(fields)))
-        else None
+    try use(reader) finally reader.close()
+  }
+
+  /** `g` as a Row of flat supported primitives; throws on any other field. */
+  private def toRow(g: Group, dir: String): Row = {
+    val schema = g.getType
+    val n = schema.getFieldCount
+    val values = new Array[Any](n)
+    val fields = new Array[StructField](n)
+    for (i <- 0 until n) {
+      val f = schema.getType(i)
+      def unsupported = throw new IllegalStateException(
+        s"the one-row table at $dir has field ${f.getName} of unsupported shape $f")
+      if (!f.isPrimitive) unsupported
+      val ptn = f.asPrimitiveType().getPrimitiveTypeName
+      val ann = f.getLogicalTypeAnnotation
+      val dt: DataType = ptn match {
+        case PrimitiveTypeName.INT64 if ann == null => LongType
+        case PrimitiveTypeName.INT32 if ann == null => IntegerType
+        case PrimitiveTypeName.DOUBLE if ann == null => DoubleType
+        case PrimitiveTypeName.FLOAT if ann == null => FloatType
+        case PrimitiveTypeName.BOOLEAN if ann == null => BooleanType
+        case PrimitiveTypeName.BINARY
+            if ann.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation] => StringType
+        case _ => unsupported
       }
-    } finally reader.close()
+      fields(i) = StructField(f.getName, dt, nullable = true)
+      values(i) =
+        if (g.getFieldRepetitionCount(i) == 0) null
+        else dt match {
+          case LongType => g.getLong(i, 0)
+          case IntegerType => g.getInteger(i, 0)
+          case DoubleType => g.getDouble(i, 0)
+          case FloatType => g.getFloat(i, 0)
+          case BooleanType => g.getBoolean(i, 0)
+          case _ => g.getString(i, 0)
+        }
+    }
+    new GenericRowWithSchema(values, StructType(fields))
   }
 }

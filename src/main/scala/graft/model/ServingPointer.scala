@@ -46,84 +46,14 @@ object ServingPointer {
     FileSystem.get(spark.sparkContext.hadoopConfiguration)
 
   /** The committed serving version, resolved through a possibly-torn
-    * pointer swap ([[StoreSwap.committedPath]] — a mid-flip crash
-    * leaves the old pointer readable at `pointer` or `pointer.old`).
-    * None iff no flip has ever committed.
-    *
-    * Reads are lock-free OPTIMISTIC: the two-rename keeps a complete
-    * committed pointer visible at every instant, but a read is
-    * two-phase (list the dir, then open the listed file) and can
-    * STRADDLE a concurrent flip's rename — the listed part-file
-    * vanishes between the phases and the open throws
-    * FileNotFoundException (surfaced live by ServingPointerSpec's
-    * racing-reader test under full-suite load). Renames are atomic and
-    * the writer is single, so re-resolving and re-reading always lands
-    * on a complete pointer; a handful of retries covers any realistic
-    * burst of back-to-back flips. Version DIRS need no such guard —
+    * pointer swap (a mid-flip crash leaves the old pointer readable at
+    * `pointer` or `pointer.old`). None iff no flip has ever committed.
+    * Lock-free: [[OneRowParquet.committed]] retries a read that
+    * straddles a concurrent flip. Version DIRS need no such guard —
     * they are immutable once staged.
     */
-  def current(spark: SparkSession, root: String): Option[Long] = {
-    val maxRetries = 5
-    var attempt = 0
-    // Re-probes back off exponentially (4/8/16/32/64 ms): an immediate
-    // re-probe can land all 5 attempts inside ONE slow flip's
-    // rename+cleanup window (a slow filesystem stretches the window to
-    // many ms) and still return the spurious None the retry exists to
-    // prevent — the backoff makes the bounded retry actually SPAN a
-    // flip window. Total worst-case wait ~124 ms, driver-side only.
-    def backoff(): Unit = { Thread.sleep(4L << math.min(attempt, 5)); attempt += 1 }
-    while (true) {
-      // the resolution probe (exists -> listStatus) can straddle the
-      // rename too, so the retry covers BOTH phases
-      try {
-        StoreSwap.committedPath(spark, pointerDir(root)) match {
-          case Some(p) =>
-            return Some(OneRowParquet.head(spark, p).getAs[Long]("version"))
-          case None if attempt < maxRetries =>
-            // committedPath probes `pointer` then `pointer.old`
-            // NON-atomically: a concurrent flip running its rename+cleanup
-            // between the two probes makes BOTH miss without throwing, and
-            // a bare None here would report "no flip ever committed" on a
-            // store with committed history (the racing reader would then
-            // spuriously see an unbuilt store). A complete committed
-            // pointer exists at one of the two paths at every instant, so
-            // a bounded re-probe converges; only a virgin root yields a
-            // STABLE None, which the retries below confirm cheaply
-            // (driver-side exists() calls).
-            backoff()
-          case None => return None
-        }
-      } catch {
-        case e: Throwable if attempt < maxRetries && vanishedFile(e) =>
-          backoff()
-      }
-    }
-    None // unreachable
-  }
-
-  /** True when `e`'s cause chain bottoms out in a file vanishing
-    * mid-read — the signature of a read that straddled a flip rename.
-    * Matched by TYPE only (java.io / Hadoop path-missing exception
-    * classes, plus Spark's PATH_NOT_FOUND analysis error): a message
-    * substring heuristic would retry PERMANENT absences (store root
-    * deleted externally, config errors that happen to mention a missing
-    * path) through 5 full Spark reads before surfacing, and could
-    * misclassify unrelated errors as transient.
-    */
-  private def vanishedFile(e: Throwable): Boolean = {
-    var t: Throwable = e
-    while (t != null) {
-      t match {
-        case _: java.io.FileNotFoundException => return true
-        case _: org.apache.hadoop.fs.PathNotFoundException => return true
-        case a: org.apache.spark.sql.AnalysisException
-            if a.getCondition == "PATH_NOT_FOUND" => return true
-        case _ => ()
-      }
-      t = if (t.getCause eq t) null else t.getCause
-    }
-    false
-  }
+  def current(spark: SparkSession, root: String): Option[Long] =
+    OneRowParquet.committed(spark, pointerDir(root)).map(_.getAs[Long]("version"))
 
   /** The directory readers should serve from — the current version's
     * dir. None iff no flip has ever committed.

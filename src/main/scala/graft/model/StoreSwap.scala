@@ -25,8 +25,10 @@ import org.apache.spark.sql.SparkSession
   * Every intermediate state is recoverable: a complete data version
   * always exists under `store` or `store.old`, and re-running
   * [[commit]] from ANY crash point finishes the interrupted swap
-  * (it is idempotent on its own intermediate states). Readers that may
-  * observe a mid-swap crash resolve the current version with
+  * (it is idempotent on its own intermediate states). A version is
+  * complete when it holds `_SUCCESS`, which its writer drops after the
+  * data is in place; that is the only commit evidence accepted. Readers
+  * that may observe a mid-swap crash resolve the current version with
   * [[committedPath]] — `store` if complete, else the `store.old` the
   * interrupted swap preserved. Directory renames are atomic on HDFS and
   * local filesystems (the deployments this targets); object stores
@@ -39,74 +41,16 @@ object StoreSwap {
   def tmpPath(store: String): String = store + ".tmp"
   def oldPath(store: String): String = store + ".old"
 
-  /** Sidecar a writer drops (via [[markCommittedEmpty]]) to record that
-    * a directory holds a COMMITTED write whose result is legitimately
-    * EMPTY, under a session with `_SUCCESS` markers disabled. Without
-    * it the marker-less fallback in [[isComplete]] cannot tell a
-    * committed empty write from the empty dir a crashed job leaves
-    * behind — it reads both as incomplete, so a store whose first
-    * version is genuinely empty (a filter that matched nothing, a
-    * zero-row bootstrap batch) would be discarded as torn by [[commit]]
-    * and silently rebuilt by every isBuilt probe (r15 ADVICE low #1).
-    */
-  val EmptyMarker = "_GRAFT_COMMITTED_EMPTY"
-
-  /** Record that `dir` is a committed-but-empty write (see
-    * [[EmptyMarker]]). Call ONLY after the producing write returned
-    * successfully — the caller is asserting job commit the way the
-    * default committer asserts it with `_SUCCESS`. Idempotent. Only
-    * needed when markers are disabled AND the payload can be empty;
-    * harmless (and redundant) otherwise.
-    */
-  def markCommittedEmpty(spark: SparkSession, dir: String): Unit = {
-    val f = fs(spark)
-    f.mkdirs(new Path(dir)) // a zero-file empty write may not even have made the dir
-    f.create(new Path(dir, EmptyMarker), true).close()
-  }
-
   private def fs(spark: SparkSession): FileSystem =
     FileSystem.get(spark.sparkContext.hadoopConfiguration)
 
-  /** True when `dir` holds a COMPLETE Spark write. Primary signal: the
-    * `_SUCCESS` marker the Hadoop commit protocol drops at job commit.
-    * A dir without it is usually a torn write (the job crashed
-    * mid-write) and must never be promoted to serving — EXCEPT under a
-    * session that disabled the marker
-    * (`mapreduce.fileoutputcommitter.marksuccessfuljobs=false`), where
-    * every committed write would otherwise read as torn and the
-    * bootstrap probes built on this ([[committedPath]] →
-    * LexIndex/VectorIndex.isBuilt) would silently REBUILD a serving
-    * index from one micro-batch. Fallback for that conf: committed
-    * data present (a non-hidden child) with NO `_temporary` job
-    * staging left. The fallback cannot mistake a torn write for a
-    * committed one: the committer moves task files out of
-    * `_temporary` and deletes it strictly BEFORE the marker step, so
-    * any crash that loses data leaves `_temporary` (or an empty dir)
-    * behind, and both read as incomplete here. The one state the
-    * fallback cannot classify alone — a committed write whose result
-    * is LEGITIMATELY empty, indistinguishable from a crashed job's
-    * empty dir — is covered by the writer-dropped [[EmptyMarker]]
-    * sidecar, accepted here like `_SUCCESS`.
+  /** True when `dir` holds a COMMITTED write: the `_SUCCESS` marker its
+    * writer drops after the data is complete ([[OneRowParquet.write]]
+    * for the commit rows, FactStore.consolidate for its rewrite). A dir
+    * without it is a torn write and is never promoted or resolved.
     */
   private def isComplete(f: FileSystem, dir: Path): Boolean =
-    f.exists(new Path(dir, "_SUCCESS")) || (
-      // Both marker-less acceptance paths are gated on NO `_temporary`
-      // staging: an EmptyMarker is dropped at (empty-)write commit the
-      // way `_SUCCESS` is, but a LATER overwrite that crashed mid-job
-      // leaves `_temporary` next to the stale marker — marker plus live
-      // job staging is ambiguous and must read incomplete, exactly like
-      // the data-present fallback below. (`_SUCCESS` keeps precedence:
-      // a crashed Overwrite clears the dir — marker included — before
-      // staging, so a surviving `_SUCCESS` next to `_temporary` means
-      // the PREVIOUS committed version's data is still fully present,
-      // which is the version a reader should resolve.)
-      !f.exists(new Path(dir, "_temporary")) && (
-        f.exists(new Path(dir, EmptyMarker)) || (
-          f.exists(dir) && f.getFileStatus(dir).isDirectory &&
-            f.listStatus(dir).exists { st =>
-              val n = st.getPath.getName
-              !n.startsWith("_") && !n.startsWith(".")
-            })))
+    f.exists(new Path(dir, "_SUCCESS"))
 
   /** Swap `store.tmp` (a fully-written new version) into `store`,
     * recovering any interrupted previous swap first. Call with the new
@@ -117,11 +61,10 @@ object StoreSwap {
     * and 3 (restores `.old` to `store`), and is a no-op on a healthy
     * store.
     *
-    * A tmp directory WITHOUT the `_SUCCESS` marker is a torn write —
-    * the producing job crashed before job commit — and is DELETED, not
-    * promoted: promoting it would trade the only complete version for
-    * a half-written one. (Keep `mapreduce.fileoutputcommitter.marksuccessfuljobs`
-    * at its default `true` for stores managed by this protocol.)
+    * A tmp directory WITHOUT `_SUCCESS` is a torn write — its writer
+    * crashed before committing — and is DELETED, not promoted:
+    * promoting it would trade the only complete version for a
+    * half-written one.
     */
   def commit(spark: SparkSession, store: String): Unit = {
     val f = fs(spark)
@@ -129,30 +72,7 @@ object StoreSwap {
     val t = new Path(tmpPath(store))
     val o = new Path(oldPath(store))
     val tComplete = f.exists(t) && isComplete(f, t)
-    if (f.exists(t) && !tComplete) {
-      // Under a markers-disabled session, an EMPTY unmarked tmp with no
-      // `_temporary` staging is AMBIGUOUS: it is equally a crashed job's
-      // husk and a committed zero-row write whose producer forgot
-      // [[markCommittedEmpty]]. Silently discarding it here is the one
-      // way this protocol can throw away a committed version, so fail
-      // loud instead: the maintainer either marks it (write succeeded,
-      // legitimately empty) or deletes the tmp (write crashed) — both
-      // one-liners, both unambiguous. Sessions with markers ON never
-      // reach this (their committed writes always carry `_SUCCESS`).
-      val markersOff = !spark.sparkContext.hadoopConfiguration.getBoolean(
-        "mapreduce.fileoutputcommitter.marksuccessfuljobs", true)
-      val emptyHusk = markersOff && f.getFileStatus(t).isDirectory &&
-        !f.exists(new Path(t, "_temporary")) &&
-        !f.listStatus(t).exists { st =>
-          val n = st.getPath.getName
-          !n.startsWith("_") && !n.startsWith(".")
-        }
-      if (emptyHusk) throw new IllegalStateException(
-        s"$t is empty with no commit evidence under a markers-disabled " +
-          "session: call StoreSwap.markCommittedEmpty after a successful " +
-          "zero-row write, or delete the tmp if the producing job crashed")
-      f.delete(t, true) // torn write: discard
-    }
+    if (f.exists(t) && !tComplete) f.delete(t, true) // torn write: discard
     if (tComplete) {
       if (f.exists(s)) {
         // leftover .old means the PREVIOUS swap completed steps 2-3 but
@@ -172,16 +92,18 @@ object StoreSwap {
   /** The current readable version of `store` whose write COMMITTED (the
     * `_SUCCESS` marker): the store itself, or the `.old` a mid-swap crash
     * preserved (step 2 done, step 3 not). None if no committed version
-    * exists — the probe for "has this store ever been built".
+    * exists — the writer's probe for "has this store ever been built".
     * Maintainers bootstrapping "empty on first batch" MUST use this
     * rather than a bare exists(): a bare check reads absence-during-swap
     * as "never existed" and silently restarts state from empty, and
     * for a version written directly (not through a tmp swap) it reads a
-    * crashed job's `_temporary`-only dir as built — bricking the retry
+    * crashed write's marker-less dir as built — bricking the retry
     * behind a rebuild refusal, or routing a bootstrap fold to an append
     * that dies reading the torn table.
     * Each candidate is checked independently (an incomplete live dir
-    * never hides a complete `.old`).
+    * never hides a complete `.old`). Readers that race a live writer
+    * read through [[OneRowParquet.committed]], which retries the
+    * false None described below.
     */
   def committedPath(spark: SparkSession, store: String): Option[String] = {
     val f = fs(spark)
@@ -190,10 +112,9 @@ object StoreSwap {
       // The two probes are NON-atomic: a concurrent [[commit]] can run
       // its step-3 rename + step-4 cleanup entirely between them, making
       // both miss (false None on a store with committed history).
-      // Callers that race live flips retry on None (ServingPointer
-      // .current); this seam lets their spec drive the interleave
-      // DETERMINISTICALLY instead of hoping a thread race hits the
-      // window.
+      // OneRowParquet.committed retries on None; this seam lets specs
+      // drive the interleave DETERMINISTICALLY instead of hoping a
+      // thread race hits the window.
       interProbeHook()
       if (isComplete(f, new Path(oldPath(store)))) Some(oldPath(store))
       else None

@@ -69,11 +69,14 @@ object GraphOps {
     * Scale notes (100 TB): labels are shuffled on the node key each round;
     * `localCheckpoint` truncates lineage so the plan doesn't grow with
     * iterations; the convergence probe is an aggregate on the label table,
-    * never a collect. The shortcut step halves the remaining label-chain
-    * length each round, so rounds = O(log diameter) — plain neighbor
-    * propagation needs O(diameter) rounds, which sparse chain-shaped equiv
-    * graphs (avg degree ≈ 2) do hit in practice. A cap still guards
-    * against runaway iteration.
+    * never a collect. Each round takes ONE pointer jump (label → label's
+    * label). That shortens chains whose labels already point at a node
+    * holding a smaller label, but it is not full pointer jumping: when
+    * local minima sit along a path, each node's label points at a nearby
+    * minimum whose own label improves by about one neighbour hop per
+    * round, so worst-case rounds are O(diameter) — a 60-hop chain with a
+    * local minimum every third hop does not converge within 25 rounds.
+    * A cap guards against runaway iteration.
     *
     * Non-convergence within the cap THROWS (a silent partial labeling
     * would quietly merge/split identities downstream). The cap is
@@ -229,8 +232,8 @@ object GraphOps {
     bidir.unpersist()
     require(converged,
       s"connected components did not converge within $iterCap iterations — " +
-        s"raise spark.conf ${GraftConf.CcMaxIter.name} (rounds scale with log " +
-        "of graph diameter)")
+        s"raise spark.conf ${GraftConf.CcMaxIter.name} (rounds can scale with " +
+        "the graph diameter)")
     current.select(col("node"), col("label"))
   }
 
@@ -315,11 +318,6 @@ object GraphOps {
   def userKeySql(e: String): String = s"'2:' || lpad(CAST($e AS VARCHAR), 19, '0')"
   def cookieKeySql(e: String): String = s"'1:' || ($e)"
 
-  /** The synthetic equiv-edge relation over events user ids: one scan
-    * exploding the three modulus relations per row (the three-way union
-    * form scanned events three times). % 7 keeps the graph non-empty even
-    * at sf0.001's small user range.
-    */
   /** Fixed-iteration damped PageRank over a directed (src, dst) edge set:
     * pr₀ = 1/N; pr_{k+1}(v) = (1-d)/N + d·Σ_{u→v} pr_k(u)/outdeg(u)
     * (dangling mass not redistributed — the plain power-iteration form,

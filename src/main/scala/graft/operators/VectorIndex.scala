@@ -120,70 +120,33 @@ object VectorIndex {
     * [[graft.model.OneRowParquet]] pattern extended to the one
     * remaining per-read metadata JOB on the vector serving path (a
     * Spark collect costs ~60-150 ms of fixed action overhead per read).
-    * Any shape surprise or reader error falls back to the Spark read,
-    * so correctness never depends on the fast path; both paths decode
-    * the same float bits.
+    * Rows are flat (string, int, int, array<float>) — `vec` the
+    * standard 3-level LIST of FLOAT. A missing table, a null or any
+    * other shape throws.
     */
   def readCodebooks(spark: SparkSession, dir: String): (Array[Array[Float]], Array[Array[Array[Float]]]) = {
-    val rows = readBooksLocal(spark, booksDir(dir)).getOrElse {
-      spark.read.parquet(booksDir(dir))
-        .select("kind", "sub", "idx", "vec").collect()
-        .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getSeq[Float](3).toArray))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new org.apache.hadoop.fs.Path(booksDir(dir))
+    val rows = scala.collection.mutable.ArrayBuffer[(String, Int, Int, Array[Float])]()
+    graft.model.OneRowParquet.dataFiles(p.getFileSystem(conf), p).foreach { file =>
+      graft.model.OneRowParquet.withGroups(conf, file) { reader =>
+        var g = reader.read()
+        while (g != null) {
+          val list = g.getGroup("vec", 0) // LIST wrapper group
+          // 3-level list: repeated group element wrapper
+          val vec = Array.tabulate(list.getFieldRepetitionCount(0))(
+            i => list.getGroup(0, i).getFloat(0, 0))
+          rows += ((g.getString("kind", 0), g.getInteger("sub", 0), g.getInteger("idx", 0), vec))
+          g = reader.read()
+        }
+      }
     }
-    val coarse = rows.filter(_._1 == "coarse").sortBy(_._3).map(_._4)
+    val coarse = rows.filter(_._1 == "coarse").sortBy(_._3).map(_._4).toArray
     val pq = rows.filter(_._1 == "pq").groupBy(_._2).toSeq.sortBy(_._1)
-      .map { case (_, cents) => cents.sortBy(_._3).map(_._4) }.toArray
+      .map { case (_, cents) => cents.sortBy(_._3).map(_._4).toArray }.toArray
     require(coarse.nonEmpty && pq.nonEmpty, s"no codebooks at $dir")
     (coarse, pq)
   }
-
-  /** Driver-side read of the whole codebooks table: flat (string, int,
-    * int, array<float>) rows via the parquet-example Group API. None on
-    * any surprise — absent dir, no part files, nulls, an element shape
-    * other than the standard 3-level LIST of FLOAT — and the caller
-    * pays the Spark collect instead.
-    */
-  private def readBooksLocal(spark: SparkSession,
-      dir: String): Option[Array[(String, Int, Int, Array[Float])]] =
-    try {
-      import org.apache.parquet.hadoop.ParquetReader
-      import org.apache.parquet.hadoop.example.GroupReadSupport
-      val conf = spark.sparkContext.hadoopConfiguration
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val f = p.getFileSystem(conf)
-      if (!f.exists(p)) None
-      else {
-        val out = scala.collection.mutable.ArrayBuffer[(String, Int, Int, Array[Float])]()
-        graft.model.OneRowParquet.dataFiles(f, p).foreach { file =>
-          val reader = ParquetReader
-            .builder(new GroupReadSupport(), file).withConf(conf).build()
-          try {
-            var g = reader.read()
-            while (g != null) {
-              // required fields present exactly once; a null/missing
-              // field throws and the catch-all abstains
-              val kind = g.getString("kind", 0)
-              val sub = g.getInteger("sub", 0)
-              val idx = g.getInteger("idx", 0)
-              val list = g.getGroup("vec", 0) // LIST wrapper group
-              val nEl = list.getFieldRepetitionCount(0)
-              val arr = new Array[Float](nEl)
-              var i = 0
-              while (i < nEl) {
-                // 3-level list: repeated group element wrapper
-                arr(i) = list.getGroup(0, i).getFloat(0, 0)
-                i += 1
-              }
-              out += ((kind, sub, idx, arr))
-              g = reader.read()
-            }
-          } finally reader.close()
-        }
-        if (out.isEmpty) None else Some(out.toArray)
-      }
-    } catch {
-      case _: Exception => None // fallback owns the error story
-    }
 
   /** Append `newEmb` encoded with the SAVED codebooks as one level
     * ([[graft.model.LevelStore.append]]): only the new rows are written,

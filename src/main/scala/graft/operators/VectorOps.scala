@@ -33,27 +33,6 @@ object VectorOps {
     */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (l2norm(a) * l2norm(b))
 
-  /** Semi-supervised kNN LABEL PROPAGATION over a (vec_id, label,
-    * embedding) corpus: rows matching `seedPred` are the hand-labeled
-    * seed; every other row takes the majority label of its k nearest
-    * seeds by cosine (cos DESC, seed id ASC ranking; vote ties break to
-    * the smallest label — fully deterministic). Emits (vec_id,
-    * pred_label, n_votes, is_correct) where is_correct compares against
-    * the row's own held-out label, so the query doubles as its own
-    * transductive-accuracy report (KnnLabelSpec proves the harness
-    * detects real signal on planted clusters and reads ~chance on a
-    * label-shuffled negative control).
-    *
-    * Scale: the SEED is the broadcast side (hand-labeled data is small
-    * by construction — the op's whole premise), so the corpus is
-    * scanned ONCE with zero corpus-side shuffle before selection;
-    * per-doc top-k is the map-side TopKAgg bounded heap (ships k
-    * entries per doc, never the corpus×seed score relation), and the
-    * truth label rides the heap's grouping key — no corpus-sized rejoin
-    * to re-attach it. Vote counting and the argmax run over the
-    * docs×labels-sized relation. At 100 TB this composes with the IVF
-    * index exactly like similarity_topk → ann_ivf.
-    */
   /** Semantic decontamination: drop rows of `emb` NOT matching
     * `evalPred` whose cosine to ANY evalPred row reaches `threshold` —
     * embedding-space benchmark-leakage removal (the text_decontaminate
@@ -331,6 +310,27 @@ object VectorOps {
       (1, Seq("data", "query"), 7L),
       (2, Seq("merge", "stream", "data"), 42L))
 
+  /** Semi-supervised kNN LABEL PROPAGATION over a (vec_id, label,
+    * embedding) corpus: rows matching `seedPred` are the hand-labeled
+    * seed; every other row takes the majority label of its k nearest
+    * seeds by cosine (cos DESC, seed id ASC ranking; vote ties break to
+    * the smallest label — fully deterministic). Emits (vec_id,
+    * pred_label, n_votes, is_correct) where is_correct compares against
+    * the row's own held-out label, so the query doubles as its own
+    * transductive-accuracy report (KnnLabelSpec proves the harness
+    * detects real signal on planted clusters and reads ~chance on a
+    * label-shuffled negative control).
+    *
+    * Scale: the SEED is the broadcast side (hand-labeled data is small
+    * by construction — the op's whole premise), so the corpus is
+    * scanned ONCE with zero corpus-side shuffle before selection;
+    * per-doc top-k is the map-side TopKAgg bounded heap (ships k
+    * entries per doc, never the corpus×seed score relation), and the
+    * truth label rides the heap's grouping key — no corpus-sized rejoin
+    * to re-attach it. Vote counting and the argmax run over the
+    * docs×labels-sized relation. At 100 TB this composes with the IVF
+    * index exactly like similarity_topk → ann_ivf.
+    */
   def knnLabelPropagate(emb: DataFrame, seedPred: Column,
       k: Int = 5): DataFrame = {
     val sess = emb.sparkSession

@@ -140,6 +140,53 @@ class LevelStoreSpec extends SparkSpec {
     }
   }
 
+  test("a commit swap landing between committedPath's two probes re-probes: LexIndex and UpsertStore reads serve the committed store") {
+    // Modeled on ServingPointerSpec's interleave: StoreSwap.interProbeHook
+    // runs a reader's first probe (the commit row) AFTER the swap's step 2
+    // (row renamed aside) and its second probe (row.old) AFTER steps 3+4
+    // (new row promoted, .old deleted). Both probes miss although a
+    // committed row existed at every instant; the read must re-probe, not
+    // report an unbuilt store.
+    def interleaved[A](dir: String, commit: String)(read: => A): A = {
+      val row = s"$dir/$commit"
+      copyDir(row, StoreSwap.tmpPath(row)) // the swap's new row, same content
+      assert(new java.io.File(row).renameTo(new java.io.File(StoreSwap.oldPath(row))))
+      val fired = new java.util.concurrent.atomic.AtomicInteger(0)
+      StoreSwap.interProbeHook = () =>
+        if (fired.incrementAndGet() == 1) {
+          assert(new java.io.File(StoreSwap.tmpPath(row)).renameTo(new java.io.File(row)))
+          FileUtils.deleteDirectory(new java.io.File(StoreSwap.oldPath(row)))
+        }
+      try read
+      finally {
+        StoreSwap.interProbeHook = () => ()
+        assert(fired.get() == 1, s"the interleave must fire exactly once, fired ${fired.get()}")
+      }
+    }
+    val terms = Seq("spark", "merge", "vector", "data")
+    val lex = subjects.find(_.name == "LexIndex").get
+    val (lexDir, _, _) = builtThenAppended(lex)
+    val lexWant = LexIndex.bm25TopK(spark, lexDir, terms).collect().toSeq
+    val lexGot = interleaved(lexDir, lex.commit)(LexIndex.bm25TopK(spark, lexDir, terms))
+    assert(lexGot.collect().toSeq == lexWant, "bm25TopK must serve the committed index")
+
+    val up = subjects.find(_.name == "UpsertStore").get
+    val (upDir, _, _) = builtThenAppended(up)
+    val keyVals = Seq(Seq(1L), Seq(2L), Seq(4L), Seq(7L))
+    def lookup() = UpsertStore.lookup(spark, upDir, Seq("k"), keyVals)
+    val upWant = lookup().get.toJSON.collect().sorted.toSeq
+    assert(upWant.nonEmpty)
+    val upGot = interleaved(upDir, up.commit)(lookup())
+    assert(upGot.isDefined, "lookup on a committed store must not read as never built")
+    assert(upGot.get.toJSON.collect().sorted.toSeq == upWant)
+    // a dir that never committed reads None after ONE probe pass, no retry
+    val probes = new java.util.concurrent.atomic.AtomicInteger(0)
+    StoreSwap.interProbeHook = () => probes.incrementAndGet()
+    try assert(UpsertStore.lookup(spark, Scratch.dir("levelstore_virgin"), Seq("k"), keyVals).isEmpty)
+    finally StoreSwap.interProbeHook = () => ()
+    assert(probes.get() == 1, s"a never-built store must not be re-probed: ${probes.get()} passes")
+  }
+
   for (s <- subjects) {
     test(s"${s.name}: kill after the level write: readers serve the old store, the retry converges") {
       val (dir, snap, before) = builtThenAppended(s)

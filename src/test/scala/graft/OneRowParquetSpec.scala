@@ -6,9 +6,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** The driver-side one-row tables: what [[OneRowParquet.write]] commits
-  * reads back through both readers exactly as written, matches the
-  * Spark-written table it replaces in the stores, and a write that died
-  * before its rename never looks complete to [[StoreSwap]].
+  * reads back through the driver and Spark readers exactly as written,
+  * matches the Spark-written table it replaces in the stores, and a
+  * write that died before its `_SUCCESS` never looks complete to
+  * [[StoreSwap]].
   */
 class OneRowParquetSpec extends SparkSpec {
   import spark.implicits._
@@ -28,10 +29,9 @@ class OneRowParquetSpec extends SparkSpec {
     rows.foreach { values =>
       val dir = freshDir() + "/t"
       OneRowParquet.write(spark, dir, allTypes, values: _*)
-      val h = OneRowParquet.headOption(spark, dir)
-      assert(h.isDefined, s"the driver reader must serve $values, not fall back")
-      assert(h.get.schema == allTypes)
-      assert(h.get.toSeq == values, "driver read-back differs")
+      val h = OneRowParquet.head(spark, dir)
+      assert(h.schema == allTypes)
+      assert(h.toSeq == values, "driver read-back differs")
       val df = spark.read.parquet(dir)
       assert(df.schema == allTypes, "Spark sees the same names and types")
       assert(df.collect().toSeq.map(_.toSeq) == Seq(values), "Spark read-back differs")
@@ -49,6 +49,11 @@ class OneRowParquetSpec extends SparkSpec {
       OneRowParquet.write(spark, dir, new StructType().add("d", DateType), null: Any))
     intercept[IllegalArgumentException](OneRowParquet.write(spark, dir, one, 1))
     intercept[IllegalArgumentException](OneRowParquet.write(spark, dir, one, 1L, 2L))
+    // the reader refuses a shape it does not support, with no fallback
+    val dated = freshDir() + "/dated"
+    spark.sql("SELECT DATE'2024-01-01' AS d").write.parquet(dated)
+    val e = intercept[IllegalStateException](OneRowParquet.head(spark, dated))
+    assert(e.getMessage.contains("unsupported shape"), e.getMessage)
   }
 
   /** The table as the stores' former Spark write produced it. */
@@ -118,8 +123,8 @@ class OneRowParquetSpec extends SparkSpec {
     OneRowCrash.midFile(StoreSwap.tmpPath(store))
     assert(StoreSwap.committedPath(spark, StoreSwap.tmpPath(store)).isEmpty,
       "a dir holding only the staged file is not a committed write")
-    assert(OneRowParquet.headOption(spark, StoreSwap.tmpPath(store)).isEmpty,
-      "readers never see the staged file")
+    val e = intercept[IllegalStateException](OneRowParquet.head(spark, StoreSwap.tmpPath(store)))
+    assert(e.getMessage.contains("holds no row"), s"readers never see the staged file: $e")
     StoreSwap.commit(spark, store)
     assert(!new java.io.File(StoreSwap.tmpPath(store)).exists(), "torn tmp discarded")
     assert(spark.read.parquet(store).as[Long].collect().toSeq == Seq(1L),
@@ -129,13 +134,24 @@ class OneRowParquetSpec extends SparkSpec {
     OneRowParquet.write(spark, first, one, 1L)
     OneRowCrash.midFile(first)
     assert(StoreSwap.committedPath(spark, first).isEmpty)
-    // after the rename the file is complete: a crash before _SUCCESS
-    // leaves a committed write (the data-present fallback)
+    // a crash after the rename but before _SUCCESS is torn too: the
+    // marker is the only commit evidence
     val renamed = freshDir() + "/renamed"
     OneRowParquet.write(spark, renamed, one, 7L)
     new java.io.File(renamed, "_SUCCESS").delete()
-    assert(StoreSwap.committedPath(spark, renamed).contains(renamed))
-    assert(OneRowParquet.head(spark, renamed).getLong(0) == 7L)
+    assert(StoreSwap.committedPath(spark, renamed).isEmpty)
+    assert(OneRowParquet.committed(spark, renamed).isEmpty)
+    // and a LevelStore build whose commit row died that way retries clean
+    val docs = Tables.documents(spark, sf0001).limit(40)
+    val lex = freshDir()
+    LexIndex.build(spark, docs, lex, batchId = 0L)
+    val want = LexIndex.bm25TopK(spark, lex, Seq("spark", "data")).collect().toSeq
+    new java.io.File(lex, "stats/_SUCCESS").delete()
+    assert(!LexIndex.isBuilt(spark, lex), "a marker-less commit row reads as not built")
+    LexIndex.build(spark, docs, lex, batchId = 0L)
+    assert(LexIndex.isBuilt(spark, lex))
+    assert(LexIndex.bm25TopK(spark, lex, Seq("spark", "data")).collect().toSeq == want,
+      "the retried build serves what the first one would have")
   }
 }
 

@@ -105,9 +105,7 @@ class RecoverySpec extends SparkSpec {
 
   // a faithful torn-write state: the committer deletes `_temporary`
   // strictly BEFORE dropping `_SUCCESS`, so a crash that loses data
-  // always leaves the staging dir behind (deleting the marker alone
-  // would instead simulate a committer configured WITHOUT markers —
-  // see the fallback test below)
+  // always leaves the staging dir behind
   private def tear(dir: String): Unit = {
     hfs.delete(hp(dir + "/_SUCCESS"), false)
     hfs.mkdirs(hp(dir + "/_temporary"))
@@ -138,119 +136,31 @@ class RecoverySpec extends SparkSpec {
   }
 
   test("StoreSwap accepts a committed write from a committer that drops no _SUCCESS marker") {
-    // sessions setting mapreduce.fileoutputcommitter.marksuccessfuljobs
-    // =false commit real data without the marker; reading those as torn
-    // would make every isBuilt probe say "not built" and a stream fold
-    // would silently REBUILD a serving index from one micro-batch. The
-    // fallback: data files present + no _temporary staging = committed.
-    val store = Files.createTempDirectory("graft_swap_nomark").toString + "/store"
-    writeVersion(store, "v1", 10)
-    writeVersion(StoreSwap.tmpPath(store), "v2", 12)
-    hfs.delete(hp(StoreSwap.tmpPath(store) + "/_SUCCESS"), false) // marker-less committer
-    StoreSwap.commit(spark, store)
-    assert(readTags(store) == Set("v2"), "marker-less committed tmp must promote")
-    // and committedPath (the isBuilt probe) resolves a marker-less store
-    hfs.delete(hp(store + "/_SUCCESS"), false)
-    assert(StoreSwap.committedPath(spark, store).contains(store),
-      "marker-less committed store reads as built")
+    // a session setting mapreduce.fileoutputcommitter.marksuccessfuljobs
+    // =false commits Spark writes without the marker, and `_SUCCESS` is
+    // the only commit evidence StoreSwap accepts. FactStore.consolidate
+    // asserts its own rewrite's commit after the write returns, so its
+    // swap still promotes the compacted version under that session.
+    import graft.model.FactStore
+    val master = Files.createTempDirectory("graft_swap_nomark").toString + "/master"
+    FactStore.ingest(FactStore.eventsAsFacts(spark, sf0001).limit(200), master)
+    val before = FactStore.readAll(spark, master).count()
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.setBoolean("mapreduce.fileoutputcommitter.marksuccessfuljobs", false)
+    try FactStore.consolidate(spark, master, targetFiles = 1)
+    finally hc.setBoolean("mapreduce.fileoutputcommitter.marksuccessfuljobs", true)
+    assert(!hfs.exists(hp(StoreSwap.tmpPath(master))), "the rewrite was promoted, not left as tmp")
+    assert(FactStore.readAll(spark, master).count() == before,
+      "the promoted rewrite holds every row")
+    val kinds = hfs.listStatus(hp(master)).filter(_.getPath.getName.startsWith("kind="))
+    assert(kinds.nonEmpty && kinds.forall(k =>
+      hfs.listStatus(k.getPath).count(_.getPath.getName.startsWith("part-")) == 1),
+      "the master now holds the one-file-per-kind rewrite")
     // while _temporary-only staging still reads as NOT built
     val torn = Files.createTempDirectory("graft_swap_nomark2").toString + "/torn"
     hfs.mkdirs(hp(torn + "/_temporary"))
     assert(StoreSwap.committedPath(spark, torn).isEmpty,
       "a dir with only job staging inside is a torn write")
-  }
-
-  test("StoreSwap: a legitimately-EMPTY committed first version (markers disabled) reads as committed — the fold does not rebuild") {
-    // r15 ADVICE low #1: under marksuccessfuljobs=false the marker-less
-    // fallback cannot tell a committed-but-empty write (zero-row first
-    // batch, a filter that matched nothing) from the empty dir a crashed
-    // job leaves — so commit() discarded it as torn and every isBuilt
-    // probe said "never built", silently rebuilding the store. The
-    // writer-dropped EmptyMarker sidecar closes it.
-    val store = Files.createTempDirectory("graft_swap_empty").toString + "/store"
-    // a committed EMPTY write from a marker-less committer: zero part
-    // files, no _SUCCESS, no _temporary
-    writeVersion(StoreSwap.tmpPath(store), "none", 0)
-    hfs.delete(hp(StoreSwap.tmpPath(store) + "/_SUCCESS"), false)
-    hfs.listStatus(hp(StoreSwap.tmpPath(store))).foreach(st =>
-      if (!st.getPath.getName.startsWith("_")) hfs.delete(st.getPath, false))
-    // the writer KNOWS its job committed (write() returned) — it records
-    // the committed-empty fact the way the default committer records
-    // commit with _SUCCESS
-    StoreSwap.markCommittedEmpty(spark, StoreSwap.tmpPath(store))
-    StoreSwap.commit(spark, store)
-    assert(hfs.exists(hp(store)), "committed empty first version promoted, not discarded as torn")
-    assert(StoreSwap.committedPath(spark, store).contains(store),
-      "the isBuilt probe must read a committed-empty store as BUILT — " +
-        "a maintainer fold must fold into it, never rebuild from scratch")
-    // ...while an UNMARKED empty dir (the crashed-job signature) still
-    // reads as incomplete: the marker is the writer's assertion, absence
-    // of data alone never promotes
-    val crashed = Files.createTempDirectory("graft_swap_empty2").toString + "/crashed"
-    hfs.mkdirs(hp(crashed))
-    assert(StoreSwap.committedPath(spark, crashed).isEmpty,
-      "an unmarked empty dir is still a torn write")
-  }
-
-  test("StoreSwap: a stale EmptyMarker next to live _temporary staging reads INCOMPLETE") {
-    // the marker is commit evidence for the empty write that dropped it —
-    // not for a LATER overwrite that crashed mid-job and left _temporary
-    // next to it. Marker + live staging is ambiguous and must read torn,
-    // mirroring the data-present fallback's _temporary gate.
-    val store = Files.createTempDirectory("graft_swap_stale").toString + "/store"
-    StoreSwap.markCommittedEmpty(spark, store)
-    assert(StoreSwap.committedPath(spark, store).contains(store),
-      "marker alone: a committed empty version")
-    hfs.mkdirs(hp(store + "/_temporary")) // a later overwrite crashed mid-job
-    assert(StoreSwap.committedPath(spark, store).isEmpty,
-      "marker + live job staging must read incomplete — promoting it would serve torn data")
-    // and commit() discards such a tmp rather than promoting it
-    val s2 = Files.createTempDirectory("graft_swap_stale2").toString + "/store"
-    writeVersion(s2, "v1", 10)
-    StoreSwap.markCommittedEmpty(spark, StoreSwap.tmpPath(s2))
-    hfs.mkdirs(hp(StoreSwap.tmpPath(s2) + "/_temporary"))
-    StoreSwap.commit(spark, s2)
-    assert(readTags(s2) == Set("v1"), "the complete version keeps serving")
-    assert(!hfs.exists(hp(StoreSwap.tmpPath(s2))), "the ambiguous tmp is discarded as torn")
-  }
-
-  test("StoreSwap.commit fails LOUD on an ambiguous empty tmp under a markers-disabled session") {
-    // under marksuccessfuljobs=false an empty unmarked tmp is equally a
-    // crashed job's husk and a committed zero-row write whose producer
-    // forgot markCommittedEmpty — silently discarding it is the one way
-    // the protocol can throw away a committed version, so it must refuse
-    // until the maintainer disambiguates (mark it, or delete the tmp).
-    val hc = spark.sparkContext.hadoopConfiguration
-    hc.setBoolean("mapreduce.fileoutputcommitter.marksuccessfuljobs", false)
-    try {
-      val store = Files.createTempDirectory("graft_swap_husk").toString + "/store"
-      hfs.mkdirs(hp(StoreSwap.tmpPath(store)))
-      val e = intercept[IllegalStateException](StoreSwap.commit(spark, store))
-      assert(e.getMessage.contains("markCommittedEmpty"),
-        s"the error must name the resolution: ${e.getMessage}")
-      assert(hfs.exists(hp(StoreSwap.tmpPath(store))),
-        "the ambiguous tmp must survive the refusal for the maintainer to inspect")
-      // resolution path 1: the writer asserts its empty write committed
-      StoreSwap.markCommittedEmpty(spark, StoreSwap.tmpPath(store))
-      StoreSwap.commit(spark, store)
-      assert(StoreSwap.committedPath(spark, store).contains(store),
-        "marked empty tmp promotes to a committed (empty) serving version")
-      // resolution path 2: the maintainer deletes a crashed husk; commit
-      // then no-ops (recovery mode on a healthy store)
-      val s2 = Files.createTempDirectory("graft_swap_husk2").toString + "/store"
-      hfs.mkdirs(hp(StoreSwap.tmpPath(s2)))
-      hfs.delete(hp(StoreSwap.tmpPath(s2)), true)
-      StoreSwap.commit(spark, s2) // nothing to do, nothing thrown
-      // markers ON (the default) never reaches the refusal: an empty
-      // unmarked tmp is unambiguously torn (committed writes carry
-      // _SUCCESS) and is silently discarded as before
-      hc.setBoolean("mapreduce.fileoutputcommitter.marksuccessfuljobs", true)
-      val s3 = Files.createTempDirectory("graft_swap_husk3").toString + "/store"
-      hfs.mkdirs(hp(StoreSwap.tmpPath(s3)))
-      StoreSwap.commit(spark, s3)
-      assert(!hfs.exists(hp(StoreSwap.tmpPath(s3))),
-        "under default markers an empty tmp is a torn write, discarded")
-    } finally hc.setBoolean("mapreduce.fileoutputcommitter.marksuccessfuljobs", true)
   }
 
   test("empty-bootstrap streamed fold passes under a markers-disabled session without manual intervention") {
