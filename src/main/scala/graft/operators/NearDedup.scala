@@ -9,20 +9,22 @@ import org.apache.spark.sql.functions._
 /** Near-duplicate detection over `documents` (SURVEY.md §2.9
   * `near_dedup_minhash` + SimHash): the LSH scale path for text dedup.
   *
-  * MinHash: per doc, k=16 min-hashes of its 3-shingle set (hash family =
-  * murmur3(shingle, seed i)); 4 bands × 4 rows; docs sharing any band
+  * MinHash: per doc, k=64 min-hashes of its 3-shingle set (hash family =
+  * murmur3(shingle, seed i)); 16 bands × 4 rows; docs sharing any band
   * bucket are candidates; candidates are verified with exact shingle
-  * Jaccard ≥ threshold. By MinHash theory P(candidate) ≈ 1-(1-s^4)^4 —
-  * s=0.8 → 0.93, s=0.3 → 0.03 — so verification work stays near-linear.
+  * Jaccard ≥ threshold. By MinHash theory P(candidate) = 1-(1-s^4)^16 —
+  * s=0.7 → 0.99, s=0.3 → 0.12 — so verification work stays near-linear.
   *
   * SimHash: 64-bit signature = sign-aggregate of per-token hash bits
   * weighted by term frequency; near-dups are pairs within Hamming
   * distance ≤ 3, found by the pigeonhole band trick (4 × 16-bit chunks:
   * any pair at distance ≤ 3 shares at least one exact chunk).
   *
-  * Both are banded-shuffle joins — no all-pairs product, no driver state;
-  * exactly the shape that survives 100 TB (bucket sizes bounded by band
-  * width; hot buckets can be salted or frequency-capped upstream).
+  * Both are banded-shuffle joins through [[bucketPairs]] — the banding
+  * step of Leskovec, Rajaraman & Ullman, *Mining of Massive Datasets*
+  * §3.4, shared with the exact-shingle, SRP-LSH and semantic-cell pair
+  * generators: no all-pairs product, no driver state; exactly the shape
+  * that survives 100 TB (bucket sizes bounded by the hot-bucket cap).
   *
   * Approximate candidate generation → no DuckDB oracle; NearDedupSpec
   * asserts planted-duplicate recall and verified-Jaccard soundness.
@@ -124,6 +126,39 @@ object NearDedup {
     }
   }
 
+  /** The capped bucket self-join every near-duplicate pair generator
+    * runs (the banding step of *Mining of Massive Datasets* §3.4): drop
+    * the buckets over `maxBucket` rows ([[dropHotBuckets]], observed as
+    * `graft.<what>.hotcap.<n>`), then pair the rows sharing every `keys`
+    * column, `i < j` on `id`. Returns (i, j, then `<p>_i` and `<p>_j` for
+    * each other column `p` of `rows`) — one row per shared bucket, so a
+    * pair meeting in several buckets repeats.
+    */
+  private[graft] def bucketPairs(rows: DataFrame, id: String, keys: Seq[String],
+      maxBucket: Int, what: String): DataFrame = {
+    val bounded = dropHotBuckets(rows, keys, maxBucket, what)
+    val payload = rows.columns.toSeq.filterNot(c => c == id || keys.contains(c))
+    def side(s: String) = bounded.select(
+      keys.map(col) ++ (col(id).as(s) +: payload.map(p => col(p).as(s"${p}_$s"))): _*)
+    side("i").join(side("j"), keys)
+      .where(col("i") < col("j"))
+      .select((Seq("i", "j") ++ payload.flatMap(p => Seq(s"${p}_i", s"${p}_j"))).map(col): _*)
+  }
+
+  /** One row per (doc, band) of a minhash signature: `carry` plus `band`
+    * and its value `bv`, the hash of the band's RowsPerBand consecutive
+    * minhashes `mh(k)`.
+    */
+  private def minhashBands(sigs: DataFrame, mh: Int => org.apache.spark.sql.Column,
+      carry: String*): DataFrame = {
+    val bands = (0 until Bands).map { b =>
+      val cols = (0 until RowsPerBand).map(r => mh(b * RowsPerBand + r))
+      struct(lit(b).as("band"), hash(cols: _*).cast("long").as("bv"))
+    }
+    sigs.select(carry.map(col) :+ explode(array(bands: _*)).as("bb"): _*)
+      .select(carry.map(col) ++ Seq(col("bb.band").as("band"), col("bb.bv").as("bv")): _*)
+  }
+
   /** Candidate pairs (i < j) sharing at least one of the `Bands` band
     * hashes. Band value = hash of its RowsPerBand consecutive minhashes.
     *
@@ -138,22 +173,11 @@ object NearDedup {
     * buckets/rows were dropped so the recall tradeoff is visible.
     */
   def minhashCandidates(signatures: DataFrame,
-      maxBucket: Int = Int.MaxValue): DataFrame = {
-    val bandStructs = (0 until Bands).map { b =>
-      val cols = (0 until RowsPerBand).map(r => col(s"mh${b * RowsPerBand + r}"))
-      struct(lit(b).as("band"), hash(cols: _*).cast("long").as("bv"))
-    }
-    val bandedAll = signatures
-      .select(col("doc_id"), explode(array(bandStructs: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bv").as("bv"))
-    val banded = dropHotBuckets(bandedAll, Seq("band", "bv"), maxBucket, "minhash")
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
+      maxBucket: Int = Int.MaxValue): DataFrame =
+    bucketPairs(minhashBands(signatures, i => col(s"mh$i"), "doc_id"),
+      "doc_id", Seq("band", "bv"), maxBucket, "minhash")
+      .select("i", "j")
       .distinct()
-  }
 
   /** End-to-end MinHash near-dedup: candidates verified with exact shingle
     * Jaccard ≥ threshold. Returns (i, j, jaccard).
@@ -386,19 +410,12 @@ object NearDedup {
     require(maxDist <= 3, "4-chunk pigeonhole covers Hamming distance <= 3")
     val chunks = (0 until 4).map(cix =>
       struct(lit(cix).as("cix"), expr(s"($hashCol >> ${cix * 16}) & 65535").as("cv")))
-    val bandedAll = sig
+    val chunked = sig
       .select(col("doc_id"), col(hashCol).as("h64"), explode(array(chunks: _*)).as("c"))
       .select(col("doc_id"), col("h64"), col("c.cix").as("cix"), col("c.cv").as("cv"))
-    // same hot-bucket guard as the minhash band join
-    val banded = dropHotBuckets(bandedAll, Seq("cix", "cv"), maxBucket, hashCol)
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.cix") === col("b.cix") && col("a.cv") === col("b.cv") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"),
-        col("a.h64").as("ha"), col("b.h64").as("hb"))
+    bucketPairs(chunked, "doc_id", Seq("cix", "cv"), maxBucket, hashCol)
       .distinct()
-      .withColumn("hamming", bit_count(expr("ha ^ hb" )))
+      .withColumn("hamming", bit_count(col("h64_i").bitwiseXOR(col("h64_j"))))
       .where(col("hamming") <= maxDist)
       .select(col("i"), col("j"), col("hamming"))
   }
@@ -666,12 +683,8 @@ object NearDedup {
       .join(newSh, "s").select(col("i"), col("j"))
     val nn = newSh.select(col("j").as("i"), col("s"))
       .join(newSh, "s").where(col("i") < col("j")).select(col("i"), col("j"))
-    bip.unionAll(nn)
-      .groupBy("i", "j").agg(count(lit(1)).as("inter"))
-      .join(sizes.select(col("doc_id").as("i"), col("n").as("ni")), "i")
-      .join(sizes.select(col("doc_id").as("j"), col("n").as("nj")), "j")
-      .where(col("inter") / (col("ni") + col("nj") - col("inter")).cast("double")
-        >= threshold)
+    TextOps.jaccardAtLeast(bip.unionAll(nn).groupBy("i", "j").agg(count(lit(1)).as("inter")),
+        sizes, threshold)
       .select(col("i").as("src"), col("j").as("dst"))
   }
 
@@ -710,22 +723,10 @@ object NearDedup {
     val sigs = hashed
       .select(col("doc_id"), col("is_new"), minhashSignatureArray(col("hs")).as("sig"))
       .where(col("sig").isNotNull)
-    val bandStructs = (0 until Bands).map { b =>
-      val cols = (0 until RowsPerBand).map(r => col("sig")(b * RowsPerBand + r))
-      struct(lit(b).as("band"), hash(cols: _*).cast("long").as("bv"))
-    }
-    val bandedAll = sigs
-      .select(col("doc_id"), col("is_new"), explode(array(bandStructs: _*)).as("bb"))
-      .select(col("doc_id"), col("is_new"),
-        col("bb.band").as("band"), col("bb.bv").as("bv"))
-    val banded = dropHotBuckets(bandedAll, Seq("band", "bv"), maxBucket,
-      "incremental minhash")
-    val candidates = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
-          col("a.doc_id") < col("b.doc_id") &&
-          (col("a.is_new") || col("b.is_new")))
-      .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
+    val candidates = bucketPairs(minhashBands(sigs, i => col("sig")(i), "doc_id", "is_new"),
+        "doc_id", Seq("band", "bv"), maxBucket, "incremental minhash")
+      .where(col("is_new_i") || col("is_new_j"))
+      .select("i", "j")
       .distinct()
     verifyJaccard(candidates, hashed.select("doc_id", "hs"), threshold)
       .select(col("i").as("src"), col("j").as("dst"))

@@ -25,14 +25,13 @@ import org.apache.spark.sql.functions._
   *     same contract as the IVF quantizer's trainer): feature assembly
   *     boxes through MLlib vectors on that sample alone, never the
   *     corpus.
-  *   - INFERENCE is one row-local map pass: the weight vector rides a
-  *     one-row broadcast (BroadcastNestedLoopJoin against a literal
-  *     relation — no shuffle), and the per-doc score is
-  *     `aggregate(transform(tokens, t -> w[h(t)]), ...)` over built-in
-  *     expressions. No MLlib types, no UDF, no state: scoring 100 TB
-  *     runs at source parallelism and pipelines into whatever filter
-  *     consumes the score (the same fusion PlanSpec pins for the
-  *     pretraining pipelines' heuristic funnel).
+  *   - INFERENCE is one row-local map pass: the native
+  *     `hashed_bow_logit` expression carries the weight array and scores
+  *     each doc in one codegen'd call (no join, no shuffle). No MLlib
+  *     types, no UDF, no state: scoring 100 TB runs at source
+  *     parallelism and pipelines into whatever filter consumes the score
+  *     (the same fusion PlanSpec pins for the pretraining pipelines'
+  *     heuristic funnel), on batch and streaming relations alike.
   *   - The FEATURE HASH is Spark's Murmur3 `hash()` — identical at train
   *     and serve time by construction, so there is no vocabulary file to
   *     version or ship, only the weight array.
@@ -93,49 +92,15 @@ object QualityFilter {
   }
 
   /** Score every doc under the model: `quality_score` = P(label=1),
-    * `quality_pred` the 0.5-threshold decision. One broadcast of the
-    * weight array, then row-local arithmetic — zero shuffles (pinned in
-    * PlanSpec). Null/absent text scores at the intercept alone.
-    */
-  def scoreQuality(docs: DataFrame, m: QualityModel): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val wDf = Seq(Tuple1(m.weights.toSeq)).toDF("w_q")
-    val toks = coalesce(tokens(col("text")), array().cast("array<string>"))
-    val z = lit(m.intercept) + aggregate(
-      transform(toks, t => element_at(col("w_q"), (bucket(t, m.dim) + 1).cast("int"))),
-      lit(0.0), (acc, x) => acc + x)
-    docs.crossJoin(broadcast(wDf))
-      .withColumn("quality_score", lit(1.0) / (lit(1.0) + exp(-z)))
-      .withColumn("quality_pred", (col("quality_score") >= 0.5).cast("int"))
-      .drop("w_q")
-  }
-
-  /** [[scoreQuality]] with the weights as a single array LITERAL instead
-    * of a one-row broadcast relation: no join at all, so the pass is
-    * usable on a STREAMING DataFrame (stateless projection — the speed
-    * layer's "score as you crawl" path) as well as batch. Identical
-    * arithmetic to the broadcast form (QualityFilterSpec pins equality).
-    */
-  def scoreQualityLit(docs: DataFrame, m: QualityModel): DataFrame = {
-    val w = typedLit(m.weights.toSeq)
-    val toks = coalesce(tokens(col("text")), array().cast("array<string>"))
-    val z = lit(m.intercept) + aggregate(
-      transform(toks, t => element_at(w, (bucket(t, m.dim) + 1).cast("int"))),
-      lit(0.0), (acc, x) => acc + x)
-    docs
-      .withColumn("quality_score", lit(1.0) / (lit(1.0) + exp(-z)))
-      .withColumn("quality_pred", (col("quality_score") >= 0.5).cast("int"))
-  }
-
-  /** The serving form: one compiled pass per doc via the native
-    * `hashed_bow_logit` expression (TextNative) — tokenize + Murmur3
-    * bucket + weight sum + sigmoid in a single codegen'd call, the
-    * weight array riding the expression as a reference object. Same
-    * buckets as training (`pmod(hash(t), dim)` parity), same
-    * left-to-right fold order as [[scoreQuality]]/[[scoreQualityLit]]
-    * (QualityFilterSpec pins all three equal). Works on batch AND
-    * streaming relations (stateless, no join).
+    * `quality_pred` the 0.5-threshold decision, in one compiled pass per
+    * doc via the native `hashed_bow_logit` expression (TextNative) —
+    * tokenize + Murmur3 bucket + weight sum + sigmoid in a single
+    * codegen'd call, the weight array riding the expression as a
+    * reference object. Same buckets as training (`pmod(hash(t), dim)`
+    * parity) and the same left-to-right fold order as the interpreted
+    * `aggregate(transform(...))` form QualityFilterSpec pins it equal
+    * to. Null/absent text scores at the intercept alone. Works on batch
+    * AND streaming relations (stateless, no join).
     */
   def scoreQualityNative(docs: DataFrame, m: QualityModel): DataFrame = {
     require(m.weights.length == m.dim, s"weights length ${m.weights.length} != dim ${m.dim}")

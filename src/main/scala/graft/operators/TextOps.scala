@@ -21,12 +21,6 @@ import org.apache.spark.sql.functions._
   */
 object TextOps {
 
-  /** Shared oracle CTE: 3-shingle sets, per-doc sizes, and pairwise
-    * intersection counts over `src` (a relation with doc_id, text) — the
-    * single definition of what a "dup pair" is for every exact-Jaccard
-    * oracle (text_ngram_jaccard, near_dedup_apply,
-    * pipeline_pretraining_corpus).
-    */
   /** PII patterns, constrained to the dialect Java regex and RE2 share
     * (character classes, bounded repeats, \b — no lookaround) so the
     * engine and the DuckDB oracle agree byte-for-byte.
@@ -336,8 +330,8 @@ object TextOps {
 
   /** The shared exact-shingle oracle CTE. The `cool`/`shj` stage is the
     * DuckDB mirror of the Spark side's MaxShingleFreq hot-shingle guard
-    * (dropHotBuckets inside ngramJaccardPairsFromHashes and the
-    * containment form): shingles in more than the cap's worth of docs
+    * (the cap inside ngramJaccardPairsFromHashes and the containment
+    * form): shingles in more than the cap's worth of docs
     * are dropped from the pair JOIN while set sizes stay exact — the
     * two engines must apply the SAME cap or intersection counts diverge
     * on any corpus with a >cap boilerplate shingle (latent at fixture
@@ -1141,7 +1135,7 @@ object TextOps {
       try {
         val sh = hashed.select(col("doc_id"), explode(col("hs")).as("s"))
         val sizes = hashed.select(col("doc_id"), size(col("hs")).cast("long").as("n"))
-        pairsWithSizes(sh, sizes, MaxShingleFreq, "containment shingle")
+        withSizes(shinglePairs(sh, MaxShingleFreq, "containment shingle"), sizes)
           .withColumn("containment",
             col("inter") / least(col("ni"), col("nj")).cast("double"))
           .where(col("containment") >= 0.5)
@@ -1783,12 +1777,6 @@ object TextOps {
       })
   }
 
-  /** Surviving NEW docs after dedup against the EXISTING corpus: drops
-    * rows matching `isNew` whose content hash appears in the existing
-    * side (exact) or whose 3-shingle Jaccard against ANY existing doc
-    * reaches `threshold` (near). Emits (doc_id, n_tokens) of survivors —
-    * the shape the ingest step appends to the master corpus.
-    */
   /** Shared oracle for dedup_incremental and dedup_incremental_bloom —
     * the bloom prefilters cannot change the result (no false negatives;
     * false positives die in the exact join), so both run the plain SQL.
@@ -1815,6 +1803,12 @@ object TextOps {
        |  AND doc_id NOT IN (SELECT j FROM neardrop UNION SELECT j FROM exactdrop)
        |ORDER BY doc_id""".stripMargin
 
+  /** Surviving NEW docs after dedup against the EXISTING corpus: drops
+    * rows matching `isNew` whose content hash appears in the existing
+    * side (exact) or whose 3-shingle Jaccard against ANY existing doc
+    * reaches `threshold` (near). Emits (doc_id, n_tokens) of survivors —
+    * the shape the ingest step appends to the master corpus.
+    */
   def incrementalDedup(docs: DataFrame, isNew: org.apache.spark.sql.Column,
       threshold: Double, maxShingleFreq: Int = MaxShingleFreq): DataFrame = {
     val base = docs
@@ -1833,14 +1827,10 @@ object TextOps {
       val bounded = NearDedup.dropHotBuckets(sh, Seq("s"), maxShingleFreq,
         "incremental-dedup shingle")
       val sizes = base.select(col("doc_id"), size(col("hs")).cast("long").as("n"))
-      val nearDrop = bounded.where(!col("is_new")).select(col("doc_id").as("i"), col("s"))
+      val inter = bounded.where(!col("is_new")).select(col("doc_id").as("i"), col("s"))
         .join(bounded.where(col("is_new")).select(col("doc_id").as("j"), col("s")), "s")
         .groupBy("i", "j").agg(count(lit(1)).as("inter"))
-        .join(sizes.select(col("doc_id").as("i"), col("n").as("ni")), "i")
-        .join(sizes.select(col("doc_id").as("j"), col("n").as("nj")), "j")
-        .where(col("inter") / (col("ni") + col("nj") - col("inter")).cast("double")
-          >= threshold)
-        .select(col("j").as("doc_id"))
+      val nearDrop = jaccardAtLeast(inter, sizes, threshold).select(col("j").as("doc_id"))
       base.where(col("is_new"))
         .join(exactDrop.unionAll(nearDrop).distinct(), Seq("doc_id"), "left_anti")
         .select(col("doc_id"), size(tokens(col("text"))).as("n_tokens"))
@@ -1890,14 +1880,10 @@ object TextOps {
       // overestimate only lowers the false-positive rate
       val shingleBloom = BloomPrune.buildBloom(oldSh, col("s"), oldSh.count())
       val sizes = base.select(col("doc_id"), size(col("hs")).cast("long").as("n"))
-      val nearDrop = oldSh
+      val inter = oldSh
         .join(newSh.where(BloomPrune.mightContain(shingleBloom, col("s"))), "s")
         .groupBy("i", "j").agg(count(lit(1)).as("inter"))
-        .join(sizes.select(col("doc_id").as("i"), col("n").as("ni")), "i")
-        .join(sizes.select(col("doc_id").as("j"), col("n").as("nj")), "j")
-        .where(col("inter") / (col("ni") + col("nj") - col("inter")).cast("double")
-          >= threshold)
-        .select(col("j").as("doc_id"))
+      val nearDrop = jaccardAtLeast(inter, sizes, threshold).select(col("j").as("doc_id"))
       base.where(col("is_new"))
         .join(exactDrop.unionAll(nearDrop).distinct(), Seq("doc_id"), "left_anti")
         .select(col("doc_id"), size(tokens(col("text"))).as("n_tokens"))
@@ -1961,26 +1947,37 @@ object TextOps {
     } finally sh.unpersist()
   }
 
-  /** The shared sparse-similarity scaffolding: hot-capped shingle
-    * self-join → (i, j, inter, ni, nj). Jaccard and containment are
-    * DERIVED metrics over this one shape — keeping the cap/persist/join
-    * pattern in a single place (its semantics have already changed once;
-    * two copies drift).
+  /** The shared sparse-similarity scaffolding: intersection counts
+    * (i, j, inter) of the pairs sharing a shingle of the exploded
+    * (doc_id, s) relation, through the hot-capped bucket self-join
+    * ([[NearDedup.bucketPairs]]). Jaccard and containment are DERIVED
+    * metrics over this one shape — keeping the cap/join pattern in a
+    * single place (its semantics have already changed once; two copies
+    * drift).
     */
-  private def pairsWithSizes(sh: DataFrame, sizes: DataFrame,
-      maxShingleFreq: Int, what: String): DataFrame = {
-    val bounded = NearDedup.dropHotBuckets(sh, Seq("s"), maxShingleFreq, what)
-    bounded.as("a")
-      .join(bounded.as("b"), col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
-      .agg(count(lit(1)).as("inter"))
+  private def shinglePairs(sh: DataFrame, maxShingleFreq: Int, what: String): DataFrame =
+    NearDedup.bucketPairs(sh, "doc_id", Seq("s"), maxShingleFreq, what)
+      .groupBy("i", "j").agg(count(lit(1)).as("inter"))
+
+  /** (i, j, inter) intersection counts joined to both endpoints' set
+    * sizes from `sizes` (doc_id, n): (i, j, inter, ni, nj).
+    */
+  private def withSizes(inter: DataFrame, sizes: DataFrame): DataFrame =
+    inter
       .join(sizes.select(col("doc_id").as("i"), col("n").as("ni")), "i")
       .join(sizes.select(col("doc_id").as("j"), col("n").as("nj")), "j")
-  }
+
+  /** [[withSizes]] plus `jac` = inter / (ni + nj − inter), kept where
+    * jac ≥ threshold: the one Jaccard tail of the exact self-join and
+    * the incremental bipartite forms.
+    */
+  private[operators] def jaccardAtLeast(inter: DataFrame, sizes: DataFrame,
+      threshold: Double): DataFrame =
+    withSizes(inter, sizes)
+      .withColumn("jac", col("inter") / (col("ni") + col("nj") - col("inter")).cast("double"))
+      .where(col("jac") >= threshold)
 
   private def jaccardFromParts(sh: DataFrame, sizes: DataFrame,
       threshold: Double, maxShingleFreq: Int): DataFrame =
-    pairsWithSizes(sh, sizes, maxShingleFreq, "exact-jaccard shingle")
-      .withColumn("jac", col("inter") / (col("ni") + col("nj") - col("inter")).cast("double"))
-      .where(col("jac") >= threshold)
+    jaccardAtLeast(shinglePairs(sh, maxShingleFreq, "exact-jaccard shingle"), sizes, threshold)
 }

@@ -1196,15 +1196,18 @@ object VectorOps {
       .select(col("vec_id"), col("cell"), col("rk"))
   }
 
+  /** Rows above which [[cosineNearDupSemantic]] drops a cell. */
+  val SemanticMaxCell = 5000
+
   /** SemDeDup-style cluster-scoped near-dup pairs: assign every vector to
     * its nearest trained centroid in one streamed codegen pass (the same
-    * [[trainQuantizer]]/nearestCentroid machinery IVF search uses), then
+    * [[trainQuantizer]]/nearest-centroid machinery IVF search uses), then
     * self-join per cell with exact cosine at `threshold`. The shuffle
     * carries one corpus copy keyed by cell; a cell's pairs never leave
     * its partition. [[SemanticMaxCell]] is the hot-cell quadratic guard — an
-    * over-full cell (degenerate clustering,
-    * duplicate-heavy corpora) is dropped and LOGGED by dropHotBuckets,
-    * the same lossy-but-loud policy as the minhash/SRP band paths.
+    * over-full cell (degenerate clustering, duplicate-heavy corpora) is
+    * dropped and LOGGED by [[NearDedup.bucketPairs]], the same
+    * lossy-but-loud policy as the minhash/SRP band paths.
     * Cross-cell near-dups are missed by design; the LSH path is the
     * recall-targeted alternative, this one is the throughput-targeted
     * form (no code replicas, one partition-local quadratic pass).
@@ -1214,8 +1217,8 @@ object VectorOps {
     * Voronoi boundary still co-occurs wherever their cell sets
     * intersect — the build-side analogue of IVF's nProbe, trading
     * nAssign× corpus replicas in the per-cell join for the boundary
-    * pairs single assignment structurally misses. Candidates then need a
-    * distinct (a pair may share several cells) before the exact verify.
+    * pairs single assignment structurally misses. The verified pairs
+    * then need a distinct (a pair may share several cells).
     *
     * The DEFAULT is `nAssign = 2` (round 11): measured recall vs the
     * exact all-pairs form is 0.90 at 2-assign vs 0.53 at single assign
@@ -1225,9 +1228,6 @@ object VectorOps {
     * throughput-bound passes that tolerate boundary misses; both
     * operating points stay tracked per round in RECALL_r{N}.json.
     */
-  /** Rows above which [[cosineNearDupSemantic]] drops a cell. */
-  val SemanticMaxCell = 5000
-
   def cosineNearDupSemantic(spark: SparkSession, emb: DataFrame,
       threshold: Double, nCells: Int = 0,
       maxTrainRows: Long = 100000L, nAssign: Int = 2): DataFrame = {
@@ -1244,47 +1244,28 @@ object VectorOps {
     // asked (duplicate-heavy corpora collapse k-means|| init points;
     // trainQuantizer caps k at the sample size) — cap the assignment
     // fan-out or NearestCentroids' arity check rejects nAssign > cells
-    val assign = math.min(nAssign, centroidArr.length)
-    if (assign <= 1) {
-      val assigned = unitEmb.select(col("vec_id"), col("embedding"),
-        org.apache.spark.sql.graft.SrpNative
-          .nearestCentroid(col("unit"), centroidArr).as("cell"))
-      val bounded = NearDedup.dropHotBuckets(assigned, Seq("cell"), SemanticMaxCell, "semantic-cell")
-      val a = bounded.select(col("cell"), col("vec_id").as("i"), col("embedding").as("ei"))
-      val b = bounded.select(col("cell"), col("vec_id").as("j"), col("embedding").as("ej"))
-      a.join(b, Seq("cell"))
-        .where(col("i") < col("j"))
-        .withColumn("cos", cosine(col("ei"), col("ej")))
-        .where(col("cos") >= threshold)
-        // no distinct: each vector lives in exactly one cell, so a pair can
-        // surface at most once — unlike the multi-table LSH candidate join
-        .select(col("i"), col("j"), round(col("cos"), 4).as("cos"))
-    } else {
-      // multi-assign: explode the nAssign-nearest cells and verify INSIDE
-      // the per-cell join, then dedup the (tiny) survivor set. Embedding
-      // bytes shuffle only linearly (nAssign x corpus, partitioned by
-      // cell); the quadratic pair relation is born and filtered inside
-      // one whole-stage-codegen span and never shuffles. The alternative
-      // — id-only candidate pairs + distinct + re-joining embeddings —
-      // ships the quadratic relation through TWO more shuffles to save
-      // at most nAssign-fold cosine recomputation; at the 100x scaling
-      // point (200k vectors, r12) that shape spilled tens of GB while
-      // this one's only quadratic cost is streamed arithmetic.
-      val assigned = unitEmb.select(col("vec_id"), col("embedding"),
-        explode(org.apache.spark.sql.graft.SrpNative
-          .nearestCentroids(col("unit"), centroidArr, assign)).as("cell"))
-      val bounded = NearDedup.dropHotBuckets(assigned, Seq("cell"), SemanticMaxCell, "semantic-cell")
-      val a = bounded.select(col("cell"), col("vec_id").as("i"), col("embedding").as("ei"))
-      val b = bounded.select(col("cell"), col("vec_id").as("j"), col("embedding").as("ej"))
-      a.join(b, Seq("cell"))
-        .where(col("i") < col("j"))
-        .withColumn("cos", cosine(col("ei"), col("ej")))
-        .where(col("cos") >= threshold)
-        .select(col("i"), col("j"), round(col("cos"), 4).as("cos"))
-        // a pair can surface in up to nAssign shared cells; the rounded
-        // cos is identical each time, so distinct collapses them exactly
-        .distinct()
-    }
+    val assign = math.max(1, math.min(nAssign, centroidArr.length))
+    // verify INSIDE the per-cell join, then dedup the (tiny) survivor
+    // set. Embedding bytes shuffle only linearly (assign x corpus,
+    // partitioned by cell); the quadratic pair relation is born and
+    // filtered inside one whole-stage-codegen span and never shuffles.
+    // The alternative — id-only candidate pairs + distinct + re-joining
+    // embeddings — ships the quadratic relation through TWO more
+    // shuffles to save at most assign-fold cosine recomputation; at the
+    // 100x scaling point (200k vectors, r12) that shape spilled tens of
+    // GB while this one's only quadratic cost is streamed arithmetic.
+    val assigned = unitEmb.select(col("vec_id"), col("embedding"),
+      explode(org.apache.spark.sql.graft.SrpNative
+        .nearestCentroids(col("unit"), centroidArr, assign)).as("cell"))
+    val pairs = NearDedup.bucketPairs(assigned, "vec_id", Seq("cell"),
+        SemanticMaxCell, "semantic-cell")
+      .withColumn("cos", cosine(col("embedding_i"), col("embedding_j")))
+      .where(col("cos") >= threshold)
+      .select(col("i"), col("j"), round(col("cos"), 4).as("cos"))
+    // a pair can surface in up to `assign` shared cells; the rounded cos
+    // is identical each time, so distinct collapses them exactly. With
+    // one cell per vector a pair surfaces at most once.
+    if (assign > 1) pairs.distinct() else pairs
   }
 
   /** IVF cell count by the standard √n rule (FAISS-style): cells track
@@ -1444,6 +1425,31 @@ object VectorOps {
     else kmeansLocal(uni, k, 42L).map(_.map(_.toFloat))
   }
 
+  /** The (probe, cell) pairs an IVF search at this shape scans — the
+    * COST side of the nProbe/probeMargin knobs, measured with the same
+    * seeded quantizer and spherical metric [[annIvf]] uses (identical
+    * centroids, so a recall measured by annIvf and a cost measured here
+    * at the same arguments describe ONE operating point). Each pair is
+    * one cell-sized candidate read: on the flat path a partition-local
+    * corpus slice, on the persistent index a pruned partition.
+    * Recall.scala's probeMargin curve and the ApproxOpsSpec
+    * fewer-cells-at-equal-recall pin consume it.
+    */
+  def ivfProbedCells(spark: SparkSession, emb: DataFrame, probeFilter: Column,
+      nCells: Int = 0, nProbe: Int = 8, maxTrainRows: Long = 100000L,
+      probeMargin: Double = 0.0): Long = {
+    val n = emb.count()
+    val cells = if (nCells > 0) nCells else ivfCells(n)
+    val unitEmb = withUnit(emb, "embedding", "unit")
+    val centroidArr = trainQuantizer(
+      unitEmb.select(col("vec_id"), col("unit").as("embedding")),
+      cells, maxTrainRows, n)
+    val probes = withUnit(emb.where(probeFilter && col("embedding").isNotNull),
+      "embedding", "pu")
+      .select(col("vec_id").as("p"), col("pu"))
+    nearestProbeCells(probes, centroidArr, nProbe, probeMargin).count()
+  }
+
   /** IVF: train a seeded k-means coarse quantizer, assign corpus rows
     * to cells, search each probe's nProbe nearest cells, exact-rerank.
     * The default `nProbe = 8` sits at the measured recall-curve KNEE
@@ -1472,31 +1478,6 @@ object VectorOps {
     * read, so non-matching inverted-list entries never join). Default
     * `lit(true)` = unfiltered.
     */
-  /** The (probe, cell) pairs an IVF search at this shape scans — the
-    * COST side of the nProbe/probeMargin knobs, measured with the same
-    * seeded quantizer and spherical metric [[annIvf]] uses (identical
-    * centroids, so a recall measured by annIvf and a cost measured here
-    * at the same arguments describe ONE operating point). Each pair is
-    * one cell-sized candidate read: on the flat path a partition-local
-    * corpus slice, on the persistent index a pruned partition.
-    * Recall.scala's probeMargin curve and the ApproxOpsSpec
-    * fewer-cells-at-equal-recall pin consume it.
-    */
-  def ivfProbedCells(spark: SparkSession, emb: DataFrame, probeFilter: Column,
-      nCells: Int = 0, nProbe: Int = 8, maxTrainRows: Long = 100000L,
-      probeMargin: Double = 0.0): Long = {
-    val n = emb.count()
-    val cells = if (nCells > 0) nCells else ivfCells(n)
-    val unitEmb = withUnit(emb, "embedding", "unit")
-    val centroidArr = trainQuantizer(
-      unitEmb.select(col("vec_id"), col("unit").as("embedding")),
-      cells, maxTrainRows, n)
-    val probes = withUnit(emb.where(probeFilter && col("embedding").isNotNull),
-      "embedding", "pu")
-      .select(col("vec_id").as("p"), col("pu"))
-    nearestProbeCells(probes, centroidArr, nProbe, probeMargin).count()
-  }
-
   def annIvf(spark: SparkSession, emb: DataFrame, probeFilter: Column, k: Int,
       nCells: Int = 0, nProbe: Int = 8, maxTrainRows: Long = 100000L,
       corpusFilter: Column = lit(true),
@@ -2150,12 +2131,8 @@ object VectorOps {
         (tables, planes)
       }
     val codes = lshBandCodes(spark, emb, t, b)
-    val banded = NearDedup.dropHotBuckets(codes, Seq("t", "code"), maxBucket, "srp-lsh")
-    val candidates = banded.as("a")
-      .join(banded.as("b"),
-        col("a.t") === col("b.t") && col("a.code") === col("b.code") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("i"), col("b.vec_id").as("j"))
+    val candidates = NearDedup.bucketPairs(codes, "vec_id", Seq("t", "code"), maxBucket, "srp-lsh")
+      .select("i", "j")
       .distinct()
     candidates
       .join(emb.select(col("vec_id").as("i"), col("embedding").as("ei")), "i")

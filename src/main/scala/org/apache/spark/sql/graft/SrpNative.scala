@@ -228,6 +228,10 @@ case class NearestCentroids(child: Expression, centroids: Array[Array[Float]],
         if (!used(q) && dist(q) < bestD) { bestD = dist(q); best = q }
         q += 1
       }
+      // no distance below MaxValue left (a NaN or ±Inf component makes
+      // them all NaN or Inf): the lowest unused cell, as NearestCentroid
+      // keeps cell 0 for such a row
+      if (best < 0) best = used.indexOf(false)
       used(best) = true
       out(s) = best
       s += 1
@@ -433,6 +437,9 @@ case class SrpMultiProbeCodes(child: Expression, nTables: Int, nPlanes: Int,
             }
             q += 1
           }
+          // no finite margin sum left (a NaN or ±Inf component): the
+          // lowest unused candidate
+          if (best < 0) best = used.indexOf(false)
           used(best) = true
           out(t * stride + 1 + f) = code ^ masks(best)
           f += 1

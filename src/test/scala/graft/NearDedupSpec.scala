@@ -110,21 +110,55 @@ class NearDedupSpec extends SparkSpec {
   test("hot-cap negative control: a clean corpus reports dropped_rows = 0 through the metric") {
     // the zero case matters as much as engagement: a dashboard alarming
     // on dropped_rows can only trust zero if an un-engaged cap still
-    // EMITS the observation (rather than the metric going missing)
+    // EMITS the observation (rather than the metric going missing) — at
+    // every site that caps through NearDedup.bucketPairs, each at its
+    // declared query's threshold. Known gap: a result that comes out
+    // EMPTY after a later shuffle loses the observation (AQE swaps the
+    // finished plan for an empty relation, CollectMetrics included;
+    // semantic-cell at threshold 0.9 shows it)
+    import graft.operators.VectorOps
     val sh = docs.select(col("doc_id"), explode(distinctShingles(col("text"), 3)).as("s"))
-    val sigs = NearDedup.minhashSignatures(sh)
-    val clean = NearDedup.minhashCandidates(sigs, maxBucket = 100000)
-    clean.collect()
-    val cm = clean.queryExecution.observedMetrics
-      .filter { case (name, _) => name.startsWith("graft.minhash.hotcap.") }
-    assert(cm.nonEmpty,
-      s"un-engaged cap must still observe; got ${clean.queryExecution.observedMetrics.keySet}")
-    assert(cm.values.head.getAs[Long]("dropped_rows") == 0L &&
-      cm.values.head.getAs[Long]("dropped_buckets") == 0L,
-      s"clean run must report zero drops, got $cm")
-    // every other cap site (exact-jaccard, simhash bands, srp-lsh,
-    // semantic cells) goes through the same dropHotBuckets helper, so
-    // the zero-emission property is shared by construction
+    val emb = Tables.embeddings(spark, sf0001)
+    val sites = Seq(
+      "minhash" -> NearDedup.minhashCandidates(NearDedup.minhashSignatures(sh), maxBucket = 100000),
+      "simhash" -> NearDedup.simhashNearDups(docs, maxBucket = 100000),
+      "srp-lsh" -> VectorOps.cosineNearDupLsh(spark, emb, threshold = 0.4, maxBucket = 100000),
+      "semantic-cell" -> VectorOps.cosineNearDupSemantic(spark, emb, threshold = 0.4, nCells = 8))
+    sites.foreach { case (what, df) =>
+      assert(df.collect().nonEmpty, s"$what: the declared threshold finds pairs here")
+      val cm = df.queryExecution.observedMetrics
+        .filter { case (name, _) => name.startsWith(s"graft.$what.hotcap.") }
+      assert(cm.nonEmpty,
+        s"$what: un-engaged cap must still observe; got ${df.queryExecution.observedMetrics.keySet}")
+      assert(cm.values.forall(m =>
+        m.getAs[Long]("dropped_rows") == 0L && m.getAs[Long]("dropped_buckets") == 0L),
+        s"$what: clean run must report zero drops, got $cm")
+    }
+  }
+
+  test("bucketPairs equals brute-force pairs sharing an uncapped multi-column bucket") {
+    val cap = 4
+    (1 to 4).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      // random rows over 9 (k1, k2) buckets (ids may repeat), plus one
+      // bucket of exactly `cap` rows (kept) and one of cap + 1 (dropped)
+      val rows = Seq.fill(30)((rnd.nextInt(40).toLong, rnd.nextInt(3),
+          rnd.nextInt(3).toString, rnd.nextInt(100))) ++
+        (0 until cap).map(i => (100L + i, 7, "full", i)) ++
+        (0 to cap).map(i => (200L + i, 8, "over", i))
+      def brute(maxBucket: Int) =
+        rows.groupBy(r => (r._2, r._3)).values.filter(_.size <= maxBucket).toSeq
+          .flatMap(b => for (a <- b; c <- b if a._1 < c._1) yield (a._1, c._1, a._4, c._4))
+          .sorted
+      val df = rows.toDF("id", "k1", "k2", "p")
+      Seq(cap, Int.MaxValue).foreach { maxBucket =>
+        val pairs = NearDedup.bucketPairs(df, "id", Seq("k1", "k2"), maxBucket, "test")
+        assert(pairs.columns.toSeq == Seq("i", "j", "p_i", "p_j"))
+        val got = pairs.as[(Long, Long, Int, Int)].collect().toSeq.sorted
+        assert(got == brute(maxBucket), s"seed=$seed maxBucket=$maxBucket")
+      }
+      assert(brute(cap).exists(_._1 == 100L) && !brute(cap).exists(_._1 == 200L))
+    }
   }
 
   test("minhash signatures are permutation-stable (same doc -> same signature)") {

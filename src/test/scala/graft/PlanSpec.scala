@@ -408,4 +408,46 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"),
       s"verify joins must stay equi-joins:\n$p")
   }
+
+  test("minhashNearDups (the batch dedup step) keeps its pinned plan shape") {
+    // the step's queries run inside the operator (the hot-bucket
+    // checkpoint, the drop-stats collect, the verify checkpoint), so
+    // their executed plans are caught from a QueryExecutionListener.
+    // Per query: (action, shuffle exchanges, broadcast exchanges,
+    // sort-merge joins, broadcast hash joins, hash aggregates, generates)
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(f -> qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.TestBus.drain(sc)
+    spark.listenerManager.register(listener)
+    try {
+      operators.NearDedup.minhashNearDups(Tables.documents(spark, sf0001), 0.5)
+      org.apache.spark.TestBus.drain(sc)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val shapes = seen.asScala.toSeq.map { case (f, qe) =>
+      val all = nodes(qe.executedPlan)
+      val ids = java.util.Collections.newSetFromMap(
+        new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
+      def n(p: PartialFunction[org.apache.spark.sql.execution.SparkPlan, AnyRef]) =
+        all.collect(p).count(ids.add)
+      (f, n { case e: ShuffleExchangeLike => e }, n { case e: BroadcastExchangeLike => e },
+        n { case j: SortMergeJoinExec => j }, n { case j: BroadcastHashJoinExec => j },
+        n { case a: HashAggregateExec => a },
+        n { case g: org.apache.spark.sql.execution.GenerateExec => g })
+    }
+    assert(shapes == Seq(
+      ("localCheckpoint", 1, 0, 0, 0, 2, 1), // hot-bucket counts
+      ("collect", 1, 0, 0, 0, 2, 0), // drop stats
+      ("localCheckpoint", 1, 3, 0, 3, 2, 2)), // band join + verify
+      shapes.mkString("\n"))
+  }
 }

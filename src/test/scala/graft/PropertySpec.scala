@@ -150,4 +150,33 @@ class PropertySpec extends SparkSpec {
     assert(est(ev) == est(ev))
     assert(est(ev.repartition(3)) == est(ev.repartition(11)))
   }
+
+  test("nearest-centroid selections never throw: element 0 of nearestCentroids is nearestCentroid") {
+    // a NaN or ±Inf component makes every distance (and every multi-probe
+    // margin) NaN or Inf, so no candidate compares below the selection's
+    // starting bound; ragged and empty rows cover the common-prefix rule
+    import org.apache.spark.sql.graft.SrpNative
+    val rnd = new scala.util.Random(17)
+    val dims = 4
+    val centroids = Array.fill(3)(Array.fill(dims)(rnd.nextGaussian().toFloat))
+    val special = Seq(Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity)
+    def component() =
+      if (rnd.nextInt(4) == 0) special(rnd.nextInt(3)) else rnd.nextGaussian().toFloat
+    val rows = Seq(Array.empty[Float], Array(Float.NaN), Array.fill(dims)(Float.PositiveInfinity),
+        Array.fill(dims)(Float.NegativeInfinity), Array.fill(dims)(1.0f)) ++
+      Seq.fill(200)(Array.fill(rnd.nextInt(dims + 3))(component()))
+    val df = rows.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "v")
+    (1 to 3).foreach { n =>
+      df.select(col("id"), SrpNative.nearestCentroid(col("v"), centroids),
+          SrpNative.nearestCentroids(col("v"), centroids, n),
+          SrpNative.srpMultiProbeCodes(col("v"), 2, 3, dims, n))
+        .collect().foreach { r =>
+          val row = rows(r.getLong(0).toInt).mkString("[", ",", "]")
+          val many = r.getSeq[Int](2)
+          assert(many.head == r.getInt(1), s"n=$n row=$row: $many vs ${r.getInt(1)}")
+          assert(many.distinct.size == n, s"n=$n row=$row: $many")
+          assert(r.getSeq[Long](3).size == 2 * (1 + n), s"n=$n row=$row")
+        }
+    }
+  }
 }
