@@ -1726,12 +1726,16 @@ object TextOps {
     * run three times.
     */
   private def pretrainExactSurvivors(docs: DataFrame): DataFrame =
-    docs.where(col("n_chars") >= 100 &&
-        size(tokens(col("text"))) >= 20 && predLang(col("text")) === "en")
+    pretrainFilter(docs)
       .withColumn("rn",
         row_number().over(Window.partitionBy(md5(col("text"))).orderBy(col("doc_id"))))
       .where(col("rn") === 1).drop("rn")
       .localCheckpoint()
+
+  /** The quality gate and language filter of the funnel above. */
+  private[graft] def pretrainFilter(docs: DataFrame): DataFrame =
+    docs.where(col("n_chars") >= 100 &&
+      size(tokens(col("text"))) >= 20 && predLang(col("text")) === "en")
 
   /** Near-dedup APPLY over a (doc_id, text) survivor set given its dup
     * pairs (i, j): cluster via connected components, keep the smallest
@@ -1747,35 +1751,23 @@ object TextOps {
   }
 
   /** Per-doc predicted language from the fixed stopword profiles,
-    * computed ROW-LOCALLY: per-language hit counts are `filter` over the
-    * token array against the constant word sets, and the argmax (count
-    * desc, language lexicographic on ties, no hits → 'und') is a when
-    * chain — zero shuffles. The profiles are 40 constant words, so
-    * nothing here needs the (explode → broadcast-join → groupBy → window)
-    * relational form, which shuffles the full token relation twice; at
-    * 100 TB language ID must be a map-only pass over the corpus.
+    * computed ROW-LOCALLY by [[predLang]] — zero shuffles. The profiles
+    * are 40 constant words, so nothing here needs the (explode →
+    * broadcast-join → groupBy → window) relational form, which shuffles
+    * the full token relation twice; at 100 TB language ID must be a
+    * map-only pass over the corpus.
     */
   def langid(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), predLang(col("text")).as("pred_lang"))
 
   /** The row-local language prediction as a plain column — composable
-    * into any pipeline without a join back to the source relation.
+    * into any pipeline without a join back to the source relation. One
+    * codegen'd pass over the text's bytes (TextNative's `PredLang`):
+    * profile hits per language, duplicates included, argmax with
+    * lexicographic tie-break, no hits → 'und'.
     */
-  def predLang(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val toks = tokens(text)
-    // occurrence counts, duplicates included — same as counting the
-    // token-to-profile join
-    val counts = LangProfiles.map { case (l, ws) =>
-      l -> size(filter(toks, t => t.isInCollection(ws)))
-    }
-    val best = greatest(counts.map(_._2): _*)
-    // LangProfiles is in lexicographic language order, so the first
-    // language reaching the max implements the (c DESC, plang) tie-break
-    when(best <= 0, lit("und")).otherwise(
-      counts.foldRight(lit("und")) { case ((l, c), els) =>
-        when(c === best, lit(l)).otherwise(els)
-      })
-  }
+  def predLang(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    org.apache.spark.sql.graft.TextNative.predLang(text)
 
   /** Shared oracle for dedup_incremental and dedup_incremental_bloom —
     * the bloom prefilters cannot change the result (no false negatives;

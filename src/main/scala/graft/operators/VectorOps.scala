@@ -110,7 +110,11 @@ object VectorOps {
     * rank agreement. Coverage-first is the signal family a real
     * cross-encoder adds over BM25 — full-query matches outrank
     * single-term keyword stuffing regardless of tf. Row-local over the
-    * candidate-sized relation; one codegen'd pass.
+    * candidate-sized relation: it runs after the broadcast join, on at
+    * most `fuseK` rows per query (10 in `hybrid_search_rerank`), never
+    * on the corpus. So it stays in expression form, one interpreted
+    * `filter` per query term plus one for `dl`: a native pass like
+    * TextNative's `PredLang` pays off on a corpus scan, not on 10 rows.
     */
   private[graft] def ceScore(terms: Seq[String]): Column = {
     val toks = graft.functions.TextFunctions.tokens(col("text"))

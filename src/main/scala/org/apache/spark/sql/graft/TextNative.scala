@@ -3,11 +3,13 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -27,10 +29,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * tokens kept) and DuckDB's `string_split_regex` keeps them too, while
   * Java's `String.split` default drops them — so "a b " is 3 tokens
   * everywhere, never 2. The Pattern is compiled once, not per row.
+  * Lowercasing uses Locale.ROOT: under a tr/az default locale the JVM
+  * maps "I" to dotless "ı", while TextFunctions.tokens' ASCII path
+  * ignores the locale.
   */
 private[graft] object WsTokens {
   private val WS = java.util.regex.Pattern.compile("\\s+")
-  def split(text: UTF8String): Array[String] = WS.split(text.toString.toLowerCase, -1)
+  def split(text: UTF8String): Array[String] =
+    WS.split(text.toString.toLowerCase(java.util.Locale.ROOT), -1)
+  /** Raw-case tokens (no lowercasing), same split. */
+  def splitRaw(text: UTF8String): Array[String] = WS.split(text.toString, -1)
 }
 
 /** Distinct word n-gram (shingle) set of lowercased text as 64-bit
@@ -110,8 +118,7 @@ case class SpanHash64(child: Expression, n: Int)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   def compute(text: UTF8String): ArrayData = {
-    val WS = java.util.regex.Pattern.compile("\\s+")
-    val toks = WS.split(text.toString, -1)
+    val toks = WsTokens.splitRaw(text)
     if (toks.length < n) UnsafeArrayData.fromPrimitiveArray(Array.empty[Long])
     else {
       val out = new Array[Long](toks.length - n + 1)
@@ -486,6 +493,112 @@ case class HashedBowLogit(child: Expression, weights: Array[Double],
   override def prettyName: String = "hashed_bow_logit"
 }
 
+/** Language ID by the fixed stopword profiles in one compiled pass over
+  * the UTF-8 bytes: split on the ASCII whitespace Java's `\s` matches
+  * (` \t\n\x0B\f\r`), ASCII-lowercase each token and count it once for
+  * every profile holding it (`la`, `de`, `que`, `un` are in several;
+  * repeats count again, as in the oracle's token-to-profile join). The
+  * result is the argmax language, ties to the one that sorts first;
+  * no hits, empty and null text give `und`.
+  *
+  * Byte-level matching is exact against `split(lower(text), "\\s+")`:
+  * profile words are ASCII letters without `k`, and under root-locale
+  * casing (ICU's and the JVM's alike) the only non-ASCII code point
+  * that lowercases to ASCII letters alone is KELVIN SIGN U+212A (to
+  * `k`; U+0130 gives `i` + U+0307). So a token holding a non-ASCII byte
+  * never matches. Spark's `lower` follows the JVM default locale on
+  * non-ASCII text, so under `tr` it maps U+0130 to `i` and the
+  * expression form counts "İS" as "is"; this pass does not.
+  */
+case class PredLang(child: Expression) extends UnaryExpression with ExpectsInputTypes {
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+
+  override def dataType: DataType = StringType
+
+  override def nullable: Boolean = false
+
+  def compute(text: UTF8String): UTF8String = {
+    if (text == null) return PredLang.Und
+    val counts = new Array[Int](PredLang.Langs.length)
+    val base = text.getBaseObject
+    val off = text.getBaseOffset
+    val n = text.numBytes
+    var key = 0L
+    var len = 0 // letters packed so far; -1 once the token cannot be a word
+    var i = 0
+    while (i <= n) {
+      val b: Int = if (i < n) Platform.getByte(base, off + i) else ' '
+      if (b == ' ' || (b >= '\t' && b <= '\r')) { // \t \n \x0B \f \r
+        if (len > 0) {
+          val w = java.util.Arrays.binarySearch(PredLang.keys, key)
+          if (w >= 0) {
+            var m = PredLang.masks(w)
+            var l = 0
+            while (m != 0) { counts(l) += m & 1; m >>>= 1; l += 1 }
+          }
+        }
+        key = 0L
+        len = 0
+      } else if (len >= 0) {
+        val c = if (b >= 'A' && b <= 'Z') b + 32 else b
+        if (c >= 'a' && c <= 'z' && len < 8) { key = (key << 8) | c; len += 1 }
+        else len = -1
+      }
+      i += 1
+    }
+    var best = -1
+    var bestN = 0
+    var l = 0
+    while (l < counts.length) {
+      if (counts(l) > bestN) { best = l; bestN = counts(l) }
+      l += 1
+    }
+    if (best < 0) PredLang.Und else PredLang.Langs(best)
+  }
+
+  override def eval(input: InternalRow): Any =
+    compute(child.eval(input).asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("langid", this, classOf[PredLang].getName)
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+       |${c.code}
+       |UTF8String ${ev.value} = $ref.compute(${c.isNull} ? null : ${c.value});
+     """.stripMargin, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): PredLang =
+    copy(child = newChild)
+
+  override def prettyName: String = "pred_lang"
+}
+
+object PredLang {
+  private val profiles = _root_.graft.functions.TextFunctions.LangProfiles.sortBy(_._1)
+
+  private val Langs: Array[UTF8String] = profiles.map(p => UTF8String.fromString(p._1)).toArray
+
+  private val Und: UTF8String = UTF8String.fromString("und")
+
+  /** Every profile word packed big-endian into a Long, ascending, and
+    * the bit set of the languages (indexes into Langs) holding it.
+    */
+  private val (keys, masks): (Array[Long], Array[Int]) = {
+    val byWord = profiles.zipWithIndex
+      .flatMap { case ((_, ws), l) => ws.map(_ -> (1 << l)) }
+      .groupMapReduce(_._1)(_._2)(_ | _)
+    byWord.keys.foreach(w => require(
+      w.nonEmpty && w.length <= 8 && w.forall(c => c >= 'a' && c <= 'z' && c != 'k'),
+      s"profile word '$w' must be 1-8 ASCII letters a-z other than k"))
+    val packed = byWord.toArray
+      .map { case (w, m) => (w.foldLeft(0L)((k, c) => (k << 8) | c), m) }
+      .sortBy(_._1)
+    (packed.map(_._1), packed.map(_._2))
+  }
+}
+
 object TextNative {
 
   /** `shingle_hash64(text, n)` as a Column. */
@@ -511,6 +624,10 @@ object TextNative {
   /** `token_repetition(text)` as a Column (struct of 4 long counters). */
   def tokenRepetition(text: Column): Column =
     ExpressionUtils.column(TokenRepetition(ExpressionUtils.expression(text)))
+
+  /** `pred_lang(text)` as a Column: profile language or `und`. */
+  def predLang(text: Column): Column =
+    ExpressionUtils.column(PredLang(ExpressionUtils.expression(text)))
 
   /** `hashed_bow_logit(text)` as a Column (weights/intercept bound). */
   def hashedBowLogit(text: Column, weights: Array[Double], intercept: Double): Column =

@@ -259,10 +259,26 @@ class PlanSpec extends SparkSpec {
   }
 
   test("langid and winnowing fingerprints are row-local (zero shuffles)") {
+    import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, LambdaFunction}
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
     import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.graft.PredLang
     val docs = Tables.documents(spark, sf0001)
-    assert(shuffles(operators.TextOps.langid(docs)) == 0,
-      s"language ID must be a narrow map:\n${plan(operators.TextOps.langid(docs))}")
+    // the nodes one codegen stage compiles (InputAdapter ends the stage)
+    def stage(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case o => o +: o.children.flatMap(stage)
+    }
+    for (df <- Seq(operators.TextOps.langid(docs), operators.TextOps.pretrainFilter(docs))) {
+      assert(shuffles(df) == 0, s"language ID must be a narrow map:\n${plan(df)}")
+      val hofs = df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+        case h @ (_: HigherOrderFunction | _: LambdaFunction) => h
+      }))
+      assert(hofs.isEmpty, s"language ID must not run interpreted lambdas:\n${plan(df)}")
+      val compiled = collectNodes(df) { case w: WholeStageCodegenExec => w }
+        .exists(w => stage(w.child).exists(_.expressions.exists(_.exists(_.isInstanceOf[PredLang]))))
+      assert(compiled, s"pred_lang must run inside whole-stage codegen:\n${plan(df)}")
+    }
     val fp = docs.select(col("doc_id"),
       functions.TextFunctions.winnowFingerprints(col("text"), 4).as("f"))
     assert(shuffles(fp) == 0,

@@ -1,8 +1,12 @@
 package graft
 
 import graft.functions.TextFunctions
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.TextNative
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
+import org.scalacheck.util.Pretty
 
 class TextNativeSpec extends SparkSpec {
   import spark.implicits._
@@ -164,5 +168,97 @@ class TextNativeSpec extends SparkSpec {
     df.collect()
     assert(df.queryExecution.executedPlan.toString.contains("*("),
       "simhash map must run inside whole-stage codegen")
+  }
+
+  test("native tokens lowercase with Locale.ROOT under a tr default locale") {
+    def hashes(t: String) = Seq(t).toDF("text")
+      .select(TextNative.shingleHash64(col("text"), 1)).as[Array[Long]].head().toSet
+    val saved = java.util.Locale.getDefault
+    try {
+      java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+      assert(hashes("TITLE IS x") == hashes("title is x"))
+    } finally java.util.Locale.setDefault(saved)
+  }
+
+  /** The interpreted expression form language ID had before the native
+    * pass — the one reference PredLang is pinned to: one
+    * `filter(tokens, isInCollection)` hit count per language, argmax by
+    * a when chain over `greatest`.
+    */
+  private def predLangReference(text: Column): Column = {
+    val toks = TextFunctions.tokens(text)
+    val counts = TextFunctions.LangProfiles.map { case (l, ws) =>
+      l -> size(filter(toks, t => t.isInCollection(ws)))
+    }
+    val best = greatest(counts.map(_._2): _*)
+    when(best <= 0, lit("und")).otherwise(
+      counts.foldRight(lit("und")) { case ((l, c), els) =>
+        when(c === best, lit(l)).otherwise(els)
+      })
+  }
+
+  /** (text, native, reference) for every text where the two differ. */
+  private def predLangMismatches(texts: Seq[String]) =
+    spark.sparkContext.parallelize(texts, 2).toDF("text")
+      .select(col("text"), operators.TextOps.predLang(col("text")),
+        predLangReference(col("text")))
+      .as[(String, String, String)].collect().filter(r => r._2 != r._3)
+
+  test("pred_lang: null and empty text are 'und', as in the reference") {
+    // a local Seq folds into a LocalRelation: this runs the interpreted
+    // eval path; the property below runs the generated code
+    val got = Seq[String](null, "", " \t").toDF("text")
+      .select(operators.TextOps.predLang(col("text")), predLangReference(col("text")))
+      .as[(String, String)].collect()
+    assert(got.toSeq == Seq.fill(3)(("und", "und")))
+  }
+
+  test("pred_lang: no non-ASCII code point lowercases to profile letters only") {
+    // why byte-level matching is exact: a token with a non-ASCII code
+    // point never lowercases to a profile word, on either lower path
+    val letters = TextFunctions.LangProfiles.flatMap(_._2).flatten.toSet
+    val bad = (0x80 to Character.MAX_CODE_POINT).filter { cp =>
+      val s = new String(Character.toChars(cp))
+      Seq(s.toLowerCase(java.util.Locale.ROOT),
+        com.ibm.icu.lang.UCharacter.toLowerCase(com.ibm.icu.util.ULocale.ROOT, s))
+        .exists(_.forall(letters))
+    }
+    assert(bad.isEmpty, bad.map(cp => f"U+$cp%04X").mkString(", "))
+  }
+
+  test("pred_lang ≡ the interpreted profile-count form on generated text") {
+    val words = TextFunctions.LangProfiles.flatMap(_._2).distinct
+    val cased = for {
+      w <- Gen.oneOf(words)
+      c <- Gen.choose(0, 2)
+    } yield if (c == 0) w else if (c == 1) w.capitalize else w.toUpperCase(java.util.Locale.ROOT)
+    // non-words, punctuation, non-ASCII upper case (KELVIN SIGN lowers
+    // to 'k', U+0130 to 'i' + U+0307) and separators \s does not match
+    val other = Gen.oneOf("cat", "xyzzy", "k", "thé", "\u212A", "\u212Aein",
+      "\u0130N", "\u0130S", "D\u0130E", "stra\u00DFe", "la,", "(the", "the\u00A0la",
+      "\u00A0", "\u001C", "\u2003de", "sono\u0000")
+    val sep = Gen.nonEmptyListOf(Gen.oneOf(" ", "\t", "\n", "\u000B", "\f", "\r"))
+      .map(_.mkString)
+    val text = for {
+      toks <- Gen.listOf(Gen.frequency(3 -> cased, 1 -> other))
+      seps <- Gen.listOfN(toks.size + 1, sep)
+      lead <- Gen.oneOf(true, false)
+      trail <- Gen.oneOf(true, false)
+    } yield {
+      val body = toks.zip(seps.tail).map { case (t, s) => t + s }.mkString
+      (if (lead) seps.head else "") +
+        (if (trail) body else body.dropRight(seps.last.length))
+    }
+    // no shrinking: each step is a Spark job; the label names the texts
+    val prop = Prop.forAllNoShrink(Gen.listOfN(200, text)) { texts =>
+      val bad = predLangMismatches(texts)
+      def shown(t: String) = Option(t).fold("null")(_.flatMap(c =>
+        if (c >= ' ' && c <= '~') c.toString else f"\\u${c.toInt}%04x"))
+      Prop(bad.isEmpty) :| bad.take(5)
+        .map { case (t, n, r) => s"'${shown(t)}': native $n, reference $r" }.mkString("; ")
+    }
+    val res = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(25).withInitialSeed(Seed(1301L)), prop)
+    assert(res.passed, Pretty.pretty(res))
   }
 }

@@ -26,6 +26,11 @@ def main(sf_dir: str, out_dir: str) -> int:
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    if not oracle:
+        # an empty map would read "0 pass, 0 fail": a Verify run that
+        # wrote no oracles has checked nothing
+        print(f"no oracle queries in {out_dir}/oracle_sql.json", file=sys.stderr)
+        return 1
     n_pass = n_fail = 0
     for name, sql in sorted(oracle.items()):
         try:

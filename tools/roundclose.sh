@@ -23,7 +23,8 @@ tail -1 "CORRECTNESS_SF01_r${R}.txt"
 echo "== recall + drift gate"
 sbt -batch "runMain graft.Recall /root/testdata/sf0.01 RECALL_r${R}.json" >/tmp/rc_recall.log 2>&1
 PREV=$(printf "RECALL_r%02d.json" $((10#$R - 1)))
-[ -f "$PREV" ] && python3 tools/recall_gate.py "$PREV" "RECALL_r${R}.json" | tail -1
+[ -f "$PREV" ] || { echo "no $PREV to gate RECALL_r${R}.json against" >&2; exit 1; }
+python3 tools/recall_gate.py "$PREV" "RECALL_r${R}.json" | tail -1
 
 echo "== plans"
 sbt -batch "runMain graft.Plans" 2>/dev/null | grep '\[plans\]'
